@@ -129,26 +129,26 @@ def write_batch_files(points: DataFrame, lake_root: str) -> list[str]:
     envelopes for one key keeps only the max-timeGenerated envelope's
     rows — the reference applies them as sequential POSTs
     (src/main.go:306), so the final state is the last one, never the
-    union.
+    union. One grouped collect finds each key's latest timeGenerated
+    (a per-key partial aggregate, so the shuffle carries one row per
+    key, not the batch's rows); each key's write then filters on that
+    key and value and coalesces to one file. A caller that also merges
+    the batch into state (the HTTP service) persists `points` first, so
+    the collect, the writes and the merge all read one cached parse.
     """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("file")
-    points = (
-        points.withColumn("_max_tg", F.max("time_generated").over(w))
-        .filter(F.col("time_generated") == F.col("_max_tg"))
-        .drop("_max_tg")
-    )
-    keys = [r[0] for r in points.select("file").distinct().collect()]
-    for key in keys:
+    latest = points.groupBy("file").agg(F.max("time_generated")).collect()
+    for key, tg in latest:
         target = posixpath.join(lake_root, key)
         (
-            points.filter(F.col("file") == key)
+            points.filter(
+                (F.col("file") == key) & (F.col("time_generated") == tg)
+            )
             .drop(*PARTITION_COLUMNS)
+            .coalesce(1)
             .write.mode("overwrite")
             .parquet(target)
         )
-    return keys
+    return [key for key, _ in latest]
 
 
 def register_testdata(spark: SparkSession, sf_dir: str) -> None:

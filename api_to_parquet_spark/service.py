@@ -17,7 +17,15 @@ queries.kql translator (or raw Spark SQL) instead of proxying.
 Scale honesty: this in-process server is the *protocol adapter*, not the
 scale path. One POST = one micro-batch through the same
 parse→validate→explode→normalize→write pipeline the streaming mode runs
-(streaming.start_ingest_stream); a production deployment points many
+(streaming.start_ingest_stream), and each body is parsed exactly once:
+the envelope frame is built from an Arrow table, so it plans as a
+JVM-resident LocalTableScan (no Python worker pickles the body), and
+the exploded points are persisted for the lake write and the state
+merge, then released — the pattern streaming's process_batch uses.
+Before any Spark work the driver checks the decoded body's top-level
+types against ENVELOPE_SCHEMA, so an envelope the typed parse would
+drop gets a 400 instead of a 200 that wrote nothing. A production
+deployment points many
 such stateless receivers at an envelope drop directory / queue and lets
 the single-writer streaming query own the lake and state (SURVEY.md
 §1.5), which is strictly stronger than the reference's cross-replica
@@ -37,6 +45,7 @@ from decimal import Decimal
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
+import pyarrow as pa
 from pyspark.sql import Row, SparkSession
 
 from api_to_parquet_spark import ingest, lake, state
@@ -46,6 +55,10 @@ from api_to_parquet_spark.queries.kql import _REQUEST_DB, kql
 # results signal (v1 `Exceptions` entry; `"truncated": true` in the
 # ?format=simple shape)
 _QUERY_ROW_CAP = 10000
+
+# request body cap (413 above it); the reference's pushers send ~20 MB
+# envelopes of 80 000 rows
+_BODY_BYTE_CAP = 256 * 1024 * 1024
 
 # Spark simpleString root -> Kusto REST v1 column (DataType is the
 # .NET-ish name the v1 wire format uses — including the historical
@@ -137,6 +150,32 @@ _REQUIRED = [
     ("id", "Malformed request: property id is empty"),
 ]
 
+_LONG_MIN, _LONG_MAX = -(2**63), 2**63 - 1
+
+
+def _type_error(record: dict) -> str | None:
+    """The first top-level field whose JSON type ENVELOPE_SCHEMA's typed
+    parse would not accept as-is, or None. from_json turns a mistyped
+    timeGenerated or content into a NULL envelope that validation drops,
+    and silently coerces a number in a string field."""
+    for field in ("file", "id", "source"):
+        v = record.get(field)
+        if v is not None and not isinstance(v, str):
+            return f"Malformed request: property {field} is not a string"
+    tg = record["timeGenerated"]
+    if (
+        isinstance(tg, bool)
+        or not isinstance(tg, int)
+        or not _LONG_MIN <= tg <= _LONG_MAX
+    ):
+        return "Malformed request: property timeGenerated is not an integer"
+    content = record["content"]
+    if not isinstance(content, list) or not all(
+        isinstance(p, dict) for p in content
+    ):
+        return "Malformed request: content is not a list of objects"
+    return None
+
 
 class LakeService:
     """Route handlers, separable from HTTP plumbing for direct testing."""
@@ -159,23 +198,38 @@ class LakeService:
 
     def ingest_envelope(self, body: bytes) -> tuple[int, dict]:
         try:
-            record = json.loads(body)
+            text = body.decode("utf-8")
+            record = json.loads(text)
         except ValueError:
             return 500, {"error": "invalid JSON"}
+        if not isinstance(record, dict):
+            return 400, {"error": "Malformed request: body is not an object"}
         for field, msg in _REQUIRED:
             if not record.get(field):
                 return 400, {"error": msg}
         if not record.get("content"):
             return 400, {"error": "Malformed request: content is empty"}
+        msg = _type_error(record)
+        if msg is not None:
+            return 400, {"error": msg}
+        # an Arrow-built frame is a LocalRelation: Catalyst folds the
+        # parse into one LocalTableScan on the driver, where a list of
+        # tuples would go through sc.parallelize and a Python worker
         raw = self.spark.createDataFrame(
-            [(body.decode("utf-8"),)], ["value"]
+            pa.table({"value": [text]})
         )
         points, _ = ingest.ingest_batch(raw)
-        with self._write_lock:
-            lake.write_batch_files(points, self.lake_root)
-            new_state = state.update_state(
-                self.spark, self.state_path, points
-            )
+        # persist() plans the batch, so the parse runs here, outside the
+        # lock; the lake write and the state merge then share its cache
+        points = points.persist()
+        try:
+            with self._write_lock:
+                lake.write_batch_files(points, self.lake_root)
+                new_state = state.update_state(
+                    self.spark, self.state_path, points
+                )
+        finally:
+            points.unpersist()
         return 200, {
             "id": record["id"],
             "timeGenerated": record["timeGenerated"],
@@ -312,7 +366,21 @@ def make_server(service: LakeService, port: int = 0) -> ThreadingHTTPServer:
             if self.command == "GET" and path == "/":
                 self._send(*service.get_state())
             elif self.command == "POST":
-                n = int(self.headers.get("Content-Length", 0))
+                try:
+                    n = int(self.headers.get("Content-Length", ""))
+                except ValueError:
+                    n = -1
+                # both refusals leave the body unread; the HTTP/1.0
+                # handler then closes the socket, so a client still
+                # streaming a large body may see a reset, not the status
+                if n < 0:
+                    self._send(400, {"error": "invalid Content-Length"})
+                    return
+                if n > _BODY_BYTE_CAP:
+                    self._send(
+                        413, {"error": f"body exceeds {_BODY_BYTE_CAP} bytes"}
+                    )
+                    return
                 body = self.rfile.read(n)
                 if path == "/":
                     self._send(*service.ingest_envelope(body))

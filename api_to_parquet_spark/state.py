@@ -41,7 +41,10 @@ def update_state(spark: SparkSession, state_path: str, points: DataFrame) -> Row
     last_time_generated ← the batch's arrival-order-latest timeGenerated
     (last-write-wins); max_timestamp ← greatest(stored, batch max),
     monotonic. One tiny agg job over the batch + a single-row write —
-    no full-lake scan, so cost is independent of lake size.
+    no full-lake scan, so cost is independent of lake size. The row is
+    written from literals over a one-row range, a JVM-only plan: a
+    createDataFrame of Python rows would ship them through a Python
+    worker for one row.
     """
     agg = points.agg(
         F.max("time_generated").alias("batch_time_generated"),
@@ -64,7 +67,10 @@ def update_state(spark: SparkSession, state_path: str, points: DataFrame) -> Row
         ),
         max_timestamp=merge_max(prev["max_timestamp"], agg["batch_max_ts"]),
     )
-    spark.createDataFrame([new], STATE_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(state_path)
+    spark.range(0, 1, 1, 1).select(
+        *(
+            F.lit(new[f.name]).cast(f.dataType).alias(f.name)
+            for f in STATE_SCHEMA
+        )
+    ).write.mode("overwrite").parquet(state_path)
     return new

@@ -3,10 +3,13 @@
 
 from __future__ import annotations
 
+import http.client
 import json
+import os
 import threading
 import urllib.error
 import urllib.request
+from urllib.parse import urlparse
 
 import pytest
 
@@ -94,6 +97,125 @@ def test_reference_error_contract(server):
     # empty content: clean 400 where the reference panics (main.go:278)
     status, body = _post(base + "/", {**env, "content": []})
     assert status == 400 and "content" in body["error"]
+
+
+def test_mistyped_envelope_is_rejected_before_spark(spark, server):
+    """A body whose top-level types the typed parse would drop (or
+    coerce) gets a 400 up front, never a 200 that wrote nothing."""
+    base, svc = server
+    key = "f/2024/01/01/00/a.parquet"
+    env = _envelope(key, [1], 5)
+    for override, fragment in [
+        ({"timeGenerated": "abc"}, "timeGenerated is not an integer"),
+        ({"timeGenerated": "7"}, "timeGenerated is not an integer"),
+        ({"timeGenerated": 7.0}, "timeGenerated is not an integer"),
+        ({"timeGenerated": True}, "timeGenerated is not an integer"),
+        ({"timeGenerated": 2**70}, "timeGenerated is not an integer"),
+        ({"file": 5}, "property file is not a string"),
+        ({"id": 5}, "property id is not a string"),
+        ({"source": 5}, "property source is not a string"),
+        ({"content": [1]}, "content is not a list of objects"),
+        ({"content": {"Timestamp": 1}}, "content is not a list of objects"),
+    ]:
+        status, body = _post(base + "/", {**env, **override})
+        assert status == 400 and fragment in body["error"], (override, body)
+    status, body = _post(base + "/", [env])
+    assert status == 400 and "not an object" in body["error"]
+    assert not os.path.exists(svc.lake_root)
+    _, st = _get(base + "/")
+    assert (st["lastTimeGenerated"], st["maxTimestamp"]) == (0, 0)
+    # a null source still parses and lands, as before
+    status, _ = _post(base + "/", {**env, "source": None})
+    assert status == 200
+    rows = spark.read.parquet(f"{svc.lake_root}/{key}").collect()
+    assert [r["Timestamp"] for r in rows] == [1]
+
+
+def _raw_post(base: str, length: str | None, body: bytes = b"") -> tuple[int, dict]:
+    """POST / with a hand-set Content-Length header (None: no header)."""
+    u = urlparse(base)
+    conn = http.client.HTTPConnection(u.hostname, u.port, timeout=60)
+    try:
+        conn.putrequest("POST", "/")
+        if length is not None:
+            conn.putheader("Content-Length", length)
+        conn.endheaders()
+        if body:
+            conn.send(body)
+        resp = conn.getresponse()
+        return resp.status, json.loads(resp.read())
+    finally:
+        conn.close()
+
+
+def test_content_length_guard(server):
+    """Missing, garbage and negative lengths are a 400 (a negative one
+    used to block in rfile.read(-1) until the client hung up); a length
+    above the cap is a 413, answered without reading the body."""
+    base, _ = server
+    for length in (None, "abc", "-1", "12x", ""):
+        status, body = _raw_post(base, length)
+        assert status == 400 and "Content-Length" in body["error"], length
+    status, body = _raw_post(base, str(service._BODY_BYTE_CAP + 1))
+    assert status == 413 and "exceeds" in body["error"]
+    # the server still serves afterwards
+    payload = json.dumps(_envelope("f/2024/01/01/00/a.parquet", [3], 4))
+    status, body = _raw_post(base, str(len(payload)), payload.encode())
+    assert status == 200 and body["maxTimestamp"] == 3
+
+
+def test_post_parses_body_once(spark, server, monkeypatch):
+    """One POST parses its body once: the envelope frame is a JVM-side
+    LocalTableScan (no Python worker pickles the body), the lake write
+    and the state merge both read one cached batch, the cache is
+    released before the reply, and the POST runs at most 8 jobs."""
+    from pyspark import StorageLevel
+
+    from api_to_parquet_spark import ingest, lake, state
+
+    base, svc = server
+    seen: dict = {}
+
+    def spy(module, attr, pos):
+        real = getattr(module, attr)
+
+        def wrapped(*args, **kwargs):
+            df = args[pos]
+            seen[attr] = (df, df.is_cached, df.storageLevel)
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(module, attr, wrapped)
+
+    spy(ingest, "ingest_batch", 0)
+    spy(lake, "write_batch_files", 0)
+    spy(state, "update_state", 2)
+    sc = spark.sparkContext
+    group = "test_post_parses_body_once"
+    real_ingest = svc.ingest_envelope
+
+    def grouped(body):
+        # the handler thread's jobs, tagged where the route runs them
+        sc.setJobGroup(group, "one POST")
+        try:
+            return real_ingest(body)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(svc, "ingest_envelope", grouped)
+    key = "factory-1/2023/10/26/19/a.parquet"
+    status, _ = _post(base + "/", _envelope(key, range(100), 7))
+    assert status == 200
+
+    raw = seen["ingest_batch"][0]
+    plan = raw._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    points = seen["write_batch_files"][0]
+    assert seen["update_state"][0] is points
+    for _, cached, level in (seen["write_batch_files"], seen["update_state"]):
+        assert cached and level.useMemory
+    assert points.storageLevel == StorageLevel.NONE
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 8, jobs
 
 
 def test_api_key_gate(spark, tmp_path):

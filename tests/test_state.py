@@ -43,3 +43,34 @@ def test_last_write_wins(spark, tmp_path):
 def test_empty_state(spark, tmp_path):
     row = state.read_state(spark, str(tmp_path / "nope"))
     assert row["max_timestamp"] is None
+
+
+def test_intra_batch_envelopes_match_sequential_posts(spark, tmp_path):
+    """One batch carrying two envelopes for one key (tg=1 with Timestamp
+    500, then tg=2 with Timestamp 99) leaves the state two sequential
+    POSTs leave: the batch-wide max Timestamp and the later
+    timeGenerated. (The lake half, which keeps only [99], is pinned by
+    test_lake.py::test_write_batch_files_intra_batch_last_write_wins.)"""
+    import pyarrow as pa
+
+    def env(ts, tg):
+        return json.dumps(
+            {
+                "content": [{"Timestamp": ts, "Value": 1.0}],
+                "id": f"b{tg}",
+                "source": "s",
+                "timeGenerated": tg,
+                "file": "s/2023/01/01/00/x.parquet",
+            }
+        )
+
+    raw = spark.createDataFrame(pa.table({"value": [env(500, 1), env(99, 2)]}))
+    points, _ = ingest.ingest_batch(raw)
+    path = str(tmp_path / "state")
+    row = state.update_state(spark, path, points)
+    assert (row["max_timestamp"], row["last_time_generated"]) == (500, 2)
+
+    seq = str(tmp_path / "seq_state")
+    state.update_state(spark, seq, _batch(spark, [500], time_generated=1))
+    state.update_state(spark, seq, _batch(spark, [99], time_generated=2))
+    assert state.read_state(spark, seq) == state.read_state(spark, path)
