@@ -60,29 +60,7 @@ def validate_envelopes(envelopes: DataFrame) -> tuple[DataFrame, DataFrame]:
     return envelopes.filter(pred), envelopes.filter(~pred)
 
 
-def explode_points(envelopes: DataFrame) -> DataFrame:
-    """Envelope → flat fact rows, keeping batch lineage columns.
-
-    One explode, no shuffle: this runs map-side wherever each envelope
-    lives, which is what makes ingest embarrassingly parallel at 100 TB.
-    """
-    return envelopes.select(
-        F.col("id").alias("batch_id"),
-        F.col("source").alias("batch_source"),
-        F.col("timeGenerated").alias("time_generated"),
-        F.col("file"),
-        F.explode("content").alias("p"),
-    ).select("batch_id", "batch_source", "time_generated", "file", "p.*")
-
-
-def normalize_points(points: DataFrame) -> DataFrame:
-    """Apply Go zero-value semantics (SURVEY.md §1.2): absent JSON fields
-    are zero-filled, never NULL — strings → "", numerics → 0."""
-    filled = points.fillna(ZERO_FILL)
-    return filled
-
-
-def derive_partitions(points: DataFrame) -> DataFrame:
+def derive_partitions(envelopes: DataFrame) -> DataFrame:
     """Derive the lake partition columns from the envelope `file` path.
 
     The reference's path contract (README.md:5) is
@@ -94,7 +72,7 @@ def derive_partitions(points: DataFrame) -> DataFrame:
     src = F.regexp_extract("file", pat, 1)
     # try_cast: non-matching paths yield '' which is not ANSI-castable
     return (
-        points.withColumn("source", F.when(src != "", src).otherwise(F.lit("unknown")))
+        envelopes.withColumn("source", F.when(src != "", src).otherwise(F.lit("unknown")))
         .withColumn("year", F.regexp_extract("file", pat, 2).try_cast("int"))
         .withColumn("month", F.regexp_extract("file", pat, 3).try_cast("int"))
         .withColumn("day", F.regexp_extract("file", pat, 4).try_cast("int"))
@@ -104,26 +82,19 @@ def derive_partitions(points: DataFrame) -> DataFrame:
     )
 
 
-def ingest_batch(raw_json: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Full ingest plan: raw JSON → (normalized partitioned points, rejected).
+def explode_points(envelopes: DataFrame) -> DataFrame:
+    """Envelope → flat fact rows with batch lineage and partition columns.
 
-    Equivalent of the reference's POST / pipeline through the parquet
-    writer (src/main.go:250-298), minus the sink — callers hand the result
-    to lake.write_lake / streaming.foreach_batch_sink.
+    Partition columns are functions of the ENVELOPE-level `file` path,
+    so they are derived before the explode: one regex chain + md5 per
+    envelope instead of per point row. The envelope's own `source` is
+    aliased to batch_source first so the path-derived `source` cannot
+    clash. One explode, no shuffle: this runs map-side wherever each
+    envelope lives, which is what makes ingest embarrassingly parallel.
     """
-    envelopes = parse_envelopes(raw_json)
-    valid, rejected = validate_envelopes(envelopes)
-    # Partition columns are functions of the ENVELOPE-level `file`
-    # path, so derive them before the explode — one regex chain + md5
-    # per envelope instead of per point row (round-15; the per-row
-    # shape cost ~1.4 s of the 3.2 s parse->noop pass at the bench's
-    # 10x80k load: 4M regexp_extract + 800k md5 calls for 10 distinct
-    # values). The envelope's own `source` is aliased to batch_source
-    # first so derive_partitions' path-derived `source` cannot clash.
-    # Column order and values are identical to the former
-    # derive-after-explode pipeline (pinned by tests/test_ingest.py).
+    lineage = ["batch_id", "batch_source", "time_generated", "file"]
     env = derive_partitions(
-        valid.select(
+        envelopes.select(
             F.col("id").alias("batch_id"),
             F.col("source").alias("batch_source"),
             F.col("timeGenerated").alias("time_generated"),
@@ -131,22 +102,28 @@ def ingest_batch(raw_json: DataFrame) -> tuple[DataFrame, DataFrame]:
             F.col("content"),
         )
     )
-    points = env.select(
-        "batch_id",
-        "batch_source",
-        "time_generated",
-        "file",
-        F.explode("content").alias("p"),
-        *PARTITION_COLUMNS,
-    ).select(
-        "batch_id",
-        "batch_source",
-        "time_generated",
-        "file",
-        "p.*",
-        *PARTITION_COLUMNS,
-    )
-    return normalize_points(points), rejected
+    return env.select(
+        *lineage, F.explode("content").alias("p"), *PARTITION_COLUMNS
+    ).select(*lineage, "p.*", *PARTITION_COLUMNS)
+
+
+def normalize_points(points: DataFrame) -> DataFrame:
+    """Apply Go zero-value semantics (SURVEY.md §1.2): absent JSON fields
+    are zero-filled, never NULL — strings → "", numerics → 0."""
+    return points.fillna(ZERO_FILL)
+
+
+def ingest_batch(raw_json: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Full ingest plan: raw JSON → (normalized partitioned points, rejected).
+
+    Equivalent of the reference's POST / pipeline through the parquet
+    writer (src/main.go:250-298), minus the sink. Every sink runs this
+    plan: the HTTP service hands the result to lake.write_batch_files,
+    and the ingest streams (streaming.start_ingest_stream,
+    streaming.start_snapshot_ingest_stream) run it per micro-batch.
+    """
+    valid, rejected = validate_envelopes(parse_envelopes(raw_json))
+    return normalize_points(explode_points(valid)), rejected
 
 
 def batch_stats(points: DataFrame) -> DataFrame:

@@ -22,7 +22,7 @@ from __future__ import annotations
 import posixpath
 import weakref
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from api_to_parquet_spark.schemas import PARTITION_COLUMNS
@@ -41,29 +41,27 @@ TABLES = [
 ]
 
 
-def write_lake(
-    points: DataFrame,
-    lake_path: str,
-    mode: str = "overwrite",
-    cluster_by: tuple[str, ...] = ("PointId", "Timestamp"),
-) -> None:
+# Rows are clustered by (PointId, Timestamp) inside each lake file so
+# parquet row-group min/max statistics enable data skipping on the two
+# dominant predicates (per-point lookups, time ranges).
+CLUSTER_COLUMNS = ("PointId", "Timestamp")
+
+
+def write_lake(points: DataFrame, lake_path: str, mode: str = "overwrite") -> None:
     """Write normalized points into the partitioned lake.
 
     With `partitionOverwriteMode=dynamic` (session default) an overwrite
     only replaces the partitions present in `points` — idempotent replay
     of a batch, no full-table rewrite.
 
-    Rows are clustered by (PointId, Timestamp) inside each file so
-    parquet row-group min/max statistics enable data skipping on the two
-    dominant predicates (per-point lookups, time ranges) — the layer of
+    Rows are sorted by CLUSTER_COLUMNS inside each file — the layer of
     pruning below directory partitioning. The sort key is prefixed with
     the partition columns, satisfying the file writer's required
     ordering so it does not re-sort (and un-cluster) the rows.
     """
-    if cluster_by:
-        points = points.sortWithinPartitions(*PARTITION_COLUMNS, *cluster_by)
     (
-        points.write.mode(mode)
+        points.sortWithinPartitions(*PARTITION_COLUMNS, *CLUSTER_COLUMNS)
+        .write.mode(mode)
         .partitionBy(*PARTITION_COLUMNS)
         .parquet(lake_path)
     )
@@ -113,6 +111,24 @@ def read_batch_tree(
     )
 
 
+def latest_per_file(points: DataFrame) -> dict[str, Column]:
+    """Intra-batch last-write-wins, the one rule every ingest sink applies.
+
+    A batch carrying SEVERAL envelopes for one `file` key keeps only the
+    max-timeGenerated envelope's rows — the reference applies them as
+    sequential POSTs (src/main.go:306), so the final state is the last
+    one, never the union. One grouped collect finds each key's latest
+    timeGenerated (a per-key partial aggregate, so the shuffle carries
+    one row per key, not the batch's rows). Returns {file key: predicate
+    selecting that key's latest rows}; it is empty iff `points` is.
+    """
+    latest = points.groupBy("file").agg(F.max("time_generated")).collect()
+    return {
+        key: (F.col("file") == key) & (F.col("time_generated") == tg)
+        for key, tg in latest
+    }
+
+
 def write_batch_files(points: DataFrame, lake_root: str) -> list[str]:
     """Exact per-file overwrite parity (ST3, reference README.md:88).
 
@@ -123,32 +139,22 @@ def write_batch_files(points: DataFrame, lake_root: str) -> list[str]:
     which readers treat identically to a single file (glob scan).
 
     The loop is over *distinct batch keys in this micro-batch* (small:
-    one per POST), not over rows — each write is a distributed job.
-
-    Intra-batch last-write-wins: a micro-batch carrying SEVERAL
-    envelopes for one key keeps only the max-timeGenerated envelope's
-    rows — the reference applies them as sequential POSTs
-    (src/main.go:306), so the final state is the last one, never the
-    union. One grouped collect finds each key's latest timeGenerated
-    (a per-key partial aggregate, so the shuffle carries one row per
-    key, not the batch's rows); each key's write then filters on that
-    key and value and coalesces to one file. A caller that also merges
-    the batch into state (the HTTP service) persists `points` first, so
-    the collect, the writes and the merge all read one cached parse.
+    one per POST), not over rows — each write is a distributed job that
+    keeps only the key's latest envelope (latest_per_file) and coalesces
+    to one file. A caller that also merges the batch into state (the
+    HTTP service) persists `points` first, so the collect, the writes
+    and the merge all read one cached parse.
     """
-    latest = points.groupBy("file").agg(F.max("time_generated")).collect()
-    for key, tg in latest:
-        target = posixpath.join(lake_root, key)
+    latest = latest_per_file(points)
+    for key, keep in latest.items():
         (
-            points.filter(
-                (F.col("file") == key) & (F.col("time_generated") == tg)
-            )
+            points.filter(keep)
             .drop(*PARTITION_COLUMNS)
             .coalesce(1)
             .write.mode("overwrite")
-            .parquet(target)
+            .parquet(posixpath.join(lake_root, key))
         )
-    return [key for key, _ in latest]
+    return list(latest)
 
 
 def register_testdata(spark: SparkSession, sf_dir: str) -> None:

@@ -287,8 +287,7 @@ def upsert_rows(
     """Row-level MERGE into a plain-parquet lake: rows in `updates`
     replace existing rows with the same key (and insert otherwise),
     touching only the partitions the updates land in. `updates` must
-    carry the partition columns (run ingest.derive_partitions first for
-    raw points).
+    carry the partition columns (ingest.explode_points derives them).
 
     Mechanism mirrors delete_rows: affected partitions = distinct
     partition tuples in `updates` (driver-side, small); merged content =

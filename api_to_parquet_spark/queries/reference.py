@@ -104,9 +104,7 @@ def q_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("file"),
     )
     valid, _ = ingest.validate_envelopes(env)
-    points = ingest.derive_partitions(
-        ingest.normalize_points(ingest.explode_points(valid))
-    )
+    points = ingest.normalize_points(ingest.explode_points(valid))
     return points.groupBy("file").agg(
         F.count("*").alias("n"),
         F.max("Timestamp").alias("max_ts"),

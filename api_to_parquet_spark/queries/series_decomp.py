@@ -19,8 +19,9 @@ bit-for-bit (the DuckDB oracle pins the results):
 - NULL propagation matches Spark: `NULL + x = NULL` inside a fold (and
   the accumulator stays NULL), comparisons with NULL are NULL (CASE
   falls through), `nullif`/`coalesce`/`IF` as in SQL.
-- Division replicates Spark's non-ANSI `/`: divisor == 0.0 (either
-  sign) yields NULL, NaN divisor yields NaN.
+- Division replicates Spark's ANSI `/`: a NULL operand yields NULL,
+  otherwise divisor == 0.0 (either sign) raises DIVIDE_BY_ZERO; a NaN
+  divisor yields NaN.
 - Comparisons replicate Spark's total order on doubles: NaN is GREATER
   than any non-NaN value (IEEE would say every NaN comparison is
   false); equality treats NaN = NaN as TRUE (`nullif`,
@@ -77,18 +78,14 @@ def _mul(a, b):
 
 def _div(a, b):
     """Spark ANSI `/` on doubles (the engine's sessions run Spark 4's
-    default ansi=true): a zero divisor (either sign) RAISES — exactly
-    like the retired SQL emission, whose only reachable zero divisor is
-    the empty-series `icept / n`; every other division site is
-    nullif-guarded or structurally non-zero. NULL operands yield NULL;
-    a NaN divisor stays NaN."""
-    if b is not None and b == 0.0:
-        raise ArithmeticError(
-            "[DIVIDE_BY_ZERO] Division by zero (series_decompose on an"
-            " empty series)"
-        )
+    default ansi=true). NULL operands yield NULL before the divisor is
+    checked, as in Spark, so the empty series' `NULL / 0` is NULL; a
+    zero divisor (either sign) under a non-NULL numerator RAISES; a NaN
+    divisor stays NaN."""
     if a is None or b is None:
         return None
+    if b == 0.0:
+        raise ArithmeticError("[DIVIDE_BY_ZERO] Division by zero")
     return a / b
 
 

@@ -15,13 +15,14 @@ gate (401, src/main.go:77-86), same per-field 400 messages
 queries.kql translator (or raw Spark SQL) instead of proxying.
 
 Scale honesty: this in-process server is the *protocol adapter*, not the
-scale path. One POST = one micro-batch through the same
-parse→validate→explode→normalize→write pipeline the streaming mode runs
-(streaming.start_ingest_stream), and each body is parsed exactly once:
+scale path. One POST = one micro-batch through ingest.ingest_batch
+and lake.latest_per_file's last-write-wins rule, the plan and rule
+every streaming micro-batch runs too (streaming.start_ingest_stream),
+and each body is parsed exactly once:
 the envelope frame is built from an Arrow table, so it plans as a
 JVM-resident LocalTableScan (no Python worker pickles the body), and
 the exploded points are persisted for the lake write and the state
-merge, then released — the pattern streaming's process_batch uses.
+merge, then released — as streaming's process_batch does.
 Before any Spark work the driver checks the decoded body's top-level
 types against ENVELOPE_SCHEMA, so an envelope the typed parse would
 drop gets a 400 instead of a 200 that wrote nothing. A production

@@ -38,6 +38,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from api_to_parquet_spark.lake import latest_per_file
 from api_to_parquet_spark.schemas import PARTITION_COLUMNS
 
 _MANIFESTS = "_manifests"
@@ -108,33 +109,23 @@ def commit_batch(
     spark: SparkSession, root: str, points: DataFrame
 ) -> int:
     """Commit one ingested batch (normalized points carrying the `file`
-    column): each distinct `file` key's rows land in a fresh data
+    column): each distinct `file` key's latest envelope (the shared
+    last-write-wins rule, lake.latest_per_file) lands in a fresh data
     directory, then the next manifest atomically re-points those keys.
-    Returns the committed version number. Replaying a key leaves the old
-    directory in place for time travel until vacuum."""
-    from pyspark.sql import Window
-
-    # Intra-batch last-write-wins: one micro-batch may carry SEVERAL
-    # envelopes for the same `file` key (the reference would apply them
-    # as sequential POSTs — final state is the LAST one, main.go:306);
-    # keep only rows from each key's max timeGenerated envelope.
-    w = Window.partitionBy("file")
-    points = (
-        points.withColumn(
-            "_max_tg", F.max("time_generated").over(w)
-        )
-        .filter(F.col("time_generated") == F.col("_max_tg"))
-        .drop("_max_tg")
-    )
-    keys = [r[0] for r in points.select("file").distinct().collect()]
+    Returns the committed version number, or -1 for an empty batch,
+    which commits nothing. Replaying a key leaves the old directory in
+    place for time travel until vacuum."""
+    latest = latest_per_file(points)
+    if not latest:
+        return -1
     versions = _list_versions(spark, root)
     manifest = (
         _read_manifest(spark, root, versions[-1]) if versions else {}
     )
-    for key in keys:
+    for key, keep in latest.items():
         data_dir = f"{_DATA}/{uuid.uuid4().hex}"
         (
-            points.filter(F.col("file") == key)
+            points.filter(keep)
             .drop(*PARTITION_COLUMNS)
             .write.mode("error")
             .parquet(posixpath.join(root, data_dir))

@@ -5,9 +5,12 @@ micro-batches (SURVEY.md §2.9) as a streaming query.
   state lives in the Structured Streaming state store, checkpointed;
   single-writer semantics — strictly stronger than the reference's
   non-atomic Redis read-compare-write across replicas.
-- ST3 (idempotent replay / per-file overwrite): foreachBatch sink reusing
-  the batch lake writer — deterministic target per `file` key, so a
-  replayed micro-batch overwrites instead of duplicating.
+- ST3 (idempotent replay / per-file overwrite): the two ingest streams
+  are foreachBatch sinks that run POST /'s plan (ingest.ingest_batch)
+  and its last-write-wins rule (lake.latest_per_file) per micro-batch —
+  deterministic target per `file` key, so a replayed micro-batch
+  overwrites instead of duplicating, and two envelopes for one key in
+  one micro-batch leave only the later one.
 - ST4 extensions: event-time watermark + tumbling-window aggregation
   (absent in the reference, standard for late data at scale).
 
@@ -17,21 +20,63 @@ The batch and streaming paths share the exact same DataFrame transforms
 
 from __future__ import annotations
 
+import functools
+import operator
+from typing import Callable
+
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from api_to_parquet_spark import ingest, lake, state
+from api_to_parquet_spark import ingest, lake, snapshots, state
 
 
-def read_envelope_stream(spark: SparkSession, input_dir: str) -> DataFrame:
-    """File-drop source: each line is one JSON envelope (one POST).
+def read_envelope_stream(
+    spark: SparkSession, input_dir: str, max_files_per_trigger: int | None = None
+) -> DataFrame:
+    """File-drop source: each line is one JSON envelope (one POST);
+    `max_files_per_trigger` caps the files one micro-batch reads.
     Swap for a Kafka source in production — everything downstream is
     identical."""
+    reader = spark.readStream.schema("value STRING")
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return ingest.parse_envelopes(reader.text(input_dir))
+
+
+def _start_sink_stream(
+    spark: SparkSession,
+    input_dir: str,
+    state_path: str,
+    checkpoint: str,
+    available_now: bool,
+    sink: Callable[[DataFrame], bool],
+) -> StreamingQuery:
+    """The reference's POST / loop as one streaming query: per
+    micro-batch, the ingest plan POST / runs (ingest.ingest_batch), then
+    `sink` — which applies lake.latest_per_file and returns False for an
+    empty batch — then the control-table merge. foreachBatch gives
+    exactly-once-per-batch sinks via the checkpointed batch id +
+    idempotent per-`file`-key overwrite."""
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        points, _rejected = ingest.ingest_batch(batch_df)
+        points = points.persist()
+        try:
+            if sink(points):
+                state.update_state(spark, state_path, points)
+        finally:
+            points.unpersist()
+
     raw = spark.readStream.schema("value STRING").text(input_dir)
-    return ingest.parse_envelopes(raw)
+    writer = raw.writeStream.foreachBatch(process_batch).option(
+        "checkpointLocation", checkpoint
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def start_ingest_stream(
@@ -42,32 +87,19 @@ def start_ingest_stream(
     checkpoint: str,
     available_now: bool = False,
 ) -> StreamingQuery:
-    """The reference's POST / loop as one streaming query: parse →
-    validate → normalize → partitioned lake append + control-table merge,
-    per micro-batch. foreachBatch gives exactly-once-per-batch sinks via
-    the checkpointed batch id + idempotent partition overwrite."""
-    envelopes = read_envelope_stream(spark, input_dir)
+    """Streaming ingest into the partitioned lake: each micro-batch's
+    latest envelope per `file` key replaces that key's partition."""
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        valid, _rejected = ingest.validate_envelopes(batch_df)
-        points = ingest.derive_partitions(
-            ingest.normalize_points(ingest.explode_points(valid))
-        )
-        if points.isEmpty():
-            return
-        points = points.persist()
-        try:
-            lake.write_lake(points, lake_path, mode="overwrite")
-            state.update_state(spark, state_path, points)
-        finally:
-            points.unpersist()
+    def write(points: DataFrame) -> bool:
+        latest = lake.latest_per_file(points)
+        if latest:
+            keep = functools.reduce(operator.or_, latest.values())
+            lake.write_lake(points.filter(keep), lake_path)
+        return bool(latest)
 
-    writer = envelopes.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint
+    return _start_sink_stream(
+        spark, input_dir, state_path, checkpoint, available_now, write
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_snapshot_ingest_stream(
@@ -82,33 +114,16 @@ def start_snapshot_ingest_stream(
     (snapshots.py): every micro-batch's per-`file`-key replace becomes
     ONE atomic manifest commit, so lake readers can never observe a
     half-written trigger — strictly stronger than both the reference's
-    blob overwrite and the plain foreachBatch writer above. Replays of a
+    blob overwrite and the plain lake writer above. Replays of a
     checkpointed batch id re-commit the same keys idempotently (new
     version, same rows)."""
-    from api_to_parquet_spark import snapshots
 
-    envelopes = read_envelope_stream(spark, input_dir)
+    def commit(points: DataFrame) -> bool:
+        return snapshots.commit_batch(spark, snapshot_root, points) >= 0
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        valid, _rejected = ingest.validate_envelopes(batch_df)
-        points = ingest.derive_partitions(
-            ingest.normalize_points(ingest.explode_points(valid))
-        )
-        if points.isEmpty():
-            return
-        points = points.persist()
-        try:
-            snapshots.commit_batch(spark, snapshot_root, points)
-            state.update_state(spark, state_path, points)
-        finally:
-            points.unpersist()
-
-    writer = envelopes.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint
+    return _start_sink_stream(
+        spark, input_dir, state_path, checkpoint, available_now, commit
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_state_stream(
@@ -157,12 +172,10 @@ def start_per_key_state_stream(
     tests/test_streaming.py."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    reader = spark.readStream.schema("value STRING")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    envelopes = ingest.parse_envelopes(reader.text(input_dir))
+    envelopes = read_envelope_stream(spark, input_dir, max_files_per_trigger)
     valid, _ = ingest.validate_envelopes(envelopes)
-    points = ingest.explode_points(valid)
+    # only the columns update() reads reach the Python worker
+    points = ingest.explode_points(valid).select("PointId", "Timestamp")
 
     def update(key, pdf_iter, state: GroupState):
         (point_id,) = key
@@ -265,12 +278,9 @@ def start_transform_with_state_stream(
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider",
     )
-    reader = s2.readStream.schema("value STRING")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    envelopes = ingest.parse_envelopes(reader.text(input_dir))
+    envelopes = read_envelope_stream(s2, input_dir, max_files_per_trigger)
     valid, _ = ingest.validate_envelopes(envelopes)
-    points = ingest.explode_points(valid)
+    points = ingest.explode_points(valid).select("PointId", "Timestamp")
     out = points.groupBy("PointId").transformWithStateInPandas(
         statefulProcessor=RunningMax(),
         outputStructType="point_id STRING, max_timestamp BIGINT,"

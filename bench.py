@@ -113,8 +113,12 @@ CANARY = "pricing_summary"
 # goes to BENCH_SIDE.json next to this file, and the inline flags are
 # compacted to name -> ratio. cpus / defaultParallelism / master are
 # echoed so $SPARK_GRAFT_CPUS honoring is verifiable, not suspected.
-SIDE_FILE = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "BENCH_SIDE.json")
+# $SPARK_GRAFT_BENCH_SIDE redirects the side file (tests write it to a
+# temp dir so a test run never rewrites the tracked copy).
+SIDE_FILE = os.environ.get(
+    "SPARK_GRAFT_BENCH_SIDE",
+    os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_SIDE.json"),
+)
 LINE_BUDGET = 1900
 
 

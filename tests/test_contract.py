@@ -40,10 +40,16 @@ def test_registry_consistency():
         assert isinstance(sql, str) and sql.strip(), name
 
 
-def test_bench_prints_single_json_line():
+def test_bench_prints_single_json_line(tmp_path):
     """bench.py's stdout contract: exactly one parseable JSON line with
-    the keys the driver records. Run at the smallest sf to stay fast."""
+    the keys its consumers record. Run at the smallest sf to stay fast.
+    The verbose side record goes to tmp_path; the tracked BENCH_SIDE.json
+    must come out of the run byte-identical."""
+    tracked = os.path.join(REPO, "BENCH_SIDE.json")
+    before = open(tracked, "rb").read()
+    side = tmp_path / "side.json"
     env = dict(os.environ, SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001")
+    env["SPARK_GRAFT_BENCH_SIDE"] = str(side)
     out = subprocess.run(
         [sys.executable, os.path.join(REPO, "bench.py")],
         capture_output=True,
@@ -62,6 +68,8 @@ def test_bench_prints_single_json_line():
     )
     assert payload["sf"] == 0.001
     assert payload["ingest_rows_per_sec"] > 0
+    assert json.loads(side.read_text())
+    assert open(tracked, "rb").read() == before
 
 
 def test_every_query_documented_in_survey():

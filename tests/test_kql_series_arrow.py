@@ -33,6 +33,11 @@ CASES = [
     ("negatives and zeros", "-3.0,0.0,-0.0,2.5,-3.0,0.0,-0.0,2.5,-3.0,0.0", "4"),
 ]
 
+# Plain decompose has no quantile step, so an empty series is a value on
+# both paths (the linefit's NULL / 0 is NULL); series_decompose_anomalies
+# raises on it instead (test_empty_series_raises_on_both_paths).
+DECOMPOSE_CASES = CASES + [("empty series", "", "3")]
+
 
 def _canon(v):
     """Exact, hashable form: doubles bitwise, recursing into lists."""
@@ -74,7 +79,9 @@ def test_decompose_anomalies_kernel_matches_sql(spark, name, elems, period):
     _assert_rows_equal(arrow, sql)
 
 
-@pytest.mark.parametrize("name,elems,period", CASES, ids=[c[0] for c in CASES])
+@pytest.mark.parametrize(
+    "name,elems,period", DECOMPOSE_CASES, ids=[c[0] for c in DECOMPOSE_CASES]
+)
 def test_decompose_kernel_matches_sql(spark, name, elems, period):
     spark.sql(
         f"SELECT array({elems}) AS y"

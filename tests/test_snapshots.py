@@ -43,6 +43,10 @@ def test_commit_read_replay_time_travel(spark, tmp_path):
     # replay key -> REPLACES its rows in the new version only
     v2 = snapshots.commit_batch(spark, root, _points(spark, key, [99], tg=2))
     assert (v0, v1, v2) == (0, 1, 2)
+    # an empty batch commits no version
+    empty = _points(spark, key, [5], tg=3).limit(0)
+    assert snapshots.commit_batch(spark, root, empty) == -1
+    assert len(snapshots.history(spark, root)) == 3
 
     latest = sorted(
         r["Timestamp"] for r in snapshots.read_snapshot(spark, root).collect()

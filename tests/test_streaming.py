@@ -7,7 +7,9 @@ from __future__ import annotations
 import json
 import time
 
-from api_to_parquet_spark import lake, state, streaming
+import pytest
+
+from api_to_parquet_spark import lake, snapshots, state, streaming
 
 
 def _envelope(file, ts_values, time_generated):
@@ -52,6 +54,44 @@ def test_ingest_stream_end_to_end(spark, tmp_path):
     st = state.read_state(spark, state_path)
     assert st["max_timestamp"] == 200  # never decreases
     assert st["last_time_generated"] == 2  # arrival order
+
+
+def _start_lake_stream(spark, inp, out, st, ckpt):
+    q = streaming.start_ingest_stream(spark, inp, out, st, ckpt, available_now=True)
+    return q, lambda: lake.read_lake(spark, out)
+
+
+def _start_snapshot_stream(spark, inp, out, st, ckpt):
+    q = streaming.start_snapshot_ingest_stream(
+        spark, inp, out, st, ckpt, available_now=True
+    )
+    return q, lambda: snapshots.read_snapshot(spark, out)
+
+
+@pytest.mark.parametrize(
+    "start", [_start_lake_stream, _start_snapshot_stream], ids=["lake", "snapshot"]
+)
+def test_ingest_streams_intra_batch_last_write_wins(spark, tmp_path, start):
+    """One micro-batch carrying two envelopes for the same `file` key
+    leaves only the later (max timeGenerated) envelope's rows on every
+    ingest sink — the reference applies them as sequential POSTs, so
+    the result is the last one, never the union. The state merge still
+    sees both envelopes, as two POSTs would update it."""
+    inp = tmp_path / "in"
+    inp.mkdir()
+    key = "s/2024/01/01/02/c.parquet"
+    (inp / "b1.json").write_text(
+        _envelope(key, [10, 20, 30], 3) + "\n" + _envelope(key, [5], 4) + "\n"
+    )
+    st = str(tmp_path / "state")
+    q, read = start(
+        spark, str(inp), str(tmp_path / "out"), st, str(tmp_path / "ckpt")
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert [r["Timestamp"] for r in read().collect()] == [5]
+    got = state.read_state(spark, st)
+    assert got["max_timestamp"] == 30 and got["last_time_generated"] == 4
 
 
 def test_state_stream_running_max(spark, tmp_path):
