@@ -191,7 +191,8 @@ order), series_stats (7-way), series_outliers (Tukey-fence scores,
 discrete 10th/90th quantiles), series_decompose (4-tuple:
 baseline/seasonal/trend/residual), series_decompose_anomalies (linefit
 trend + per-phase seasonal mean + residual Tukey flags; explicit
-integer period).
+integer period; the decompose pair runs as Arrow-batched kernel UDFs,
+queries/series_decomp.py).
 Predicates additionally cover
 endswith, !contains, has
 (word-boundary regexp with the term regex-quoted — ADX tokenizes, same
@@ -626,6 +627,12 @@ import math
 import re
 
 from pyspark.sql import DataFrame, SparkSession
+
+from api_to_parquet_spark.queries.series_decomp import (
+    SD_UDF_NAME,
+    SDA_UDF_NAME,
+    register_decompose_udfs,
+)
 
 # Globally unique suffix for fork's synthetic source names: a per-pipe
 # stage index collides when a nested fork inside a branch lands on the
@@ -2076,31 +2083,6 @@ def _sum_sql(arr: str) -> str:
     return f"aggregate({arr}, {_D0}, (_a, _x) -> _a + _x)"
 
 
-def _seasonal_means_sql(phi: str, pstr: str, det: str, n: str) -> str:
-    """Per-phase means of a detrended series as `_sc_seas`, by DIRECT
-    stride indexing: phase _p's members are det[_p], det[_p + P], … —
-    one fold of ~n/P adds per phase, O(n) total work and zero
-    per-element struct allocation. (Round-14: replaces P conditional
-    folds that each rebuilt an n-element struct array — O(P·n)
-    interpreted steps; higher-order functions don't codegen, so the
-    constant matters.) Each phase adds the SAME doubles in the SAME
-    ascending-index order as the conditional fold did, so the sums —
-    and the means — are bit-identical; a phase with no members (n <= p)
-    yields NULL exactly as s/nullif(0, 0) did. The member count for
-    phase p is floor((n-1-p)/P)+1; n and the division stay DOUBLE, and
-    the CAST truncation equals floor because the operands are
-    non-negative exact integers."""
-    cnt = f"CAST(({n} - 1 - _p) / {pstr} AS INT)"
-    return (
-        f"transform(sequence(0, {phi}), _p -> CASE"
-        f" WHEN {n} > _p THEN"
-        f" aggregate(sequence(0, {cnt}), {_D0},"
-        f" (_a, _k) -> _a + element_at({det}, _p + _k * {pstr} + 1))"
-        f" / ({cnt} + 1)"
-        " ELSE CAST(NULL AS DOUBLE) END) AS _sc_seas"
-    )
-
-
 def _tukey_score_sql(arr: str, q10: str, q90: str, iqr: str, k: str) -> str:
     """Per-element Tukey-fence anomaly score over an array: 0 inside
     [q10 - k*iqr, q90 + k*iqr], signed exceedance beyond the fence in
@@ -2128,7 +2110,8 @@ def _series_chain_sql(
     Intermediates (element sums, quantiles, fitted trend) are computed
     ONCE as named `_sc_*` columns and dropped in the final projection;
     Catalyst collapses the nest into a single Project. All math is
-    per-row higher-order array functions — map-side, zero shuffle,
+    per-row higher-order array functions, except the decompose family,
+    which is one Arrow kernel UDF call — map-side, zero shuffle,
     independent of group count (the arrays come from make-series, whose
     per-group rows are already distributed)."""
     y = _expr(args[0])
@@ -2536,53 +2519,6 @@ def _series_chain_sql(
             + f" AS {score}",
             ["_sc_ys", "_sc_srt", "_sc_ni", "_sc_q10", "_sc_q90", "_sc_iqr"],
         )
-    def _decompose_prelude() -> tuple[str, bool]:
-        """Returns (period SQL text, dynamic?). A literal integer
-        period embeds as a constant; period -1 or OMITTED (the ADX
-        default spelling — round-11) switches to per-row
-        AUTODETECTION: argmax autocorrelation of the detrended series
-        over lags 2..n/2, falling back to period 1 (no seasonality —
-        the per-phase mean degenerates to the near-zero residual mean)
-        when the peak autocorrelation is under 0.5. The threshold is
-        the documented refinement of ADX's unspecified significance
-        rule."""
-        if len(args) >= 2:
-            a1 = args[1].strip()
-            if re.match(r"^\d+$", a1):
-                return a1, False
-            if a1 == "-1":
-                return "_sc_p", True
-            raise ValueError(
-                f"{fn} needs (series [, period]) with an integer"
-                " period or -1/omitted for autodetection"
-            )
-        return "_sc_p", True
-
-    def _emit_autoperiod() -> list[str]:
-        """Emit the _sc_p autodetection stages (requires _sc_det and
-        _sc_n); returns the temp names they add."""
-        nest(
-            "coalesce(nullif("
-            + _sum_sql("transform(_sc_det, _x -> _x * _x)")
-            + f", {_D0}), CAST(1 AS DOUBLE)) AS _sc_pden"
-        )
-        nest(
-            "transform(sequence(2, greatest(2,"
-            " CAST(_sc_n / 2 AS INT))), _L -> CASE"
-            " WHEN size(_sc_det) - _L >= 1 THEN"
-            f" aggregate(sequence(1, size(_sc_det) - _L), {_D0},"
-            " (_a, _i) -> _a + element_at(_sc_det, _i)"
-            " * element_at(_sc_det, _i + _L)) / _sc_pden"
-            f" ELSE {_D0} END) AS _sc_pacs"
-        )
-        nest("array_max(_sc_pacs) AS _sc_pbest")
-        nest(
-            "IF(_sc_pbest >= 0.5, 2 +"
-            " CAST(array_position(_sc_pacs, _sc_pbest) AS INT) - 1,"
-            " 1) AS _sc_p"
-        )
-        return ["_sc_pden", "_sc_pacs", "_sc_pbest", "_sc_p"]
-
     if fn == "series_decompose_forecast":
         # series_decompose_forecast(y, points, period) (round-7,
         # subset: integer points + explicit integer period like the
@@ -2626,11 +2562,10 @@ def _series_chain_sql(
         )
         nest("(_sc_sy - _sc_slope * _sc_sx) / _sc_m AS _sc_icept")
         # per-phase means by direct stride indexing over the training
-        # prefix (see _seasonal_means_sql — detrending happens inside
-        # the fold here, so the stride index feeds both the element
-        # lookup and the trend term; same doubles added in the same
-        # ascending-index order as the former conditional fold over
-        # _sc_pre, so the means are bit-identical)
+        # prefix: phase _p's members ys[_p], ys[_p + P], … are
+        # detrended inside the fold (the stride index feeds both the
+        # element lookup and the trend term) and added in ascending
+        # index order
         nest(
             f"transform(sequence(0, {p - 1}), _p -> CASE"
             " WHEN _sc_m > _p THEN"
@@ -2653,141 +2588,40 @@ def _series_chain_sql(
              "_sc_icept", "_sc_seas"],
         )
     if fn in ("series_decompose", "series_decompose_anomalies"):
-        # Round-15 (guide §4): with a live session the whole per-series
-        # decompose chain evaluates in ONE Arrow-batched Python UDF
-        # (ArrowEvalPython — never BatchEvalPython) instead of stacked
-        # interpreted higher-order-function Projects, which never enter
-        # whole-stage codegen and cost ~0.9 ms/series of Catalyst
-        # tree-walking (the kql_series_anomalies bench line's dominant
-        # term). The kernels in series_decomp.py reproduce the SQL
-        # emission bit-for-bit — explicit in-order float accumulation,
-        # Spark NULL/NaN comparison semantics, ANSI division — pinned
-        # by tests/test_kql_series_arrow.py on adversarial inputs and
-        # by the DuckDB oracle at both SFs. Sessionless kql_to_sql()
-        # keeps the pure-SQL emission below (no session to register
-        # a UDF on), which doubles as the kernels' reference twin.
-        ctx = _ACTIVE_CTX.get()
-        spark_ = ctx[0] if ctx else None
-        if spark_ is not None:
-            from api_to_parquet_spark.queries import (
-                series_decomp as _sdk,
+        # The whole per-series decompose chain evaluates in ONE
+        # Arrow-batched Python UDF (ArrowEvalPython, never
+        # BatchEvalPython; kernels in series_decomp.py): interpreted
+        # higher-order-function Projects never enter whole-stage
+        # codegen and cost ~0.9 ms/series of Catalyst tree-walking.
+        # The kernels are pinned bit-for-bit against the pure-SQL
+        # reference in tests/series_sql_ref.py and by the DuckDB
+        # oracle. The UDFs are registered by kql_to_sql's outer entry.
+        # Period: a literal integer, or -1 / omitted (the ADX default
+        # spelling) to autodetect it per series.
+        period = args[1].strip() if len(args) >= 2 else "-1"
+        if not re.match(r"^(?:\d+|-1)$", period):
+            raise ValueError(
+                f"{fn} needs (series [, period]) with an integer"
+                " period or -1/omitted for autodetection"
             )
-
-            _sdk.register_decompose_udfs(spark_)
-            pstr, pdyn = _decompose_prelude()
-            period_sql = "-1" if pdyn else pstr
-            if fn == "series_decompose_anomalies":
-                anom, score, base = names
-                k = _expr(args[2]) if len(args) > 2 else "1.5"
-                nest(
-                    f"{_sdk.SDA_UDF_NAME}({ys}, {period_sql},"
-                    f" CAST(({k}) AS DOUBLE)) AS _sc_dec"
-                )
-                return build(
-                    f"_sc_dec.bl AS {base}, _sc_dec.sc AS {score},"
-                    f" _sc_dec.an AS {anom}",
-                    ["_sc_dec"],
-                )
-            base, seas, trend, resid = names
+        if fn == "series_decompose_anomalies":
+            anom, score, base = names
+            k = _expr(args[2]) if len(args) > 2 else "1.5"
             nest(
-                f"{_sdk.SD_UDF_NAME}({ys}, {period_sql}) AS _sc_dec"
+                f"{SDA_UDF_NAME}({ys}, {period},"
+                f" CAST(({k}) AS DOUBLE)) AS _sc_dec"
             )
             return build(
-                f"_sc_dec.tr AS {trend}, _sc_dec.se AS {seas},"
-                f" _sc_dec.bl AS {base}, _sc_dec.re AS {resid}",
+                f"_sc_dec.bl AS {base}, _sc_dec.sc AS {score},"
+                f" _sc_dec.an AS {anom}",
                 ["_sc_dec"],
             )
-    if fn == "series_decompose":
         base, seas, trend, resid = names
-        pstr, pdyn = _decompose_prelude()
-        phi = "(_sc_p - 1)" if pdyn else str(int(pstr) - 1)
-        nest(f"{ys} AS _sc_ys")
-        nest("CAST(size(_sc_ys) AS DOUBLE) AS _sc_n")
-        nest(
-            f"{_sum_sql('_sc_ys')} AS _sc_sy, "
-            + _sum_sql("transform(_sc_ys, (_x, _i) -> _x * CAST(_i AS DOUBLE))")
-            + " AS _sc_sxy, (_sc_n - 1) * _sc_n / 2 AS _sc_sx,"
-            " (_sc_n - 1) * _sc_n * (2 * _sc_n - 1) / 6 AS _sc_sxx"
-        )
-        nest(
-            "(_sc_n * _sc_sxy - _sc_sx * _sc_sy)"
-            f" / nullif(_sc_n * _sc_sxx - _sc_sx * _sc_sx, {_D0})"
-            " AS _sc_slope"
-        )
-        nest("(_sc_sy - _sc_slope * _sc_sx) / _sc_n AS _sc_icept")
-        nest(
-            "transform(_sc_ys, (_x, _i) ->"
-            " _x - (_sc_icept + _sc_slope * _i)) AS _sc_det"
-        )
-        ptmp = _emit_autoperiod() if pdyn else []
-        nest(_seasonal_means_sql(phi, pstr, "_sc_det", "_sc_n"))
-        nest(
-            "transform(_sc_ys, (_x, _i) ->"
-            f" _sc_icept + _sc_slope * _i) AS {trend},"
-            " transform(_sc_ys, (_x, _i) ->"
-            f" element_at(_sc_seas, _i % {pstr} + 1)) AS {seas}"
-        )
-        nest(f"zip_with({trend}, {seas}, (_t, _s) -> _t + _s) AS {base}")
+        nest(f"{SD_UDF_NAME}({ys}, {period}) AS _sc_dec")
         return build(
-            f"zip_with(_sc_ys, {base}, (_x, _b) -> _x - _b) AS {resid}",
-            ["_sc_ys", "_sc_n", "_sc_sy", "_sc_sxy", "_sc_sx", "_sc_sxx",
-             "_sc_slope", "_sc_icept", "_sc_det", "_sc_seas"] + ptmp,
-        )
-    if fn == "series_decompose_anomalies":
-        anom, score, base = names
-        pstr, pdyn = _decompose_prelude()
-        phi = "(_sc_p - 1)" if pdyn else str(int(pstr) - 1)
-        k = _expr(args[2]) if len(args) > 2 else "1.5"
-        nest(f"{ys} AS _sc_ys")
-        nest("CAST(size(_sc_ys) AS DOUBLE) AS _sc_n")
-        nest(
-            f"{_sum_sql('_sc_ys')} AS _sc_sy, "
-            + _sum_sql("transform(_sc_ys, (_x, _i) -> _x * CAST(_i AS DOUBLE))")
-            + " AS _sc_sxy, (_sc_n - 1) * _sc_n / 2 AS _sc_sx,"
-            " (_sc_n - 1) * _sc_n * (2 * _sc_n - 1) / 6 AS _sc_sxx"
-        )
-        nest(
-            "(_sc_n * _sc_sxy - _sc_sx * _sc_sy)"
-            f" / nullif(_sc_n * _sc_sxx - _sc_sx * _sc_sx, {_D0})"
-            " AS _sc_slope"
-        )
-        nest("(_sc_sy - _sc_slope * _sc_sx) / _sc_n AS _sc_icept")
-        # trend = linefit; seasonal = per-phase mean of the detrended
-        # series (stride-indexed folds — period is a small constant,
-        # arrays are per-row: map-side)
-        nest(
-            "transform(_sc_ys, (_x, _i) ->"
-            " _x - (_sc_icept + _sc_slope * _i)) AS _sc_det"
-        )
-        ptmp = _emit_autoperiod() if pdyn else []
-        nest(_seasonal_means_sql(phi, pstr, "_sc_det", "_sc_n"))
-        nest(
-            "transform(_sc_ys, (_x, _i) -> _sc_icept + _sc_slope * _i"
-            f" + element_at(_sc_seas, _i % {pstr} + 1)) AS {base}"
-        )
-        nest(f"zip_with(_sc_ys, {base}, (_x, _b) -> _x - _b) AS _sc_res")
-        nest(
-            "array_sort(_sc_res) AS _sc_srt,"
-            " CAST(size(_sc_res) AS INT) AS _sc_ni"
-        )
-        nest(
-            "try_element_at(_sc_srt,"
-            " CAST(floor(0.1 * (_sc_ni - 1)) AS INT) + 1) AS _sc_q10,"
-            " try_element_at(_sc_srt,"
-            " CAST(floor(0.9 * (_sc_ni - 1)) AS INT) + 1) AS _sc_q90"
-        )
-        nest("_sc_q90 - _sc_q10 AS _sc_iqr")
-        nest(
-            _tukey_score_sql("_sc_res", "_sc_q10", "_sc_q90", "_sc_iqr", k)
-            + f" AS {score}"
-        )
-        return build(
-            f"transform({score}, _s -> CASE WHEN _s > 0 THEN 1"
-            f" WHEN _s < 0 THEN -1 ELSE 0 END) AS {anom}",
-            ["_sc_ys", "_sc_n", "_sc_sy", "_sc_sxy", "_sc_sx", "_sc_sxx",
-             "_sc_slope", "_sc_icept", "_sc_det", "_sc_seas", "_sc_res",
-             "_sc_srt", "_sc_ni", "_sc_q10", "_sc_q90", "_sc_iqr"]
-            + ptmp,
+            f"_sc_dec.tr AS {trend}, _sc_dec.se AS {seas},"
+            f" _sc_dec.bl AS {base}, _sc_dec.re AS {resid}",
+            ["_sc_dec"],
         )
     raise AssertionError(fn)
 
@@ -9343,8 +9177,16 @@ def kql_to_sql(
     """Translate a KQL pipe query to one Spark SQL statement. When a
     SparkSession is passed, union stages align columns BY NAME via
     schema analysis (ADX semantics); without one they fall back to
-    positional UNION ALL (same-shape pipes only)."""
+    positional UNION ALL (same-shape pipes only).
+
+    SQL that uses the series_decompose family calls the Arrow kernel
+    UDFs `kql_sd_arrow` / `kql_sda_arrow` in both modes, so the session
+    that executes it needs `series_decomp.register_decompose_udfs`
+    first. Passing a session here registers them on it; sessionless
+    SQL, or SQL run on another session, must register them itself."""
     if _tabular is None:
+        if spark is not None:
+            register_decompose_udfs(spark)
         # sessionless bare `col + col` is the ONE place translation
         # cannot decide between ADX concatenation, arithmetic, and
         # ADX's mixed-type semantic error — there is no schema to
@@ -10619,8 +10461,9 @@ def _kql_stages_to_sql(
                 # (sums, quantiles, fitted trend) by NAME instead of
                 # duplicating the aggregate() folds per output column.
                 # Catalyst collapses the nest into one Project; all math
-                # is per-row higher-order array functions — map-side,
-                # zero shuffle, scale-independent of group count.
+                # is per-row (higher-order array functions, or the
+                # decompose kernel UDF) — map-side, zero shuffle,
+                # scale-independent of group count.
                 if len(ext_items) != 1:
                     raise ValueError(
                         "series multi-assign must be the only extend item"

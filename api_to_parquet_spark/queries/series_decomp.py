@@ -11,7 +11,8 @@ evaluates the whole per-series chain; the JVM↔Python boundary crosses
 exactly the series array (+ two scalars) each way.
 
 EXACTNESS CONTRACT — the kernels reproduce the retired SQL emission
-bit-for-bit (the DuckDB oracle pins the results):
+bit-for-bit (the DuckDB oracle pins the results; that emission now lives
+in tests/series_sql_ref.py as the test reference):
 
 - Every sum is an explicit in-order left fold (`aggregate(seq, 0.0,
   (a, x) -> a + x)` ≡ a sequential Python loop). No numpy pairwise
@@ -28,12 +29,14 @@ bit-for-bit (the DuckDB oracle pins the results):
   `array_position`).
 - `array_sort` ascending with NULLs last, NaN after all numbers.
 - Discrete quantiles via `try_element_at(sorted, floor(p*(n-1)) + 1)`;
-  an index of 0 (empty series) raises, exactly like the SQL path.
+  an index of 0 (empty series) raises, exactly like the SQL reference.
 
-The SQL emission is kept verbatim for sessionless `kql_to_sql()` calls
-(no SparkSession to register a UDF on); tests/test_kql_series_arrow.py
-pins kernel-vs-SQL equality on adversarial inputs (nulls, NaN, empty,
-len < period, constant series, autodetected periods).
+The kernels are the only product implementation: `kql_to_sql` emits the
+UDF call with or without a session, and registers the UDFs
+(`register_decompose_udfs`) when it is given one.
+tests/test_kql_series_arrow.py pins kernel-vs-reference equality on
+adversarial inputs (nulls, NaN, empty, len < period, constant series,
+autodetected periods).
 """
 
 from __future__ import annotations
@@ -163,8 +166,9 @@ def _detrended(ys, slope, icept):
 
 
 def _autoperiod(det, n: float) -> int:
-    """The `_emit_autoperiod` stages: argmax autocorrelation over lags
-    2..max(2, int(n/2)), threshold 0.5, fallback period 1."""
+    """Period autodetection: argmax autocorrelation of the detrended
+    series over lags 2..max(2, int(n/2)), threshold 0.5, fallback
+    period 1 (no seasonality)."""
     pden = _fold_sum([_mul(x, x) for x in det])
     if pden is None or _eq(pden, 0.0):
         pden = 1.0  # coalesce(nullif(., 0.0), 1.0)
@@ -201,8 +205,9 @@ def _autoperiod(det, n: float) -> int:
 
 
 def _seasonal_means(det, n: float, n_len: int, period: int):
-    """_seasonal_means_sql: per-phase means by stride indexing — each
-    phase's members are added in ascending index order."""
+    """Per-phase means by stride indexing: phase p's members
+    det[p], det[p + P], … are added in ascending index order; a phase
+    with no members (n <= p) is NULL."""
     seas: list[float | None] = []
     for p in range(period):
         if n > p:

@@ -129,7 +129,9 @@ def compact_line(full: dict) -> str:
     adds the cpu-echo keys, and compacts flag blocks to name -> ratio.
     If still over budget, optional blocks are dropped in increasing
     order of importance (the full detail is always in BENCH_SIDE.json);
-    the contract keys and the gate flags are never dropped.
+    the contract keys are never dropped. If the gate flags alone still
+    overflow, they shrink to the worst offender plus
+    `ratio_regressions_count`, the number of flags.
     """
     payload: dict = {
         k: full[k]
@@ -158,6 +160,14 @@ def compact_line(full: dict) -> str:
         if len(line) <= LINE_BUDGET:
             return line
         payload.pop(drop, None)
+    flags = payload.get("ratio_regressions")
+    if flags and len(json.dumps(payload)) > LINE_BUDGET:
+        worst = max(
+            flags,
+            key=lambda n: full["ratio_regressions"][n].get("pin_ratio", 0),
+        )
+        payload["ratio_regressions"] = {worst: flags[worst]}
+        payload["ratio_regressions_count"] = len(flags)
     return json.dumps(payload)
 
 

@@ -18,7 +18,7 @@ verdict, the best available ground truth for "what the burst hid").
 import json
 import os
 
-from bench import PIN_RATIO, compute_flags
+from bench import HEADLINE, PIN_RATIO, compute_flags
 
 # The replay tests below re-run RECORDED driver timings through the
 # gate, so they must use the pins of the SAME ERA as those recordings
@@ -251,6 +251,22 @@ def test_compact_line_fits_driver_capture():
     assert len(parsed["queries"]) == 46
     # the gate flags survive compaction as name -> ratio
     assert parsed["ratio_regressions"]["kql_query_name_00"] == 2.01
+
+    # every headline query flagged: the flags shrink to their count plus
+    # the worst offender
+    full = _full_payload(
+        queries={n: 0.123 + i / 100 for i, n in enumerate(HEADLINE)},
+        ratio_regressions={
+            n: {"pin_ratio": 2.0 + i / 100, "run_median_ratio": 1.3}
+            for i, n in enumerate(HEADLINE)
+        },
+    )
+    line = compact_line(full)
+    assert len(line) <= LINE_BUDGET
+    parsed = json.loads(line)
+    assert len(parsed["queries"]) == len(HEADLINE) == 46
+    assert parsed["ratio_regressions"] == {HEADLINE[-1]: 2.45}
+    assert parsed["ratio_regressions_count"] == 46
 
 
 def test_compact_line_keeps_optional_blocks_when_small():

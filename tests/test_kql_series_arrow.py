@@ -1,11 +1,12 @@
-"""Round-15: the Arrow-batched series_decompose kernels must reproduce
-the retired pure-SQL emission bit-for-bit.
+"""The Arrow-batched series_decompose kernels must reproduce the retired
+pure-SQL emission bit-for-bit.
 
-The sessionless `kql_to_sql(text, None)` still emits the original
-higher-order-function SQL (no session to register a UDF on), so it is
-the in-repo reference twin: every case below runs the SAME KQL through
-both paths on the SAME session and compares results exactly
-(NaN-aware, NULL-exact, bitwise on doubles via struct packing).
+`kql_to_sql` emits the kernel UDF call with or without a session; the
+higher-order-function SQL the kernels were ported from lives in
+tests/series_sql_ref.py as the reference. Every case below runs the
+SAME KQL through the product (`kql`) and through the reference SQL on
+the SAME session and compares results exactly (NaN-aware, NULL-exact,
+bitwise on doubles via struct packing).
 """
 
 from __future__ import annotations
@@ -16,6 +17,8 @@ import struct
 import pytest
 
 from api_to_parquet_spark.queries.kql import kql, kql_to_sql
+from api_to_parquet_spark.queries.series_decomp import SD_UDF_NAME, SDA_UDF_NAME
+from series_sql_ref import ref_sql
 
 # (name, y literal elements as SQL text, period arg text)
 CASES = [
@@ -48,11 +51,25 @@ def _canon(v):
     return v
 
 
+def _anomalies_body(period: str) -> str:
+    return (
+        "sda_probe_t | extend (an, sc, bl) ="
+        f" series_decompose_anomalies(y, {period})"
+    )
+
+
+def _decompose_body(period: str) -> str:
+    return (
+        "sda_probe_t | extend (bl, se, tr, re) ="
+        f" series_decompose(y, {period})"
+    )
+
+
 def _run_both(spark, body: str):
-    """Run one KQL text through the UDF path (kql with session) and the
-    pure-SQL path (sessionless kql_to_sql), return both row lists."""
+    """Run one KQL text through the product (kql, the kernel UDF) and
+    the reference SQL, return both row lists."""
     arrow = kql(spark, body).collect()
-    sql = spark.sql(kql_to_sql(body, None)).collect()
+    sql = spark.sql(ref_sql(body)).collect()
     return arrow, sql
 
 
@@ -71,11 +88,7 @@ def test_decompose_anomalies_kernel_matches_sql(spark, name, elems, period):
     spark.sql(
         f"SELECT array({elems}) AS y"
     ).createOrReplaceTempView("sda_probe_t")
-    body = (
-        "sda_probe_t | extend (an, sc, bl) ="
-        f" series_decompose_anomalies(y, {period})"
-    )
-    arrow, sql = _run_both(spark, body)
+    arrow, sql = _run_both(spark, _anomalies_body(period))
     _assert_rows_equal(arrow, sql)
 
 
@@ -86,11 +99,7 @@ def test_decompose_kernel_matches_sql(spark, name, elems, period):
     spark.sql(
         f"SELECT array({elems}) AS y"
     ).createOrReplaceTempView("sda_probe_t")
-    body = (
-        "sda_probe_t | extend (bl, se, tr, re) ="
-        f" series_decompose(y, {period})"
-    )
-    arrow, sql = _run_both(spark, body)
+    arrow, sql = _run_both(spark, _decompose_body(period))
     _assert_rows_equal(arrow, sql)
 
 
@@ -98,11 +107,7 @@ def test_decompose_anomalies_custom_k_matches_sql(spark):
     spark.sql(
         "SELECT array(1.0,5.0,2.0,6.0,1.0,0.0,3.0,2.0,6.0,1.0) AS y"
     ).createOrReplaceTempView("sda_probe_t")
-    body = (
-        "sda_probe_t | extend (an, sc, bl) ="
-        " series_decompose_anomalies(y, 2, 3.0)"
-    )
-    arrow, sql = _run_both(spark, body)
+    arrow, sql = _run_both(spark, _anomalies_body("2, 3.0"))
     _assert_rows_equal(arrow, sql)
 
 
@@ -110,29 +115,42 @@ def test_null_array_input_matches_sql(spark):
     spark.sql(
         "SELECT CAST(NULL AS ARRAY<DOUBLE>) AS y"
     ).createOrReplaceTempView("sda_probe_t")
-    body = (
-        "sda_probe_t | extend (an, sc, bl) ="
-        " series_decompose_anomalies(y, 3)"
-    )
-    arrow, sql = _run_both(spark, body)
+    arrow, sql = _run_both(spark, _anomalies_body("3"))
     _assert_rows_equal(arrow, sql)
 
 
 def test_empty_series_raises_on_both_paths(spark):
-    """The SQL emission's discrete quantile indexes element 0 on an
+    """The reference SQL's discrete quantile indexes element 0 on an
     empty series (INVALID_INDEX_OF_ZERO under ANSI); the kernel raises
     the equivalent error instead of silently diverging."""
     spark.sql("SELECT array() AS y").createOrReplaceTempView(
         "sda_probe_t"
     )
-    body = (
-        "sda_probe_t | extend (an, sc, bl) ="
-        " series_decompose_anomalies(y, 3)"
-    )
+    body = _anomalies_body("3")
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO|INDEX_OF_ZERO"):
         kql(spark, body).collect()
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO|INDEX_OF_ZERO"):
-        spark.sql(kql_to_sql(body, None)).collect()
+        spark.sql(ref_sql(body)).collect()
+
+
+_BODIES = sorted(
+    {_anomalies_body(p) for _, _, p in CASES}
+    | {_decompose_body(p) for _, _, p in DECOMPOSE_CASES}
+    | {_anomalies_body("2, 3.0")}
+)
+
+
+@pytest.mark.parametrize(
+    "body", _BODIES, ids=[b.split("= ", 1)[1] for b in _BODIES]
+)
+def test_same_sql_with_and_without_session(spark, body):
+    """One product path: the sessionless translation is the session
+    translation, and both call the kernel UDF."""
+    sql = kql_to_sql(body, None)
+    assert sql == kql_to_sql(body, spark)
+    udf = SDA_UDF_NAME if "anomalies" in body else SD_UDF_NAME
+    assert f"{udf}(" in sql
+    assert "aggregate(" not in sql
 
 
 def test_arrow_path_plan_shape(spark):

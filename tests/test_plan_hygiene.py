@@ -1,28 +1,22 @@
 """Fleet-wide physical-plan hygiene: sweep EVERY query in the registry
-and enforce the scale invariants the modules claim individually."""
+and enforce the scale invariants the modules claim individually. The
+allow-list and the sweep are tools/plan_audit.py's."""
 
 from __future__ import annotations
 
-import importlib.util
-import os
-
 import pytest
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-# The ONE sanctioned row-at-a-time Python node: the Python UDTF surface
-# demo (SURVEY.md §2.10), whose built-in twin doc_chunks is the scale path.
-ROW_PYTHON_ALLOWED = {"udtf_doc_chunks"}
+from tools.plan_audit import (
+    executed_plan,
+    load_registry,
+    row_python_offenders,
+    sweep,
+)
 
 
 @pytest.fixture(scope="module")
 def registry():
-    spec = importlib.util.spec_from_file_location(
-        "entry", os.path.join(REPO, "__spark_entry__.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod.queries()
+    return load_registry()
 
 
 def test_no_row_at_a_time_python_anywhere(spark, sf_smoke, registry):
@@ -30,13 +24,9 @@ def test_no_row_at_a_time_python_anywhere(spark, sf_smoke, registry):
     — the sanctioned Python boundary is Arrow-batched
     (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas), except the
     explicitly-documented UDTF demo."""
-    offenders = {}
-    for name, fn in registry.items():
-        plan = (
-            fn(spark, sf_smoke)._jdf.queryExecution().executedPlan().toString()
-        )
-        if "BatchEvalPython" in plan and name not in ROW_PYTHON_ALLOWED:
-            offenders[name] = plan.count("BatchEvalPython")
+    plans, errors = sweep(spark, sf_smoke, registry)
+    assert not errors, errors
+    offenders = row_python_offenders(plans)
     assert not offenders, f"row-at-a-time Python UDFs leaked into: {offenders}"
 
 
@@ -46,11 +36,6 @@ def test_iterative_lineage_stays_flat(spark, sf_smoke, registry):
     the accumulated join tree of every iteration (persist() does not cut
     lineage; a persist-only loop measured 1242 Exchanges in the final
     plan text)."""
-    plan = (
-        registry["dedup_clusters"](spark, sf_smoke)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = executed_plan(registry["dedup_clusters"], spark, sf_smoke)
     assert plan.count("Exchange") == 0, plan[:500]
     assert "Scan ExistingRDD" in plan or "LogicalRDD" in plan or "Scan rdd" in plan.lower()

@@ -32,24 +32,10 @@ def main() -> int:
 
     spark = get_spark("plan_audit", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
-    spec = importlib.util.spec_from_file_location(
-        "entry", os.path.join(REPO, "__spark_entry__.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    rows, offenders = [], []
-    for name, fn in sorted(mod.queries().items()):
-        try:
-            plan = (
-                fn(spark, sf_dir)
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
-        except Exception as e:  # noqa: BLE001 — audit must cover the rest
-            rows.append({"query": name, "error": str(e)[:120]})
-            continue
-        row = {
+    plans, errors = sweep(spark, sf_dir, load_registry())
+    rows = [{"query": name, "error": e[:120]} for name, e in errors.items()]
+    for name, plan in plans.items():
+        rows.append({
             "query": name,
             "exchanges": plan.count("Exchange "),
             "broadcasts": plan.count("BroadcastExchange"),
@@ -69,18 +55,53 @@ def main() -> int:
             # pre-execution plan often hides them (isFinalPlan=false), so
             # this field UNDER-reports — useful as a floor, not a census
             "codegen": "*(1)" in plan or "*(2)" in plan,
-        }
-        rows.append(row)
-        if row["row_python"] and name not in ROW_PYTHON_ALLOWED:
-            offenders.append(name)
+        })
+    offenders = sorted(row_python_offenders(plans))
+    rows.sort(key=lambda r: r["query"])
     print(json.dumps(rows, indent=1))
-    n_err = sum(1 for r in rows if "error" in r)
     print(
-        f"audited {len(rows)} queries ({n_err} errors);"
+        f"audited {len(rows)} queries ({len(errors)} errors);"
         f" row-at-a-time Python UDFs in: {offenders or 'NONE'}",
         file=sys.stderr,
     )
     return 1 if offenders else 0
+
+
+def load_registry() -> dict:
+    """The `queries()` registry, loaded from __spark_entry__.py."""
+    spec = importlib.util.spec_from_file_location(
+        "entry", os.path.join(REPO, "__spark_entry__.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.queries()
+
+
+def executed_plan(fn, spark, sf_dir: str) -> str:
+    return fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+
+
+def sweep(spark, sf_dir: str, registry: dict):
+    """Executed plan text of every registry entry, in name order, and
+    the error message of each entry whose plan could not be built:
+    ({name: plan}, {name: error})."""
+    plans: dict[str, str] = {}
+    errors: dict[str, str] = {}
+    for name, fn in sorted(registry.items()):
+        try:
+            plans[name] = executed_plan(fn, spark, sf_dir)
+        except Exception as e:  # noqa: BLE001 — audit must cover the rest
+            errors[name] = str(e)
+    return plans, errors
+
+
+def row_python_offenders(plans: dict[str, str]) -> dict[str, int]:
+    """{name: BatchEvalPython count} of the plans outside the allow-list."""
+    return {
+        name: plan.count("BatchEvalPython")
+        for name, plan in plans.items()
+        if "BatchEvalPython" in plan and name not in ROW_PYTHON_ALLOWED
+    }
 
 
 if __name__ == "__main__":
