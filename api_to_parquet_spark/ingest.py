@@ -1,9 +1,10 @@
-"""Ingest pipeline: envelope validation → explode → normalize.
+"""Ingest pipeline: typed envelopes → validation → explode → normalize.
 
 Re-expresses the reference's POST / handler (/root/reference/src/main.go:250-298)
-as pure DataFrame→DataFrame functions. Each stage is declarative so Catalyst
-can fuse the whole pipeline into one whole-stage-codegen pass per batch; no
-driver-side loops, no Python UDFs.
+as pure DataFrame→DataFrame functions over envelopes typed by POST /'s
+Arrow parse (read_envelope) or the streams' from_json (parse_envelopes).
+Each stage is declarative so Catalyst can fuse the whole pipeline into
+one whole-stage-codegen pass per batch; no driver-side loops, no Python UDFs.
 
 Reference bugs intentionally NOT reproduced (SURVEY.md §7):
 - empty-`content` panic (src/main.go:278) → clean rejection here;
@@ -12,8 +13,12 @@ Reference bugs intentionally NOT reproduced (SURVEY.md §7):
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.json as pj
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from api_to_parquet_spark.schemas import (
     ENVELOPE_SCHEMA,
@@ -21,17 +26,58 @@ from api_to_parquet_spark.schemas import (
     ZERO_FILL,
 )
 
+ARROW_ENVELOPE_SCHEMA = to_arrow_schema(ENVELOPE_SCHEMA)
+CORRUPT_RECORD = "_corrupt_record"  # from_json's text of an untypable document
+
+
+def read_json(body: bytes, schema: pa.Schema, others: str = "ignore") -> pa.Table:
+    """One pyarrow.json pass over a body of exactly one JSON object: a
+    one-row table typed by `schema`, other fields handled as `others`
+    says ("ignore" or "infer"). As BindJSON does, it refuses (with
+    pa.ArrowInvalid) malformed JSON, a repeated field and a value its
+    type cannot hold exactly: `"2"` or `1.5` for an int64, 7 for a string."""
+    # a leading `null` document kills the process inside the reader (a
+    # later one reads as a row): tests/test_service.py pins both
+    if body.lstrip()[:1] != b"{":
+        raise pa.ArrowInvalid("JSON parse error: body is not an object")
+    table = pj.read_json(
+        pa.py_buffer(body),
+        # one block: an object straddling two blocks fails to parse
+        pj.ReadOptions(block_size=len(body)),
+        pj.ParseOptions(
+            schema, newlines_in_values=True, unexpected_field_behavior=others
+        ),
+    )
+    if table.num_rows != 1:
+        raise pa.ArrowInvalid(f"JSON parse error: {table.num_rows} documents")
+    return table
+
+
+def read_envelope(body: bytes) -> pa.Table:
+    """One POST body as a one-row table typed by ENVELOPE_SCHEMA
+    (BindJSON, reference src/main.go:250-255); pa.ArrowInvalid otherwise."""
+    return read_json(body, ARROW_ENVELOPE_SCHEMA)
+
 
 def parse_envelopes(raw_json: DataFrame, json_col: str = "value") -> DataFrame:
-    """Parse a DataFrame of raw JSON strings into typed envelopes.
-
-    Spark-side equivalent of BindJSON (reference src/main.go:250-255):
-    `from_json` with the static ENVELOPE_SCHEMA — no inference, bad
-    documents become NULL envelopes and fall out in validation.
+    """Type a column of raw JSON documents in the executors: `from_json`
+    with the static ENVELOPE_SCHEMA, no inference. A document it cannot
+    read as typed (a string for a number, a float for an int64) gets a
+    NULL `content`, which validation rejects; unlike read_envelope it
+    still reads 7 into a string field and accepts NaN.
     """
-    return raw_json.select(
-        F.from_json(F.col(json_col), ENVELOPE_SCHEMA).alias("env")
-    ).select("env.*")
+    schema = T.StructType(
+        ENVELOPE_SCHEMA.fields + [T.StructField(CORRUPT_RECORD, T.StringType())]
+    )
+    options = {"columnNameOfCorruptRecord": CORRUPT_RECORD}
+    return (
+        raw_json.select(F.from_json(F.col(json_col), schema, options).alias("env"))
+        .select("env.*")
+        .withColumn(
+            "content", F.when(F.col(CORRUPT_RECORD).isNull(), F.col("content"))
+        )
+        .drop(CORRUPT_RECORD)
+    )
 
 
 def valid_envelope_predicate() -> Column:
@@ -113,16 +159,16 @@ def normalize_points(points: DataFrame) -> DataFrame:
     return points.fillna(ZERO_FILL)
 
 
-def ingest_batch(raw_json: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Full ingest plan: raw JSON → (normalized partitioned points, rejected).
+def ingest_batch(envelopes: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Full ingest plan: typed envelopes → (normalized partitioned points,
+    rejected).
 
-    Equivalent of the reference's POST / pipeline through the parquet
-    writer (src/main.go:250-298), minus the sink. Every sink runs this
-    plan: the HTTP service hands the result to lake.write_batch_files,
-    and the ingest streams (streaming.start_ingest_stream,
-    streaming.start_snapshot_ingest_stream) run it per micro-batch.
+    Equivalent of the reference's POST / pipeline after BindJSON through
+    the parquet writer (src/main.go:256-298), minus the sink. Every sink
+    runs this plan: the HTTP service on its read_envelope frame, and the
+    ingest streams on parse_envelopes per micro-batch.
     """
-    valid, rejected = validate_envelopes(parse_envelopes(raw_json))
+    valid, rejected = validate_envelopes(envelopes)
     return normalize_points(explode_points(valid)), rejected
 
 

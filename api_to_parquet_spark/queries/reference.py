@@ -103,8 +103,7 @@ def q_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("events/"), F.date_format("d", "yyyy/MM/dd"), F.lit("/00/batch.parquet")
         ).alias("file"),
     )
-    valid, _ = ingest.validate_envelopes(env)
-    points = ingest.normalize_points(ingest.explode_points(valid))
+    points, _ = ingest.ingest_batch(env)
     return points.groupBy("file").agg(
         F.count("*").alias("n"),
         F.max("Timestamp").alias("max_ts"),

@@ -17,20 +17,21 @@ queries.kql translator (or raw Spark SQL) instead of proxying.
 Scale honesty: this in-process server is the *protocol adapter*, not the
 scale path. One POST = one micro-batch through ingest.ingest_batch
 and lake.latest_per_file's last-write-wins rule, the plan and rule
-every streaming micro-batch runs too (streaming.start_ingest_stream),
-and each body is parsed exactly once:
-the envelope frame is built from an Arrow table, so it plans as a
-JVM-resident LocalTableScan (no Python worker pickles the body), and
-the exploded points are persisted for the lake write and the state
-merge, then released — as streaming's process_batch does.
-Before any Spark work the driver checks the decoded body's top-level
-types against ENVELOPE_SCHEMA, so an envelope the typed parse would
-drop gets a 400 instead of a 200 that wrote nothing. A production
-deployment points many
-such stateless receivers at an envelope drop directory / queue and lets
-the single-writer streaming query own the lake and state (SURVEY.md
-§1.5), which is strictly stronger than the reference's cross-replica
-Redis race (src/main.go:315-322). Differences kept deliberately:
+every streaming micro-batch runs too (streaming.start_ingest_stream).
+Each body is parsed once, in Arrow (ingest.read_envelope), into a
+LocalTableScan (no Python worker) that Spark explodes; the points are
+persisted for the lake write and the state merge, then released. As
+BindJSON does, the typed parse refuses a value its field cannot hold
+exactly ("2" or NaN for Value, 1.5 for Timestamp, 7 for PointId) with a
+400 naming the field. Divergences: a repeated key is a 400 (Go keeps the
+last value), and so is a body not starting with `{`, even a malformed
+one; other malformed JSON stays a 500, and so does a mistyped integer in
+a body whose unknown fields hold two JSON types under one name (the
+probe that names the field cannot infer them). A production deployment
+points many such stateless receivers at an envelope drop directory /
+queue and lets the single-writer streaming query own the lake and
+state (SURVEY.md §1.5), which is strictly stronger than the reference's
+cross-replica Redis race (src/main.go:315-322). Differences kept deliberately:
 rejected envelopes get a clean 400 where the reference panics on empty
 content (main.go:278), and a failed write returns 500 instead of
 log.Fatal-ing the process (main.go:308-310).
@@ -41,12 +42,14 @@ from __future__ import annotations
 import base64
 import datetime
 import json
+import re
 import threading
 from decimal import Decimal
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Row, SparkSession
 
 from api_to_parquet_spark import ingest, lake, state
@@ -151,31 +154,55 @@ _REQUIRED = [
     ("id", "Malformed request: property id is empty"),
 ]
 
-_LONG_MIN, _LONG_MAX = -(2**63), 2**63 - 1
+_KINDS = {pa.int64(): "an integer", pa.float64(): "a number", pa.string(): "a string"}
+_ENVELOPE = ingest.ARROW_ENVELOPE_SCHEMA
+_POINT = _ENVELOPE.field("content").type.value_type
+# Arrow's int64 conversion errors name no column. _INT_PROBE leaves the
+# int64 fields to inference, where a number no int64 holds exactly (1.5,
+# 1e3, 2**70) reads as a double: one more parse names the field
+_INT_FIELDS = [["timeGenerated"]] + [
+    ["content", f.name] for f in _POINT if f.type == pa.int64()
+]
+_INT_PROBE = pa.schema(
+    [f for f in _ENVELOPE if f.type == pa.string()]
+    + [("content", pa.list_(pa.struct([f for f in _POINT if f.type != pa.int64()])))]
+)
 
 
-def _type_error(record: dict) -> str | None:
-    """The first top-level field whose JSON type ENVELOPE_SCHEMA's typed
-    parse would not accept as-is, or None. from_json turns a mistyped
-    timeGenerated or content into a NULL envelope that validation drops,
-    and silently coerces a number in a string field."""
-    for field in ("file", "id", "source"):
-        v = record.get(field)
-        if v is not None and not isinstance(v, str):
-            return f"Malformed request: property {field} is not a string"
-    tg = record["timeGenerated"]
-    if (
-        isinstance(tg, bool)
-        or not isinstance(tg, int)
-        or not _LONG_MIN <= tg <= _LONG_MAX
-    ):
-        return "Malformed request: property timeGenerated is not an integer"
-    content = record["content"]
-    if not isinstance(content, list) or not all(
-        isinstance(p, dict) for p in content
-    ):
+def _field_error(path: list[str], problem: str = "") -> str:
+    """The 400 message for field [name] or ["content", point field]."""
+    if path == ["content"]:
         return "Malformed request: content is not a list of objects"
-    return None
+    point = len(path) == 2
+    where = "content property" if point else "property"
+    field = (_POINT if point else _ENVELOPE).field(path[-1])
+    problem = problem or "is not " + _KINDS[field.type]
+    return f"Malformed request: {where} {path[-1]} {problem}"
+
+
+def _refusal(body: bytes, err: str) -> tuple[int, dict]:
+    """The reply for a body read_envelope refused, worked out on this
+    error path only: a 400 for a non-object or a mistyped or repeated
+    field (named), a 500 for malformed JSON."""
+    if body.lstrip()[:1] not in (b"{", b""):
+        return 400, {"error": "Malformed request: body is not an object"}
+    named = re.search(r"Column\((/[^)]*)\) (was specified twice)?.* in row 0$", err)
+    if named:
+        path = [p for p in named.group(1).split("/") if p not in ("", "[]")]
+        problem = "is repeated" if named.group(2) else ""
+        return 400, {"error": _field_error(path, problem)}
+    if err.startswith("Failed to convert JSON to int64"):
+        try:  # an unknown field holding two JSON types fails inference
+            probe = ingest.read_json(body, _INT_PROBE, "infer").schema
+        except pa.ArrowInvalid:
+            return 500, {"error": "invalid JSON"}
+        point = probe.field("content").type.value_type
+        for path in _INT_FIELDS:
+            fields = point if len(path) == 2 else probe
+            i = fields.get_field_index(path[-1])
+            if i >= 0 and fields.field(i).type == pa.float64():
+                return 400, {"error": _field_error(path)}
+    return 500, {"error": "invalid JSON"}
 
 
 class LakeService:
@@ -199,29 +226,29 @@ class LakeService:
 
     def ingest_envelope(self, body: bytes) -> tuple[int, dict]:
         try:
-            text = body.decode("utf-8")
-            record = json.loads(text)
-        except ValueError:
+            body.decode("utf-8")  # Arrow stores invalid UTF-8 as is
+            table = ingest.read_envelope(body)
+        except UnicodeDecodeError:
             return 500, {"error": "invalid JSON"}
-        if not isinstance(record, dict):
-            return 400, {"error": "Malformed request: body is not an object"}
+        except pa.ArrowInvalid as e:
+            return _refusal(body, str(e))
+        row = table.drop_columns("content").to_pylist()[0]
         for field, msg in _REQUIRED:
-            if not record.get(field):
+            if not row[field]:
                 return 400, {"error": msg}
-        if not record.get("content"):
+        content = table.column("content")[0].values
+        if content is None or len(content) == 0:
             return 400, {"error": "Malformed request: content is empty"}
-        msg = _type_error(record)
-        if msg is not None:
-            return 400, {"error": msg}
-        # an Arrow-built frame is a LocalRelation: Catalyst folds the
-        # parse into one LocalTableScan on the driver, where a list of
-        # tuples would go through sc.parallelize and a Python worker
-        raw = self.spark.createDataFrame(
-            pa.table({"value": [text]})
-        )
-        points, _ = ingest.ingest_batch(raw)
-        # persist() plans the batch, so the parse runs here, outside the
-        # lock; the lake write and the state merge then share its cache
+        if content.null_count:
+            return 400, {"error": _field_error(["content"])}
+        if pc.any(pc.invert(pc.is_finite(content.field("Value")))).as_py():
+            # JSON has no NaN or Infinity, but Arrow's reader accepts them
+            return 400, {"error": _field_error(["content", "Value"])}
+        # an Arrow table is a LocalRelation: one LocalTableScan, where a
+        # list of tuples goes through sc.parallelize and a Python worker
+        points, _ = ingest.ingest_batch(self.spark.createDataFrame(table))
+        # persist() plans the batch, so the explode runs here, outside
+        # the lock; the lake write and the state merge then share its cache
         points = points.persist()
         try:
             with self._write_lock:
@@ -232,8 +259,8 @@ class LakeService:
         finally:
             points.unpersist()
         return 200, {
-            "id": record["id"],
-            "timeGenerated": record["timeGenerated"],
+            "id": row["id"],
+            "timeGenerated": row["timeGenerated"],
             "maxTimestamp": new_state["max_timestamp"],
         }
 

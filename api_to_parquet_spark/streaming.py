@@ -14,8 +14,10 @@ micro-batches (SURVEY.md §2.9) as a streaming query.
 - ST4 extensions: event-time watermark + tumbling-window aggregation
   (absent in the reference, standard for late data at scale).
 
-The batch and streaming paths share the exact same DataFrame transforms
-(ingest.py) — one logical pipeline, two triggers.
+POST / and the streams share every transform after the parse. POST /
+parses in Arrow on the driver, the streams with from_json in the
+executors, which still reads `"PointId": 7` as "7" and accepts NaN where
+POST / answers 400 (tests/test_ingest_parity.py pins what both accept).
 """
 
 from __future__ import annotations
@@ -70,8 +72,8 @@ def _start_sink_stream(
         finally:
             points.unpersist()
 
-    raw = spark.readStream.schema("value STRING").text(input_dir)
-    writer = raw.writeStream.foreachBatch(process_batch).option(
+    envelopes = read_envelope_stream(spark, input_dir)
+    writer = envelopes.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint
     )
     if available_now:

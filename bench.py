@@ -332,7 +332,7 @@ def ingest_throughput(
         times: list[float] = []
         for rep in range(5):
             t0 = time.perf_counter()
-            points, _ = ingest.ingest_batch(raw)
+            points, _ = ingest.ingest_batch(ingest.parse_envelopes(raw))
             lake.write_lake(points, target)
             if rep >= 2:
                 times.append(time.perf_counter() - t0)

@@ -52,7 +52,7 @@ def main() -> None:
         ],
         ["value"],
     )
-    points, rejected = ingest.ingest_batch(raw)
+    points, rejected = ingest.ingest_batch(ingest.parse_envelopes(raw))
     print("ingested points:", points.count(), "rejected:", rejected.count())
 
     # 2. land in the per-POST-key lake (replay a key => overwrite) + state

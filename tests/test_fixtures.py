@@ -33,7 +33,7 @@ def test_startup_smoke(spark, tmp_path):
         }
     )
     points, rejected = ingest.ingest_batch(
-        spark.createDataFrame([(env,)], ["value"])
+        ingest.parse_envelopes(spark.createDataFrame([(env,)], ["value"]))
     )
     assert rejected.count() == 0
     lake_path = str(tmp_path / "lake")
@@ -73,7 +73,7 @@ def test_load_shape_80k_rows(spark, tmp_path):
         }
     )
     points, rejected = ingest.ingest_batch(
-        spark.createDataFrame([(env,)], ["value"])
+        ingest.parse_envelopes(spark.createDataFrame([(env,)], ["value"]))
     )
     assert rejected.count() == 0
     lake_path = str(tmp_path / "lake")

@@ -38,7 +38,11 @@ def envelope(content, id="batch-1", source="factory-1",
 
 
 def raw_df(spark, payloads):
-    return spark.createDataFrame([(p,) for p in payloads], ["value"])
+    """The typed envelope frame of raw JSON payloads, parsed as the
+    streams parse them."""
+    return ingest.parse_envelopes(
+        spark.createDataFrame([(p,) for p in payloads], ["value"])
+    )
 
 
 def test_parse_and_explode(spark):

@@ -20,7 +20,8 @@ def _points(spark, file, values, time_generated=1000):
             "file": file,
         }
     )
-    pts, _ = ingest.ingest_batch(spark.createDataFrame([(payload,)], ["value"]))
+    raw = spark.createDataFrame([(payload,)], ["value"])
+    pts, _ = ingest.ingest_batch(ingest.parse_envelopes(raw))
     return pts
 
 
@@ -106,7 +107,7 @@ def test_write_batch_files_intra_batch_last_write_wins(spark, tmp_path):
         )
 
     raw = spark.createDataFrame([env([1, 2], 1), env([99], 2)], ["value"])
-    points, _ = ingest.ingest_batch(raw)
+    points, _ = ingest.ingest_batch(ingest.parse_envelopes(raw))
     lake.write_batch_files(points, str(tmp_path / "lake"))
     rows = spark.read.parquet(str(tmp_path / "lake" / key)).collect()
     assert [r["Timestamp"] for r in rows] == [99]

@@ -32,7 +32,7 @@ def _points(spark, file, ts_values):
         ],
         ["value"],
     )
-    points, _ = ingest.ingest_batch(raw)
+    points, _ = ingest.ingest_batch(ingest.parse_envelopes(raw))
     return points
 
 

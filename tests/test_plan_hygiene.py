@@ -5,6 +5,7 @@ allow-list and the sweep are tools/plan_audit.py's."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from tools.plan_audit import (
     executed_plan,
@@ -39,3 +40,24 @@ def test_iterative_lineage_stays_flat(spark, sf_smoke, registry):
     plan = executed_plan(registry["dedup_clusters"], spark, sf_smoke)
     assert plan.count("Exchange") == 0, plan[:500]
     assert "Scan ExistingRDD" in plan or "LogicalRDD" in plan or "Scan rdd" in plan.lower()
+
+
+def test_generate_input_is_not_duplicated_into_a_filter(spark):
+    """With InferFiltersFromGenerate on, a plan whose explode input is a
+    computed array evaluates that array a second time inside a Filter
+    (`size(sequence(...)) > 0`). session.py excludes the rule; the
+    product session's plan must compute the array once."""
+
+    def array_filters(session):
+        df = (
+            session.range(5)
+            .withColumn("arr", F.sequence(F.lit(0), F.col("id")))
+            .select("id", F.explode("arr").alias("v"))
+        )
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return [ln for ln in plan.splitlines() if "Filter" in ln and "sequence(" in ln]
+
+    rule_on = spark.newSession()
+    rule_on.conf.unset("spark.sql.optimizer.excludedRules")
+    assert array_filters(rule_on), "the rule no longer duplicates the array"
+    assert array_filters(spark) == []

@@ -63,7 +63,7 @@ def test_row_conservation_and_zero_fill(spark, envs):
     raw = spark.createDataFrame(
         [(json.dumps(e),) for e in envs], ["value"]
     )
-    points, rejected = ingest.ingest_batch(raw)
+    points, rejected = ingest.ingest_batch(ingest.parse_envelopes(raw))
     rows = points.collect()
     assert rejected.count() == 0
     assert len(rows) == sum(len(e["content"]) for e in envs)
@@ -94,7 +94,7 @@ def test_state_max_monotone_under_any_order(spark, tmp_path_factory, maxima):
             }
         )
         points, _ = ingest.ingest_batch(
-            spark.createDataFrame([(env,)], ["value"])
+            ingest.parse_envelopes(spark.createDataFrame([(env,)], ["value"]))
         )
         state.update_state(spark, state_path, points)
         running = mx if running is None else max(running, mx)

@@ -3,9 +3,12 @@
 
 from __future__ import annotations
 
+import glob
 import http.client
 import json
 import os
+import subprocess
+import sys
 import threading
 import urllib.error
 import urllib.request
@@ -216,6 +219,144 @@ def test_post_parses_body_once(spark, server, monkeypatch):
     assert points.storageLevel == StorageLevel.NONE
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 0 < len(jobs) <= 8, jobs
+
+
+_POINT_BODY = (
+    '{"content": [{"Timestamp": 1, "Value": 1.5}, {%s}],'
+    ' "id": "b", "source": "s", "timeGenerated": 5,'
+    ' "file": "f/2024/01/01/00/a.parquet"}'
+)
+
+
+@pytest.mark.parametrize(
+    "field, problem",
+    [
+        ('"Value": "2"', "content property Value is not a number"),
+        ('"Timestamp": 1.5', "content property Timestamp is not an integer"),
+        ('"Timestamp": 1e3', "content property Timestamp is not an integer"),
+        (
+            '"Timestamp": 92233720368547758070',
+            "content property Timestamp is not an integer",
+        ),
+        ('"Quality": true', "content property Quality is not an integer"),
+        ('"PointId": 7', "content property PointId is not a string"),
+        ('"Value": NaN', "content property Value is not a number"),
+        ('"Value": -Infinity', "content property Value is not a number"),
+        ('"Res": "a", "Res": "b"', "content property Res is repeated"),
+    ],
+)
+def test_mistyped_point_field_is_refused(spark, server, monkeypatch, field, problem):
+    """A point value its field's type cannot hold exactly is a 400 that
+    names the field, as the reference's BindJSON refuses it; it used to
+    land zero-filled (or "7" for a number PointId). The repeated key is
+    a documented divergence: Go and Python's json keep the last value.
+    Nothing reaches the lake or the state, and naming the field costs at
+    most one more parse of the body."""
+    import pyarrow.json as pj
+
+    parses = []
+    read_json = pj.read_json
+    monkeypatch.setattr(
+        pj, "read_json", lambda *a, **k: parses.append(1) or read_json(*a, **k)
+    )
+    base, svc = server
+    body = _POINT_BODY % field
+    status, reply = _raw_post(base, str(len(body)), body.encode())
+    assert (status, reply) == (400, {"error": f"Malformed request: {problem}"})
+    assert 1 <= len(parses) <= 2
+    assert not os.path.exists(svc.lake_root)
+    _, st = _get(base + "/")
+    assert (st["lastTimeGenerated"], st["maxTimestamp"]) == (0, 0)
+
+
+def test_repeated_envelope_key_is_refused(spark, server):
+    base, svc = server
+    env = json.dumps(_envelope("f/2024/01/01/00/a.parquet", [1], 5))
+    body = env[:-1] + ', "id": "again"}'
+    status, reply = _raw_post(base, str(len(body)), body.encode())
+    assert status == 400
+    assert reply["error"] == "Malformed request: property id is repeated"
+    assert not os.path.exists(svc.lake_root)
+
+
+def test_non_object_documents_do_not_crash_the_reader(tmp_path):
+    """pyarrow's JSON reader kills the process when the first document
+    is `null`; a `null` (or any non-object) after an object reads as a
+    row or a parse error. Run in a child process, so a crash fails the
+    test instead of the suite: every body keeps the status the json.loads
+    front end gave it (500 for a trailing document, 400 for a body that
+    is not an object), and none reaches Spark."""
+    env = json.dumps(_envelope("f/2024/01/01/00/a.parquet", [1], 5))
+    bodies = {
+        env + "\nnull": 500,
+        env + " null": 500,
+        env + " 5": 500,
+        env + " []": 500,
+        env + "\n" + env: 500,
+        "null": 400,
+        " \r\n null": 400,
+        "null " + env: 400,
+    }
+    child = (
+        "import json, sys\n"
+        "from api_to_parquet_spark import service\n"
+        "svc = service.LakeService(None, sys.argv[1], sys.argv[2])\n"
+        "for body in json.loads(sys.stdin.read()):\n"
+        "    print(svc.ingest_envelope(body.encode())[0], flush=True)\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", child, str(tmp_path / "lake"), str(tmp_path / "s")],
+        input=json.dumps(list(bodies)),
+        capture_output=True,
+        text=True,
+        cwd=repo,
+        timeout=300,
+    )
+    assert out.returncode == 0, (out.returncode, out.stdout, out.stderr[-2000:])
+    assert [int(x) for x in out.stdout.split()] == list(bodies.values())
+    assert not os.path.exists(tmp_path / "lake")
+
+
+def test_invalid_utf8_body_is_500(server):
+    """Arrow's reader would store the bytes as is; the body is refused
+    as malformed, as it was when Python decoded it first."""
+    base, svc = server
+    env = json.dumps(_envelope("f/2024/01/01/00/a.parquet", [1], 5))
+    body = env.replace('"batch-1"', '"batch-\xff"').encode("latin-1")
+    status, reply = _raw_post(base, str(len(body)), body)
+    assert (status, reply) == (500, {"error": "invalid JSON"})
+    assert not os.path.exists(svc.lake_root)
+
+
+def test_written_file_schema_matches_stream_front_end(spark, server, tmp_path):
+    """The file a POST writes has the 8 point columns `required` and the
+    same Spark row metadata as the stream front-end's file for the same
+    body: the Arrow-built envelope frame leaves query `lake_bytes_per_row`
+    where the from_json one had it."""
+    import pyarrow.parquet as pq
+
+    from api_to_parquet_spark import ingest, lake
+    from api_to_parquet_spark.schemas import POINT_COLUMNS
+
+    base, svc = server
+    key = "factory-1/2023/10/26/19/a.parquet"
+    env = _envelope(key, [100, 300], 7)
+    status, _ = _post(base + "/", env)
+    assert status == 200
+    raw = spark.createDataFrame([(json.dumps(env),)], ["value"])
+    points, _ = ingest.ingest_batch(ingest.parse_envelopes(raw))
+    lake.write_batch_files(points, str(tmp_path / "stream"))
+
+    def schema(root):
+        (path,) = glob.glob(os.path.join(root, key, "*.parquet"))
+        return pq.read_schema(path)
+
+    posted, streamed = schema(svc.lake_root), schema(str(tmp_path / "stream"))
+    assert [posted.field(c).nullable for c in POINT_COLUMNS] == [False] * 8
+    meta = b"org.apache.spark.sql.parquet.row.metadata"
+    assert posted.metadata[meta] == streamed.metadata[meta]
+    assert posted == streamed
 
 
 def test_api_key_gate(spark, tmp_path):

@@ -29,7 +29,7 @@ def _points(spark, file, ts_values, tg=1):
         ],
         ["value"],
     )
-    points, _ = ingest.ingest_batch(raw)
+    points, _ = ingest.ingest_batch(ingest.parse_envelopes(raw))
     return points
 
 

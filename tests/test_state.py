@@ -18,7 +18,8 @@ def _batch(spark, ts_values, time_generated):
             "file": "s/2023/01/01/00/x.parquet",
         }
     )
-    pts, _ = ingest.ingest_batch(spark.createDataFrame([(payload,)], ["value"]))
+    raw = spark.createDataFrame([(payload,)], ["value"])
+    pts, _ = ingest.ingest_batch(ingest.parse_envelopes(raw))
     return pts
 
 
@@ -65,7 +66,7 @@ def test_intra_batch_envelopes_match_sequential_posts(spark, tmp_path):
         )
 
     raw = spark.createDataFrame(pa.table({"value": [env(500, 1), env(99, 2)]}))
-    points, _ = ingest.ingest_batch(raw)
+    points, _ = ingest.ingest_batch(ingest.parse_envelopes(raw))
     path = str(tmp_path / "state")
     row = state.update_state(spark, path, points)
     assert (row["max_timestamp"], row["last_time_generated"]) == (500, 2)

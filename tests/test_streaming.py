@@ -94,6 +94,33 @@ def test_ingest_streams_intra_batch_last_write_wins(spark, tmp_path, start):
     assert got["max_timestamp"] == 30 and got["last_time_generated"] == 4
 
 
+@pytest.mark.parametrize(
+    "start", [_start_lake_stream, _start_snapshot_stream], ids=["lake", "snapshot"]
+)
+def test_ingest_streams_reject_mistyped_envelope(spark, tmp_path, start):
+    """A micro-batch holding a good envelope and one with `"Value": "2"`
+    lands only the good key: from_json flags the mistyped document
+    corrupt, and validation rejects it, as POST / answers it 400 (it
+    used to land as Value 0.0)."""
+    inp = tmp_path / "in"
+    inp.mkdir()
+    good = "s/2024/01/01/03/good.parquet"
+    bad = json.loads(_envelope("s/2024/01/01/03/bad.parquet", [7], 6))
+    bad["content"][0]["Value"] = "2"
+    (inp / "b1.json").write_text(
+        _envelope(good, [11], 5) + "\n" + json.dumps(bad) + "\n"
+    )
+    st = str(tmp_path / "state")
+    q, read = start(
+        spark, str(inp), str(tmp_path / "out"), st, str(tmp_path / "ckpt")
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert [(r["file"], r["Timestamp"]) for r in read().collect()] == [(good, 11)]
+    got = state.read_state(spark, st)
+    assert got["max_timestamp"] == 11 and got["last_time_generated"] == 5
+
+
 def test_state_stream_running_max(spark, tmp_path):
     inp = tmp_path / "in"
     inp.mkdir()
