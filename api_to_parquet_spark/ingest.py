@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import pyarrow as pa
 import pyarrow.json as pj
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -62,14 +62,18 @@ def read_envelope(body: bytes) -> pa.Table:
 def parse_envelopes(raw_json: DataFrame, json_col: str = "value") -> DataFrame:
     """Type a column of raw JSON documents in the executors: `from_json`
     with the static ENVELOPE_SCHEMA, no inference. A document it cannot
-    read as typed (a string for a number, a float for an int64) gets a
-    NULL `content`, which validation rejects; unlike read_envelope it
-    still reads 7 into a string field and accepts NaN.
+    read as typed (a string for a number, a float for an int64, NaN or
+    Infinity) gets a NULL `content`, which validation rejects. Unlike
+    read_envelope it reads 7 into a string field as "7": Spark's JSON
+    reader renders any scalar into a string field.
     """
     schema = T.StructType(
         ENVELOPE_SCHEMA.fields + [T.StructField(CORRUPT_RECORD, T.StringType())]
     )
-    options = {"columnNameOfCorruptRecord": CORRUPT_RECORD}
+    options = {
+        "columnNameOfCorruptRecord": CORRUPT_RECORD,
+        "allowNonNumericNumbers": "false",
+    }
     return (
         raw_json.select(F.from_json(F.col(json_col), schema, options).alias("env"))
         .select("env.*")
@@ -116,15 +120,22 @@ def derive_partitions(envelopes: DataFrame) -> DataFrame:
     """
     pat = r"^([^/]+)/(\d{4})/(\d{2})/(\d{2})/(\d{2})/[^/]+$"
     src = F.regexp_extract("file", pat, 1)
-    # try_cast: non-matching paths yield '' which is not ANSI-castable
-    return (
-        envelopes.withColumn("source", F.when(src != "", src).otherwise(F.lit("unknown")))
-        .withColumn("year", F.regexp_extract("file", pat, 2).try_cast("int"))
-        .withColumn("month", F.regexp_extract("file", pat, 3).try_cast("int"))
-        .withColumn("day", F.regexp_extract("file", pat, 4).try_cast("int"))
-        .withColumn("hour", F.regexp_extract("file", pat, 5).try_cast("int"))
-        .withColumn("file_key", F.md5("file"))
-        .fillna({"year": 0, "month": 0, "day": 0, "hour": 0})
+
+    def part(i: int) -> Column:
+        # try_cast: non-matching paths yield '' which is not ANSI-castable
+        return F.coalesce(F.regexp_extract("file", pat, i).try_cast("int"), F.lit(0))
+
+    # one projection: over POST /'s LocalRelation the optimizer folds
+    # each stacked projection separately, copying the whole content array
+    return envelopes.withColumns(
+        {
+            "source": F.when(src != "", src).otherwise(F.lit("unknown")),
+            "year": part(2),
+            "month": part(3),
+            "day": part(4),
+            "hour": part(5),
+            "file_key": F.md5("file"),
+        }
     )
 
 
@@ -170,6 +181,26 @@ def ingest_batch(envelopes: DataFrame) -> tuple[DataFrame, DataFrame]:
     """
     valid, rejected = validate_envelopes(envelopes)
     return normalize_points(explode_points(valid)), rejected
+
+
+def batch_keys(envelopes: DataFrame) -> list[Row]:
+    """The driver-side facts every sink needs, one row per valid
+    envelope: its `file` key, `time_generated` and the `max_timestamp`
+    of its points, zero-filled as normalize_points fills them. They
+    exist once per envelope, so they are read from the envelopes, not
+    from the exploded points. On POST /'s LocalRelation the optimizer
+    folds this projection on the driver and the collect runs no Spark
+    job; on a stream micro-batch it is one narrow job."""
+    stamps = F.transform("content", lambda p: F.coalesce(p["Timestamp"], F.lit(0)))
+    return (
+        envelopes.filter(valid_envelope_predicate())
+        .select(
+            "file",
+            F.col("timeGenerated").alias("time_generated"),
+            F.array_max(stamps).alias("max_timestamp"),
+        )
+        .collect()
+    )
 
 
 def batch_stats(points: DataFrame) -> DataFrame:

@@ -22,7 +22,7 @@ from __future__ import annotations
 import posixpath
 import weakref
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from api_to_parquet_spark.schemas import PARTITION_COLUMNS
@@ -111,25 +111,27 @@ def read_batch_tree(
     )
 
 
-def latest_per_file(points: DataFrame) -> dict[str, Column]:
+def latest_per_file(keys: list[Row]) -> dict[str, Column]:
     """Intra-batch last-write-wins, the one rule every ingest sink applies.
 
     A batch carrying SEVERAL envelopes for one `file` key keeps only the
     max-timeGenerated envelope's rows — the reference applies them as
     sequential POSTs (src/main.go:306), so the final state is the last
-    one, never the union. One grouped collect finds each key's latest
-    timeGenerated (a per-key partial aggregate, so the shuffle carries
-    one row per key, not the batch's rows). Returns {file key: predicate
-    selecting that key's latest rows}; it is empty iff `points` is.
+    one, never the union. `keys` are the batch's envelope rows
+    (ingest.batch_keys), so the rule runs on the driver with no Spark
+    job. Returns {file key: predicate selecting that key's latest
+    points}, in first-seen key order; it is empty iff `keys` is.
     """
-    latest = points.groupBy("file").agg(F.max("time_generated")).collect()
+    latest: dict[str, int] = {}
+    for key, tg, _ in keys:
+        latest[key] = max(tg, latest.get(key, tg))
     return {
         key: (F.col("file") == key) & (F.col("time_generated") == tg)
-        for key, tg in latest
+        for key, tg in latest.items()
     }
 
 
-def write_batch_files(points: DataFrame, lake_root: str) -> list[str]:
+def write_batch_files(points: DataFrame, keys: list[Row], lake_root: str) -> list[str]:
     """Exact per-file overwrite parity (ST3, reference README.md:88).
 
     One POST = one parquet target keyed by the envelope `file` path;
@@ -138,14 +140,14 @@ def write_batch_files(points: DataFrame, lake_root: str) -> list[str]:
     directory per `file` key — `<lake_root>/<file>/part-*.parquet` —
     which readers treat identically to a single file (glob scan).
 
-    The loop is over *distinct batch keys in this micro-batch* (small:
-    one per POST), not over rows — each write is a distributed job that
-    keeps only the key's latest envelope (latest_per_file) and coalesces
-    to one file. A caller that also merges the batch into state (the
-    HTTP service) persists `points` first, so the collect, the writes
-    and the merge all read one cached parse.
+    `keys` are the batch's envelope rows (ingest.batch_keys). The loop
+    is over the distinct `file` keys among them (one per POST), not
+    over rows: each write is one distributed job that keeps only the
+    key's latest envelope (latest_per_file) and coalesces to one file.
+    These writes are the only jobs over `points`, so nothing is
+    persisted. Returns the written keys.
     """
-    latest = latest_per_file(points)
+    latest = latest_per_file(keys)
     for key, keep in latest.items():
         (
             points.filter(keep)

@@ -19,22 +19,24 @@ scale path. One POST = one micro-batch through ingest.ingest_batch
 and lake.latest_per_file's last-write-wins rule, the plan and rule
 every streaming micro-batch runs too (streaming.start_ingest_stream).
 Each body is parsed once, in Arrow (ingest.read_envelope), into a
-LocalTableScan (no Python worker) that Spark explodes; the points are
-persisted for the lake write and the state merge, then released. As
+LocalTableScan (no Python worker) that Spark explodes. The sink's keys
+and both state scalars come from the envelope (ingest.batch_keys, folded
+on the driver with no job), so a POST runs 3 Spark jobs — the lake
+write, the state read and the state write — and caches nothing. As
 BindJSON does, the typed parse refuses a value its field cannot hold
 exactly ("2" or NaN for Value, 1.5 for Timestamp, 7 for PointId) with a
-400 naming the field. Divergences: a repeated key is a 400 (Go keeps the
-last value), and so is a body not starting with `{`, even a malformed
-one; other malformed JSON stays a 500, and so does a mistyped integer in
-a body whose unknown fields hold two JSON types under one name (the
-probe that names the field cannot infer them). A production deployment
+400 naming the field; the streams' from_json refuses all of these but
+the last, reading 7 as "7". Divergences: a repeated key is a 400 (Go
+keeps the last value), and so is a body not starting with `{`, even a
+malformed one; other malformed JSON stays a 500. A production deployment
 points many such stateless receivers at an envelope drop directory /
 queue and lets the single-writer streaming query own the lake and
 state (SURVEY.md §1.5), which is strictly stronger than the reference's
 cross-replica Redis race (src/main.go:315-322). Differences kept deliberately:
 rejected envelopes get a clean 400 where the reference panics on empty
-content (main.go:278), and a failed write returns 500 instead of
-log.Fatal-ing the process (main.go:308-310).
+content (main.go:278), and a failed write — or any other route failure,
+such as an unreadable state file — returns 500 instead of log.Fatal-ing
+the process (main.go:308-310).
 """
 
 from __future__ import annotations
@@ -42,6 +44,7 @@ from __future__ import annotations
 import base64
 import datetime
 import json
+import logging
 import re
 import threading
 from decimal import Decimal
@@ -54,6 +57,8 @@ from pyspark.sql import Row, SparkSession
 
 from api_to_parquet_spark import ingest, lake, state
 from api_to_parquet_spark.queries.kql import _REQUEST_DB, kql
+
+_LOG = logging.getLogger(__name__)
 
 # /query response row cap; truncated responses carry Kusto's partial-
 # results signal (v1 `Exceptions` entry; `"truncated": true` in the
@@ -169,6 +174,24 @@ _INT_PROBE = pa.schema(
 )
 
 
+def _int64_only(path: list[str]) -> pa.Schema:
+    """ENVELOPE_SCHEMA with every int64 field but `path` read as float64:
+    a parse by it fails only if the value at `path` is no exact int64."""
+
+    def retype(f: pa.Field, at: list[str]) -> pa.Field:
+        if f.type != pa.int64() or at == path:
+            return f
+        return f.with_type(pa.float64())
+
+    point = pa.struct([retype(f, ["content", f.name]) for f in _POINT])
+    return pa.schema(
+        [
+            f.with_type(pa.list_(point)) if f.name == "content" else retype(f, [f.name])
+            for f in _ENVELOPE
+        ]
+    )
+
+
 def _field_error(path: list[str], problem: str = "") -> str:
     """The 400 message for field [name] or ["content", point field]."""
     if path == ["content"]:
@@ -192,10 +215,18 @@ def _refusal(body: bytes, err: str) -> tuple[int, dict]:
         problem = "is repeated" if named.group(2) else ""
         return 400, {"error": _field_error(path, problem)}
     if err.startswith("Failed to convert JSON to int64"):
-        try:  # an unknown field holding two JSON types fails inference
+        try:
             probe = ingest.read_json(body, _INT_PROBE, "infer").schema
         except pa.ArrowInvalid:
-            return 500, {"error": "invalid JSON"}
+            # an unknown field holding two JSON types fails inference:
+            # parse once per int64 field, read as int64 alone, until one
+            # fails; when all others pass, the last one is at fault
+            for path in _INT_FIELDS[:-1]:
+                try:
+                    ingest.read_json(body, _int64_only(path))
+                except pa.ArrowInvalid:
+                    return 400, {"error": _field_error(path)}
+            return 400, {"error": _field_error(_INT_FIELDS[-1])}
         point = probe.field("content").type.value_type
         for path in _INT_FIELDS:
             fields = point if len(path) == 2 else probe
@@ -246,18 +277,14 @@ class LakeService:
             return 400, {"error": _field_error(["content", "Value"])}
         # an Arrow table is a LocalRelation: one LocalTableScan, where a
         # list of tuples goes through sc.parallelize and a Python worker
-        points, _ = ingest.ingest_batch(self.spark.createDataFrame(table))
-        # persist() plans the batch, so the explode runs here, outside
-        # the lock; the lake write and the state merge then share its cache
-        points = points.persist()
-        try:
-            with self._write_lock:
-                lake.write_batch_files(points, self.lake_root)
-                new_state = state.update_state(
-                    self.spark, self.state_path, points
-                )
-        finally:
-            points.unpersist()
+        envelopes = self.spark.createDataFrame(table)
+        points, _ = ingest.ingest_batch(envelopes)
+        # the optimizer folds the key collect on the driver (no job), so
+        # the lake write is the only job over the points: nothing cached
+        keys = ingest.batch_keys(envelopes)
+        with self._write_lock:
+            lake.write_batch_files(points, keys, self.lake_root)
+            new_state = state.update_state(self.spark, self.state_path, keys)
         return 200, {
             "id": row["id"],
             "timeGenerated": row["timeGenerated"],
@@ -387,6 +414,14 @@ def make_server(service: LakeService, port: int = 0) -> ThreadingHTTPServer:
             return qs.get("key", [None])[0] == service.api_key
 
         def _route(self) -> None:
+            try:
+                self._dispatch()
+            except Exception as e:  # noqa: BLE001 — a failed route is a 500
+                _LOG.exception("%s %s failed", self.command, urlparse(self.path).path)
+                lines = str(e).strip().splitlines() or [type(e).__name__]
+                self._send(500, {"error": lines[0][:2000]})
+
+        def _dispatch(self) -> None:
             if not self._authorized():
                 self._send(401, {"error": "unauthorized"})
                 return

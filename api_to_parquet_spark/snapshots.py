@@ -35,7 +35,7 @@ import json
 import posixpath
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from api_to_parquet_spark.lake import latest_per_file
@@ -106,16 +106,17 @@ def _write_manifest(
 
 
 def commit_batch(
-    spark: SparkSession, root: str, points: DataFrame
+    spark: SparkSession, root: str, points: DataFrame, keys: list[Row]
 ) -> int:
     """Commit one ingested batch (normalized points carrying the `file`
-    column): each distinct `file` key's latest envelope (the shared
-    last-write-wins rule, lake.latest_per_file) lands in a fresh data
-    directory, then the next manifest atomically re-points those keys.
-    Returns the committed version number, or -1 for an empty batch,
-    which commits nothing. Replaying a key leaves the old directory in
-    place for time travel until vacuum."""
-    latest = latest_per_file(points)
+    column, and its envelope rows from ingest.batch_keys): each distinct
+    `file` key's latest envelope (the shared last-write-wins rule,
+    lake.latest_per_file) lands in a fresh data directory, then the
+    next manifest atomically re-points those keys. Returns the committed
+    version number, or -1 for a batch with no keys, which commits
+    nothing. Replaying a key leaves the old directory in place for time
+    travel until vacuum."""
+    latest = latest_per_file(keys)
     if not latest:
         return -1
     versions = _list_versions(spark, root)

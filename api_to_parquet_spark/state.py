@@ -10,7 +10,8 @@ the same two scalars in the Structured Streaming state store
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -25,47 +26,43 @@ STATE_SCHEMA = T.StructType(
 
 
 def read_state(spark: SparkSession, state_path: str) -> Row:
-    """GET / equivalent (reference src/main.go:234-245)."""
+    """GET / equivalent (reference src/main.go:234-245). A missing
+    control table is the empty state; any other failure to read it (a
+    corrupt file) raises, so a merge can never silently reset the
+    monotonic max."""
     try:
         rows = spark.read.schema(STATE_SCHEMA).parquet(state_path).collect()
-    except Exception:
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         rows = []
     if not rows:
         return Row(last_time_generated=None, max_timestamp=None)
     return rows[0]
 
 
-def update_state(spark: SparkSession, state_path: str, points: DataFrame) -> Row:
+def update_state(spark: SparkSession, state_path: str, keys: list[Row]) -> Row:
     """Merge one ingested batch into the control table.
 
+    `keys` are the batch's envelope rows (ingest.batch_keys), which
+    carry both scalars, so the merge runs no job over the batch:
     last_time_generated ← the batch's arrival-order-latest timeGenerated
     (last-write-wins); max_timestamp ← greatest(stored, batch max),
-    monotonic. One tiny agg job over the batch + a single-row write —
-    no full-lake scan, so cost is independent of lake size. The row is
-    written from literals over a one-row range, a JVM-only plan: a
-    createDataFrame of Python rows would ship them through a Python
-    worker for one row.
+    monotonic. One state read + a single-row write — no full-lake scan,
+    so cost is independent of lake size. The row is written from
+    literals over a one-row range, a JVM-only plan: a createDataFrame
+    of Python rows would ship them through a Python worker for one row.
     """
-    agg = points.agg(
-        F.max("time_generated").alias("batch_time_generated"),
-        F.max("Timestamp").alias("batch_max_ts"),
-    ).collect()[0]
     prev = read_state(spark, state_path)
-
-    def merge_max(a: int | None, b: int | None) -> int | None:
-        if a is None:
-            return b
-        if b is None:
-            return a
-        return max(a, b)
-
+    stamps = [k["max_timestamp"] for k in keys]
+    if prev["max_timestamp"] is not None:
+        stamps.append(prev["max_timestamp"])
     new = Row(
-        last_time_generated=(
-            agg["batch_time_generated"]
-            if agg["batch_time_generated"] is not None
-            else prev["last_time_generated"]
+        last_time_generated=max(
+            (k["time_generated"] for k in keys),
+            default=prev["last_time_generated"],
         ),
-        max_timestamp=merge_max(prev["max_timestamp"], agg["batch_max_ts"]),
+        max_timestamp=max(stamps, default=None),
     )
     spark.range(0, 1, 1, 1).select(
         *(

@@ -16,8 +16,10 @@ micro-batches (SURVEY.md §2.9) as a streaming query.
 
 POST / and the streams share every transform after the parse. POST /
 parses in Arrow on the driver, the streams with from_json in the
-executors, which still reads `"PointId": 7` as "7" and accepts NaN where
-POST / answers 400 (tests/test_ingest_parity.py pins what both accept).
+executors. Both refuse NaN and Infinity; from_json still reads
+`"PointId": 7` as "7" where POST / answers 400, since Spark's JSON
+reader renders any scalar into a string field
+(tests/test_ingest_parity.py pins what both accept).
 """
 
 from __future__ import annotations
@@ -28,7 +30,7 @@ from typing import Callable
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -54,23 +56,28 @@ def _start_sink_stream(
     state_path: str,
     checkpoint: str,
     available_now: bool,
-    sink: Callable[[DataFrame], bool],
+    sink: Callable[[DataFrame, list[Row]], None],
 ) -> StreamingQuery:
     """The reference's POST / loop as one streaming query: per
-    micro-batch, the ingest plan POST / runs (ingest.ingest_batch), then
-    `sink` — which applies lake.latest_per_file and returns False for an
-    empty batch — then the control-table merge. foreachBatch gives
+    micro-batch, one collect of the envelope rows (ingest.batch_keys),
+    then for a batch with any valid envelope the ingest plan POST / runs
+    (ingest.ingest_batch), `sink` — which applies lake.latest_per_file
+    to those rows — and the control-table merge. The typed envelope
+    batch is persisted, so one from_json per micro-batch feeds the
+    collect and every key's write. foreachBatch gives
     exactly-once-per-batch sinks via the checkpointed batch id +
     idempotent per-`file`-key overwrite."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        points, _rejected = ingest.ingest_batch(batch_df)
-        points = points.persist()
+        envelopes = batch_df.persist()
         try:
-            if sink(points):
-                state.update_state(spark, state_path, points)
+            keys = ingest.batch_keys(envelopes)
+            if keys:
+                points, _rejected = ingest.ingest_batch(envelopes)
+                sink(points, keys)
+                state.update_state(spark, state_path, keys)
         finally:
-            points.unpersist()
+            envelopes.unpersist()
 
     envelopes = read_envelope_stream(spark, input_dir)
     writer = envelopes.writeStream.foreachBatch(process_batch).option(
@@ -92,12 +99,9 @@ def start_ingest_stream(
     """Streaming ingest into the partitioned lake: each micro-batch's
     latest envelope per `file` key replaces that key's partition."""
 
-    def write(points: DataFrame) -> bool:
-        latest = lake.latest_per_file(points)
-        if latest:
-            keep = functools.reduce(operator.or_, latest.values())
-            lake.write_lake(points.filter(keep), lake_path)
-        return bool(latest)
+    def write(points: DataFrame, keys: list[Row]) -> None:
+        keep = functools.reduce(operator.or_, lake.latest_per_file(keys).values())
+        lake.write_lake(points.filter(keep), lake_path)
 
     return _start_sink_stream(
         spark, input_dir, state_path, checkpoint, available_now, write
@@ -120,8 +124,8 @@ def start_snapshot_ingest_stream(
     checkpointed batch id re-commit the same keys idempotently (new
     version, same rows)."""
 
-    def commit(points: DataFrame) -> bool:
-        return snapshots.commit_batch(spark, snapshot_root, points) >= 0
+    def commit(points: DataFrame, keys: list[Row]) -> None:
+        snapshots.commit_batch(spark, snapshot_root, points, keys)
 
     return _start_sink_stream(
         spark, input_dir, state_path, checkpoint, available_now, commit

@@ -52,12 +52,16 @@ def main() -> None:
         ],
         ["value"],
     )
-    points, rejected = ingest.ingest_batch(ingest.parse_envelopes(raw))
+    envelopes = ingest.parse_envelopes(raw)
+    points, rejected = ingest.ingest_batch(envelopes)
     print("ingested points:", points.count(), "rejected:", rejected.count())
 
-    # 2. land in the per-POST-key lake (replay a key => overwrite) + state
-    lake.write_batch_files(points, root)
-    st = state.update_state(spark, state_path, points)
+    # 2. land in the per-POST-key lake (replay a key => overwrite) + state,
+    # both driven by one row per envelope: its file key, timeGenerated and
+    # max Timestamp
+    keys = ingest.batch_keys(envelopes)
+    lake.write_batch_files(points, keys, root)
+    st = state.update_state(spark, state_path, keys)
     print("state:", dict(st.asDict()))
 
     # 3. query it three ways

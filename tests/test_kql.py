@@ -119,8 +119,9 @@ def test_synapse_openrowset_verbatim(spark, tmp_path):
             "file": f"factory-1/2023/10/26/{hour}/a.parquet",
         }
         raw = spark.createDataFrame([(json.dumps(env),)], ["value"])
-        points, _ = ingest.ingest_batch(ingest.parse_envelopes(raw))
-        lake.write_batch_files(points, root)
+        envelopes = ingest.parse_envelopes(raw)
+        points, _ = ingest.ingest_batch(envelopes)
+        lake.write_batch_files(points, ingest.batch_keys(envelopes), root)
 
     df = synapse_sql(
         spark,

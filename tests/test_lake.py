@@ -10,8 +10,8 @@ from pyspark.sql import functions as F
 from api_to_parquet_spark import ingest, lake
 
 
-def _points(spark, file, values, time_generated=1000):
-    payload = json.dumps(
+def _payload(file, values, time_generated):
+    return json.dumps(
         {
             "content": [{"Timestamp": 1000 + i, "Value": float(v)} for i, v in enumerate(values)],
             "id": "b",
@@ -20,7 +20,10 @@ def _points(spark, file, values, time_generated=1000):
             "file": file,
         }
     )
-    raw = spark.createDataFrame([(payload,)], ["value"])
+
+
+def _points(spark, file, values, time_generated=1000):
+    raw = spark.createDataFrame([(_payload(file, values, time_generated),)], ["value"])
     pts, _ = ingest.ingest_batch(ingest.parse_envelopes(raw))
     return pts
 
@@ -70,13 +73,20 @@ def test_distinct_file_keys_coexist_in_same_partition(spark, tmp_path):
     assert back.count() == 3
 
 
+def _batch(spark, file, values):
+    """(points, keys) of one envelope, as write_batch_files takes them."""
+    raw = spark.createDataFrame([(_payload(file, values, 1000),)], ["value"])
+    env = ingest.parse_envelopes(raw)
+    return ingest.ingest_batch(env)[0], ingest.batch_keys(env)
+
+
 def test_per_file_overwrite_parity(spark, tmp_path):
     """FIXTURES.md replay_same_file: same `file` key ⇒ second batch fully
     replaces the first, no duplicate rows (reference README.md:88)."""
     root = str(tmp_path / "files")
     key = "factory-1/2023/10/26/19/a.parquet"
-    lake.write_batch_files(_points(spark, key, [1, 2, 3]), root)
-    lake.write_batch_files(_points(spark, key, [7]), root)
+    assert lake.write_batch_files(*_batch(spark, key, [1, 2, 3]), root) == [key]
+    lake.write_batch_files(*_batch(spark, key, [7]), root)
     back = spark.read.parquet(f"{root}/{key}")
     vals = [r["Value"] for r in back.collect()]
     assert vals == [7.0]
@@ -107,7 +117,9 @@ def test_write_batch_files_intra_batch_last_write_wins(spark, tmp_path):
         )
 
     raw = spark.createDataFrame([env([1, 2], 1), env([99], 2)], ["value"])
-    points, _ = ingest.ingest_batch(ingest.parse_envelopes(raw))
-    lake.write_batch_files(points, str(tmp_path / "lake"))
+    envelopes = ingest.parse_envelopes(raw)
+    points, _ = ingest.ingest_batch(envelopes)
+    keys = ingest.batch_keys(envelopes)
+    assert lake.write_batch_files(points, keys, str(tmp_path / "lake")) == [key]
     rows = spark.read.parquet(str(tmp_path / "lake" / key)).collect()
     assert [r["Timestamp"] for r in rows] == [99]

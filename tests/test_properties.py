@@ -93,10 +93,10 @@ def test_state_max_monotone_under_any_order(spark, tmp_path_factory, maxima):
                 "file": "s/2024/01/02/03/x.parquet",
             }
         )
-        points, _ = ingest.ingest_batch(
+        keys = ingest.batch_keys(
             ingest.parse_envelopes(spark.createDataFrame([(env,)], ["value"]))
         )
-        state.update_state(spark, state_path, points)
+        state.update_state(spark, state_path, keys)
         running = mx if running is None else max(running, mx)
         st_row = state.read_state(spark, state_path)
         assert st_row["max_timestamp"] == running

@@ -5,11 +5,13 @@ from __future__ import annotations
 import json
 
 import pytest
+from pyspark.sql import Row
 
 from api_to_parquet_spark import ingest, snapshots
 
 
-def _points(spark, file, ts_values, tg=1):
+def _batch(spark, file, ts_values, tg=1):
+    """(points, keys) of one envelope, as commit_batch takes them."""
     raw = spark.createDataFrame(
         [
             (
@@ -29,23 +31,23 @@ def _points(spark, file, ts_values, tg=1):
         ],
         ["value"],
     )
-    points, _ = ingest.ingest_batch(ingest.parse_envelopes(raw))
-    return points
+    envelopes = ingest.parse_envelopes(raw)
+    return ingest.ingest_batch(envelopes)[0], ingest.batch_keys(envelopes)
 
 
 def test_commit_read_replay_time_travel(spark, tmp_path):
     root = str(tmp_path / "snaplake")
     key = "s/2023/10/26/19/a.parquet"
-    v0 = snapshots.commit_batch(spark, root, _points(spark, key, [1, 2, 3]))
+    v0 = snapshots.commit_batch(spark, root, *_batch(spark, key, [1, 2, 3]))
     v1 = snapshots.commit_batch(
-        spark, root, _points(spark, "s/2023/10/26/20/b.parquet", [10])
+        spark, root, *_batch(spark, "s/2023/10/26/20/b.parquet", [10])
     )
     # replay key -> REPLACES its rows in the new version only
-    v2 = snapshots.commit_batch(spark, root, _points(spark, key, [99], tg=2))
+    v2 = snapshots.commit_batch(spark, root, *_batch(spark, key, [99], tg=2))
     assert (v0, v1, v2) == (0, 1, 2)
     # an empty batch commits no version
-    empty = _points(spark, key, [5], tg=3).limit(0)
-    assert snapshots.commit_batch(spark, root, empty) == -1
+    points, _ = _batch(spark, key, [5], tg=3)
+    assert snapshots.commit_batch(spark, root, points.limit(0), []) == -1
     assert len(snapshots.history(spark, root)) == 3
 
     latest = sorted(
@@ -66,9 +68,9 @@ def test_snapshot_isolation_under_replace(spark, tmp_path):
     directory overwrite cannot give."""
     root = str(tmp_path / "snaplake")
     key = "s/2023/10/26/19/a.parquet"
-    snapshots.commit_batch(spark, root, _points(spark, key, [1, 2]))
+    snapshots.commit_batch(spark, root, *_batch(spark, key, [1, 2]))
     reader = snapshots.read_snapshot(spark, root)  # resolves v0's dirs
-    snapshots.commit_batch(spark, root, _points(spark, key, [99], tg=2))
+    snapshots.commit_batch(spark, root, *_batch(spark, key, [99], tg=2))
     # the pinned reader still sees v0 exactly
     assert sorted(r["Timestamp"] for r in reader.collect()) == [1, 2]
 
@@ -78,8 +80,8 @@ def test_vacuum_drops_only_unreferenced(spark, tmp_path):
 
     root = str(tmp_path / "snaplake")
     key = "s/2023/10/26/19/a.parquet"
-    snapshots.commit_batch(spark, root, _points(spark, key, [1]))
-    snapshots.commit_batch(spark, root, _points(spark, key, [2], tg=2))
+    snapshots.commit_batch(spark, root, *_batch(spark, key, [1]))
+    snapshots.commit_batch(spark, root, *_batch(spark, key, [2], tg=2))
     assert len(snapshots.history(spark, root)) == 2
     removed = snapshots.vacuum(spark, root, keep_last=1)
     assert removed == 1  # v0's replaced directory gone
@@ -150,7 +152,7 @@ def test_compact_binpacks_and_survives_replay(spark, tmp_path):
     root = str(tmp_path / "snaplake")
     keys = [f"s/2023/10/26/{h:02d}/k{h}.parquet" for h in range(4)]
     for i, k in enumerate(keys):
-        snapshots.commit_batch(spark, root, _points(spark, k, [i * 10, i * 10 + 1]))
+        snapshots.commit_batch(spark, root, *_batch(spark, k, [i * 10, i * 10 + 1]))
     before = sorted(
         (r["file"], r["Timestamp"])
         for r in snapshots.read_snapshot(spark, root).collect()
@@ -169,7 +171,7 @@ def test_compact_binpacks_and_survives_replay(spark, tmp_path):
 
     # replay one key: only that key re-points; the shared dir's stale
     # rows for it must NOT surface
-    snapshots.commit_batch(spark, root, _points(spark, keys[0], [999], tg=2))
+    snapshots.commit_batch(spark, root, *_batch(spark, keys[0], [999], tg=2))
     latest = sorted(
         (r["file"], r["Timestamp"])
         for r in snapshots.read_snapshot(spark, root).collect()
@@ -205,14 +207,14 @@ def test_compact_aborts_on_concurrent_commit(spark, tmp_path, monkeypatch):
     root = str(tmp_path / "snaplake")
     keys = [f"s/2023/10/26/{h:02d}/k{h}.parquet" for h in range(3)]
     for i, k in enumerate(keys):
-        snapshots.commit_batch(spark, root, _points(spark, k, [i]))
+        snapshots.commit_batch(spark, root, *_batch(spark, k, [i]))
 
     real_write = snapshots._write_manifest
 
     def commit_then_write(spark_, root_, version, manifest):
         monkeypatch.setattr(snapshots, "_write_manifest", real_write)
         snapshots.commit_batch(
-            spark, root, _points(spark, keys[0], [777], tg=2)
+            spark, root, *_batch(spark, keys[0], [777], tg=2)
         )  # the interleaved replay takes this version number
         real_write(spark_, root_, version, manifest)
 
@@ -241,7 +243,8 @@ def test_compact_converges(spark, tmp_path):
         df = spark.range(5).selectExpr(
             "id", f"'k{i}' AS file", "1 AS time_generated"
         )
-        snapshots.commit_batch(spark, root, df)
+        keys = [Row(file=f"k{i}", time_generated=1, max_timestamp=0)]
+        snapshots.commit_batch(spark, root, df, keys)
     v = snapshots.compact(spark, root, target_bytes=10 * 1024 * 1024)
     assert v >= 0
     assert snapshots.compact(spark, root, target_bytes=10 * 1024 * 1024) == -1

@@ -19,8 +19,7 @@ def _batch(spark, ts_values, time_generated):
         }
     )
     raw = spark.createDataFrame([(payload,)], ["value"])
-    pts, _ = ingest.ingest_batch(ingest.parse_envelopes(raw))
-    return pts
+    return ingest.batch_keys(ingest.parse_envelopes(raw))
 
 
 def test_monotonic_max(spark, tmp_path):
@@ -66,12 +65,82 @@ def test_intra_batch_envelopes_match_sequential_posts(spark, tmp_path):
         )
 
     raw = spark.createDataFrame(pa.table({"value": [env(500, 1), env(99, 2)]}))
-    points, _ = ingest.ingest_batch(ingest.parse_envelopes(raw))
+    keys = ingest.batch_keys(ingest.parse_envelopes(raw))
     path = str(tmp_path / "state")
-    row = state.update_state(spark, path, points)
+    row = state.update_state(spark, path, keys)
     assert (row["max_timestamp"], row["last_time_generated"]) == (500, 2)
 
     seq = str(tmp_path / "seq_state")
     state.update_state(spark, seq, _batch(spark, [500], time_generated=1))
     state.update_state(spark, seq, _batch(spark, [99], time_generated=2))
     assert state.read_state(spark, seq) == state.read_state(spark, path)
+
+
+def test_batch_keys_zero_fill_absent_timestamps(spark):
+    """An envelope's max_timestamp counts an absent Timestamp as 0, as
+    normalize_points fills it; rejected envelopes give no row."""
+    docs = [
+        json.dumps(
+            {
+                "content": [{"Value": 1.0}, {"Timestamp": -3}],
+                "id": "b",
+                "source": "s",
+                "timeGenerated": 4,
+                "file": "s/2023/01/01/00/x.parquet",
+            }
+        ),
+        json.dumps({"content": [], "id": "c", "timeGenerated": 5, "file": "k"}),
+    ]
+    raw = spark.createDataFrame([(d,) for d in docs], ["value"])
+    keys = ingest.batch_keys(ingest.parse_envelopes(raw))
+    assert [tuple(k) for k in keys] == [("s/2023/01/01/00/x.parquet", 4, 0)]
+
+
+def test_corrupt_state_file_is_a_500_not_a_reset(spark, tmp_path):
+    """A state file that cannot be read fails POST / and GET / with a 500
+    and is left as it was: it used to read as empty state, so the next
+    POST reset the monotonic max to its own Timestamp."""
+    import glob
+    import threading
+    import urllib.error
+    import urllib.request
+
+    from api_to_parquet_spark import service
+
+    svc = service.LakeService(spark, str(tmp_path / "lake"), str(tmp_path / "state"))
+    httpd = service.make_server(svc)
+    threading.Thread(target=httpd.serve_forever, daemon=True).start()
+    base = f"http://127.0.0.1:{httpd.server_address[1]}/"
+
+    def call(body=None):
+        data = None if body is None else json.dumps(body).encode()
+        try:
+            with urllib.request.urlopen(urllib.request.Request(base, data)) as r:
+                return r.status, json.loads(r.read())
+        except urllib.error.HTTPError as e:
+            return e.code, json.loads(e.read())
+
+    def envelope(ts, tg):
+        return {
+            "content": [{"Timestamp": ts, "Value": 1.0}],
+            "id": "b",
+            "source": "s",
+            "timeGenerated": tg,
+            "file": "s/2023/01/01/00/x.parquet",
+        }
+
+    try:
+        assert call(envelope(5, 1)) == (
+            200,
+            {"id": "b", "timeGenerated": 1, "maxTimestamp": 5},
+        )
+        (part,) = glob.glob(str(tmp_path / "state" / "*.parquet"))
+        with open(part, "wb") as f:
+            f.write(b"not a parquet file")
+        status, reply = call(envelope(1, 2))
+        assert status == 500 and reply["error"]
+        assert call()[0] == 500
+        with open(part, "rb") as f:
+            assert f.read() == b"not a parquet file"
+    finally:
+        httpd.shutdown()

@@ -98,18 +98,19 @@ def test_ingest_streams_intra_batch_last_write_wins(spark, tmp_path, start):
     "start", [_start_lake_stream, _start_snapshot_stream], ids=["lake", "snapshot"]
 )
 def test_ingest_streams_reject_mistyped_envelope(spark, tmp_path, start):
-    """A micro-batch holding a good envelope and one with `"Value": "2"`
-    lands only the good key: from_json flags the mistyped document
-    corrupt, and validation rejects it, as POST / answers it 400 (it
-    used to land as Value 0.0)."""
+    """A micro-batch holding a good envelope and ones with `"Value": "2"`,
+    `NaN` or `Infinity` lands only the good key: from_json flags each
+    mistyped document corrupt, and validation rejects it, as POST /
+    answers it 400 (they used to land as Value 0.0, NaN and Infinity)."""
     inp = tmp_path / "in"
     inp.mkdir()
     good = "s/2024/01/01/03/good.parquet"
-    bad = json.loads(_envelope("s/2024/01/01/03/bad.parquet", [7], 6))
-    bad["content"][0]["Value"] = "2"
-    (inp / "b1.json").write_text(
-        _envelope(good, [11], 5) + "\n" + json.dumps(bad) + "\n"
-    )
+    docs = [_envelope(good, [11], 5)]
+    for i, value in enumerate(["2", float("nan"), float("inf")]):
+        bad = json.loads(_envelope(f"s/2024/01/01/03/bad{i}.parquet", [7], 6))
+        bad["content"][0]["Value"] = value
+        docs.append(json.dumps(bad))  # NaN and Infinity as bare tokens
+    (inp / "b1.json").write_text("\n".join(docs) + "\n")
     st = str(tmp_path / "state")
     q, read = start(
         spark, str(inp), str(tmp_path / "out"), st, str(tmp_path / "ckpt")
