@@ -21,8 +21,9 @@ every streaming micro-batch runs too (streaming.start_ingest_stream).
 Each body is parsed once, in Arrow (ingest.read_envelope), into a
 LocalTableScan (no Python worker) that Spark explodes. The sink's keys
 and both state scalars come from the envelope (ingest.batch_keys, folded
-on the driver with no job), so a POST runs 3 Spark jobs — the lake
-write, the state read and the state write — and caches nothing. As
+on the driver with no job), so a POST runs 1 Spark job, the lake
+write, and caches nothing; the state is a JSON document read and
+committed on the driver (state.py), so GET / runs none. As
 BindJSON does, the typed parse refuses a value its field cannot hold
 exactly ("2" or NaN for Value, 1.5 for Timestamp, 7 for PointId) with a
 400 naming the field; the streams' from_json refuses all of these but
@@ -53,6 +54,7 @@ from urllib.parse import parse_qs, urlparse
 
 import pyarrow as pa
 import pyarrow.compute as pc
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Row, SparkSession
 
 from api_to_parquet_spark import ingest, lake, state
@@ -283,6 +285,8 @@ class LakeService:
         # the lake write is the only job over the points: nothing cached
         keys = ingest.batch_keys(envelopes)
         with self._write_lock:
+            # a state that cannot be read is a 500 before the lake changes
+            state.read_state(self.spark, self.state_path)
             lake.write_batch_files(points, keys, self.lake_root)
             new_state = state.update_state(self.spark, self.state_path, keys)
         return 200, {
@@ -418,7 +422,10 @@ def make_server(service: LakeService, port: int = 0) -> ThreadingHTTPServer:
                 self._dispatch()
             except Exception as e:  # noqa: BLE001 — a failed route is a 500
                 _LOG.exception("%s %s failed", self.command, urlparse(self.path).path)
-                lines = str(e).strip().splitlines() or [type(e).__name__]
+                text = str(e)
+                if isinstance(e, Py4JJavaError):  # str names only the JVM call
+                    text = e.java_exception.toString()
+                lines = text.strip().splitlines() or [type(e).__name__]
                 self._send(500, {"error": lines[0][:2000]})
 
         def _dispatch(self) -> None:

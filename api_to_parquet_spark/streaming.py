@@ -62,11 +62,11 @@ def _start_sink_stream(
     micro-batch, one collect of the envelope rows (ingest.batch_keys),
     then for a batch with any valid envelope the ingest plan POST / runs
     (ingest.ingest_batch), `sink` — which applies lake.latest_per_file
-    to those rows — and the control-table merge. The typed envelope
-    batch is persisted, so one from_json per micro-batch feeds the
-    collect and every key's write. foreachBatch gives
-    exactly-once-per-batch sinks via the checkpointed batch id +
-    idempotent per-`file`-key overwrite."""
+    to those rows — and the state merge, which runs no job
+    (state.update_state). The typed envelope batch is persisted, so one
+    from_json per micro-batch feeds the collect and every key's write.
+    foreachBatch gives exactly-once-per-batch sinks via the checkpointed
+    batch id + idempotent per-`file`-key overwrite."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         envelopes = batch_df.persist()

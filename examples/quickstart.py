@@ -4,7 +4,7 @@
 
 Ingests two JSON envelopes (the reference's POST / payload shape,
 /root/reference/tests/test.http), writes the partitioned lake, updates
-the control-table state (GET / twin), queries the lake three ways —
+the state document (GET / twin), queries the lake three ways —
 Spark SQL, KQL, and the README's Synapse OPENROWSET shape — then runs
 the same pipeline as a Structured Streaming job.
 """

@@ -168,13 +168,13 @@ def test_content_length_guard(server):
 
 
 def test_post_parses_body_once(spark, server, monkeypatch):
-    """One POST parses its body once and runs exactly 3 Spark jobs: the
-    lake write, the state read and the state write. The envelope frame
-    is a JVM-side LocalTableScan (no Python worker pickles the body);
-    the key collect is folded on the driver and runs no job; neither the
-    envelopes nor the points are cached, during the POST or after it
-    (looked up by plan: other tests may leave the shared session's cache
-    non-empty)."""
+    """One POST parses its body once and runs exactly 1 Spark job, the
+    lake write: the state is read and committed on the driver, so GET /
+    runs none. The envelope frame is a JVM-side LocalTableScan (no
+    Python worker pickles the body); the key collect is folded on the
+    driver and runs no job; neither the envelopes nor the points are
+    cached, during the POST or after it (looked up by plan: other tests
+    may leave the shared session's cache non-empty)."""
     from pyspark.sql import DataFrame
 
     from api_to_parquet_spark import ingest, lake, state
@@ -206,7 +206,7 @@ def test_post_parses_body_once(spark, server, monkeypatch):
         monkeypatch.setattr(module, attr, wrapped)
 
     # the state exists before the measured POST, as it does for every
-    # POST but a lake's first (whose state read finds no path, no job)
+    # POST but a lake's first (whose state read finds no path)
     status, _ = _post(base + "/", _envelope("f/2024/01/01/00/w.parquet", [1], 1))
     assert status == 200
     spy(ingest, "ingest_batch")
@@ -241,7 +241,13 @@ def test_post_parses_body_once(spark, server, monkeypatch):
     assert not cached(raw) and not cached(points)
     assert sc.statusTracker().getJobIdsForGroup(group + "_keys") == []
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) == 3, jobs
+    assert len(jobs) == 1, jobs
+    sc.setJobGroup(group + "_get", "GET /")
+    try:
+        assert svc.get_state() == (200, {"lastTimeGenerated": 7, "maxTimestamp": 99})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group + "_get") == []
 
 
 def test_failed_write_is_a_500(spark, tmp_path):
@@ -261,6 +267,9 @@ def test_failed_write_is_a_500(spark, tmp_path):
     try:
         status, reply = _post(base, env)
         assert status == 500 and reply["error"]
+        # the cause, not the Py4J wrapper's "An error occurred while calling"
+        assert "ParentNotDirectoryException" in reply["error"], reply
+        assert "An error occurred while calling" not in reply["error"], reply
     finally:
         httpd.shutdown()
     httpd, base = serve(str(tmp_path / "lake"))

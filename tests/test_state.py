@@ -1,9 +1,13 @@
-"""Control-table state fixtures: monotonic_max + last_write_wins
+"""State document fixtures: monotonic_max + last_write_wins
 (FIXTURES.md §4; reference src/main.go:313-322)."""
 
 from __future__ import annotations
 
 import json
+import threading
+
+import pytest
+from pyspark.sql import Row
 
 from api_to_parquet_spark import ingest, state
 
@@ -43,6 +47,8 @@ def test_last_write_wins(spark, tmp_path):
 def test_empty_state(spark, tmp_path):
     row = state.read_state(spark, str(tmp_path / "nope"))
     assert row["max_timestamp"] is None
+    # an empty directory too: a first commit creates it before its version
+    assert state.read_state(spark, str(tmp_path))["max_timestamp"] is None
 
 
 def test_intra_batch_envelopes_match_sequential_posts(spark, tmp_path):
@@ -96,16 +102,67 @@ def test_batch_keys_zero_fill_absent_timestamps(spark):
     assert [tuple(k) for k in keys] == [("s/2023/01/01/00/x.parquet", 4, 0)]
 
 
+def test_concurrent_reads_are_never_torn(spark, tmp_path):
+    """A reader racing update_state, from before the first commit on,
+    reads the empty state until then and a whole version after it: the
+    old Parquet control table was deleted before it was rewritten, so a
+    concurrent read found no state or raised."""
+    path = str(tmp_path / "state")
+
+    def update(i):
+        keys = [Row(file="k", time_generated=i, max_timestamp=i)]
+        return state.update_state(spark, path, keys)
+
+    seen, errors = [], []
+    done = threading.Event()
+
+    def reader():
+        while not done.is_set():
+            try:
+                seen.append(state.read_state(spark, path)["max_timestamp"])
+            except Exception as e:  # noqa: BLE001 — any raise is a torn read
+                errors.append(e)
+
+    t = threading.Thread(target=reader)
+    t.start()
+    try:
+        for i in range(25):
+            assert update(i)["max_timestamp"] == i
+    finally:
+        done.set()
+        t.join()
+    assert errors == []
+    committed = seen[seen.count(None):]
+    assert committed and None not in committed
+    assert committed == sorted(committed)
+    assert state.read_state(spark, path)["max_timestamp"] == 24
+
+
+def test_state_path_without_a_version_raises(spark, tmp_path):
+    """A state_path holding files but no version, such as an old Parquet
+    control table, raises instead of reading as empty state, so an
+    upgrade cannot reset the monotonic max."""
+    path = str(tmp_path / "state")
+    spark.createDataFrame(
+        [(1, 5)], "last_time_generated BIGINT, max_timestamp BIGINT"
+    ).write.parquet(path)
+    keys = [Row(file="k", time_generated=2, max_timestamp=1)]
+    with pytest.raises(FileNotFoundError):
+        state.read_state(spark, path)
+    with pytest.raises(FileNotFoundError):
+        state.update_state(spark, path, keys)
+
+
 def test_corrupt_state_file_is_a_500_not_a_reset(spark, tmp_path):
     """A state file that cannot be read fails POST / and GET / with a 500
     and is left as it was: it used to read as empty state, so the next
-    POST reset the monotonic max to its own Timestamp."""
+    POST reset the monotonic max to its own Timestamp. The refused POST
+    leaves the lake as it was too."""
     import glob
-    import threading
     import urllib.error
     import urllib.request
 
-    from api_to_parquet_spark import service
+    from api_to_parquet_spark import lake, service
 
     svc = service.LakeService(spark, str(tmp_path / "lake"), str(tmp_path / "state"))
     httpd = service.make_server(svc)
@@ -134,13 +191,15 @@ def test_corrupt_state_file_is_a_500_not_a_reset(spark, tmp_path):
             200,
             {"id": "b", "timeGenerated": 1, "maxTimestamp": 5},
         )
-        (part,) = glob.glob(str(tmp_path / "state" / "*.parquet"))
+        (part,) = glob.glob(str(tmp_path / "state" / "_manifests" / "v*.json"))
         with open(part, "wb") as f:
-            f.write(b"not a parquet file")
+            f.write(b"not a state document")
         status, reply = call(envelope(1, 2))
         assert status == 500 and reply["error"]
         assert call()[0] == 500
         with open(part, "rb") as f:
-            assert f.read() == b"not a parquet file"
+            assert f.read() == b"not a state document"
+        rows = lake.read_batch_tree(spark, svc.lake_root).collect()
+        assert [r["Timestamp"] for r in rows] == [5]
     finally:
         httpd.shutdown()
