@@ -380,9 +380,16 @@ make_list_with_nulls (never-null struct wrap over collect_list);
 invoke with positional SCALAR arguments + declared defaults (the
 scalar-let macro substitution); dynamic({…}).path accessor chains
 (parse_json wrap, the parse_urlquery rule).
+String literals follow ONE rule, the ADX lexer's (the Kusto `string`
+data type reference): '…' and "…" take backslash escapes, verbatim
+@'…' and @"…" take none and embed their quote doubled, and an
+unterminated literal runs to the end of the text. `_LITERAL` is its
+only definition; every scanner — bracket matching, the pipe, comma,
+`by` and `;` splitters, outside-literal rewrites, `//` comments —
+lexes through the helpers built on it (`_lexer`, `_LitSpans`).
 Probe battery 18 additions (round-11): `//` line comments stripped
-outside string literals (quote-aware incl. @verbatim doubled-quote
-escapes — every pasted dashboard query carries comments); NEGATIVE
+outside string literals (every pasted dashboard query carries
+comments); NEGATIVE
 timespan strings ('-01:30:00', '-2h') at translate time and runtime
 — previously a SILENT NULL; iOS third-party browser families
 CriOS/FxiOS/EdgiOS (Chrome Mobile iOS / Firefox iOS / Edge Mobile,
@@ -621,6 +628,7 @@ literals where ADX accepts both quote flavors.
 
 from __future__ import annotations
 
+import bisect
 import contextvars
 import itertools
 import math
@@ -667,62 +675,91 @@ _KQL_TYPES = {
 }
 
 
-def _strings_to_sql(text: str) -> str:
-    """KQL double-quoted string literals -> SQL single-quoted.
+# --- string literals ------------------------------------------------
+# The translator's one definition of a string literal, the ADX lexer's:
+# '…' and "…" take backslash escapes; verbatim @'…' and @"…" take none
+# (a backslash is content) and embed their quote doubled. An
+# unterminated literal runs to the end of the text. SQL-side text reads
+# the same way: Spark's doubled '' lexes as two adjacent literals, which
+# cover the same characters.
+_LITERAL_SRC = (
+    r"@'[^']*(?:''[^']*)*'?"
+    r'|@"[^"]*(?:""[^"]*)*"?'
+    r"|'(?:[^'\\]|\\.?)*'?"
+    r'|"(?:[^"\\]|\\.?)*"?'
+)
+_LITERAL = re.compile(_LITERAL_SRC, re.DOTALL)
 
-    Quote-aware scan, not a blanket regex: a double quote INSIDE a
-    single-quoted literal ('say "hi"') is content, not a delimiter —
-    the old regex rewrote it and produced invalid SQL (round-8 fix).
-    Single-quoted literals copy verbatim (Spark accepts the same
-    backslash escapes KQL uses); double-quoted literals re-quote with
-    embedded single quotes doubled."""
-    out: list[str] = []
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch == "@" and i + 1 < n and text[i + 1] in "'\"":
-            # ADX VERBATIM literal @"..." / @'...': backslashes are
-            # content (double them for Spark's escape processing);
-            # a doubled quote embeds the quote char (round-8)
-            q = text[i + 1]
-            j = i + 2
-            buf: list[str] = []
-            while j < n:
-                if text[j] == q:
-                    if j + 1 < n and text[j + 1] == q:
-                        buf.append(q)
-                        j += 2
-                        continue
-                    break
-                buf.append(text[j])
-                j += 1
-            inner = (
-                "".join(buf).replace("\\", "\\\\").replace("'", "''")
-            )
-            out.append(f"'{inner}'")
-            i = j + 1
-        elif ch == "'":
-            j = i + 1
-            while j < n and text[j] != "'":
-                j += 2 if text[j] == "\\" else 1
-            out.append(text[i : j + 1])
-            i = j + 1
-        elif ch == '"':
-            j = i + 1
-            buf: list[str] = []
-            while j < n and text[j] != '"':
-                if text[j] == "\\":
-                    buf.append(text[j : j + 2])
-                    j += 2
-                else:
-                    buf.append(text[j])
-                    j += 1
-            out.append("'" + "".join(buf).replace("'", "''") + "'")
-            i = j + 1
-        else:
-            out.append(ch)
-            i += 1
-    return "".join(out)
+
+def _lexer(structure: str) -> re.Pattern:
+    """A pattern that matches each string literal whole (group `lit`)
+    and, outside them, the regex `structure`."""
+    return re.compile(rf"(?P<lit>{_LITERAL_SRC})|{structure}", re.DOTALL)
+
+
+def _outside_literals(lexer: re.Pattern, text: str, pos: int = 0):
+    """The `structure` matches of a `_lexer` pattern in text[pos:],
+    string literals skipped."""
+    for m in lexer.finditer(text, pos):
+        if m.lastgroup != "lit":
+            yield m
+
+
+class _LitSpans:
+    """The string-literal spans of one text, found once; `at` and
+    `inside` answer by bisect."""
+
+    __slots__ = ("spans", "_starts")
+
+    def __init__(self, text: str) -> None:
+        self.spans = [m.span() for m in _LITERAL.finditer(text)]
+        self._starts = [s0 for s0, _ in self.spans]
+
+    def at(self, i: int) -> tuple[int, int] | None:
+        """The literal holding index i, its opening quote included."""
+        k = bisect.bisect_right(self._starts, i) - 1
+        if k >= 0 and i < self.spans[k][1]:
+            return self.spans[k]
+        return None
+
+    def inside(self, i: int) -> bool:
+        """Index i lies in a literal, past its opening quote."""
+        span = self.at(i)
+        return span is not None and span[0] < i
+
+
+def _blank_literals(text: str, same_width: bool = False) -> str:
+    """text with every string literal replaced by one space, or by as
+    many spaces as it is long."""
+    if same_width:
+        return _LITERAL.sub(lambda m: " " * len(m.group()), text)
+    return _LITERAL.sub(" ", text)
+
+
+def _strings_to_sql(text: str) -> str:
+    """KQL string literals -> Spark SQL single-quoted ones, each found
+    by the one literal rule (a double quote INSIDE a single-quoted
+    literal, 'say "hi"', is content — round-8 fix). Plain literals keep
+    their backslash escapes, which Spark reads as KQL does, and double
+    a bare single quote; verbatim @'…' / @"…" literals undouble their
+    quote, then double backslashes and single quotes for Spark."""
+
+    def to_sql(m: re.Match) -> str:
+        lit = m.group()
+        if lit[0] == "'":
+            return lit
+        if lit[0] == "@":
+            q, body = lit[1], lit[2:]
+            if (len(body) - len(body.rstrip(q))) % 2:
+                body = body[:-1]  # the closing quote
+            body = body.replace(q + q, q).replace("\\", "\\\\")
+            return "'" + body.replace("'", "''") + "'"
+        toks = re.findall(r"\\.?|[^\\]", lit[1:], re.DOTALL)
+        if toks[-1:] == ['"']:
+            toks.pop()  # the closing quote
+        return "'" + "".join("''" if t == "'" else t for t in toks) + "'"
+
+    return _LITERAL.sub(to_sql, text)
 
 
 def _bin_to_sql(text: str) -> str:
@@ -892,10 +929,10 @@ def _div_by_interval_expr(e: str) -> str:
     works as a divisor too. Interval-typed COLUMNS stay out of the
     subset (their type is not statically known)."""
     while True:
-        spans = [(m.start(), m.end()) for m in _STR_SPAN.finditer(e)]
+        spans = _LitSpans(e)
         hit = None
         for m in _TSDIV_IVL_OPEN.finditer(e):
-            if any(s0 < m.start() < s1 for s0, s1 in spans):
+            if spans.inside(m.start()):
                 continue
             if m.group(2).startswith("make_dt_interval"):
                 close = _balanced_end(e, m.end() - 1)
@@ -923,10 +960,10 @@ def _div_by_interval_expr(e: str) -> str:
     # arm above cannot match — balanced-scan it directly
     # (`totimespan(s) / 1m` previously died at analysis)
     while True:
-        spans = [(m.start(), m.end()) for m in _STR_SPAN.finditer(e)]
+        spans = _LitSpans(e)
         hit2 = None
         for m in re.finditer(r"make_dt_interval\(", e):
-            if any(s0 < m.start() < s1 for s0, s1 in spans):
+            if spans.inside(m.start()):
                 continue
             close = _balanced_end(e, m.end() - 1)
             if close is None:
@@ -1055,13 +1092,9 @@ def _rewrite_literal_subscripts(e: str) -> str:
     changed = True
     while changed:
         changed = False
-        spans = [(m.start(), m.end()) for m in _STR_SPAN.finditer(e)]
-
-        def _in_str(p: int) -> bool:
-            return any(s0 < p < s1 for s0, s1 in spans)
-
+        spans = _LitSpans(e)
         for m in sub.finditer(e):
-            if _in_str(m.start()):
+            if spans.inside(m.start()):
                 continue
             i = m.start() - 1
             while i >= 0 and e[i].isspace():
@@ -1071,13 +1104,9 @@ def _rewrite_literal_subscripts(e: str) -> str:
             if e[i] in ")]":
                 depth, j = 0, i
                 while j >= 0:
-                    hop = None
-                    for s0, s1 in spans:
-                        if s0 <= j < s1:
-                            hop = s0
-                            break
+                    hop = spans.at(j)
                     if hop is not None:
-                        j = hop - 1
+                        j = hop[0] - 1
                         continue
                     ch = e[j]
                     if ch in ")]":
@@ -1146,7 +1175,7 @@ def _rdiv_opnd_real(t: str, schema_reals: frozenset[str]) -> bool:
         return True
     if not t.startswith("("):
         return False
-    bare = _STR_SPAN.sub(" ", t)
+    bare = _blank_literals(t)
     # Strip call spans innermost-first, but replace a todouble/toreal
     # call with a real-literal sentinel instead of a blank: a
     # conversion that survives stripping was NOT swallowed by an outer
@@ -1169,36 +1198,27 @@ def _rdiv_opnd_real(t: str, schema_reals: frozenset[str]) -> bool:
     )
 
 
+_RDIV_CHAIN_OPS = _lexer(r"[(\[)\]*/%]")
+
+
 def _rdiv_chain_parts(chain: str) -> tuple[list[str], list[str]]:
     """Split a multiplicative chain into (operands, operators) at the
-    top level — quote/paren-aware, operators are * / %."""
+    top level — outside brackets and string literals; operators are
+    * / %."""
     ops: list[str] = []
     opnds: list[str] = []
-    depth, quote, cur = 0, None, []
-    i = 0
-    while i < len(chain):
-        ch = chain[i]
-        if quote:
-            cur.append(ch)
-            if ch == quote:
-                quote = None
-            i += 1
-            continue
-        if ch in "'\"":
-            quote = ch
-        elif ch in "([":
+    depth, last = 0, 0
+    for m in _outside_literals(_RDIV_CHAIN_OPS, chain):
+        ch = m.group()
+        if ch in "([":
             depth += 1
         elif ch in ")]":
             depth -= 1
-        elif ch in "*/%" and depth == 0:
-            opnds.append("".join(cur).strip())
+        elif depth == 0:
+            opnds.append(chain[last : m.start()].strip())
             ops.append(ch)
-            cur = []
-            i += 1
-            continue
-        cur.append(ch)
-        i += 1
-    opnds.append("".join(cur).strip())
+            last = m.end()
+    opnds.append(chain[last:].strip())
     return opnds, ops
 
 
@@ -1258,9 +1278,9 @@ def _fold_dayofweek(e: str) -> str:
     changed = True
     while changed:
         changed = False
-        spans = [(m.start(), m.end()) for m in _STR_SPAN.finditer(e)]
+        spans = _LitSpans(e)
         for m in re.finditer(r"\bdayofweek\s*\(", e):
-            if any(s0 <= m.start() < s1 for s0, s1 in spans):
+            if spans.at(m.start()):
                 continue
             close = _balanced_end(e, m.end() - 1)
             if close is None:
@@ -1319,7 +1339,7 @@ def _rdiv_schema_reals(e: str) -> frozenset[str]:
     literal-only slashes (date patterns 'yyyy/MM/dd', URL/path
     literals) never pay the Catalyst schema probe (round-13 advice —
     the 'queries without the idiom never pay the probe' contract)."""
-    bare = _STR_SPAN.sub(lambda m: " " * (m.end() - m.start()), e)
+    bare = _blank_literals(e, same_width=True)
     if not re.search(r"[A-Za-z_]\w*\s*/|/\s*[A-Za-z_]", bare):
         return frozenset()
     ctx = _ACTIVE_CTX.get()
@@ -1361,13 +1381,13 @@ def _real_div_guard(e: str) -> str:
         schema_reals = _rdiv_schema_reals(e)
         if not schema_reals:
             return e
-    spans = [(m.start(), m.end()) for m in _STR_SPAN.finditer(e)]
+    spans = _LitSpans(e)
     out: list[str] = []
     last = 0
     for m in _RDIV_CHAIN.finditer(e):
         if m.start() < last:
             continue
-        if any(s0 < m.start() < s1 for s0, s1 in spans):
+        if spans.inside(m.start()):
             continue
         # reject a chain that is really the TAIL of a larger one whose
         # head operand failed the shape subset (`a % b / 2.0` with a
@@ -1649,10 +1669,12 @@ def _rewrite_fn(e: str, name: str, build) -> str:
     """Rewrite every `name(...)` call (balanced parens, top-level-comma
     args) via build(args) — for KQL functions whose SQL shape is not a
     1:1 rename (case, substring)."""
+    pat = re.compile(rf"\b{name}\s*\(")
+    if not pat.search(e):
+        return e
     out = []
     i = 0
-    pat = re.compile(rf"\b{name}\s*\(")
-    spans = [(m.start(), m.end()) for m in _STR_SPAN.finditer(e)]
+    spans = _LitSpans(e)
     while True:
         m = pat.search(e, i)
         if not m:
@@ -1660,24 +1682,14 @@ def _rewrite_fn(e: str, name: str, build) -> str:
             return "".join(out)
         # a literal like 'case(a,b,c)' must stay text, not become SQL
         # (round-3 review finding) — skip matches inside string spans
-        span = next(
-            (s for s in spans if s[0] <= m.start() < s[1]), None
-        )
+        span = spans.at(m.start())
         if span is not None:
             out.append(e[i : span[1]])
             i = span[1]
             continue
         out.append(e[i : m.start()])
-        depth, j, in_str = 1, m.end(), False
-        while j < len(e) and depth:
-            ch = e[j]
-            if ch == "'":
-                in_str = not in_str
-            elif not in_str and ch == "(":
-                depth += 1
-            elif not in_str and ch == ")":
-                depth -= 1
-            j += 1
+        close = _balanced_end(e, m.end() - 1)
+        j = len(e) if close is None else close + 1
         args = _split_top_level(e[m.end() : j - 1])
         # recurse into the arguments for NESTED same-name calls
         # (round-7: `pack("a", pack("b", 1))` — the inner call must
@@ -1700,15 +1712,17 @@ def _pred_sub(pattern: str, repl, text: str) -> str:
     only discards a match whose start position falls inside a literal:
     the operand of `s != 'q has_any (x)'` stays text (round-4 review
     finding), while `props has_any ('k', 'zz')` still rewrites."""
-    spans = [(m.start(), m.end()) for m in _STR_SPAN.finditer(text)]
     pat = re.compile(pattern, re.IGNORECASE)
+    if not pat.search(text):
+        return text
+    spans = _LitSpans(text)
     out, i = [], 0
     while True:
         m = pat.search(text, i)
         if not m:
             out.append(text[i:])
             return "".join(out)
-        span = next((s for s in spans if s[0] <= m.start() < s[1]), None)
+        span = spans.at(m.start())
         if span is not None:
             out.append(text[i : span[1]])
             i = span[1]
@@ -1764,6 +1778,10 @@ class _JoinMatch:
     def group(self, i: int):
         return self._groups[i]
 
+
+_BRACKETS = _lexer(r"[\[\]]")
+
+
 def _mangle_bracket_cols(text: str) -> str:
     """['my col'] -> _bq_<hex>. Skips string literals (via _pred_sub),
     dynamic(...) literal bodies (['a'] there is an array literal), and
@@ -1792,32 +1810,19 @@ def _mangle_bracket_cols(text: str) -> str:
     # datatable's VALUE list is a bracketed literal ROW list —
     # ['a [x]'] there is a string VALUE, not a bracket-quoted column
     # (round-10 probe battery 8: the mangler previously ate the whole
-    # list when a value started with a quote). Quote-aware scan to the
-    # MATCHING close bracket: values may contain ']' inside literals.
+    # list when a value started with a quote). Scan to the MATCHING
+    # close bracket: values may contain ']' inside literals.
     while True:
         dm = re.search(r"datatable\s*\([^)]*\)\s*\[", t, re.IGNORECASE)
         if not dm:
             break
-        i = dm.end()
-        quote = None
-        depth = 1
-        while i < len(t):
-            ch = t[i]
-            if quote:
-                if ch == "\\":
-                    i += 1
-                elif ch == quote:
-                    quote = None
-            elif ch in "'\"":
-                quote = ch
-            elif ch == "[":
-                depth += 1
-            elif ch == "]":
-                depth -= 1
-                if depth == 0:
-                    break
-            i += 1
-        if depth != 0:
+        depth, i = 1, None
+        for bm in _outside_literals(_BRACKETS, t, dm.end()):
+            depth += 1 if bm.group() == "[" else -1
+            if depth == 0:
+                i = bm.start()
+                break
+        if i is None:
             break  # unbalanced — leave for the parser's loud error
         protected.append(t[dm.end() - 1 : i + 1])
         t = (
@@ -3359,36 +3364,23 @@ def _extract_toscalar(text: str) -> tuple[str, list[tuple[str, str]]]:
     [(placeholder, pipe_body), ...]); quote-aware balanced parens."""
     subs: list[tuple[str, str]] = []
     while True:
-        m = None
-        for cand in re.finditer(r"\btoscalar\s*\(", text):
-            # skip matches inside string literals ("toscalar(" as TEXT
-            # must stay text — round-6 review finding)
-            inside = any(
-                s.start() < cand.start() < s.end()
-                for s in _STR_SPAN.finditer(text)
-            )
-            if not inside:
-                m = cand
-                break
+        # skip matches inside string literals ("toscalar(" as TEXT
+        # must stay text — round-6 review finding)
+        spans = _LitSpans(text)
+        m = next(
+            (
+                c
+                for c in re.finditer(r"\btoscalar\s*\(", text)
+                if not spans.inside(c.start())
+            ),
+            None,
+        )
         if not m:
             return text, subs
-        depth, j, quote = 1, m.end(), None
-        while j < len(text) and depth:
-            ch = text[j]
-            if quote:
-                if ch == "\\" and j + 1 < len(text):
-                    j += 1  # skip the escaped char (incl. \" and \')
-                elif ch == quote:
-                    quote = None
-            elif ch in "'\"":
-                quote = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            j += 1
-        if depth:
+        close = _balanced_end(text, m.end() - 1)
+        if close is None:
             raise ValueError(f"unbalanced toscalar( in {text!r}")
+        j = close + 1
         ph = f"__TOSCALAR_{len(subs)}__"
         subs.append((ph, text[m.end() : j - 1].strip()))
         text = text[: m.start()] + ph + text[j:]
@@ -3404,21 +3396,19 @@ def _extract_in_subqueries(text: str) -> tuple[str, list[tuple[str, str]]]:
     _extract_toscalar."""
     subs: list[tuple[str, str]] = []
     while True:
-        m = None
         # lookbehind, not \b: `!` is a non-word char, so \b never held
         # before `!in`/`!in~` and the negated forms matched WITHOUT
         # their `!` (round-8 fix); `!` in the class forces the
         # `!`-inclusive match when one is present
-        for cand in re.finditer(
-            r"(?<![\w~!])(!?in~?)\s*\(\s*\(", text
-        ):
-            inside = any(
-                s.start() < cand.start() < s.end()
-                for s in _STR_SPAN.finditer(text)
-            )
-            if not inside:
-                m = cand
-                break
+        spans = _LitSpans(text)
+        m = next(
+            (
+                c
+                for c in re.finditer(r"(?<![\w~!])(!?in~?)\s*\(\s*\(", text)
+                if not spans.inside(c.start())
+            ),
+            None,
+        )
         if not m:
             return text, subs
         ci = m.group(1).endswith("~")
@@ -3438,23 +3428,10 @@ def _extract_in_subqueries(text: str) -> tuple[str, list[tuple[str, str]]]:
             lhs = lm
         # balanced scan from the OUTER '(' (first paren after in)
         start = text.index("(", m.end(1))
-        depth, j, quote = 1, start + 1, None
-        while j < len(text) and depth:
-            ch = text[j]
-            if quote:
-                if ch == "\\" and j + 1 < len(text):
-                    j += 1
-                elif ch == quote:
-                    quote = None
-            elif ch in "'\"":
-                quote = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            j += 1
-        if depth:
+        close = _balanced_end(text, start)
+        if close is None:
             raise ValueError(f"unbalanced in ((…)) in {text!r}")
+        j = close + 1
         inner = text[start + 1 : j - 1].strip()
         if not (inner.startswith("(") and inner.endswith(")")):
             raise ValueError(f"in ((…)) needs a parenthesized pipe: {inner!r}")
@@ -3493,10 +3470,10 @@ def _wrap_string_calls(e: str) -> str:
     terms. Calls not adjacent to a string `+` are left untouched
     (so `tostring(x) + numcol` keeps its pre-existing documented
     behavior instead of silently widening the coercion edge)."""
-    lit_spans = [(m.start(), m.end()) for m in _STR_SPAN.finditer(e)]
+    lit_spans = _LitSpans(e)
 
     def _in_lit(i: int) -> bool:
-        return any(s0 <= i < s1 for s0, s1 in lit_spans)
+        return lit_spans.at(i) is not None
 
     call_spans = []
     for m in _STR_FN_OPEN.finditer(e):
@@ -3571,9 +3548,7 @@ def _concat_plus(e: str) -> str:
     while True:
         # 1. protect every OUTERMOST concat(...) span (quote-aware,
         # balanced — any nesting depth) behind a flat placeholder
-        lit_spans = [
-            (m.start(), m.end()) for m in _STR_SPAN.finditer(e)
-        ]
+        lit_spans = _LitSpans(e)
         prot: list[str] = []
         buf: list[str] = []
         i = 0
@@ -3581,7 +3556,7 @@ def _concat_plus(e: str) -> str:
             if (
                 e.startswith("concat(", i)
                 and (i == 0 or not (e[i - 1].isalnum() or e[i - 1] in "_."))
-                and not any(s0 <= i < s1 for s0, s1 in lit_spans)
+                and not lit_spans.at(i)
             ):
                 close = _balanced_end(e, i + len("concat(") - 1)
                 if close is not None:
@@ -3595,13 +3570,13 @@ def _concat_plus(e: str) -> str:
         # 2. find ONE foldable pair: a `+` with a literal on either
         # side (identifiers and placeholders both participate), or a
         # placeholder pair (both provably strings)
-        spans2 = [(m.start(), m.end()) for m in _STR_SPAN.finditer(t)]
+        spans2 = _LitSpans(t)
 
         def _outside(mm: re.Match) -> bool:
             # a match may legitimately START at a literal's opening
             # quote (the literal IS the operand); only matches
             # starting strictly INSIDE a literal are text
-            return not any(s0 < mm.start() < s1 for s0, s1 in spans2)
+            return not spans2.inside(mm.start())
 
         hit = next((m for m in pat.finditer(t) if _outside(m)), None)
         if hit is not None:
@@ -3626,25 +3601,17 @@ def _concat_plus(e: str) -> str:
             return e
 
 
+_PARENS = _lexer(r"[()]")
+
+
 def _balanced_end(text: str, open_idx: int) -> int | None:
-    """Index of the ')' closing the '(' at open_idx (quote-aware)."""
-    depth, j, quote = 1, open_idx + 1, None
-    while j < len(text):
-        ch = text[j]
-        if quote:
-            if ch == "\\" and j + 1 < len(text):
-                j += 1
-            elif ch == quote:
-                quote = None
-        elif ch in "'\"":
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return j
-        j += 1
+    """Index of the ')' closing the '(' at open_idx, string literals
+    skipped; None when it is not closed."""
+    depth = 1
+    for m in _outside_literals(_PARENS, text, open_idx + 1):
+        depth += 1 if m.group() == "(" else -1
+        if depth == 0:
+            return m.start()
     return None
 
 
@@ -6081,11 +6048,9 @@ def _expr(kql_expr: str) -> str:
     # get_json_object; bare calls keep returning the JSON-string bag.
     while True:
         _uq_hit = None
+        spans = _LitSpans(e)
         for mm in re.finditer(r"\bparse_urlquery\s*\(", e):
-            if any(
-                s.start() <= mm.start() < s.end()
-                for s in _STR_SPAN.finditer(e)
-            ):
+            if spans.at(mm.start()):
                 continue
             close = _balanced_end(e, mm.end() - 1)
             if close is None:
@@ -6183,11 +6148,9 @@ def _expr(kql_expr: str) -> str:
     # array-form dynamics keep their native array subscripting.
     while True:
         _dy_hit = None
+        spans = _LitSpans(e)
         for mm in re.finditer(r"\bdynamic\s*\(\s*\{", e):
-            if any(
-                s.start() <= mm.start() < s.end()
-                for s in _STR_SPAN.finditer(e)
-            ):
+            if spans.at(mm.start()):
                 continue
             op_ = e.index("(", mm.start())
             close = _balanced_end(e, op_)
@@ -6651,12 +6614,10 @@ def _expr(kql_expr: str) -> str:
     # contract; ADX returns null — documented divergence, loud not
     # silent).
     while "parse_xml(" in e:
-        _px_spans = [
-            (m.start(), m.end()) for m in _STR_SPAN.finditer(e)
-        ]
+        _px_spans = _LitSpans(e)
         _px_hit = None
         for mm in re.finditer(r"\bparse_xml\s*\(", e):
-            if any(s0 <= mm.start() < s1 for s0, s1 in _px_spans):
+            if _px_spans.at(mm.start()):
                 continue
             close = _balanced_end(e, mm.end() - 1)
             if close is None:
@@ -6703,12 +6664,10 @@ def _expr(kql_expr: str) -> str:
             + e[am.end() :]
         )
     while "parse_json(" in e:
-        _pj_spans = [
-            (m.start(), m.end()) for m in _STR_SPAN.finditer(e)
-        ]
+        _pj_spans = _LitSpans(e)
         _pj_hit = None
         for mm in re.finditer(r"\bparse_json\s*\(", e):
-            if any(s0 <= mm.start() < s1 for s0, s1 in _pj_spans):
+            if _pj_spans.at(mm.start()):
                 continue
             close = _balanced_end(e, mm.end() - 1)
             if close is None:
@@ -7521,41 +7480,37 @@ def _expr(kql_expr: str) -> str:
     return e
 
 
+def _top_level_cuts(text: str, sep: str):
+    """Indices of each `sep` outside brackets and string literals.
+    Braces count too (round-8 advice): dynamic([{…,…}]) object elements
+    must not split on the object's commas."""
+    depth = 0
+    lexer = _lexer(rf"[(\[{{)\]}}]|{re.escape(sep)}")
+    for m in _outside_literals(lexer, text):
+        ch = m.group()
+        if ch in "([{":
+            depth += 1
+        elif ch in ")]}":
+            depth -= 1
+        elif depth == 0:
+            yield m.start()
+
+
+def _next_statement(text: str) -> tuple[str, str] | None:
+    """(statement, rest) around text's first top-level `;`, or None."""
+    cut = next(_top_level_cuts(text, ";"), None)
+    return None if cut is None else (text[:cut], text[cut + 1 :])
+
+
 def _split_top_level(text: str, sep: str = ",") -> list[str]:
-    """Split on `sep` outside parentheses and quotes. Tracks BOTH
-    quote flavors: KQL input carries double-quoted literals (backslash
-    escapes), SQL-converted text carries single-quoted ones ('' doubling
-    — the naive toggle handles it); a `|` or `,` inside either must not
-    split."""
-    parts: list[str] = []
-    depth, quote, cur, skip = 0, None, [], False
-    for ch in text:
-        if skip:
-            cur.append(ch)
-            skip = False
-            continue
-        if quote == '"' and ch == "\\":
-            cur.append(ch)
-            skip = True
-            continue
-        if quote is None and ch in "'\"":
-            quote = ch
-        elif quote == ch:
-            quote = None
-        if quote is None:
-            # braces tracked too (round-8 advice): dynamic([{…,…}])
-            # object elements must not split on the object's commas
-            if ch in "([{":
-                depth += 1
-            elif ch in ")]}":
-                depth -= 1
-            if ch == sep and depth == 0:
-                parts.append("".join(cur).strip())
-                cur = []
-                continue
-        cur.append(ch)
-    if cur:
-        parts.append("".join(cur).strip())
+    """Split on `sep` outside brackets and string literals (the pipe
+    splitter too: a `|` or `,` inside a literal must not split); parts
+    are stripped, empty ones dropped."""
+    parts, last = [], 0
+    for cut in _top_level_cuts(text, sep):
+        parts.append(text[last:cut].strip())
+        last = cut + len(sep)
+    parts.append(text[last:].strip())
     return [p for p in parts if p]
 
 
@@ -7610,42 +7565,20 @@ _AGG_FNS = {
 
 def _split_by(text: str, kw: str = "by") -> list[str]:
     """Split on the first TOP-LEVEL occurrence of keyword `kw`
-    (depth 0, outside both quote flavors, word-bounded). A bare
+    (depth 0, outside string literals, word-bounded, any case). A bare
     re.split(r"\\bby\\b") corrupts an aggregate argument whose string
     literal contains the word (countif(x == "a by b")) — review
     finding. Returns [head] or [head, tail]."""
-    depth, quote, skip = 0, None, False
-    k, kl = len(kw), kw.lower()
-    for i, ch in enumerate(text):
-        if skip:
-            skip = False
-            continue
-        if quote == '"' and ch == "\\":
-            skip = True
-            continue
-        if quote is None and ch in "'\"":
-            quote = ch
-            continue
-        if quote == ch:
-            quote = None
-            continue
-        if quote is not None:
-            continue
+    depth = 0
+    lexer = _lexer(rf"[(\[)\]]|(?<!\w)(?i:{re.escape(kw)})(?!\w)")
+    for m in _outside_literals(lexer, text):
+        ch = m.group()
         if ch in "([":
             depth += 1
         elif ch in ")]":
             depth -= 1
-        elif (
-            depth == 0
-            and ch.lower() == kl[0]
-            and text[i : i + k].lower() == kl
-            and (i == 0 or not (text[i - 1].isalnum() or text[i - 1] == "_"))
-            and (
-                i + k == len(text)
-                or not (text[i + k].isalnum() or text[i + k] == "_")
-            )
-        ):
-            return [text[:i], text[i + k :]]
+        elif depth == 0:
+            return [text[: m.start()], text[m.end() :]]
     return [text]
 
 
@@ -8390,10 +8323,9 @@ _BARE_PLUS_RE = re.compile(
 
 
 def _has_bare_plus(text: str) -> bool:
-    spans = [(m.start(), m.end()) for m in _STR_SPAN.finditer(text)]
+    spans = _LitSpans(text)
     return any(
-        not any(s0 <= m.start() < s1 for s0, s1 in spans)
-        for m in _BARE_PLUS_RE.finditer(text)
+        not spans.at(m.start()) for m in _BARE_PLUS_RE.finditer(text)
     )
 
 _RESOLVE_CLASHES: contextvars.ContextVar[bool] = contextvars.ContextVar(
@@ -8526,14 +8458,13 @@ def _mv_string_dispatch(c: str, bags: bool = True) -> str:
     )
 
 
-_STR_SPAN = re.compile(r'"(?:[^"\\]|\\.)*"|\'(?:[^\'\\]|\\.)*\'')
-
-
-def _sub_outside_strings(pattern: str, repl: str, text: str) -> str:
+def _sub_outside_strings(pattern: str, repl, text: str) -> str:
     """re.sub that leaves quoted string literals untouched — a let named
-    `t` must not rewrite the literal in `where event_type == "t"`."""
+    `t` must not rewrite the literal in `where event_type == "t"`.
+    `repl` is a template or a function, as for re.sub: pass user text
+    through a function, so its backslashes stay text."""
     out, last = [], 0
-    for m in _STR_SPAN.finditer(text):
+    for m in _LITERAL.finditer(text):
         out.append(re.sub(pattern, repl, text[last : m.start()]))
         out.append(m.group(0))
         last = m.end()
@@ -8600,13 +8531,14 @@ def _apply_lets(
             txt = _rewrite_fn(txt, fname, _call)
         return txt
 
-    while True:
-        m = re.match(r"\s*let\s+(\w+)\s*=\s*([^;]+);", text)
-        if not m:
-            break
-        name, body = m.group(1), m.group(2).strip()
+    while (m := re.match(r"\s*let\s+(\w+)\s*=", text)) and (
+        stmt := _next_statement(text)
+    ):
+        name, body = m.group(1), stmt[0][m.end() :].strip()
         for n2, e2 in scalar.items():
-            body = _sub_outside_strings(rf"\b{re.escape(n2)}\b", f"({e2})", body)
+            body = _sub_outside_strings(
+                rf"\b{re.escape(n2)}\b", lambda _, r=f"({e2})": r, body
+            )
         body = _expand_fns(body)
         mm = re.match(r"materialize\s*\(\s*(.+)\)\s*$", body, re.DOTALL)
         if mm:
@@ -8616,7 +8548,7 @@ def _apply_lets(
                 # (_cache_child returns "SELECT * FROM <view>")
                 inner_sql = _kql_to_sql_pinned(body, spark, dict(tabular))
                 tabular[name] = ("sql", _cache_child(spark, inner_sql, "mat"))
-                text = text[m.end():]
+                text = stmt[1]
                 continue
         vm = re.match(r"^view\s*\(\s*\)\s*\{\s*(.+?)\s*\}$", body, re.DOTALL)
         if vm:
@@ -8667,7 +8599,7 @@ def _apply_lets(
             tabular[name] = (
                 "fn", fm.group(1), fm.group(4).strip(), extras, tdflt
             )
-            text = text[m.end():]
+            text = stmt[1]
             continue
         sfm = re.match(
             r"^\(\s*(\w+\s*:\s*\w+(?:\s*=\s*[^,()]+)?"
@@ -8695,14 +8627,14 @@ def _apply_lets(
                 params.append(pname.strip())
                 defaults.append(dflt.strip() or None)
             fnscalar[name] = (params, defaults, sfm.group(2).strip())
-            text = text[m.end():]
+            text = stmt[1]
             continue
         head = re.match(r"^(\w+)\s*(\||$)", body)
         if head and (head.group(2) == "|" or head.group(1) in tabular):
             tabular[name] = body
         else:
             scalar[name] = body
-        text = text[m.end():]
+        text = stmt[1]
     for name, expr in scalar.items():
         # bare NON-NEGATIVE numeric lets substitute WITHOUT parens:
         # grammar slots that demand an integer literal (`take n`,
@@ -8717,7 +8649,7 @@ def _apply_lets(
             else f"({expr})"
         )
         text = _sub_outside_strings(
-            rf"\b{re.escape(name)}\b", rep, text
+            rf"\b{re.escape(name)}\b", lambda _, r=rep: r, text
         )
     return _expand_fns(text), tabular
 
@@ -9092,8 +9024,8 @@ def _is_orderable(dt) -> bool:
 
 def _fork_branches(text: str) -> list[tuple[str | None, str]]:
     """Parse `fork [name =] (pipe) [name =] (pipe) …` into
-    (name, branch_text) pairs — balanced-paren scan, quote-aware (a
-    `)` inside a branch's string literal must not close it)."""
+    (name, branch_text) pairs — balanced-paren scan (a `)` inside a
+    branch's string literal must not close it)."""
     branches: list[tuple[str | None, str]] = []
     i, n = 0, len(text)
     while True:
@@ -9110,26 +9042,8 @@ def _fork_branches(text: str) -> list[tuple[str | None, str]]:
             raise ValueError(
                 f"fork needs '[name =] (pipe)' branches: {text!r}"
             )
-        depth, quote, skip, j = 0, None, False, i
-        while j < n:
-            ch = text[j]
-            if skip:
-                skip = False
-            elif quote == '"' and ch == "\\":
-                skip = True
-            elif quote is None and ch in "'\"":
-                quote = ch
-            elif quote == ch:
-                quote = None
-            elif quote is None:
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-            j += 1
-        if depth != 0:
+        j = _balanced_end(text, i)
+        if j is None:
             raise ValueError(f"fork: unbalanced branch parens: {text!r}")
         branches.append((name, text[i + 1 : j].strip()))
         i = j + 1
@@ -9138,34 +9052,18 @@ def _fork_branches(text: str) -> list[tuple[str | None, str]]:
     return branches
 
 
+_LINE_COMMENT = _lexer("//")
+_ARROW = _lexer("=>")
+
+
 def _strip_line_comments(text: str) -> str:
-    """Remove `// …` to end-of-line outside string literals. Plain
-    strings use backslash escapes; @"verbatim" strings use doubled
-    quotes (the ADX lexer), so `@"\\"` does NOT escape its closing
-    quote and `https://x` inside any string survives."""
+    """Remove `// …` to end-of-line outside string literals, read line
+    by line with the one literal rule: `@"\\"` does NOT escape its
+    closing quote, and `https://x` inside any string survives."""
     out = []
     for line in text.split("\n"):
-        q: str | None = None
-        verbatim = False
-        i, n = 0, len(line)
-        while i < n:
-            ch = line[i]
-            if q is None:
-                if ch in "'\"":
-                    q = ch
-                    verbatim = i > 0 and line[i - 1] == "@"
-                elif ch == "/" and i + 1 < n and line[i + 1] == "/":
-                    line = line[:i].rstrip()
-                    break
-            elif ch == q:
-                if verbatim and i + 1 < n and line[i + 1] == q:
-                    i += 1  # doubled quote inside a verbatim string
-                else:
-                    q = None
-            elif ch == "\\" and not verbatim:
-                i += 1  # escape inside a plain string
-            i += 1
-        out.append(line)
+        m = next(_outside_literals(_LINE_COMMENT, line), None)
+        out.append(line if m is None else line[: m.start()].rstrip())
     return "\n".join(out)
 
 
@@ -9209,15 +9107,16 @@ def kql_to_sql(
         # resolves bin_auto(x) -> bin(x, size). Unknown properties are
         # accepted and ignored (they tune ADX execution, not results).
         sets: dict[str, str] = {}
-        while True:
-            sm = re.match(
-                r"^\s*set\s+(\w+)(?:\s*=\s*([^;]+))?;", kql,
-                re.IGNORECASE,
+        while (sm := re.match(r"\s*set\s+(\w+)", kql, re.IGNORECASE)) and (
+            stmt := _next_statement(kql)
+        ):
+            vm = re.fullmatch(
+                r"(?:\s*=\s*(.+))?", stmt[0][sm.end() :], re.DOTALL
             )
-            if not sm:
+            if not vm:
                 break
-            sets[sm.group(1)] = (sm.group(2) or "true").strip()
-            kql = kql[sm.end() :]
+            sets[sm.group(1)] = (vm.group(1) or "true").strip()
+            kql = stmt[1]
         if re.search(r"\bbin_auto\s*\(", kql):
             size = sets.get("query_bin_auto_size")
             if not size:
@@ -9515,29 +9414,15 @@ def _kql_stages_to_sql(
             # be parenthesized pipes (round-8 fuzz finding: the old
             # ([^)]*) regex stopped at a pipe operand's first ')')
             s0 = stages[0]
-            depth, j = 1, fhead.end()
-            quote = None
-            while j < len(s0) and depth:
-                ch = s0[j]
-                if quote:
-                    if ch == "\\":
-                        j += 1
-                    elif ch == quote:
-                        quote = None
-                elif ch in "'\"":
-                    quote = ch
-                elif ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                j += 1
-            tail = re.match(
-                r"\s*where\s+(.+)$", s0[j:], re.IGNORECASE | re.DOTALL
+            close = _balanced_end(s0, fhead.end() - 1)
+            tail = close is not None and re.match(
+                r"\s*where\s+(.+)$", s0[close + 1 :],
+                re.IGNORECASE | re.DOTALL,
             )
-            if depth == 0 and tail:
+            if tail:
                 fnd = (
                     fhead.group(1),
-                    s0[fhead.end() : j - 1],
+                    s0[fhead.end() : close],
                     tail.group(1),
                 )
     if fnd:
@@ -9771,7 +9656,7 @@ def _kql_stages_to_sql(
                 else f"({dflt})"
             )
             fbody0 = _sub_outside_strings(
-                rf"\b{re.escape(pname)}\b", rep0, fbody0
+                rf"\b{re.escape(pname)}\b", lambda _, r=rep0: r, fbody0
             )
         scoped0 = dict(_tabular)
         scoped0[fparam0] = (
@@ -9853,7 +9738,7 @@ def _kql_stages_to_sql(
         _key_ref = re.compile(rf"\b{re.escape(key)}\b")
 
         def _refs_key(frag: str) -> bool:
-            return bool(_key_ref.search(_STR_SPAN.sub(" ", frag)))
+            return bool(_key_ref.search(_blank_literals(frag)))
 
         subs = _split_top_level(sub, "|")
         for j, ss in enumerate(subs):
@@ -13773,7 +13658,7 @@ def _kql_stages_to_sql(
                     else f"({val})"
                 )
                 fbody = _sub_outside_strings(
-                    rf"\b{re.escape(pname)}\b", repv, fbody
+                    rf"\b{re.escape(pname)}\b", lambda _, r=repv: r, fbody
                 )
             scoped = dict(_tabular)
             scoped[fparam] = ("sql", sql)
@@ -14206,21 +14091,10 @@ def _kql_stages_to_sql(
                     )
 
             def _split_arrow(txt: str) -> tuple[str, str | None]:
-                quote = None
-                ii = 0
-                while ii < len(txt) - 1:
-                    ch = txt[ii]
-                    if quote:
-                        if ch == "\\":
-                            ii += 1  # skip escaped char (incl. \")
-                        elif ch == quote:
-                            quote = None
-                    elif ch in "'\"":
-                        quote = ch
-                    elif ch == "=" and txt[ii + 1] == ">":
-                        return txt[:ii], txt[ii + 2:]
-                    ii += 1
-                return txt, None
+                am = next(_outside_literals(_ARROW, txt), None)
+                if am is None:
+                    return txt, None
+                return txt[: am.start()], txt[am.end() :]
 
             steps = []
             step_assigns: list[list[tuple[str, str]]] = []

@@ -4074,3 +4074,153 @@ def test_plus_mixed_guard_at_probe_sites(spark):
             "pg_t | extend bad = strcat(tostring(j.k), s + v)"
             " | project bad",
         ).collect()
+
+
+# --- one string-literal rule ----------------------------------------
+# ADX reads '…' / "…" with backslash escapes and @'…' / @"…" verbatim
+# with doubled quotes. Each query below is valid ADX whose literal holds
+# a quote, a separator or a bracket; the same query written without the
+# escape (`"a'(b"` for `'a\'(b'`) returns the same rows.
+
+_LIT_PROBES = [
+    (r"T | extend y = strcat('it\'s (', x) | project y",
+     [("it's (a'(b",), ("it's (x1",)]),
+    (r"T | extend a = 'it\'s, ok', b = 1 | project a, b",
+     [("it's, ok", 1), ("it's, ok", 1)]),
+    (r"T | where x == 'a\'(b' | count", [(1,)]),
+    (r'T | where s == @"C:\" | count', [(1,)]),
+    (r"T | where s in ('it\'s, ok', 'zz') | count", [(1,)]),
+    (r'T | where x == "a\'(b" | count', [(1,)]),
+    (r"T | summarize n = countif(x == 'a\' by (b') by s | count", [(2,)]),
+    (r"T | extend y = substring('a\')b', 1, 2) | project y",
+     [("')",), ("')",)]),
+    (r"T | extend y = toscalar(T | where x == 'a\'(b' | count)"
+     r" | project y", [(1,), (1,)]),
+    ("let p = 'a;b'; T | where s == p | count", [(0,)]),
+]
+
+
+@pytest.fixture
+def lit_t(spark):
+    spark.createDataFrame(
+        [("x1", "it's, ok"), ("a'(b", "C:\\")], "x string, s string"
+    ).createOrReplaceTempView("T")
+
+
+@pytest.mark.parametrize("text,rows", _LIT_PROBES)
+def test_escaped_and_verbatim_literals_translate(spark, lit_t, text, rows):
+    got = sorted(tuple(r) for r in kql(spark, text).collect())
+    assert got == rows
+
+
+def test_let_value_is_not_a_substitution_template(spark, lit_t):
+    """A let value's backslashes reach the SQL as written: `'x\\1'`
+    stays that literal instead of losing a backslash to re.sub."""
+    sql = kql_to_sql(r"let p = 'x\\1'; T | where s == p", spark)
+    assert r"'x\\1'" in sql
+
+
+@pytest.mark.parametrize(
+    "lit,value",
+    [
+        (r"'a\'b'", "a'b"),
+        (r'"a\"b"', 'a"b'),
+        (r'"a\'b"', "a'b"),
+        (r'@"C:\"', "C:\\"),
+        ("@'it''s'", "it's"),
+        ("'it''s'", "it's"),  # the SQL side's doubled quote
+    ],
+)
+def test_literal_forms_share_one_rule(spark, lit, value):
+    from api_to_parquet_spark.queries.kql import (
+        _balanced_end, _split_by, _split_top_level, _strings_to_sql,
+        _strip_line_comments,
+    )
+
+    assert _split_top_level(f"{lit}, ({lit})") == [lit, f"({lit})"]
+    assert _split_top_level(f"{lit} | x", "|") == [lit, "x"]
+    assert _split_by(f"f({lit}) by k") == [f"f({lit}) ", " k"]
+    assert _balanced_end(f"({lit}) )", 0) == len(lit) + 1
+    assert _strip_line_comments(f"{lit} // c") == lit
+    sql = _strings_to_sql(lit)
+    assert spark.sql(f"SELECT {sql} AS v").collect()[0]["v"] == value
+
+
+def test_unterminated_literal_runs_to_the_end():
+    from api_to_parquet_spark.queries.kql import (
+        _balanced_end, _split_top_level, _strip_line_comments,
+    )
+
+    assert _split_top_level("'abc, d) | e") == ["'abc, d) | e"]
+    assert _balanced_end("('abc)", 0) is None
+    assert _strip_line_comments("'abc // d") == "'abc // d"
+
+
+def test_fork_branch_literal_with_escaped_quote():
+    from api_to_parquet_spark.queries.kql import _fork_branches
+
+    assert _fork_branches(
+        r"a = (where x == 'a\'(b') b = (where x == 'x1')"
+    ) == [("a", r"where x == 'a\'(b'"), ("b", "where x == 'x1'")]
+
+
+def test_kql_keeps_one_literal_definition():
+    """Guard: kql.py lexes string literals in one place. No character
+    loop tracks quotes, no second literal regex sits beside `_LITERAL`,
+    and no literal span list is built outside `_LitSpans`."""
+    import ast
+    import inspect
+    import re
+
+    from api_to_parquet_spark.queries import kql as kql_mod
+
+    src = inspect.getsource(kql_mod)
+    for loop in (
+        r"\bin_str\s*=\s*not\s+in_str",
+        r"\bquote\s*=\s*ch\b",
+        r"\bch\s*==\s*quote\b",
+        r"\bquote\s*==\s*ch\b",
+        r"\bverbatim\s*=\s*i\s*>",
+    ):
+        assert not re.search(loop, src), f"quote-tracking loop: {loop}"
+
+    # the definition is read only by the helpers built on it
+    helpers = {"_lexer", "_LitSpans", "_blank_literals",
+               "_sub_outside_strings", "_strings_to_sql"}
+    span_elt = re.compile(r"\(?(\w+)\.start\(\), \1\.end\(\)\)?|\w+\.span\(\)")
+    strays: list[str] = []
+
+    def walk(node: ast.AST, scope: str | None) -> None:
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.ClassDef)):
+                inner = scope or child.name
+            if (
+                isinstance(child, ast.Name)
+                and child.id in ("_LITERAL", "_LITERAL_SRC")
+                and isinstance(child.ctx, ast.Load)
+                and scope not in helpers
+                # _LITERAL = re.compile(_LITERAL_SRC, …)
+                and not (scope is None and child.id == "_LITERAL_SRC")
+            ):
+                strays.append(f"line {child.lineno}: {child.id}")
+            if (
+                isinstance(child, (ast.ListComp, ast.GeneratorExp))
+                and span_elt.fullmatch(ast.unparse(child.elt))
+                and scope != "_LitSpans"
+            ):
+                strays.append(f"line {child.lineno}: span list")
+            walk(child, inner)
+
+    walk(ast.parse(src), None)
+    assert not strays, strays
+
+    probe = r"""f('a\'b', "c\"d")"""
+    for name, val in vars(kql_mod).items():
+        if isinstance(val, re.Pattern) and kql_mod._LITERAL_SRC not in (
+            val.pattern
+        ):
+            found = [m.group() for m in val.finditer(probe)]
+            assert not {r"'a\'b'", r'"c\"d"'} <= set(found), (
+                f"{name} is a second literal regex"
+            )

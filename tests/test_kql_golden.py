@@ -1,21 +1,23 @@
-"""Golden SQL corpus: every kql_registry entry must translate to the SQL
-frozen in tests/fixtures/kql_registry_sql.json (written by
-tools/golden_sql.py), byte-for-byte after generated view names are
-renumbered. A translator change that alters any emission shows up here
-as a diff to explain, not as a silent plan change."""
+"""Golden SQL corpora: every kql_registry entry and every
+tools/adx_coverage.py probe must translate to the SQL frozen in
+tests/fixtures/ (written by tools/golden_sql.py), byte-for-byte after
+generated view names are renumbered. A translator change that alters any
+emission shows up here as a diff to explain, not as a silent plan
+change."""
 
 from __future__ import annotations
 
 import json
 import os
 
-from tools.golden_sql import FIXTURE, capture
+from tools.golden_sql import (
+    COVERAGE_FIXTURE, FIXTURE, capture, capture_coverage,
+)
 
 
-def test_registry_sql_matches_golden_corpus(spark, sf_smoke):
-    with open(FIXTURE) as f:
+def _assert_matches(got: dict[str, list[str]], path: str) -> None:
+    with open(path) as f:
         golden = json.load(f)
-    got = capture(spark, sf_smoke)
     assert list(got) == list(golden)
     diffs = []
     for name, want in golden.items():
@@ -33,3 +35,11 @@ def test_registry_sql_matches_golden_corpus(spark, sf_smoke):
                     f" got ...{b[max(0, at - 60):at + 60]!r}"
                 )
     assert not diffs, "\n".join(diffs)
+
+
+def test_registry_sql_matches_golden_corpus(spark, sf_smoke):
+    _assert_matches(capture(spark, sf_smoke), FIXTURE)
+
+
+def test_adx_coverage_sql_matches_golden_corpus(spark):
+    _assert_matches(capture_coverage(spark), COVERAGE_FIXTURE)

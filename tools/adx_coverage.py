@@ -560,15 +560,10 @@ PLUGINS: list[tuple[str, str]] = [
 ]
 
 
-def main() -> int:
-    as_json = "--json" in sys.argv[1:]
-    from api_to_parquet_spark.queries.kql import kql
-    from api_to_parquet_spark.session import get_spark
-
-    spark = get_spark()
-    # Self-contained externaldata fixture: the OPERATORS probe reads
-    # this path, so the census must create it (a fresh checkout would
-    # otherwise classify externaldata as 'error' and exit 1).
+def make_cov_view(spark) -> None:
+    """Register the typed two-row probe table `cov`, and write the CSV
+    the `externaldata` OPERATORS probe reads (a fresh checkout would
+    otherwise classify externaldata as 'error')."""
     with open("/tmp/adx_cov_ext.csv", "w", encoding="utf-8") as fh:
         fh.write("a,1\nb,2\n")
     spark.sql(
@@ -582,9 +577,21 @@ def main() -> int:
         " '{\"a\": 2}', array(2L, 3L, 4L), '192.168.0.9'"
     ).createOrReplaceTempView("cov")
 
+
+FAMILIES = (("scalar", SCALARS), ("agg", AGGREGATES),
+            ("op", OPERATORS), ("plugin", PLUGINS))
+
+
+def main() -> int:
+    as_json = "--json" in sys.argv[1:]
+    from api_to_parquet_spark.queries.kql import kql
+    from api_to_parquet_spark.session import get_spark
+
+    spark = get_spark()
+    make_cov_view(spark)
+
     results: dict[str, dict[str, str]] = {}
-    for family, entries in (("scalar", SCALARS), ("agg", AGGREGATES),
-                            ("op", OPERATORS), ("plugin", PLUGINS)):
+    for family, entries in FAMILIES:
         for name, probe in entries:
             try:
                 kql(spark, probe).collect()
