@@ -762,6 +762,22 @@ def _strings_to_sql(text: str) -> str:
     return _LITERAL.sub(to_sql, text)
 
 
+def _literal_text(lit: str) -> str | None:
+    """The characters one whole literal stands for, or None when it is
+    unterminated: '…' and "…" drop each escaping backslash, verbatim
+    @'…' and @"…" undouble their quote."""
+    verbatim = lit[0] == "@"
+    q, body = lit[verbatim], lit[verbatim + 1 :]
+    if verbatim:
+        if (len(body) - len(body.rstrip(q))) % 2 == 0:
+            return None
+        return body[:-1].replace(q + q, q)
+    toks = re.findall(r"\\.?|[^\\]", body, re.DOTALL)
+    if toks[-1:] != [q]:
+        return None
+    return "".join(t[-1] for t in toks[:-1])
+
+
 def _bin_to_sql(text: str) -> str:
     """bin(col, 1h) -> epoch-floor timestamp bucketing (works for any
     bucket width, unlike date_trunc's fixed units)."""
@@ -8191,6 +8207,16 @@ def _group_alias(g: str, idx: int) -> tuple[str, str]:
 
 _TYPE_CASTS = {"long": "BIGINT", "int": "INT", "double": "DOUBLE", "string": ""}
 
+# A parse pattern's tokens: a string fragment in any literal form (round-9:
+# single-quoted ones were silently SKIPPED, so 'id=' patterns extracted
+# NULLs), *, a typed name:type capture, or a bare \w+ one, which ADX
+# types as string (round-10 probe battery 8, Kusto-doc 'section
+# [par1][par2]' example; the typed alternative must come first). Any
+# other pattern text is a loud error.
+_PARSE_TOKENS = _lexer(
+    r"(?P<star>\*)|(?P<name>\w+)\s*:\s*(?P<typ>\w+)|(?P<bare>\w+)"
+)
+
 
 def _parse_to_selects(
     col: str, pattern: str, regex_mode: bool = False, flags: str = ""
@@ -8210,27 +8236,20 @@ def _parse_to_selects(
                 "parse kind=regex flags: only i/m/s are in the subset"
                 f" (U swaps greediness engine-wide): {flags!r}"
             )
-    # fragments may be double- OR single-quoted (both are ADX string
-    # literals — round-9: the single-quoted form was silently SKIPPED
-    # by findall, so 'id=' patterns extracted NULLs); any pattern text
-    # matching neither a literal, *, nor name:type is now a loud error
-    # a bare \w+ fragment is an UNTYPED capture (ADX: string) —
-    # round-10 probe battery 8 (Kusto-doc 'section [par1][par2]'
-    # example); the typed alternative must come first
-    tok_re = re.compile(
-        r'"((?:[^"\\]|\\.)*)"'
-        r"|'((?:[^'\\]|\\.)*)'"
-        r"|(\*)|(\w+)\s*:\s*(\w+)|(\w+)"
-    )
     pos = 0
     toks = []
-    for m_ in tok_re.finditer(pattern):
+    for m_ in _PARSE_TOKENS.finditer(pattern):
         gap = pattern[pos : m_.start()].strip()
+        lit = m_.group("lit")
+        if lit is not None:
+            lit = _literal_text(lit)
+            if lit is None:  # unterminated
+                gap = m_.group()
         if gap:
             raise ValueError(
                 f"parse pattern: unrecognized fragment {gap!r}"
             )
-        toks.append(m_.groups())
+        toks.append((lit,) + m_.group("star", "name", "typ", "bare"))
         pos = m_.end()
     if pattern[pos:].strip():
         raise ValueError(
@@ -8238,8 +8257,7 @@ def _parse_to_selects(
         )
     regex, caps = "", []
     anchored = True
-    for ti, (dlit, slit, star, name, typ, bare) in enumerate(toks):
-        lit = dlit if dlit is not None else slit
+    for ti, (lit, star, name, typ, bare) in enumerate(toks):
         if bare:
             name, typ = bare, "string"
         if star:
@@ -8255,18 +8273,16 @@ def _parse_to_selects(
             else:
                 regex += r"(-?[0-9.]+)"
             caps.append((name, typ))
+        elif regex_mode:
+            ngroups = len(re.findall(r"(?<!\\)\((?!\?)", lit))
+            if ngroups:
+                raise ValueError(
+                    "parse kind=regex: regex fragments must use"
+                    f" non-capturing (?:) groups: {lit!r}"
+                )
+            regex += lit
         else:
-            frag = re.sub(r"\\(.)", r"\1", lit)
-            if regex_mode:
-                ngroups = len(re.findall(r"(?<!\\)\((?!\?)", frag))
-                if ngroups:
-                    raise ValueError(
-                        "parse kind=regex: regex fragments must use"
-                        f" non-capturing (?:) groups: {frag!r}"
-                    )
-                regex += frag
-            else:
-                regex += re.escape(frag)
+            regex += re.escape(lit)
     if anchored:
         regex = "^" + regex
     if flags:
@@ -9204,6 +9220,25 @@ def _kql_to_sql_pinned(
     finally:
         _STAGE_CHILD.reset(tok2)
         _ACTIVE_CTX.reset(tok)
+
+
+_WITH_OTHERS = _lexer(r"(?i:\s+with\s+others\s*=\s*)")
+
+
+def _cut_others_label(clause: str) -> tuple[str, str | None]:
+    """A top-nested clause without its `with others = <literal>` part,
+    and that literal (any form: battery 21 found single-quoted labels a
+    ParseException). The part is cut only where the literal is followed
+    by the clause's `by`; otherwise the clause is returned as it is."""
+    for m in _outside_literals(_WITH_OTHERS, clause):
+        label = _WITH_OTHERS.match(clause, m.end())
+        if (
+            label
+            and label.lastgroup == "lit"
+            and re.match(r"\s+by\s", clause[label.end() :], re.IGNORECASE)
+        ):
+            return clause[: m.start()] + clause[label.end() :], label.group()
+    return clause, None
 
 
 def _kql_stages_to_sql(
@@ -14789,15 +14824,12 @@ def _kql_stages_to_sql(
             clauses = []
             gprojs = []
             for cl in _split_top_level(body):
-                # the others label takes either quote style (battery
-                # 21: single-quoted labels were a ParseException)
+                clause, others = _cut_others_label(cl.strip())
                 cm = re.match(
                     r"(?:top-nested\s+)?(\d+)\s+of\s+"
                     r"(?:(\w+)\s*=\s*)?(.+?)"
-                    r"(?:\s+with\s+others\s*=\s*"
-                    r"(\"(?:[^\"\\]|\\.)*\"|'(?:[^'\\]|\\.)*'))?"
                     r"\s+by\s+(.+)$",
-                    cl.strip(),
+                    clause,
                     re.IGNORECASE,
                 )
                 if not cm:
@@ -14805,12 +14837,11 @@ def _kql_stages_to_sql(
                         f"top-nested needs 'N of [name =] expr"
                         f" [with others = \"L\"] by agg': {cl!r}"
                     )
-                n, galias, gexpr, others, aggtext = (
+                n, galias, gexpr, aggtext = (
                     int(cm.group(1)),
                     cm.group(2),
                     cm.group(3).strip(),
-                    cm.group(4),
-                    cm.group(5).strip(),
+                    cm.group(4).strip(),
                 )
                 # `of` accepts an EXPRESSION with an optional alias
                 # (round-8 probe finding); a bare expression gets a

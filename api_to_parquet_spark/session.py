@@ -3,8 +3,16 @@
 The same config block is intended for a real cluster: AQE handles runtime
 re-planning (skew joins, partition coalescing), shuffle partitions default to
 the local core count but should be sized to ~2-3x total executor cores on a
-cluster, and parquet physicals match the reference writer
-(/root/reference/src/main.go:33-34 — 128 MB row groups, snappy).
+cluster.
+
+The lake's Parquet format is set here, once, for every writer: V2 data
+pages, in which parquet-mr delta-encodes int64 columns
+(DELTA_BINARY_PACKED; the monotone `Timestamp` shrinks to almost nothing),
+snappy chunks and 128 MB row groups, the reference writer's codec and row
+group (reference src/main.go:33-34). Readers of the lake must
+support DataPageV2 and DELTA_BINARY_PACKED: Spark 4.1, DuckDB 1.0 and
+pyarrow 16 do; the reference's external Synapse/ADX readers are not
+exercised here.
 """
 
 from __future__ import annotations
@@ -79,7 +87,12 @@ def get_spark(
         )
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
-        .config("spark.hadoop.parquet.block.size", str(PARQUET_BLOCK_SIZE))
+        # Plain keys, not `spark.hadoop.*`: Spark copies every session
+        # conf into each write's Hadoop conf, while a `spark.hadoop.*`
+        # key reaches it only when this builder creates the SparkContext.
+        .config("parquet.block.size", str(PARQUET_BLOCK_SIZE))
+        # V2 data pages: V1 pages have no delta encoding for int64
+        .config("parquet.writer.version", "v2")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.files.maxPartitionBytes", "134217728")

@@ -4097,6 +4097,9 @@ _LIT_PROBES = [
     (r"T | extend y = toscalar(T | where x == 'a\'(b' | count)"
      r" | project y", [(1,), (1,)]),
     ("let p = 'a;b'; T | where s == p | count", [(0,)]),
+    ("T | top-nested 1 of s with others = @'z' by count()",
+     [("C:\\", 1), ("z", 1)]),
+    ("T | parse s with @'it''s' rest | project rest", [("",), (", ok",)]),
 ]
 
 
@@ -4162,6 +4165,40 @@ def test_fork_branch_literal_with_escaped_quote():
     assert _fork_branches(
         r"a = (where x == 'a\'(b') b = (where x == 'x1')"
     ) == [("a", r"where x == 'a\'(b'"), ("b", "where x == 'x1'")]
+
+
+@pytest.mark.parametrize(
+    "verbatim,plain,fragment",
+    [
+        ("T | top-nested 1 of s with others = @'z' by count()",
+         "T | top-nested 1 of s with others = 'z' by count()",
+         "UNION ALL (SELECT 'z' AS s,"),
+        ('T | top-nested 1 of s with others = @"z" by count()',
+         'T | top-nested 1 of s with others = "z" by count()',
+         "UNION ALL (SELECT 'z' AS s,"),
+        ("T | top-nested 1 of s WITH OTHERS = @'it''s' by count()",
+         "T | top-nested 1 of s with others = \"it's\" by count()",
+         "UNION ALL (SELECT 'it''s' AS s,"),
+        (r"T | parse s with @'C:\' rest",
+         r"T | parse s with 'C:\\' rest",
+         r"regexp_extract(s, '^C:\\\\(.*)', 1) AS rest"),
+        ("T | parse s with @'it''s' rest",
+         r"T | parse s with 'it\'s' rest",
+         "regexp_extract(s, '^it''s(.*)', 1) AS rest"),
+    ],
+)
+def test_verbatim_others_label_and_parse_fragment(verbatim, plain, fragment):
+    """The top-nested `with others` label and parse's string fragments
+    take every literal form: a verbatim one translates as its plain
+    spelling does."""
+    sql = kql_to_sql(verbatim)
+    assert sql == kql_to_sql(plain)
+    assert fragment in sql
+
+
+def test_unterminated_parse_fragment_is_refused():
+    with pytest.raises(ValueError, match="unrecognized fragment"):
+        kql_to_sql("T | parse s with @'C:\\ rest")
 
 
 def test_kql_keeps_one_literal_definition():
