@@ -1,5 +1,6 @@
-"""Golden SQL corpora: every kql_registry entry and every
-tools/adx_coverage.py probe must translate to the SQL frozen in
+"""Golden SQL corpora: every kql_registry entry, every
+tools/adx_coverage.py probe and every KQL literal of the translator's
+unit tests must translate to the SQL frozen in
 tests/fixtures/ (written by tools/golden_sql.py), byte-for-byte after
 generated view names are renumbered. A translator change that alters any
 emission shows up here as a diff to explain, not as a silent plan
@@ -11,13 +12,15 @@ import json
 import os
 
 from tools.golden_sql import (
-    COVERAGE_FIXTURE, FIXTURE, capture, capture_coverage,
+    COVERAGE_FIXTURE, FIXTURE, TESTS_FIXTURE, capture, capture_coverage,
+    translate_texts,
 )
 
 
-def _assert_matches(got: dict[str, list[str]], path: str) -> None:
-    with open(path) as f:
-        golden = json.load(f)
+def _assert_matches(got: dict[str, list[str]], golden) -> None:
+    if isinstance(golden, str):
+        with open(golden) as f:
+            golden = json.load(f)
     assert list(got) == list(golden)
     diffs = []
     for name, want in golden.items():
@@ -43,3 +46,13 @@ def test_registry_sql_matches_golden_corpus(spark, sf_smoke):
 
 def test_adx_coverage_sql_matches_golden_corpus(spark):
     _assert_matches(capture_coverage(spark), COVERAGE_FIXTURE)
+
+
+def test_kql_tests_sql_matches_golden_corpus():
+    with open(TESTS_FIXTURE) as f:
+        golden = json.load(f)
+    got = translate_texts(golden)
+    _assert_matches(
+        {t: [sql] for t, sql in got.items()},
+        {t: [sql] for t, sql in golden.items()},
+    )

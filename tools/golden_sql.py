@@ -1,9 +1,12 @@
-"""Freeze the Spark SQL the KQL translator emits, as the two golden
+"""Freeze the Spark SQL the KQL translator emits, as the three golden
 corpora that tests/test_kql_golden.py compares against:
 
 - `kql_registry_sql.json`: every `kql_registry.QUERIES` entry;
 - `adx_coverage_sql.json`: every `tools/adx_coverage.py` probe, built
-  with `kql(spark, probe)` over its two-row `cov` view.
+  with `kql(spark, probe)` over its two-row `cov` view;
+- `kql_tests_sql.json`: every string literal passed to `kql(…)` or
+  `kql_to_sql(…)` in tests/test_kql.py and tests/test_idiom_probes.py
+  (found with `ast`), translated without a session by `kql_to_sql(text)`.
 
     python tools/golden_sql.py SF_DIR
 
@@ -14,7 +17,9 @@ Each entry is built (not collected) on one session. Every TOP-LEVEL
 part of their caller's text. An entry whose `kql()` retries (clash
 resolution, concat probe) therefore records two translations. A probe
 that raises records, after its translations, `!<exception class>: <first
-line of the message>`.
+line of the message>`. The third corpus maps each distinct text, in
+order of first appearance, to its one translation or its
+`!<class>: <first line>`.
 
 Generated view names carry a uuid or a process-wide counter, so they are
 renumbered by order of first appearance in each translation
@@ -23,6 +28,7 @@ renumbered by order of first appearance in each translation
 
 from __future__ import annotations
 
+import ast
 import contextlib
 import functools
 import json
@@ -36,6 +42,8 @@ sys.path.insert(0, REPO)
 FIXTURE = os.path.join(REPO, "tests", "fixtures", "kql_registry_sql.json")
 COVERAGE_FIXTURE = os.path.join(
     REPO, "tests", "fixtures", "adx_coverage_sql.json")
+TESTS_FIXTURE = os.path.join(REPO, "tests", "fixtures", "kql_tests_sql.json")
+TEST_FILES = ("tests/test_kql.py", "tests/test_idiom_probes.py")
 
 # _kql_cache_<tag>_<12 hex>, _kql_python_<12 hex>, _kql_seq_<12 hex>,
 # _let__fork_src<N> and the `_dnum<N>` lambda variable of a bound
@@ -117,19 +125,61 @@ def capture_coverage(spark) -> dict[str, list[str]]:
                 try:
                     kql(spark, probe)
                 except Exception as ex:  # noqa: BLE001 — recorded, not handled
-                    first = (str(ex).splitlines() or [""])[0]
-                    calls.append(
-                        normalize(f"!{type(ex).__name__}: {first}"))
+                    calls.append(_error_line(ex))
                 out[f"{family}/{name}"] = list(calls)
     return out
 
 
-def _dump(corpus: dict[str, list[str]], path: str) -> None:
+def _error_line(ex: Exception) -> str:
+    first = (str(ex).splitlines() or [""])[0]
+    return normalize(f"!{type(ex).__name__}: {first}")
+
+
+def test_texts() -> list[str]:
+    """Every string literal passed positionally to `kql(…)` or
+    `kql_to_sql(…)` in TEST_FILES, distinct, in order of first
+    appearance (file order, then source order)."""
+    texts: dict[str, None] = {}
+    for rel in TEST_FILES:
+        with open(os.path.join(REPO, rel)) as f:
+            tree = ast.parse(f.read())
+        calls = []
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            name = fn.id if isinstance(fn, ast.Name) else getattr(
+                fn, "attr", None)
+            if name in ("kql", "kql_to_sql"):
+                calls.append(node)
+        calls.sort(key=lambda c: (c.lineno, c.col_offset))
+        for node in calls:
+            for a in node.args:
+                if isinstance(a, ast.Constant) and isinstance(a.value, str):
+                    texts.setdefault(a.value)
+    return list(texts)
+
+
+def translate_texts(texts) -> dict[str, str]:
+    """{text: normalized sessionless `kql_to_sql(text)`, or
+    "!<class>: <first message line>" if it raised}."""
+    from api_to_parquet_spark.queries.kql import kql_to_sql
+
+    out: dict[str, str] = {}
+    for text in texts:
+        try:
+            out[text] = normalize(kql_to_sql(text))
+        except Exception as ex:  # noqa: BLE001 — recorded, not handled
+            out[text] = _error_line(ex)
+    return out
+
+
+def _dump(corpus: dict, path: str) -> None:
     os.makedirs(os.path.dirname(path), exist_ok=True)
     with open(path, "w") as f:
         json.dump(corpus, f, indent=1)
         f.write("\n")
-    n = sum(len(v) for v in corpus.values())
+    n = sum(1 if isinstance(v, str) else len(v) for v in corpus.values())
     print(f"{len(corpus)} entries, {n} translations -> {path}")
 
 
@@ -144,6 +194,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     _dump(capture(spark, sf_dir), FIXTURE)
     _dump(capture_coverage(spark), COVERAGE_FIXTURE)
+    _dump(translate_texts(test_texts()), TESTS_FIXTURE)
     return 0
 
 
