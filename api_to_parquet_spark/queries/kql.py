@@ -202,6 +202,22 @@ isempty/isnotempty; contains/startswith/endswith/has are
 case-insensitive like ADX, with *_cs case-sensitive variants. Datetime:
 ago(), now(), startofday/week (Sunday start)/month/year, endofday/month/year (last microsecond), week_of_year/monthofyear, datetime() literals, bin(). Arrays additionally: array_slice (0-based inclusive), array_sort_asc/desc, array_reverse, array_sum.
 
+How a scalar function call translates: one `_CALLS` entry per KQL
+name, SQL in, SQL out. `_expr` finds every `name(…)` call outside
+string literals in one scan (`_translate_calls`, built on `_lexer`;
+a space before the `(` changes nothing, and names are case-sensitive)
+and translates the innermost calls first, so each entry receives
+arguments that are already SQL. An entry is either the SQL function
+name the call is renamed to (its argument text kept as written) or a
+builder `f(args: list[str]) -> str | None` over the top-level
+comma-split arguments; None keeps the call. What a builder
+returns is never scanned again: it must be final SQL, so a builder
+that wants another function's translation calls that builder itself
+(or emits its SQL). To add a function, add one `_CALLS` entry; a
+builder that reads a literal list argument sees `dynamic([…])` and
+`pack_array(…)` as `array(…)`. The infix operators (==, in, has, …)
+are rewritten after the calls, on the whole expression.
+
 Anything else raises ValueError naming the operator — a deliberate
 explicit-subset contract, not a silent mistranslation. Each stage wraps
 the previous as a subquery; Catalyst's CollapseProject/combine-filters
@@ -373,7 +389,7 @@ resolved in the same pre-pass as database() qualifiers; the
 data-scope argument strips); one trailing semicolon tolerated;
 bin(EXPRESSION, …) group keys take a safe keyN alias (previously
 emitted the raw text as an invalid identifier — a silent
-ParseException); isempty/isnotempty via balanced _rewrite_fn (the
+ParseException); isempty/isnotempty via a balanced call scan (the
 old [^()]+ regex skipped string-literal and nested-call arguments,
 leaking the KQL name); `has <number>` numeric terms;
 make_list_with_nulls (never-null struct wrap over collect_list);
@@ -633,9 +649,14 @@ import contextvars
 import itertools
 import math
 import re
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from api_to_parquet_spark.queries.py_codecs import (
+    CODEC_FNS,
+    ensure_registered,
+)
 from api_to_parquet_spark.queries.series_decomp import (
     SD_UDF_NAME,
     SDA_UDF_NAME,
@@ -776,20 +797,6 @@ def _literal_text(lit: str) -> str | None:
     if toks[-1:] != [q]:
         return None
     return "".join(t[-1] for t in toks[:-1])
-
-
-def _bin_to_sql(text: str) -> str:
-    """bin(col, 1h) -> epoch-floor timestamp bucketing (works for any
-    bucket width, unlike date_trunc's fixed units)."""
-
-    def repl(m: re.Match) -> str:
-        col, n, unit = m.group(1).strip(), int(m.group(2)), m.group(3)
-        sec = n * _TIMESPAN_SECONDS[unit]
-        return (
-            f"to_timestamp(floor(unix_timestamp({col}) / {sec}) * {sec})"
-        )
-
-    return re.sub(r"bin\(([^,]+),\s*(\d+)([smhd])\)", repl, text)
 
 
 def _bin_at_sql(args: list[str]) -> str:
@@ -1285,7 +1292,7 @@ def _rdiv_guard_body(n: str, d: str) -> str:
 # by a BALANCED paren scan — any nesting depth (battery 28 found
 # dayofweek(bin(ts, 1d)) past the old regex's depth; the stress
 # sweep then found depth 4 past the widened regex — no finite depth
-# survives _bin_to_sql-sized arguments).
+# survives the datetime bin expansion's argument sizes).
 
 
 def _fold_dayofweek(e: str) -> str:
@@ -1681,43 +1688,50 @@ def _datetime_add_sql(args: list[str]) -> str:
     return f"timestampadd({unit}, {args[1]}, {args[2]})"
 
 
-def _rewrite_fn(e: str, name: str, build) -> str:
-    """Rewrite every `name(...)` call (balanced parens, top-level-comma
-    args) via build(args) — for KQL functions whose SQL shape is not a
-    1:1 rename (case, substring)."""
-    pat = re.compile(rf"\b{name}\s*\(")
-    if not pat.search(e):
-        return e
-    out = []
-    i = 0
-    spans = _LitSpans(e)
-    while True:
-        m = pat.search(e, i)
-        if not m:
-            out.append(e[i:])
-            return "".join(out)
-        # a literal like 'case(a,b,c)' must stay text, not become SQL
-        # (round-3 review finding) — skip matches inside string spans
-        span = spans.at(m.start())
-        if span is not None:
-            out.append(e[i : span[1]])
-            i = span[1]
+# A call is `name(` outside string literals, `name` a whole word: the
+# same token with or without space before the parenthesis.
+_CALL_TOKENS = _lexer(r"\b(?P<name>\w+)\s*\(|(?P<open>\()|(?P<close>\))")
+
+
+def _translate_calls(e: str, table: dict) -> str:
+    """Translate every `name(…)` call in e whose name is a key of
+    `table`, innermost calls first, in one scan. An entry is either
+    the SQL function name the call is renamed to (its argument text
+    kept as written) or a builder: the call's translated arguments,
+    split at top-level commas -> its SQL, or None to keep the call
+    (`name(…)`, arguments as written). A builder's SQL is never scanned
+    again, so it must emit final SQL. Calls of other names, and
+    unclosed calls, stay as written around their translated
+    arguments."""
+    # one frame per open parenthesis: [call head or "(", name, text]
+    stack: list[list] = [["", None, []]]
+    last = 0
+    for m in _outside_literals(_CALL_TOKENS, e):
+        stack[-1][2].append(e[last : m.start()])
+        last = m.end()
+        if m.lastgroup != "close":
+            stack.append([m.group(), m.group("name"), []])
             continue
-        out.append(e[i : m.start()])
-        close = _balanced_end(e, m.end() - 1)
-        j = len(e) if close is None else close + 1
-        args = _split_top_level(e[m.end() : j - 1])
-        # recurse into the arguments for NESTED same-name calls
-        # (round-7: `pack("a", pack("b", 1))` — the inner call must
-        # translate before the outer builder embeds the arg text)
-        args = [
-            _rewrite_fn(a, name, build)
-            if re.search(rf"\b{name}\s*\(", a)
-            else a
-            for a in args
-        ]
-        out.append(build(args))
-        i = j
+        if len(stack) == 1:
+            stack[0][2].append(")")
+            continue
+        head, name, parts = stack.pop()
+        inner = "".join(parts)
+        entry = table.get(name)
+        if entry is None:
+            sql = head + inner + ")"
+        elif isinstance(entry, str):
+            sql = f"{entry}({inner})"
+        else:
+            sql = entry(_split_top_level(inner))
+            if sql is None:
+                sql = f"{name}({inner})"
+        stack[-1][2].append(sql)
+    stack[-1][2].append(e[last:])
+    while len(stack) > 1:
+        head, _, parts = stack.pop()
+        stack[-1][2].append(head + "".join(parts))
+    return "".join(stack[0][2])
 
 
 def _pred_sub(pattern: str, repl, text: str) -> str:
@@ -1811,7 +1825,7 @@ def _mangle_bracket_cols(text: str) -> str:
         protected.append("dynamic(" + ", ".join(args) + ")")
         return f"\x00DYN{len(protected) - 1}\x00"
 
-    t = _rewrite_fn(text, "dynamic", _protect)
+    t = _translate_calls(text, {"dynamic": _protect})
     # externaldata's URI list is a bracketed string list after the
     # schema parens (`externaldata (…) ["uri"]`) — whitespace puts it
     # past the adjacency lookbehind, so protect the whole header
@@ -2663,10 +2677,7 @@ def _series_fir_sql(args: list[str], center: bool = False) -> str:
             "series_fir: series must be a plain column (it is referenced"
             f" once per tap): {y!r}"
         )
-    cm = re.match(
-        r"^(?:pack_array|dynamic)\s*\(\s*\[?\s*(.*?)\s*\]?\s*\)$",
-        args[1].strip(),
-    )
+    cm = re.match(r"^array\s*\(\s*(.*?)\s*\)$", args[1].strip())
     if not cm:
         raise ValueError(
             f"series_fir: coefficients must be literal: {args[1]!r}"
@@ -2709,10 +2720,7 @@ def _series_iir_sql(args: list[str]) -> str:
         )
 
     def _lits(s: str, nm: str) -> list[float]:
-        cm = re.match(
-            r"^(?:pack_array|dynamic)\s*\(\s*\[?\s*(.*?)\s*\]?\s*\)$",
-            s.strip(),
-        )
+        cm = re.match(r"^array\s*\(\s*(.*?)\s*\)$", s.strip())
         if not cm:
             raise ValueError(
                 f"series_iir: {nm} coefficients must be literal: {s!r}"
@@ -3343,11 +3351,7 @@ def _parse_user_agent_sql(args: list[str]) -> str:
         )
     ua = args[0].strip()
     qarg = args[1].strip()
-    dm = re.match(
-        r"^dynamic\s*\(\s*\[(.*)\]\s*\)$",
-        qarg,
-        re.IGNORECASE | re.DOTALL,
-    )
+    dm = re.match(r"^array\s*\((.*)\)$", qarg, re.DOTALL)
     if dm:
         kinds = [
             t.strip().strip("'\"").lower()
@@ -3673,6 +3677,2988 @@ def _plus_mixed_guard(e: str, fields) -> None:
     )
 
 
+def _parse_csv_sql(a: list[str]) -> str:
+    # parse_csv(text) -> array of field strings (round-9 probe
+    # battery 6): split on commas OUTSIDE double quotes (java
+    # regex lookahead — an even number of quotes must follow),
+    # then unquote + unescape "" per field. Single-record subset
+    # (embedded newlines ride along inside quoted fields).
+    if len(a) != 1:
+        raise ValueError(f"parse_csv needs one argument: {a!r}")
+    x = a[0].strip()
+    split_re = ',(?=(?:[^"]*"[^"]*")*[^"]*$)'
+    return (
+        f"transform(split({x}, '{split_re}'), _f ->"
+        " CASE WHEN startswith(_f, '\"') AND endswith(_f, '\"')"
+        " AND length(_f) >= 2"
+        " THEN replace(substring(_f, 2, length(_f) - 2),"
+        " '\"\"', '\"')"
+        " ELSE _f END)"
+    )
+
+
+# series_fill_forward/backward/linear (round-6): per-element
+# higher-order lookups — O(n²) per row in the series length, which
+# make-series bounds by the bin count; all map-side, zero shuffle.
+def _fill_fwd_sql(a: list[str]) -> str:
+    arr = a[0].strip()
+    # last non-null at or before i; ADX keeps LEADING nulls
+    return (
+        f"transform({arr}, (_e, _i) -> coalesce(_e,"
+        f" try_element_at(filter(slice({arr}, 1, _i + 1),"
+        f" _x -> _x IS NOT NULL), -1)))"
+    )
+
+
+def _fill_bwd_sql(a: list[str]) -> str:
+    arr = a[0].strip()
+    # first non-null at or after i; ADX keeps TRAILING nulls
+    return (
+        f"transform({arr}, (_e, _i) -> coalesce(_e,"
+        f" try_element_at(filter(slice({arr}, _i + 1,"
+        f" size({arr}) - _i), _x -> _x IS NOT NULL), 1)))"
+    )
+
+
+def _fill_linear_sql(a: list[str]) -> str:
+    arr = a[0].strip()
+    # interior nulls interpolate between the nearest non-null
+    # neighbors; edge nulls take the nearest non-null value (ADX
+    # contract). pidx/nidx are 0-based neighbor indexes.
+    pidx = (
+        f"try_element_at(filter(sequence(0, size({arr}) - 1),"
+        f" _j -> _j <= _i AND element_at({arr}, _j + 1)"
+        " IS NOT NULL), -1)"
+    )
+    nidx = (
+        f"try_element_at(filter(sequence(0, size({arr}) - 1),"
+        f" _j -> _j >= _i AND element_at({arr}, _j + 1)"
+        " IS NOT NULL), 1)"
+    )
+    return (
+        f"transform({arr}, (_e, _i) -> coalesce(_e,"
+        f" CASE WHEN ({pidx}) IS NULL THEN"
+        f" try_element_at({arr}, ({nidx}) + 1)"
+        f" WHEN ({nidx}) IS NULL THEN"
+        f" try_element_at({arr}, ({pidx}) + 1)"
+        f" ELSE try_element_at({arr}, ({pidx}) + 1)"
+        f" + (try_element_at({arr}, ({nidx}) + 1)"
+        f" - try_element_at({arr}, ({pidx}) + 1))"
+        f" * (CAST(_i - ({pidx}) AS DOUBLE)"
+        f" / CAST(({nidx}) - ({pidx}) AS DOUBLE)) END))"
+    )
+
+
+def _moving_avg_sql(a: list[str]) -> str:
+    if len(a) < 2 or not re.match(r"^\d+$", a[1].strip()):
+        raise ValueError(
+            "series_moving_avg needs (series, integer-literal"
+            f" window [, center]) — explicit-subset contract: {a!r}"
+        )
+    return _series_fir_sql(
+        [a[0], f"array({', '.join(['1'] * int(a[1]))})", "true"]
+        + list(a[2:])
+    )
+
+
+# element-wise unary series math (round-7 sweep): one transform,
+# map-side; values computed as DOUBLE like the binary family
+def _series_unary(fn_sql: str):
+    return lambda a: (
+        f"transform({a[0]}, _x -> {fn_sql}(CAST(_x AS DOUBLE)))"
+    )
+
+
+def _series_seasonal_sql(a: list[str]) -> str:
+    # series_seasonal(series, period) — seasonal component:
+    # element i maps to the MEAN of all elements sharing its phase
+    # (i mod period). Period must be a positive integer literal
+    # (no autodetection — the series_decompose explicit-subset
+    # contract). Phase means computed per element via one nested
+    # fold: O(n²/period) inside a map-side lambda, fine for the
+    # array-per-row series shape.
+    if (
+        len(a) != 2
+        or not re.match(r"^\d+$", a[1].strip())
+        or int(a[1]) < 1
+    ):
+        raise ValueError(
+            "series_seasonal needs (series, positive integer"
+            f" literal period) — explicit-subset contract: {a!r}"
+        )
+    p = int(a[1])
+    phase_mean = (
+        f"(aggregate({a[0]}, named_struct('s', CAST(0 AS DOUBLE),"
+        " 'n', CAST(0 AS DOUBLE), 'j', 0), (_st, _y) ->"
+        f" IF(pmod(_st.j, {p}) = pmod(_i, {p}),"
+        " named_struct('s', _st.s + CAST(_y AS DOUBLE),"
+        " 'n', _st.n + 1, 'j', _st.j + 1),"
+        " named_struct('s', _st.s, 'n', _st.n, 'j', _st.j + 1)),"
+        " _st -> _st.s / _st.n))"
+    )
+    return f"transform({a[0]}, (_x, _i) -> {phase_mean})"
+
+
+def _series_pow_sql(a: list[str]) -> str:
+    if len(a) != 2:
+        raise ValueError(f"series_pow needs (series, exp): {a!r}")
+    if re.match(r"^-?\d+(\.\d+)?$", a[1].strip()):
+        return (
+            f"transform({a[0]}, _x -> pow(CAST(_x AS DOUBLE),"
+            f" CAST({a[1]} AS DOUBLE)))"
+        )
+    return (
+        f"zip_with({a[0]}, {a[1]}, (_x, _y) ->"
+        " pow(CAST(_x AS DOUBLE), CAST(_y AS DOUBLE)))"
+    )
+
+
+# series_dot_product / series_cosine_similarity (round-8 verdict
+# #8): map-side zip + left-fold in array order (deterministic,
+# oracle-reproducible). dot_product reuses the zip rewrite, so a
+# numeric-literal operand broadcasts like the arithmetic family;
+# cosine requires two series (a scalar operand is meaningless).
+def _series_fold_sum(prod: str) -> str:
+    return (
+        f"aggregate({prod}, CAST(0 AS DOUBLE),"
+        " (_acc, _v) -> _acc + _v)"
+    )
+
+
+def _series_dot_sql(a: list[str]) -> str:
+    if len(a) != 2:
+        raise ValueError(
+            f"series_dot_product needs (series, series): {a!r}"
+        )
+    return _series_fold_sum(_series_zip_sql(a, "*"))
+
+
+def _series_cos_sql(a: list[str]) -> str:
+    if len(a) != 2:
+        raise ValueError(
+            "series_cosine_similarity needs (series, series)"
+            f" — magnitude args are out of subset: {a!r}"
+        )
+    s1, s2 = a[0].strip(), a[1].strip()
+
+    def _dot(u: str, v: str) -> str:
+        return _series_fold_sum(_series_zip_sql([u, v], "*"))
+
+    return (
+        f"({_dot(s1, s2)} / (sqrt({_dot(s1, s1)})"
+        f" * sqrt({_dot(s2, s2)})))"
+    )
+
+
+def _series_pearson_sql(a: list[str]) -> str:
+    # series_pearson_correlation (round-10 probe battery 11):
+    # r = (n·Σxy − Σx·Σy) / sqrt((n·Σx² − Σx²)(n·Σy² − Σy²)) —
+    # map-side zip + left-folds in array order; NULL (not an
+    # error) on zero variance.
+    if len(a) != 2:
+        raise ValueError(
+            f"series_pearson_correlation needs (s1, s2): {a!r}"
+        )
+    x, y = a[0].strip(), a[1].strip()
+
+    def _sum(arr: str) -> str:
+        return (
+            f"aggregate({arr}, CAST(0 AS DOUBLE),"
+            " (_acc, _x) -> _acc + CAST(_x AS DOUBLE))"
+        )
+
+    n = f"CAST(size({x}) AS DOUBLE)"
+    sx, sy = _sum(x), _sum(y)
+    sxx = _sum(f"transform({x}, _x -> CAST(_x AS DOUBLE)"
+               " * CAST(_x AS DOUBLE))")
+    syy = _sum(f"transform({y}, _x -> CAST(_x AS DOUBLE)"
+               " * CAST(_x AS DOUBLE))")
+    sxy = _sum(
+        f"zip_with({x}, {y}, (_x, _y) -> CAST(_x AS DOUBLE)"
+        " * CAST(_y AS DOUBLE))"
+    )
+    return (
+        f"(({n} * {sxy} - {sx} * {sy})"
+        f" / nullif(sqrt(({n} * {sxx} - {sx} * {sx})"
+        f" * ({n} * {syy} - {sy} * {sy})), CAST(0 AS DOUBLE)))"
+    )
+
+
+def _make_timespan_sql(a: list[str]) -> str:
+    # ADX forms: (hour, minute), (hour, minute, second),
+    # (day, hour, minute, second)
+    if len(a) == 2:
+        d, h, m_, s_ = "0", a[0], a[1], "0"
+    elif len(a) == 3:
+        d, h, m_, s_ = "0", a[0], a[1], a[2]
+    elif len(a) == 4:
+        d, h, m_, s_ = a
+    else:
+        raise ValueError(
+            f"make_timespan needs 2-4 arguments: {a!r}"
+        )
+    return (
+        f"make_dt_interval({d}, {h}, {m_},"
+        f" CAST({s_} AS DECIMAL(18, 6)))"
+    )
+
+
+def _replace_strings_sql(a: list[str]) -> str:
+    # replace_strings(text, lookups, rewrites) — each lookup
+    # replaced by its positional rewrite, applied IN ORDER over
+    # the running result (the ADX contract; later lookups see
+    # earlier replacements). One left fold over the zipped pair
+    # arrays, map-side. (probe battery 13)
+    if len(a) != 3:
+        raise ValueError(
+            f"replace_strings needs (text, lookups, rewrites): {a!r}"
+        )
+    t, lk, rw = (x.strip() for x in a)
+    return (
+        f"aggregate(zip_with({lk}, {rw},"
+        " (_l, _r) -> named_struct('l', _l, 'r', _r)),"
+        f" CAST({t} AS STRING),"
+        " (_acc, _p) -> replace(_acc, _p.l, _p.r))"
+    )
+
+
+# trim family: ADX trims REPEATED regex matches from the ends
+def _trim2(a: list[str], name: str) -> tuple[str, str]:
+    if len(a) != 2:
+        raise ValueError(f"{name} needs (regex, text): {a!r}")
+    return a[0], a[1]
+
+
+def _bin2_sql(a: list[str]) -> str:
+    # bin(col, 1h) -> epoch-floor timestamp bucketing (any bucket
+    # width, unlike date_trunc's fixed units); a numeric roundTo is
+    # the same snap-down as 2-arg floor (ADX: floor() and bin() are
+    # synonyms).
+    if len(a) != 2:
+        raise ValueError(f"bin needs (value, roundTo): {a!r}")
+    v, s_ = a[0].strip(), a[1].strip()
+    tm = re.fullmatch(r"(\d+)([smhd])", s_)
+    if tm:
+        sec = int(tm.group(1)) * _TIMESPAN_SECONDS[tm.group(2)]
+        return f"to_timestamp(floor(unix_timestamp({v}) / {sec}) * {sec})"
+    return (
+        f"(floor(CAST({v} AS DOUBLE) / CAST({s_} AS DOUBLE))"
+        f" * CAST({s_} AS DOUBLE))"
+    )
+
+
+def _array_index_of_sql(a: list[str]) -> str:
+    # ADX is 0-based with -1 for missing; array_position is 1-based
+    # with 0 (and NULL-safe via coalesce for a NULL haystack).
+    # 3-arg form searches from a 0-based start (negative counts
+    # from the end) — round-10 probe battery 9: the start arg was
+    # silently DROPPED before. length/occurrence implemented in
+    # round 11 (battery 16) below.
+    if len(a) == 2:
+        return f"(coalesce(array_position({a[0]}, {a[1]}), 0) - 1)"
+    if len(a) == 3:
+        arr, val = a[0], a[1]
+        s0 = f"CAST({a[2]} AS INT)"
+        # from-end starts clamp at the array head: start < -size
+        # would feed slice() a nonpositive start (Spark runtime
+        # error) where ADX gracefully searches the whole array
+        # (round-10 advice)
+        s_ = (
+            f"IF({s0} >= 0, {s0},"
+            f" greatest(size({arr}) + {s0}, 0))"
+        )
+        pos = (
+            f"coalesce(array_position(slice({arr}, ({s_}) + 1,"
+            f" size({arr})), {val}), 0)"
+        )
+        return f"IF(({pos}) = 0, -1, ({pos}) - 1 + ({s_}))"
+    if len(a) in (4, 5):
+        # length (4th) bounds the window to [start, start+length)
+        # (-1 = unbounded); occurrence (5th) picks the Nth match
+        # (round-11 probe battery 16, was a loud gap). One
+        # transform+filter pass collecting matching 0-based
+        # positions, then try_element_at(occurrence) — NULL out of
+        # range folds to ADX's -1.
+        arr, val = a[0], a[1]
+        s0 = f"CAST({a[2]} AS INT)"
+        s_ = (
+            f"IF({s0} >= 0, {s0},"
+            f" greatest(size({arr}) + {s0}, 0))"
+        )
+        ln = f"CAST({a[3]} AS INT)"
+        occ = f"CAST({a[4]} AS INT)" if len(a) == 5 else "1"
+        pos = (
+            f"filter(transform(sequence(1, size({arr})), _i ->"
+            f" IF(element_at({arr}, _i) = ({val})"
+            f" AND _i - 1 >= ({s_})"
+            f" AND (({ln}) < 0 OR _i - 1 < ({s_}) + ({ln})),"
+            " _i - 1, -1)), _p -> _p >= 0)"
+        )
+        return f"coalesce(try_element_at({pos}, {occ}), -1)"
+    raise ValueError(
+        "array_index_of supports (arr, value[, start[, length[,"
+        f" occurrence]]]): {a!r}"
+    )
+
+
+def _indexof_sql(a: list[str]) -> str:
+    # 0-based, -1 missing; 3-arg form searches from a 0-based start
+    # via locate() (review finding: start was silently dropped)
+    if len(a) == 2:
+        return f"(CAST(instr({a[0]}, {a[1]}) AS BIGINT) - 1)"
+    if len(a) == 3:
+        return (
+            f"(CAST(locate({a[1]}, {a[0]},"
+            f" CAST({a[2]} AS INT) + 1) AS BIGINT) - 1)"
+        )
+    if len(a) in (4, 5):
+        # 4/5-arg form (probe battery 14): length must be the
+        # literal -1 (search the remainder — a bounded window
+        # would need substring gymnastics, explicit subset) and
+        # occurrence a literal 1..9: the o-th match via a chained
+        # locate, each step guarded so a missing earlier
+        # occurrence stays 0 (-1 result) instead of restarting
+        # from the head
+        if a[3].strip() != "-1":
+            raise ValueError(
+                "indexof length argument supports -1 (remainder)"
+                f" only — explicit-subset contract: {a!r}"
+            )
+        occ = a[4].strip() if len(a) == 5 else "1"
+        if not re.match(r"^[1-9]$", occ):
+            raise ValueError(
+                "indexof occurrence must be a literal 1..9:"
+                f" {a!r}"
+            )
+        pos = (
+            f"locate({a[1]}, {a[0]}, CAST({a[2]} AS INT) + 1)"
+        )
+        for _ in range(int(occ) - 1):
+            pos = (
+                f"IF(({pos}) = 0, 0,"
+                f" locate({a[1]}, {a[0]}, ({pos}) + 1))"
+            )
+        return f"(CAST({pos} AS BIGINT) - 1)"
+    raise ValueError(
+        f"indexof supports (source, lookup [, start"
+        f"[, length, occurrence]]): {a!r}"
+    )
+
+
+# --- scalar batch 5 (round-6): set ops, array rotate/shift/iff/
+# zip, crypto hashes, datetime constructors, regex count/index,
+# ipv4 family, parse_version, strcat_delim, isascii/isutf8,
+# todecimal/toguid, format_bytes ---
+def _set_fold(a: list[str], fn: str) -> str:
+    if len(a) < 2:
+        raise ValueError(f"set op needs >= 2 arrays: {a!r}")
+    out = a[0].strip()
+    for nxt in a[1:]:
+        out = f"{fn}({out}, {nxt.strip()})"
+    return out
+
+
+def _array_iff_sql(a: list[str]) -> str:
+    # element-wise conditional; output length = condition length,
+    # shorter value arrays read as NULL (ADX contract). NULL
+    # condition cells yield NULL (neither branch), like ADX.
+    if len(a) != 3:
+        raise ValueError(f"array_iff needs (cond, x, y): {a!r}")
+    c, x, y = (s.strip() for s in a)
+    return (
+        f"transform({c}, (_c, _i) -> CASE WHEN _c THEN"
+        f" try_element_at({x}, _i + 1) WHEN NOT _c THEN"
+        f" try_element_at({y}, _i + 1) END)"
+    )
+
+
+def _array_rotate_sql(a: list[str], sign: str) -> str:
+    if len(a) != 2:
+        raise ValueError(f"array_rotate needs (arr, n): {a!r}")
+    arr, n = a[0].strip(), a[1].strip()
+    # pmod handles negative rotations (rotate_right = negative
+    # left-rotation); empty arrays pass through
+    k = f"pmod({sign}({n}), size({arr}))"
+    return (
+        f"IF(size({arr}) <= 1 OR {k} = 0, {arr},"
+        f" concat(slice({arr}, {k} + 1, size({arr}) - {k}),"
+        f" slice({arr}, 1, {k})))"
+    )
+
+
+def _array_shift_sql(a: list[str], sign: str) -> str:
+    # shift keeps the length; vacated cells take the fill value
+    # (default NULL). BETWEEN guard: Spark's negative element_at
+    # indexes count from the END, which would wrap the shift.
+    if len(a) not in (2, 3):
+        raise ValueError(f"array_shift needs (arr, n[, fill]): {a!r}")
+    arr, n = a[0].strip(), a[1].strip()
+    fill = a[2].strip() if len(a) == 3 else "NULL"
+    return (
+        f"transform({arr}, (_e, _i) -> IF(_i + 1 + {sign}({n})"
+        f" BETWEEN 1 AND size({arr}),"
+        f" try_element_at({arr}, _i + 1 + {sign}({n})), {fill}))"
+    )
+
+
+def _zip_sql(a: list[str]) -> str:
+    # ADX zip: array of N-element arrays. Same-typed arrays only
+    # (Spark arrays are homogeneous — ADX's mixed dynamics are out
+    # of the subset); N >= 2 inputs fold pairwise (round-7).
+    if len(a) < 2:
+        raise ValueError(f"zip needs at least two arrays: {a!r}")
+    out = (
+        f"zip_with({a[0].strip()}, {a[1].strip()},"
+        " (_l, _r) -> array(_l, _r))"
+    )
+    for nxt in a[2:]:
+        out = (
+            f"zip_with({out}, {nxt.strip()},"
+            " (_l, _r) -> array_append(_l, _r))"
+        )
+    return out
+
+
+def _make_datetime_sql(a: list[str]) -> str:
+    if len(a) == 3:
+        return (
+            f"make_timestamp({a[0]}, {a[1]}, {a[2]}, 0, 0, 0)"
+        )
+    if len(a) == 6:
+        return "make_timestamp(" + ", ".join(s.strip() for s in a) + ")"
+    raise ValueError(
+        f"make_datetime needs (y,m,d) or (y,m,d,h,mi,s): {a!r}"
+    )
+
+
+def _parse_ipv4_mask_sql(a: list[str]) -> str:
+    # parse_ipv4_mask(ip, prefix): the address as a long with the
+    # low (32 - prefix) bits zeroed — dynamic prefix allowed (one
+    # shiftleft, map-side). NULL outside [0, 32] like ADX.
+    if len(a) != 2:
+        raise ValueError(f"parse_ipv4_mask needs (ip, prefix): {a!r}")
+    shift = (
+        f"(CASE WHEN CAST({a[1]} AS INT) BETWEEN 0 AND 32 THEN"
+        f" shiftleft(CAST(1 AS BIGINT), 32 - CAST({a[1]} AS INT))"
+        " END)"
+    )
+    return (
+        f"((({_parse_ipv4_expr(a[0])}) div {shift}) * {shift})"
+    )
+
+
+# --- ipv6 family (round-11 probe battery 16). The canonical form
+# (_parse_ipv6_expr) is 8 zero-padded lowercase hextets, so
+# lexicographic compare == numeric compare, and prefix masks work
+# on the 32-nibble hex string: full nibbles by substr equality,
+# the partial nibble by a conv()-shifted compare. Addresses may
+# carry '/nn' suffixes (effective prefix = min of both sides and
+# the optional argument, the ipv4_is_match contract). IPv4 inputs
+# canonicalize to the ::ffff: transitional form, so mixed
+# ipv4/ipv6 comparisons work like ADX. All map-side builtins. ---
+def _v6addr(x: str) -> str:
+    # canonical 32-nibble hex (colons stripped), suffix removed
+    base = f"element_at(split({x}, '/'), 1)"
+    return f"replace({_parse_ipv6_expr(base)}, ':', '')"
+
+
+def _v6sfx(x: str) -> str:
+    return (
+        f"coalesce(try_cast(try_element_at(split({x}, '/'), 2)"
+        " AS INT), 128)"
+    )
+
+
+def _v6masked(c: str, pfx: str) -> str:
+    # the compare key under a prefix: full nibbles verbatim plus
+    # the masked partial nibble's hex digit (0-15 -> one char)
+    n = f"(({pfx}) div 4)"
+    rem = f"(({pfx}) % 4)"
+    part = (
+        f"lower(hex(CAST(FLOOR(conv(substr({c}, {n} + 1, 1), 16,"
+        f" 10) / pow(2, 4 - {rem})) AS INT)))"
+    )
+    return (
+        f"concat(substr({c}, 1, {n}),"
+        f" IF({rem} = 0, '', {part}))"
+    )
+
+
+def _v6bind(x1: str, x2: str, pfx: str, body: str) -> str:
+    # bind both canonical addresses and the effective prefix ONCE
+    # via transform-over-one-element lambdas (each canonical form
+    # is a ~2 KB expression — without binding it would repeat 4x)
+    return (
+        f"element_at(transform(array({_v6addr(x1)}), _c1 ->"
+        f" element_at(transform(array({_v6addr(x2)}), _c2 ->"
+        f" element_at(transform(array(CAST(({pfx}) AS INT)),"
+        f" _pf -> {body}), 1)), 1)), 1)"
+    )
+
+
+def _ipv6_compare_sql(a: list[str]) -> str:
+    if len(a) != 2:
+        raise ValueError(f"ipv6_compare needs (ip1, ip2): {a!r}")
+    x1, x2 = a[0].strip(), a[1].strip()
+    pfx = f"least({_v6sfx(x1)}, {_v6sfx(x2)})"
+    m1 = _v6masked("_c1", "_pf")
+    m2 = _v6masked("_c2", "_pf")
+    body = (
+        f"CASE WHEN {m1} < {m2} THEN CAST(-1 AS BIGINT)"
+        f" WHEN {m1} > {m2} THEN 1"
+        f" WHEN {m1} = {m2} THEN 0 END"
+    )
+    return f"({_v6bind(x1, x2, pfx, body)})"
+
+
+def _ipv6_is_match_sql(a: list[str]) -> str:
+    if len(a) not in (2, 3):
+        raise ValueError(
+            f"ipv6_is_match needs (ip1, ip2[, prefix]): {a!r}"
+        )
+    x1, x2 = a[0].strip(), a[1].strip()
+    parts = [_v6sfx(x1), _v6sfx(x2)]
+    if len(a) == 3:
+        parts.append(f"CAST({a[2]} AS INT)")
+    pfx = f"least({', '.join(parts)})"
+    body = (
+        f"({_v6masked('_c1', '_pf')} = {_v6masked('_c2', '_pf')})"
+    )
+    return f"({_v6bind(x1, x2, pfx, body)})"
+
+
+def _ipv6_in_range_sql(a: list[str]) -> str:
+    # the range side's suffix is the effective prefix (default
+    # 128); both sides may be any expression
+    if len(a) != 2:
+        raise ValueError(
+            f"ipv6_is_in_range needs (ip, range): {a!r}"
+        )
+    x, rng = a[0].strip(), a[1].strip()
+    body = (
+        f"({_v6masked('_c1', '_pf')} = {_v6masked('_c2', '_pf')})"
+    )
+    return f"({_v6bind(x, rng, _v6sfx(rng), body)})"
+
+
+def _parse_ipv6_mask_sql(a: list[str]) -> str:
+    # parse_ipv6_mask(ip, prefix): the canonical form with the
+    # low (128 - prefix) bits zeroed — full nibbles + the masked
+    # partial nibble, right-padded with zeros, re-coloned
+    if len(a) != 2:
+        raise ValueError(
+            f"parse_ipv6_mask needs (ip, prefix): {a!r}"
+        )
+    h32 = (
+        f"rpad({_v6masked('_c1', '_pf')}, 32, '0')"
+    )
+    body = (
+        f"CASE WHEN _pf BETWEEN 0 AND 128 THEN"
+        f" array_join(transform(sequence(0, 7), _k ->"
+        f" substr({h32}, _k * 4 + 1, 4)), ':') END"
+    )
+    return (
+        f"(element_at(transform(array({_v6addr(a[0].strip())}),"
+        f" _c1 -> element_at(transform(array(CAST(({a[1]}) AS"
+        f" INT)), _pf -> {body}), 1)), 1))"
+    )
+
+
+def _has_ip_pattern(ip: str, prefix: bool) -> tuple[str, str]:
+    """SQL for the delimited-occurrence regex of one SPECIFIC
+    ipv4 (or ipv4 PREFIX) expression. A string literal folds into
+    the pattern at translate time; any other expression builds the
+    pattern at runtime (dots escaped via replace). The token must
+    be a complete valid dotted quad either way — battery 21 caught
+    the old form matching ANY ipv4 ('10.1.2.34' satisfied
+    has_ipv4(text, '10.1.2.3'), a silent value bug."""
+    ip = ip.strip()
+    lm = re.match(r"^'((?:[^']|'')*)'$", ip)
+    # prefix: a complete valid ipv4 whose text STARTS with the
+    # prefix (lookahead) — '10.1.2.34' satisfies prefix
+    # '10.1.2.3'. exact: the delimited ip and nothing more (a
+    # lookahead + generic ipv4 tail would let '10.1.2.34'
+    # satisfy '10.1.2.3').
+    open_g = "(?=" if prefix else "("
+    close_g = f"){_IPV4_RE}($|[^0-9.])" if prefix else ")($|[^0-9.])"
+    if lm:
+        quoted = lm.group(1).replace(".", "\\\\.")
+        pat = f"'(^|[^0-9.]){open_g}{quoted}{close_g}'"
+    else:
+        pat = (
+            f"concat('(^|[^0-9.]){open_g}',"
+            f" replace({ip}, '.', '\\\\.'), '{close_g}')"
+        )
+    valid = (
+        f"({ip}) RLIKE '^[0-9.]+$'"
+        if prefix
+        else f"({ip}) RLIKE '^{_IPV4_RE}$'"
+    )
+    return pat, valid
+
+
+def _has_ipv4_sql(a: list[str], prefix: bool, name: str) -> str:
+    if len(a) != 2:
+        raise ValueError(f"{name} needs (source, ip): {a!r}")
+    pat, valid = _has_ip_pattern(a[1], prefix)
+    return (
+        f"coalesce(({a[0].strip()}) RLIKE {pat}"
+        f" AND {valid}, false)"
+    )
+
+
+def _list_literal_items(arg: str) -> list[str] | None:
+    # a dynamic([...]) / pack_array(...) LITERAL list, unpacked to
+    # its top-level items at translate time; None when not a list
+    m = re.match(r"^\s*array\s*\((.*)\)\s*$", arg, re.S)
+    if m:
+        return _split_top_level(m.group(1))
+    return None
+
+
+def _has_any_ipv4_sql(a: list[str], prefix: bool, name: str) -> str:
+    # list form: either varargs of strings or ONE dynamic([...])/
+    # pack_array(...) literal list (the documented shapes; a
+    # runtime array column is indistinguishable from a string
+    # column at translate time — explicit subset)
+    if len(a) < 2:
+        raise ValueError(f"{name} needs (source, ip, ...): {a!r}")
+    ips = a[1:]
+    if len(ips) == 1:
+        items = _list_literal_items(ips[0])
+        if items is not None:
+            ips = items
+    parts = [_has_ipv4_sql([a[0], ip], prefix, name) for ip in ips]
+    return "(" + " OR ".join(parts) + ")"
+
+
+def _ipv4_range_test(ip_sql: str, rng: str) -> str:
+    # one literal 'a.b.c.d[/nn]' range (no suffix = /32) against a
+    # pre-translated ip expression
+    rm = re.match(
+        r"^'(\d{1,3})\.(\d{1,3})\.(\d{1,3})\.(\d{1,3})(?:/(\d{1,2}))?'$",
+        rng.strip(),
+    )
+    if not rm:
+        raise ValueError(
+            "ipv4_is_in_range needs a literal 'a.b.c.d[/nn]' range"
+            f" (explicit subset): {rng!r}"
+        )
+    o = [int(rm.group(i)) for i in range(1, 5)]
+    bits = int(rm.group(5)) if rm.group(5) is not None else 32
+    if bits > 32 or any(x > 255 for x in o):
+        raise ValueError(f"bad ipv4 range: {rng!r}")
+    base = (o[0] << 24) + (o[1] << 16) + (o[2] << 8) + o[3]
+    shift = 2 ** (32 - bits)
+    return f"(({ip_sql}) div {shift} = {base // shift})"
+
+
+def _ipv4_in_range_sql(a: list[str]) -> str:
+    # range(s) must be 'base[/prefix]' literals (resolved at
+    # translate time); the ip side is any expression
+    if len(a) != 2:
+        raise ValueError(f"ipv4_is_in_range needs (ip, range): {a!r}")
+    return _ipv4_range_test(_parse_ipv4_expr(a[0]), a[1])
+
+
+def _ipv4_in_any_range_sql(a: list[str]) -> str:
+    # ipv4_is_in_any_range(ip, r1, r2, ...) — OR over literal
+    # ranges; a dynamic([...]) single-arg list unpacks to its
+    # literal elements at translate time (battery 21)
+    if len(a) < 2:
+        raise ValueError(
+            f"ipv4_is_in_any_range needs (ip, range, ...): {a!r}"
+        )
+    ranges = a[1:]
+    if len(ranges) == 1:
+        items = _list_literal_items(ranges[0])
+        if items is not None:
+            ranges = items
+    ip_sql = _parse_ipv4_expr(a[0])
+    parts = [_ipv4_range_test(ip_sql, r) for r in ranges]
+    return "(" + " OR ".join(parts) + ")"
+
+
+def _ipv6_in_any_range_sql(a: list[str]) -> str:
+    # ipv6_is_in_any_range(ip, r1, ...) — OR over ranges; a
+    # single dynamic([...]) literal list unpacks at translate
+    # time (round-12 census; same shape as ipv4_is_in_any_range)
+    if len(a) < 2:
+        raise ValueError(
+            f"ipv6_is_in_any_range needs (ip, range, ...): {a!r}"
+        )
+    rs = a[1:]
+    if len(rs) == 1:
+        items = _list_literal_items(rs[0])
+        if items is not None:
+            rs = items
+    parts = [_ipv6_in_range_sql([a[0], r]) for r in rs]
+    return "(" + " OR ".join(parts) + ")"
+
+
+def _ipv4_match_sql(a: list[str]) -> str:
+    # ipv4_is_match(ip1, ip2[, prefix]) — round-9 probe battery 6.
+    # Either ip may carry '/nn' suffix notation; the effective
+    # prefix is the minimum of both suffixes and the optional
+    # prefix argument (the ADX contract). Fully dynamic (no
+    # literal requirement): address and suffix split per side,
+    # one integer shift compare, map-side.
+    if len(a) not in (2, 3):
+        raise ValueError(
+            f"ipv4_is_match needs (ip1, ip2[, prefix]): {a!r}"
+        )
+
+    def addr(x: str) -> str:
+        return _parse_ipv4_expr(f"element_at(split({x}, '/'), 1)")
+
+    def sfx(x: str) -> str:
+        return (
+            f"coalesce(try_cast(try_element_at(split({x}, '/'),"
+            " 2) AS INT), 32)"
+        )
+
+    x1, x2 = a[0].strip(), a[1].strip()
+    parts = [sfx(x1), sfx(x2)]
+    if len(a) == 3:
+        parts.append(f"CAST({a[2]} AS INT)")
+    eff = f"least({', '.join(parts)})"
+    shift = f"shiftleft(CAST(1 AS BIGINT), 32 - {eff})"
+    return (
+        f"(({addr(x1)}) div ({shift})"
+        f" = ({addr(x2)}) div ({shift}))"
+    )
+
+
+def _parse_version_sql(a: list[str]) -> str:
+    # up to 4 dotted numeric components, each weighted 1e8 (the
+    # ADX comparable-decimal encoding); NULL on malformed input
+    s = a[0].strip()
+    return (
+        f"CASE WHEN {s} RLIKE '^[0-9]+(\\\\.[0-9]+){{0,3}}$' THEN"
+        f" aggregate(transform(sequence(1, 4), _i ->"
+        f" coalesce(try_cast(try_element_at(split({s}, '\\\\.'),"
+        " _i) AS DECIMAL(38, 0)), CAST(0 AS DECIMAL(38, 0)))),"
+        " CAST(0 AS DECIMAL(38, 0)),"
+        " (_a, _x) -> _a * 100000000 + _x) END"
+    )
+
+
+def _format_bytes_sql(a: list[str]) -> str:
+    # format_bytes(v[, precision[, units]]) with AUTO units
+    # (KB=1024) when the literal units argument is absent: nested
+    # CASE over magnitude; precision defaults to 0. A literal
+    # third argument pins the unit (round-11 probe battery 15).
+    if len(a) not in (1, 2, 3):
+        raise ValueError(
+            f"format_bytes supports (value[, precision[,"
+            f" units]]): {a!r}"
+        )
+    v = a[0].strip()
+    p = a[1].strip() if len(a) >= 2 else "0"
+    if not re.match(r"^\d+$", p):
+        raise ValueError(
+            f"format_bytes precision must be a literal int: {p!r}"
+        )
+
+    def _amt(expr: str) -> str:
+        # precision 0 renders integers (ADX '1 KB', not '1.0 KB')
+        if p == "0":
+            return f"CAST(CAST(round({expr}, 0) AS BIGINT) AS STRING)"
+        return f"CAST(round({expr}, {p}) AS STRING)"
+
+    powers = {
+        "Bytes": 0, "KB": 1, "MB": 2, "GB": 3, "TB": 4,
+        "PB": 5, "EB": 6,
+    }
+    if len(a) == 3:
+        um = re.match(r"^'(\w+)'$", a[2].strip())
+        if not um or um.group(1) not in powers:
+            raise ValueError(
+                "format_bytes units must be a literal from"
+                f" {sorted(powers)}: {a[2]!r}"
+            )
+        unit = um.group(1)
+        div = float(1024 ** powers[unit])
+        return (
+            f"concat({_amt(f'({v}) / {div!r}')}, ' {unit}')"
+        )
+    arms = []
+    for unit, power in (
+        ("EB", 6), ("PB", 5), ("TB", 4), ("GB", 3), ("MB", 2),
+        ("KB", 1),
+    ):
+        div = 1024 ** power
+        arms.append(
+            f"WHEN abs({v}) >= {div} THEN"
+            f" concat({_amt(f'({v}) / {div}')}, ' {unit}')"
+        )
+    return (
+        f"CASE {' '.join(arms)} ELSE"
+        f" concat({_amt(f'({v}) * CAST(1 AS DOUBLE)')},"
+        " ' Bytes') END"
+    )
+
+
+def _floor2_sql(a: list[str]) -> str:
+    # ADX floor(value, roundTo) IS bin(): snap down to a multiple
+    # of roundTo; a timespan roundTo means datetime bucketing
+    # (round-7: the same epoch-floor shape bin(ts, 1d) emits).
+    if len(a) != 2:
+        raise ValueError(f"floor needs (value, roundTo): {a!r}")
+    v, s_ = a[0].strip(), a[1].strip()
+    tm = re.match(r"^(\d+)([smhd])$", s_)
+    if tm:
+        sec = int(tm.group(1)) * _TIMESPAN_SECONDS[tm.group(2)]
+        return (
+            f"to_timestamp(floor(unix_timestamp({v}) / {sec})"
+            f" * {sec})"
+        )
+    return (
+        f"(floor(CAST({v} AS DOUBLE) / CAST({s_} AS DOUBLE))"
+        f" * CAST({s_} AS DOUBLE))"
+    )
+
+
+_DT_PARTS = {
+    "year": "year({t})",
+    "quarter": "quarter({t})",
+    "month": "month({t})",
+    "week_of_year": "weekofyear({t})",
+    "day": "day({t})",
+    "dayofyear": "dayofyear({t})",
+    "hour": "hour({t})",
+    "minute": "minute({t})",
+    "second": "second({t})",
+    "millisecond": "CAST((unix_micros({t}) % 1000000)"
+    " div 1000 AS INT)",
+    "microsecond": "CAST(unix_micros({t}) % 1000000 AS INT)",
+}
+
+
+def _datetime_part_sql(a: list[str]) -> str:
+    if len(a) != 2:
+        raise ValueError(f"datetime_part needs (part, dt): {a!r}")
+    pm_ = re.match(r"^'((?:[^']|'')*)'$", a[0].strip())
+    part = (pm_.group(1) if pm_ else a[0]).strip().lower()
+    if part not in _DT_PARTS:
+        raise ValueError(
+            f"datetime_part: unsupported part {part!r}"
+            f" (subset: {sorted(_DT_PARTS)})"
+        )
+    return f"CAST({_DT_PARTS[part].format(t=a[1].strip())} AS INT)"
+
+
+def _gettype_sql(a: list[str]) -> str:
+    # Spark type names -> ADX names for the shared scalar types
+    x = a[0].strip()
+    return (
+        f"CASE typeof({x}) WHEN 'bigint' THEN 'long'"
+        " WHEN 'int' THEN 'int' WHEN 'smallint' THEN 'int'"
+        " WHEN 'double' THEN 'real' WHEN 'float' THEN 'real'"
+        " WHEN 'string' THEN 'string'"
+        " WHEN 'timestamp' THEN 'datetime'"
+        " WHEN 'boolean' THEN 'bool'"
+        f" ELSE typeof({x}) END"
+    )
+
+
+def _rand_sql(a: list[str]) -> str:
+    if not a or not a[0].strip():
+        return "rand()"
+    return f"CAST(floor(rand() * ({a[0].strip()})) AS BIGINT)"
+
+
+def _extract_json_sql(a: list[str]) -> str:
+    # ADX extract_json(path, doc[, typeof(t)]) — note the
+    # path-first order (get_json_object is doc-first)
+    if len(a) == 2:
+        return f"get_json_object({a[1].strip()}, {a[0].strip()})"
+    if len(a) == 3:
+        tm = re.match(
+            r"^typeof\s*\(\s*(\w+)\s*\)$", a[2].strip(), re.IGNORECASE
+        )
+        if not tm or tm.group(1).lower() not in _KQL_TYPES:
+            raise ValueError(
+                f"extract_json needs typeof(<kql type>): {a[2]!r}"
+            )
+        t = _KQL_TYPES[tm.group(1).lower()]
+        inner = f"get_json_object({a[1].strip()}, {a[0].strip()})"
+        return inner if t == "STRING" else f"try_cast({inner} AS {t})"
+    raise ValueError(
+        f"extract_json needs (path, doc[, typeof(t)]): {a!r}"
+    )
+
+
+def _array_split_sql(a: list[str]) -> str:
+    # single 0-based split index -> [prefix, suffix] pair (ADX's
+    # index-ARRAY form is out of the subset)
+    if len(a) != 2:
+        raise ValueError(f"array_split needs (arr, index): {a!r}")
+    arr, ix = a[0].strip(), a[1].strip()
+    return (
+        f"array(slice({arr}, 1, {ix}),"
+        f" slice({arr}, ({ix}) + 1, size({arr}) - ({ix})))"
+    )
+
+
+def _hash_xxhash64_sql(a: list[str]) -> str:
+    # ADX hash_xxhash64(value [, mod]) — the optional second arg
+    # is a MODULO ("output value between 0 and mod-1"), exactly
+    # like hash() below, NOT a seed. The old emission fed it as a
+    # second xxhash64 INPUT, silently returning full-range values
+    # that matched neither ADX nor any seeded xxhash64 (round-13
+    # advice). pmod reduces into [0, mod), same as the hash() rule.
+    if len(a) == 1:
+        return f"xxhash64({a[0]})"
+    if len(a) == 2:
+        return f"pmod(xxhash64({a[0]}), {a[1]})"
+    raise ValueError(f"hash_xxhash64 needs (value [, mod]): {a!r}")
+
+
+def _hash_sql(a: list[str]) -> str:
+    # ADX hash() IS xxhash64 (documented algorithm), so the 1-arg
+    # form is exact parity. The 2-arg form returns the hash MODULO
+    # mod — a value in [0, mod) — so it must reduce, not feed mod
+    # as a second hash input (round-6 verdict: the blind rename
+    # silently returned full-range values). pmod keeps the result
+    # non-negative like ADX.
+    if len(a) == 1:
+        return f"xxhash64({a[0]})"
+    if len(a) == 2:
+        return f"pmod(xxhash64({a[0]}), {a[1]})"
+    raise ValueError(f"hash needs (value [, mod]): {a!r}")
+
+
+def _percentile_tdigest_sql(a: list[str]) -> str:
+    # percentile_tdigest(td, p [, typeof(t)]) over the exact
+    # sorted-array tdigest state (see the tdigest aggregate):
+    # nearest-rank — smallest element whose cumulative count
+    # reaches p% — the same convention percentilew uses. Index
+    # clamped into [1, n] (ANSI element_at throws out of range).
+    if len(a) not in (2, 3):
+        raise ValueError(
+            f"percentile_tdigest needs (td, p [, typeof(t)]): {a!r}"
+        )
+    td, p = a[0], a[1]
+    base = (
+        f"element_at({td}, least(size({td}), greatest(1,"
+        f" CAST(ceil(({p}) * size({td}) / 100.0) AS INT))))"
+    )
+    if len(a) == 3:
+        tm = re.match(
+            r"^typeof\s*\(\s*(\w+)\s*\)$", a[2].strip(), re.IGNORECASE
+        )
+        if not tm or tm.group(1).lower() not in _KQL_TYPES:
+            raise ValueError(
+                f"percentile_tdigest typeof: unknown type {a[2]!r}"
+            )
+        return f"CAST({base} AS {_KQL_TYPES[tm.group(1).lower()]})"
+    return base
+
+
+def _geo_dist(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
+    # Haversine great-circle distance, mean Earth radius 6371000 m
+    # — documented refinement of ADX geo_distance_2points (ADX's
+    # geodesic model is unspecified beyond WGS-84; haversine is
+    # within 0.5% and deterministic). All map-side JVM trig.
+    return (
+        "(2 * CAST(6371000 AS DOUBLE) * asin(sqrt("
+        f"pow(sin((radians({lat2}) - radians({lat1})) / 2), 2)"
+        f" + cos(radians({lat1})) * cos(radians({lat2}))"
+        f" * pow(sin((radians({lon2}) - radians({lon1})) / 2),"
+        " 2))))"
+    )
+
+
+def _geo_dist_sql(a: list[str]) -> str:
+    if len(a) != 4:
+        raise ValueError(
+            f"geo_distance_2points needs (lon1, lat1, lon2,"
+            f" lat2): {a!r}"
+        )
+    return _geo_dist(*a)
+
+
+def _geo_circle_sql(a: list[str]) -> str:
+    if len(a) != 5:
+        raise ValueError(
+            "geo_point_in_circle needs (lon, lat, c_lon, c_lat,"
+            f" radius): {a!r}"
+        )
+    return f"({_geo_dist(a[0], a[1], a[2], a[3])} <= ({a[4]}))"
+
+
+def _geo_geohash_sql(a: list[str]) -> str:
+    # geo_point_to_geohash(lon, lat [, accuracy]) — standard
+    # geohash base-32 bit interleaving (lon first), as ONE
+    # aggregate() fold over the 5*accuracy bit indices: the
+    # accumulator halves the active lon/lat interval per bit and
+    # flushes a base-32 character every 5 bits. Accuracy is a
+    # translate-time literal 1..18 (ADX default 5); pure builtin
+    # arithmetic, map-side, no UDF.
+    if len(a) not in (2, 3):
+        raise ValueError(
+            f"geo_point_to_geohash needs (lon, lat [, accuracy]):"
+            f" {a!r}"
+        )
+    acc = a[2].strip() if len(a) == 3 else "5"
+    if not re.match(r"^\d+$", acc) or not 1 <= int(acc) <= 18:
+        raise ValueError(
+            "geo_point_to_geohash accuracy must be a literal int"
+            f" in 1..18: {acc!r}"
+        )
+    lon = f"(CAST({a[0]} AS DOUBLE))"
+    lat = f"(CAST({a[1]} AS DOUBLE))"
+    amid = "((_g.alo + _g.ahi) / 2)"
+    bmid = "((_g.blo + _g.bhi) / 2)"
+    bit = (
+        f"(CASE WHEN pmod(_i, 2) = 0 THEN"
+        f" IF({lon} >= {amid}, 1, 0)"
+        f" ELSE IF({lat} >= {bmid}, 1, 0) END)"
+    )
+    cur = f"(_g.c * 2 + {bit})"
+    b32 = "0123456789bcdefghjkmnpqrstuvwxyz"
+    return (
+        f"(CASE WHEN {lat} BETWEEN -90 AND 90"
+        f" AND {lon} BETWEEN -180 AND 180 THEN"
+        f" aggregate(sequence(0, {5 * int(acc) - 1}),"
+        " named_struct("
+        "'alo', CAST(-180 AS DOUBLE), 'ahi', CAST(180 AS DOUBLE),"
+        " 'blo', CAST(-90 AS DOUBLE), 'bhi', CAST(90 AS DOUBLE),"
+        " 's', CAST('' AS STRING), 'c', 0),"
+        " (_g, _i) -> named_struct("
+        f"'alo', IF(pmod(_i, 2) = 0 AND {lon} >= {amid},"
+        f" {amid}, _g.alo),"
+        f" 'ahi', IF(pmod(_i, 2) = 0 AND {lon} < {amid},"
+        f" {amid}, _g.ahi),"
+        f" 'blo', IF(pmod(_i, 2) = 1 AND {lat} >= {bmid},"
+        f" {bmid}, _g.blo),"
+        f" 'bhi', IF(pmod(_i, 2) = 1 AND {lat} < {bmid},"
+        f" {bmid}, _g.bhi),"
+        f" 's', IF(pmod(_i, 5) = 4,"
+        f" concat(_g.s, substr('{b32}', {cur} + 1, 1)), _g.s),"
+        f" 'c', IF(pmod(_i, 5) = 4, 0, {cur})),"
+        " _g -> _g.s) END)"
+    )
+
+
+def _geo_geohash_central_sql(a: list[str]) -> str:
+    # geo_geohash_to_central_point(geohash) — the decode inverse
+    # (battery 22, was a loud gap): chars -> 5-bit values ->
+    # de-interleaved interval halving (lon on even bits), midpoint
+    # as the GeoJSON dynamic {"type": "Point", "coordinates":
+    # [lon, lat]} ADX returns (dotted access rides the stored-
+    # dynamic JSON path). NULL on a non-base-32 input, the ADX
+    # invalid-input contract. One fold, map-side.
+    if len(a) != 1:
+        raise ValueError(
+            f"geo_geohash_to_central_point needs (geohash): {a!r}"
+        )
+    gh = f"(CAST({a[0].strip()} AS STRING))"
+    b32 = "0123456789bcdefghjkmnpqrstuvwxyz"
+    # per char: locate-1 is the 5-bit value; expand msb-first
+    bits = (
+        f"flatten(transform(split({gh}, ''),"
+        f" _gc -> transform(sequence(4, 0, -1),"
+        f" _gb -> CAST((locate(_gc, '{b32}') - 1) div"
+        " CAST(pow(2, _gb) AS INT) % 2 AS INT))))"
+    )
+    step = (
+        "named_struct('e', NOT _g.e,"
+        " 'alo', IF(_g.e AND _b = 1, (_g.alo + _g.ahi) / 2,"
+        " _g.alo),"
+        " 'ahi', IF(_g.e AND _b = 0, (_g.alo + _g.ahi) / 2,"
+        " _g.ahi),"
+        " 'blo', IF(NOT _g.e AND _b = 1, (_g.blo + _g.bhi) / 2,"
+        " _g.blo),"
+        " 'bhi', IF(NOT _g.e AND _b = 0, (_g.blo + _g.bhi) / 2,"
+        " _g.bhi))"
+    )
+    return (
+        f"(CASE WHEN {gh} RLIKE '^[{b32}]+$' THEN"
+        f" aggregate({bits},"
+        " named_struct('e', true,"
+        " 'alo', CAST(-180 AS DOUBLE), 'ahi', CAST(180 AS DOUBLE),"
+        " 'blo', CAST(-90 AS DOUBLE), 'bhi', CAST(90 AS DOUBLE)),"
+        f" (_g, _b) -> {step},"
+        " _g -> to_json(named_struct('type', 'Point',"
+        " 'coordinates', array((_g.alo + _g.ahi) / 2,"
+        " (_g.blo + _g.bhi) / 2)))) END)"
+    )
+
+
+# --- S2 cell functions (round-13; the census's implementable
+# unresolved entries). Publicly-specified S2 scheme (s2geometry.io
+# cell hierarchy): lat/lng -> unit XYZ -> cube face -> (u,v) ->
+# quadratic ST -> 30-bit (i,j) -> Hilbert curve position -> 64-bit
+# unsigned cell id (3 face bits, 60 position bits, lsb level
+# marker); token = 16-hex with trailing zeros stripped. All
+# JVM-side builtin arithmetic (one 30-step aggregate() fold, like
+# the geohash fold above — foldable for literal args, map-side for
+# columns, no UDF); unsigned-64 overflow avoided by carrying the
+# id in DECIMAL(38,0) and hex-converting via conv(). The pure-
+# Python twin (tests/s2_pyref.py) validates this emission over
+# random points, Hilbert-adjacency, corner/face-center anchors,
+# and encode(decode(t)) == t roundtrips. Reference parity: the
+# reference delegates geo functions to ADX (src/main.go:88-116).
+_S2_IJ2POS = "0,1,3,2, 0,3,1,2, 2,3,1,0, 2,1,3,0"
+
+
+_S2_POS2IJ = "0,1,3,2, 0,2,3,1, 3,2,0,1, 3,1,0,2"
+
+
+_S2_ORI = "1,0,0,3"
+
+
+_S2_POW61 = "2305843009213693952"
+
+
+def _geo_s2cell_sql(a: list[str]) -> str:
+    if len(a) not in (2, 3):
+        raise ValueError(
+            f"geo_point_to_s2cell needs (lon, lat [, level]): {a!r}"
+        )
+    lvl = a[2].strip() if len(a) == 3 else "11"
+    if not re.match(r"^\d+$", lvl) or not 0 <= int(lvl) <= 30:
+        raise ValueError(
+            "geo_point_to_s2cell level must be a literal int in"
+            f" 0..30: {lvl!r}"
+        )
+    lsb = 1 << (2 * (30 - int(lvl)))
+    lon = f"(CAST({a[0]} AS DOUBLE))"
+    lat = f"(CAST({a[1]} AS DOUBLE))"
+    # stage 1: unit XYZ + face (ties resolve z over y over x,
+    # matching S2's LargestAbsComponent)
+    xyz = (
+        "named_struct("
+        f"'x', cos(radians({lat})) * cos(radians({lon})),"
+        f" 'y', cos(radians({lat})) * sin(radians({lon})),"
+        f" 'z', sin(radians({lat})))"
+    )
+    face = (
+        "CASE WHEN abs(_s2p.x) > abs(_s2p.y) THEN"
+        " IF(abs(_s2p.x) > abs(_s2p.z),"
+        " IF(_s2p.x >= 0, 0, 3), IF(_s2p.z >= 0, 2, 5))"
+        " ELSE IF(abs(_s2p.y) > abs(_s2p.z),"
+        " IF(_s2p.y >= 0, 1, 4), IF(_s2p.z >= 0, 2, 5)) END"
+    )
+    # stage 2: face (u,v) via the canonical face_uv projections
+    uv = (
+        "named_struct('f', _s2f.f,"
+        " 'u', CASE _s2f.f"
+        " WHEN 0 THEN _s2f.y / _s2f.x WHEN 1 THEN -_s2f.x / _s2f.y"
+        " WHEN 2 THEN -_s2f.x / _s2f.z WHEN 3 THEN _s2f.z / _s2f.x"
+        " WHEN 4 THEN _s2f.z / _s2f.y ELSE -_s2f.y / _s2f.z END,"
+        " 'v', CASE _s2f.f"
+        " WHEN 0 THEN _s2f.z / _s2f.x WHEN 1 THEN _s2f.z / _s2f.y"
+        " WHEN 2 THEN -_s2f.y / _s2f.z WHEN 3 THEN _s2f.y / _s2f.x"
+        " WHEN 4 THEN -_s2f.x / _s2f.y ELSE -_s2f.x / _s2f.z END)"
+    )
+    # quadratic ST then 30-bit ij (clamped floor)
+    st = (
+        lambda c: f"IF(_s2u.{c} >= 0,"
+        f" 0.5 * sqrt(1 + 3 * _s2u.{c}),"
+        f" 1E0 - 0.5 * sqrt(1 - 3 * _s2u.{c}))"
+    )
+    ij = (
+        lambda c: "CAST(least(1073741823, greatest(0,"
+        f" floor(({st(c)}) * 1073741824))) AS BIGINT)"
+    )
+    # stage 3: Hilbert fold — 2 bits/step, orientation-tracked
+    fold = (
+        "aggregate(sequence(29, 0, -1),"
+        " named_struct('p', CAST(0 AS BIGINT), 'o',"
+        " CAST(_s2i.f % 2 AS INT)),"
+        " (_g, _k) -> element_at(transform(array("
+        f"element_at(array({_S2_IJ2POS}), _g.o * 4"
+        " + CAST((shiftright(_s2i.i, _k) % 2) * 2"
+        " + shiftright(_s2i.j, _k) % 2 AS INT) + 1)),"
+        " _q -> named_struct('p', _g.p * 4 + _q,"
+        f" 'o', CAST(_g.o ^ element_at(array({_S2_ORI}),"
+        " _q + 1) AS INT))), 1),"
+        " _g -> _g.p)"
+    )
+    idexpr = (
+        f"CAST(_s2i.f AS DECIMAL(38, 0)) * {_S2_POW61}"
+        f" + CAST({fold} AS DECIMAL(38, 0)) * 2 + 1"
+    )
+    lvladj = (
+        f"element_at(transform(array({idexpr}), _s2l ->"
+        f" _s2l - _s2l % {2 * lsb} + {lsb}), 1)"
+    )
+    return (
+        f"(CASE WHEN {lat} BETWEEN -90 AND 90"
+        f" AND {lon} BETWEEN -180 AND 180 THEN"
+        f" element_at(transform(array({xyz}), _s2p ->"
+        f" element_at(transform(array(named_struct('f', {face},"
+        " 'x', _s2p.x, 'y', _s2p.y, 'z', _s2p.z)), _s2f ->"
+        f" element_at(transform(array({uv}), _s2u ->"
+        " element_at(transform(array(named_struct("
+        f"'f', _s2u.f, 'i', {ij('u')}, 'j', {ij('v')})), _s2i ->"
+        f" regexp_replace(lpad(lower(conv(CAST({lvladj}"
+        " AS STRING), 10, 16)), 16, '0'), '0+$', '')"
+        "), 1)), 1)), 1)), 1) END)"
+    )
+
+
+def _geo_s2cell_central_sql(a: list[str]) -> str:
+    # geo_s2cell_to_central_point(token) — the decode inverse:
+    # token -> unsigned id (DECIMAL) -> face + 60 position bits
+    # (BIGINT — id div 2 < 2^63 always) -> inverse Hilbert fold
+    # -> center (si,ti) with the leaf/parent delta rule -> inverse
+    # quadratic ST -> face XYZ -> lat/lng, as the GeoJSON dynamic
+    # ADX returns. NULL on malformed tokens (bad hex, face > 5,
+    # odd trailing-zero count — the ADX invalid-input contract).
+    if len(a) != 1:
+        raise ValueError(
+            f"geo_s2cell_to_central_point needs (token): {a!r}"
+        )
+    tok = f"(CAST({a[0].strip()} AS STRING))"
+    idv = (
+        f"CAST(conv(rpad(lower({tok}), 16, '0'), 16, 10)"
+        " AS DECIMAL(38, 0))"
+    )
+    # _s2d: f face, b0 trailing bit, pf 60 position bits
+    dec = (
+        f"named_struct('f', CAST(_s2v div {_S2_POW61} AS INT),"
+        " 'b0', CAST(_s2v % 2 AS INT),"
+        " 'pf', CAST((_s2v div 2) % 1152921504606846976"
+        " AS BIGINT))"
+    )
+    walk = (
+        "aggregate(sequence(29, 0, -1),"
+        " named_struct('i', CAST(0 AS BIGINT),"
+        " 'j', CAST(0 AS BIGINT), 'o', CAST(_s2d.f % 2 AS INT)),"
+        " (_g, _k) -> element_at(transform(array("
+        "CAST(shiftright(_s2d.pf, 2 * _k) % 4 AS INT)), _q ->"
+        f" named_struct("
+        f"'i', _g.i + shiftleft(CAST(element_at(array({_S2_POS2IJ}),"
+        " _g.o * 4 + _q + 1) div 2 AS BIGINT), _k),"
+        f" 'j', _g.j + shiftleft(CAST(element_at(array({_S2_POS2IJ}),"
+        " _g.o * 4 + _q + 1) % 2 AS BIGINT), _k),"
+        f" 'o', CAST(_g.o ^ element_at(array({_S2_ORI}),"
+        " _q + 1) AS INT))), 1),"
+        " _g -> named_struct('i', _g.i, 'j', _g.j))"
+    )
+    # center si/ti delta: leaf -> 1; else 2 iff parity(i) differs
+    # from parity(id >> 2) (= pf >> 1)
+    delta = (
+        "IF(_s2d.b0 = 1, 1,"
+        " IF((_s2w.i + (_s2d.pf div 2)) % 2 = 1, 2, 0))"
+    )
+    stc = (
+        lambda w: f"(CAST(2 * _s2w.{w} + {delta} AS DOUBLE)"
+        " / 2147483648E0)"
+    )
+    uvc = (
+        lambda s: f"IF({s} >= 0.5, (4 * {s} * {s} - 1) / 3,"
+        f" (1 - 4 * (1 - {s}) * (1 - {s})) / 3)"
+    )
+    xyz = (
+        "named_struct("
+        "'x', CASE _s2d.f WHEN 0 THEN 1E0 WHEN 1 THEN -_s2c.u"
+        " WHEN 2 THEN -_s2c.u WHEN 3 THEN -1E0 WHEN 4 THEN _s2c.v"
+        " ELSE _s2c.v END,"
+        " 'y', CASE _s2d.f WHEN 0 THEN _s2c.u WHEN 1 THEN 1E0"
+        " WHEN 2 THEN -_s2c.v WHEN 3 THEN -_s2c.v"
+        " WHEN 4 THEN -1E0 ELSE _s2c.u END,"
+        " 'z', CASE _s2d.f WHEN 0 THEN _s2c.v WHEN 1 THEN _s2c.v"
+        " WHEN 2 THEN 1E0 WHEN 3 THEN -_s2c.u WHEN 4 THEN -_s2c.u"
+        " ELSE -1E0 END)"
+    )
+    # trailing-zero validity: leaf (b0=1) ok; else pf's trailing
+    # zeros must be ODD (total even) — lsb of pf is a power of 2,
+    # exactly representable, so log2 is exact
+    tzok = (
+        "(_s2d.b0 = 1 OR (_s2d.pf > 0 AND CAST(round(log2("
+        "CAST(_s2d.pf & -_s2d.pf AS DOUBLE))) AS INT) % 2 = 1))"
+    )
+    return (
+        f"(CASE WHEN {tok} RLIKE '^[0-9a-fA-F]{{1,16}}$'"
+        f" AND {idv} > 0 THEN"
+        f" element_at(transform(array({idv}), _s2v ->"
+        f" element_at(transform(array({dec}), _s2d ->"
+        f" CASE WHEN _s2d.f <= 5 AND {tzok} THEN"
+        f" element_at(transform(array({walk}), _s2w ->"
+        " element_at(transform(array(named_struct("
+        f"'u', {uvc(stc('i'))}, 'v', {uvc(stc('j'))})), _s2c ->"
+        f" element_at(transform(array({xyz}), _s2q ->"
+        " to_json(named_struct('type', 'Point', 'coordinates',"
+        " array(degrees(atan2(_s2q.y, _s2q.x)),"
+        " degrees(atan2(_s2q.z,"
+        " sqrt(_s2q.x * _s2q.x + _s2q.y * _s2q.y))))))"
+        "), 1)), 1)), 1) END), 1)), 1) END)"
+    )
+
+
+def _geo_h3_loud(a: list[str]) -> str:
+    # H3 cell math stays LOUD-by-design (not silently wrong): an
+    # exact geo_point_to_h3cell needs H3's published base-cell
+    # tables (122 base cells + per-face ijk orientation tables of
+    # precise constants) which are not reproducible from the
+    # algorithm description alone — emitting tokens from
+    # approximated tables would be a silent divergence from ADX.
+    # S2 cells (geo_point_to_s2cell above) are the supported
+    # fixed-grid alternative.
+    raise ValueError(
+        "geo H3 cell functions are out of subset: exact H3"
+        " indexing requires the published H3 base-cell tables;"
+        " use geo_point_to_s2cell / geo_s2cell_to_central_point"
+        " (exact, supported) instead"
+    )
+
+
+# The two formerly-UNRESOLVED census entries (round-13 verdict
+# item 2) become actionable loud errors like every other
+# out-of-subset gap — never a Spark UNRESOLVED_ROUTINE leak:
+def _cursor_loud(a: list[str]) -> str:
+    # ADX ingestion cursors version a table's extent stream;
+    # this engine's lake versions via snapshot manifests instead
+    # (snapshots.py) — there is no cursor stream for the value
+    # to be meaningful against.
+    raise ValueError(
+        "cursor_current()/cursor_after() are out of subset: ADX"
+        " ingestion cursors track extent versions this engine"
+        " does not have; use the lake snapshot API"
+        " (snapshots.history / read_snapshot time travel) for"
+        " incremental-read watermarks instead"
+    )
+
+
+def _treepath_loud(a: list[str]) -> str:
+    # treepath()'s exact output contract (escaping of key names,
+    # array-index notation, ordering) is unverifiable from public
+    # docs alone — emitting a guessed shape would be a silent
+    # divergence; bag_keys()/parse_json accessors are the
+    # supported introspection path.
+    raise ValueError(
+        "treepath() is out of subset: its exact path-string"
+        " contract is not publicly specified; use bag_keys()"
+        " or explicit dynamic accessors instead"
+    )
+
+
+# convert_*(value, from, to) — the UnitsNet-named unit-conversion
+# family (round-11 probe battery 15). Units must be translate-time
+# string literals from the documented common subset (loud
+# otherwise — explicit-subset contract); the ratio folds to ONE
+# double literal so the emitted SQL is a bare multiply.
+_CONVERT = {
+    "convert_angle": {  # base: radian
+        "Radian": 1.0, "Degree": math.pi / 180,
+        "Gradian": math.pi / 200, "Revolution": 2 * math.pi,
+        "Arcminute": math.pi / 10800,
+        "Arcsecond": math.pi / 648000,
+        "Milliradian": 1e-3, "Microradian": 1e-6,
+    },
+    "convert_length": {  # base: meter
+        "Meter": 1.0, "Kilometer": 1000.0, "Hectometer": 100.0,
+        "Decameter": 10.0, "Decimeter": 0.1, "Centimeter": 0.01,
+        "Millimeter": 1e-3, "Micrometer": 1e-6, "Nanometer": 1e-9,
+        "Mile": 1609.344, "Yard": 0.9144, "Foot": 0.3048,
+        "Inch": 0.0254, "NauticalMile": 1852.0,
+    },
+    "convert_mass": {  # base: kilogram
+        "Kilogram": 1.0, "Gram": 1e-3, "Milligram": 1e-6,
+        "Microgram": 1e-9, "Tonne": 1000.0,
+        "Pound": 0.45359237, "Ounce": 0.45359237 / 16,
+        "Stone": 6.35029318, "ShortTon": 907.18474,
+        "LongTon": 1016.0469088,
+    },
+    "convert_speed": {  # base: meter/second
+        "MeterPerSecond": 1.0, "KilometerPerHour": 1 / 3.6,
+        "MilePerHour": 0.44704, "Knot": 1852.0 / 3600,
+        "FootPerSecond": 0.3048, "CentimeterPerSecond": 0.01,
+    },
+    "convert_energy": {  # base: joule
+        "Joule": 1.0, "Kilojoule": 1e3, "Megajoule": 1e6,
+        "Gigajoule": 1e9, "Calorie": 4.184, "Kilocalorie": 4184.0,
+        "WattHour": 3600.0, "KilowattHour": 3.6e6,
+        "BritishThermalUnit": 1055.05585262,
+        "ElectronVolt": 1.602176634e-19,
+    },
+    "convert_force": {  # base: newton
+        "Newton": 1.0, "Kilonewton": 1e3, "Meganewton": 1e6,
+        "Dyn": 1e-5, "KilogramForce": 9.80665,
+        "PoundForce": 4.4482216152605, "TonneForce": 9806.65,
+    },
+    "convert_volume": {  # base: cubic meter
+        "CubicMeter": 1.0, "Liter": 1e-3, "Milliliter": 1e-6,
+        "Centiliter": 1e-5, "Deciliter": 1e-4, "Hectoliter": 0.1,
+        "CubicCentimeter": 1e-6, "CubicFoot": 0.028316846592,
+        "CubicInch": 1.6387064e-5, "CubicYard": 0.764554857984,
+        "UsGallon": 3.785411784e-3,
+        "ImperialGallon": 4.54609e-3, "UsPint": 4.73176473e-4,
+    },
+}
+
+
+# affine (scale, offset) to Kelvin: k = x * s + o
+_CONVERT_TEMP = {
+    "Kelvin": (1.0, 0.0),
+    "DegreeCelsius": (1.0, 273.15),
+    "DegreeFahrenheit": (5 / 9, 459.67 * 5 / 9),
+    "Millikelvin": (1e-3, 0.0),
+}
+
+
+def _convert_unit(fn: str, table, u: str) -> str:
+    um = re.match(r"^'(\w+)'$", u.strip())
+    if not um or um.group(1) not in table:
+        raise ValueError(
+            f"{fn} units must be translate-time literals from"
+            f" {sorted(table)}: {u!r}"
+        )
+    return um.group(1)
+
+
+def _make_convert_sql(fn: str):
+    def _sql(a: list[str]) -> str:
+        if len(a) != 3:
+            raise ValueError(f"{fn} needs (value, from, to): {a!r}")
+        if fn == "convert_temperature":
+            sf, of = _CONVERT_TEMP[
+                _convert_unit(fn, _CONVERT_TEMP, a[1])
+            ]
+            st, ot = _CONVERT_TEMP[
+                _convert_unit(fn, _CONVERT_TEMP, a[2])
+            ]
+            return (
+                f"(CAST({a[0]} AS DOUBLE) * CAST({sf / st!r} AS"
+                f" DOUBLE) + CAST({(of - ot) / st!r} AS DOUBLE))"
+            )
+        table = _CONVERT[fn]
+        ratio = (
+            table[_convert_unit(fn, table, a[1])]
+            / table[_convert_unit(fn, table, a[2])]
+        )
+        return (
+            f"(CAST({a[0]} AS DOUBLE)"
+            f" * CAST({ratio!r} AS DOUBLE))"
+        )
+
+    return _sql
+
+
+def _format_ipv4_sql(a: list[str]) -> str:
+    # numeric input (the engine-side representation parse_ipv4
+    # produces) OR a dotted-quad STRING (round-10 probe battery
+    # 11: ADX accepts both; the bare BIGINT cast threw on
+    # strings); optional prefix masks the low bits first.
+    if len(a) not in (1, 2):
+        raise ValueError(f"format_ipv4 needs (ip [, prefix]): {a!r}")
+    ip = (
+        f"coalesce(try_cast({a[0]} AS BIGINT),"
+        f" {_parse_ipv4_expr(f'CAST({a[0]} AS STRING)')})"
+    )
+    raw_ip = ip
+    if len(a) == 2:
+        ip = (
+            f"(({ip}) div CAST(pow(2, 32 - ({a[1]})) AS BIGINT))"
+            f" * CAST(pow(2, 32 - ({a[1]})) AS BIGINT)"
+        )
+    # out-of-range numeric input (negative / > 32 bits) yields the
+    # EMPTY string — the documented ADX invalid-input contract
+    # (fuzz finding: a negative input previously formatted as a
+    # garbage dotted string with negative octets); null stays null
+    return (
+        f"(CASE WHEN ({a[0]}) IS NULL THEN NULL"
+        f" WHEN ({raw_ip}) BETWEEN 0 AND 4294967295 THEN"
+        f" concat(CAST(({ip}) div 16777216 % 256 AS STRING), '.',"
+        f" CAST(({ip}) div 65536 % 256 AS STRING), '.',"
+        f" CAST(({ip}) div 256 % 256 AS STRING), '.',"
+        f" CAST(({ip}) % 256 AS STRING))"
+        f" ELSE '' END)"
+    )
+
+
+def _format_ipv4_mask_sql(a: list[str]) -> str:
+    # format_ipv4_mask(ip, prefix) -> CIDR notation: the masked
+    # dotted quad plus '/prefix' (empty-on-invalid follows ADX;
+    # format_ipv4's NULL propagation covers the address side, the
+    # prefix range check covers the suffix).
+    if len(a) != 2:
+        raise ValueError(
+            f"format_ipv4_mask needs (ip, prefix): {a!r}"
+        )
+    return (
+        f"(CASE WHEN CAST({a[1]} AS INT) BETWEEN 0 AND 32 THEN"
+        f" concat({_format_ipv4_sql(a)}, '/',"
+        f" CAST(CAST({a[1]} AS INT) AS STRING)) ELSE '' END)"
+    )
+
+
+def _ipv4_is_private_sql(a: list[str]) -> str:
+    # RFC1918: 10/8, 172.16/12, 192.168/16 (prefix tail ignored —
+    # ADX checks the address part)
+    if len(a) != 1:
+        raise ValueError(f"ipv4_is_private needs (ip): {a!r}")
+    ip = _parse_ipv4_expr(f"split({a[0]}, '/')[0]")
+    return (
+        f"(({ip}) BETWEEN 167772160 AND 184549375"
+        f" OR ({ip}) BETWEEN 2886729728 AND 2887778303"
+        f" OR ({ip}) BETWEEN 3232235520 AND 3232301055)"
+    )
+
+
+# base64 <-> GUID (round-12 census): .NET GUID byte layout is
+# MIXED-endian — the first three groups little-endian, the last
+# two big-endian — so the hex pairs reorder around the dashes;
+# encode = reorder + unhex + base64, decode is the exact inverse.
+def _guid_reorder(h: str) -> str:
+    # h: SQL expr of 32 dash-free hex chars -> .NET byte order
+    return (
+        f"concat(substring({h}, 7, 2), substring({h}, 5, 2),"
+        f" substring({h}, 3, 2), substring({h}, 1, 2),"
+        f" substring({h}, 11, 2), substring({h}, 9, 2),"
+        f" substring({h}, 15, 2), substring({h}, 13, 2),"
+        f" substring({h}, 17, 16))"
+    )
+
+
+def _b64_toguid_sql(a: list[str]) -> str:
+    # unbase64 -> hex -> un-reorder (the reorder is an
+    # involution on the first 8 bytes) -> dashed canonical form;
+    # non-16-byte input yields NULL (ADX's invalid contract).
+    # Inline (no subquery — must stay expression-shaped); Spark's
+    # common-subexpression elimination dedupes the repeated hex.
+    h = f"lower(hex(unbase64({a[0]})))"
+    r = _guid_reorder(h)
+    return (
+        f"CASE WHEN length({h}) = 32 THEN"
+        f" regexp_replace({r},"
+        " '^(.{8})(.{4})(.{4})(.{4})(.{12})$',"
+        " '$1-$2-$3-$4-$5') END"
+    )
+
+
+def _estimate_data_size_sql(a: list[str]) -> str:
+    # ADX estimate_data_size(col, ...): heuristic per-record byte
+    # estimate — fixed 8 for numeric/temporal/bool columns,
+    # octet_length for strings (documented refinement: ADX's own
+    # number is an internal heuristic). typeof() folds per plan.
+    parts = [
+        f"(CASE WHEN typeof({x.strip()}) IN ('string') THEN"
+        f" CAST(octet_length(coalesce({x.strip()}, ''))"
+        " AS BIGINT) ELSE 8 END)"
+        for x in a
+    ]
+    return "(" + " + ".join(parts) + ")"
+
+
+def _urlquery_bag(arg: str) -> str:
+    return (
+        "to_json(named_struct('Query Parameters',"
+        f" str_to_map(regexp_replace({arg}, '^[^?]*\\\\?', ''),"
+        " '&', '=')))"
+    )
+
+
+def _parse_path_sql(a: list[str]) -> str:
+    # the ADX bag fields computable from the path text alone;
+    # AlternateDataStreamName (NTFS streams) stays out of the
+    # subset. Separators: / or \.
+    if len(a) != 1:
+        raise ValueError(f"parse_path needs (path): {a!r}")
+    p = a[0]
+    sep = r"[/\\\\]"
+    dirpath = (
+        f"regexp_extract({p}, '^(.*){sep}[^/\\\\\\\\]*$', 1)"
+    )
+    return (
+        "to_json(named_struct("
+        f"'Scheme', regexp_extract({p}, '^(\\\\w+)://', 1),"
+        f" 'RootPath', regexp_extract({p}, '^(\\\\w+:){sep}', 1),"
+        f" 'DirectoryPath', {dirpath},"
+        f" 'DirectoryName', regexp_extract({dirpath},"
+        f" '([^/\\\\\\\\]+)$', 1),"
+        f" 'Filename', regexp_extract({p},"
+        f" '([^/\\\\\\\\]*)$', 1),"
+        f" 'Extension', regexp_extract({p},"
+        " '\\\\.([^./\\\\\\\\]+)$', 1)))"
+    )
+
+
+def _dynamic_sql(a: list[str]) -> str:
+    # dynamic(...) literals anywhere a scalar goes: JSON arrays
+    # become Spark array(...) literals (nested arrays recurse);
+    # JSON objects become compact JSON STRING literals — the same
+    # string-widened bag representation pack()/bag_merge use; bare
+    # scalars pass through. Validated at translate time.
+    # the arg splitter now tracks {} too (round-8), so objects —
+    # including objects INSIDE arrays — arrive whole; the rejoin
+    # stays as belt-and-braces (dynamic() takes exactly one literal)
+    v = ", ".join(a).strip()
+
+    def conv(t: str) -> str:
+        t = t.strip()
+        if t.startswith("[") and t.endswith("]"):
+            inner = _split_top_level(t[1:-1])
+            return f"array({', '.join(conv(x) for x in inner)})"
+        if t.startswith("{") and t.endswith("}"):
+            import json as _json
+
+            # object text carries SQL-quoted ('') strings by now;
+            # convert back to JSON quoting, parse, re-emit compact
+            jt = re.sub(
+                r"'((?:[^']|'')*)'",
+                lambda m: _json.dumps(m.group(1).replace("''", "'")),
+                t,
+            )
+            try:
+                obj = _json.loads(jt)
+            except ValueError as ex:
+                raise ValueError(
+                    f"dynamic object literal is not valid JSON:"
+                    f" {t!r}"
+                ) from ex
+            lit = _json.dumps(obj, separators=(",", ":"))
+            return "'" + lit.replace("'", "''") + "'"
+        if t.lower() == "null":
+            return "NULL"
+        return t
+
+    return conv(v)
+
+
+def _format_datetime_sql(a: list[str]) -> str:
+    # ADX custom tokens mostly coincide with Java's; the two that
+    # differ map here when the format is a literal: f-runs
+    # (fraction digits) -> S-runs, tt (AM/PM) -> a. Non-literal
+    # formats pass through untouched (shared-token subset).
+    if len(a) != 2:
+        raise ValueError(
+            f"format_datetime needs (datetime, format): {a!r}"
+        )
+    fm = re.match(r"^'((?:[^']|'')*)'$", a[1].strip())
+    if not fm:
+        return f"date_format({a[0]}, {a[1]})"
+    f = fm.group(1)
+    f = re.sub(r"f+", lambda m: "S" * len(m.group(0)), f)
+    f = f.replace("tt", "a")
+    return f"date_format({a[0].strip()}, '{f}')"
+
+
+# Scalar-function surface: KQL name -> Spark SQL name. The to*()
+# conversions use Spark's function-style casts (bigint()/double()/…)
+# so no balanced-paren rewriting is needed; parse_json(c).k becomes
+# a JSONPath extraction.
+# scalar batch 3 (round-4): bag_keys / todynamic / extract_all /
+# parse_url — the most-typed remaining ADX scalars. Dynamic values
+# in this engine are JSON text (the lake's props shape), so
+# todynamic is parse_json's synonym and bag_keys peels either
+# wrapper before reading the keys of the JSON object itself.
+def _bag_keys_sql(a: list[str]) -> str:
+    if len(a) != 1:
+        raise ValueError(f"bag_keys needs one argument: {a!r}")
+    arg = a[0].strip()
+    m = re.match(
+        r"^(?:parse_json|todynamic)\s*\((.+)\)$", arg, re.DOTALL
+    )
+    if m:
+        arg = m.group(1).strip()
+    # CAST AS STRING: a stored VARIANT bag (todynamic output)
+    # yields its JSON text; no-op on string bags (battery 21)
+    return f"json_object_keys(CAST({arg} AS STRING))"
+
+
+def _parse_cmdline_sql(a: list[str]) -> str:
+    # parse_command_line(s, 'windows') — quote-aware tokenization:
+    # double-quoted spans (quotes stripped) or runs of non-space.
+    # The deeper MSVCRT rules (embedded \" escapes, quote
+    # doubling) are out of the subset — documented simplification.
+    if len(a) != 2 or a[1].strip().strip("'\"").lower() != "windows":
+        raise ValueError(
+            "parse_command_line supports (text, 'windows'):"
+            f" {a!r}"
+        )
+    toks = (
+        f"regexp_extract_all({a[0].strip()}, "
+        + "'\"[^\"]*\"|[^ \\\\t]+', 0)"
+    )
+    return (
+        f"transform({toks}, _t -> CASE WHEN _t LIKE "
+        + "'\"%\"' AND length(_t) >= 2"
+        " THEN substring(_t, 2, length(_t) - 2) ELSE _t END)"
+    )
+
+
+def _bag_set_key_sql(a: list[str]) -> str:
+    # bag_set_key(bag, key, value): upsert one top-level key. The
+    # existing entry is filtered out first (Spark's map_concat
+    # raises on duplicate keys under the default dedup policy);
+    # the value casts to VARIANT so numbers/bools/arrays keep
+    # their JSON types.
+    if len(a) != 3:
+        raise ValueError(
+            f"bag_set_key needs (bag, key, value): {a!r}"
+        )
+    bag, key, val = (x.strip() for x in a)
+    return (
+        "to_json(map_concat(map_filter(from_json(coalesce("
+        f"CAST({bag} AS STRING), '{{}}'), 'map<string,variant>'),"
+        f" (_k, _v) -> _k != ({key})),"
+        f" map(CAST({key} AS STRING), try_cast(({val}) AS"
+        " VARIANT))))"
+    )
+
+
+# pack()/bag_pack(): dynamic property-bag CONSTRUCTION, the inverse
+# of evaluate bag_unpack. Bags are JSON text in this engine. With
+# literal keys, pack is to_json(named_struct(...)) — typed values,
+# JVM-side. EXPRESSION keys (round-6) go through to_json(map(...)):
+# values widen to JSON strings there (named_struct needs literal
+# field names), the same documented widening bag_unpack/bag_merge
+# carry. NULL values are omitted from the JSON (Spark's
+# jsonGenerator default; ADX keeps them as null — documented).
+def _pack_sql(a: list[str]) -> str:
+    if len(a) < 2 or len(a) % 2:
+        raise ValueError(
+            f"pack needs (key, value, ...) pairs: {a!r}"
+        )
+    keys = [k.strip() for k in a[::2]]
+    vals = [v.strip() for v in a[1::2]]
+    if all(re.match(r"^'(?:[^']|'')*'$", k) for k in keys):
+        parts = [f"{k}, {v}" for k, v in zip(keys, vals)]
+        return f"to_json(named_struct({', '.join(parts)}))"
+    parts = [
+        f"{k}, CAST({v} AS STRING)" for k, v in zip(keys, vals)
+    ]
+    return f"to_json(map({', '.join(parts)}))"
+
+
+def _bag_pack_columns_sql(a: list[str]) -> str:
+    # bag_pack_columns(col1, col2, ...) — keys are the column
+    # NAMES (battery 23); typed values via named_struct
+    cs = [c.strip() for c in a]
+    if not cs or not all(re.match(r"^\w+$", c) for c in cs):
+        raise ValueError(
+            f"bag_pack_columns needs plain column names: {a!r}"
+        )
+    return (
+        "to_json(named_struct("
+        + ", ".join(f"'{c}', {c}" for c in cs)
+        + "))"
+    )
+
+
+# bag_merge(b1, b2, ...): first-bag-wins key merge. Refinement:
+# bags are merged through map<string,string>, so scalar values
+# come out as JSON strings — the same widening bag_unpack applies
+# (ADX keeps the original dynamic types). First-wins is decided by
+# key MEMBERSHIP, not value coalesce: an earlier bag holding an
+# explicit JSON null for a key still wins (from_json keeps the
+# null-valued key in map_keys, and to_json re-emits "k":null).
+def _bag_merge_sql(a: list[str]) -> str:
+    if len(a) < 2:
+        raise ValueError(f"bag_merge needs >= 2 bags: {a!r}")
+    # string(b) first: a VARIANT operand (parse_json of a column)
+    # renders to its JSON text — from_json requires a STRING and
+    # rejected the variant outright (round-12 census found the
+    # non-literal form erroring); plain string bags pass through
+    maps = [
+        f"from_json(coalesce(string({b.strip()}), '{{}}'),"
+        " 'map<string,string>')"
+        for b in a
+    ]
+    ks = f"map_keys({maps[0]})"
+    for m_ in maps[1:]:
+        ks = f"array_union({ks}, map_keys({m_}))"
+    pick = f"element_at({maps[-1]}, _k)"
+    for m_ in reversed(maps[:-1]):
+        pick = (
+            f"IF(array_contains(map_keys({m_}), _k),"
+            f" element_at({m_}, _k), {pick})"
+        )
+    return (
+        f"to_json(map_from_arrays({ks},"
+        f" transform({ks}, _k -> {pick})))"
+    )
+
+
+def _extract_all_sql(a: list[str]) -> str:
+    # ADX extract_all(regex[, captureGroups], source): the regex
+    # must carry 1..16 capture groups; one selected group returns
+    # its matches flat, several return arrays of per-match group
+    # arrays. The optional captureGroups dynamic([...]) list
+    # (round-11, probe battery 12) selects groups by 1-based
+    # index or by (?P<name>…) group name. Literal pattern only
+    # (inspected at translation time); group names are stripped
+    # from the executed pattern (Java regex rejects the (?P<…>
+    # spelling and underscored names) — numbering is unchanged.
+    if len(a) == 3:
+        sel_arg, src = a[1].strip(), a[2].strip()
+    elif len(a) == 2:
+        sel_arg, src = None, a[1].strip()
+    else:
+        raise ValueError(
+            f"extract_all needs (regex[, captureGroups], source): {a!r}"
+        )
+    pat = a[0].strip()
+    if not re.match(r"^'(?:[^']|'')*'$", pat):
+        raise ValueError(
+            "extract_all needs a literal regex —"
+            f" explicit-subset contract: {pat!r}"
+        )
+    # scan the pattern for capturing groups in order (named or
+    # plain; skips escapes, char classes, and (?:…)-style
+    # non-capturing constructs)
+    body0 = pat[1:-1]
+    caps: list[str | None] = []
+    i = 0
+    while i < len(body0):
+        ch = body0[i]
+        if ch == "\\":
+            i += 2
+            continue
+        if ch == "[":
+            j = i + 1
+            if j < len(body0) and body0[j] == "^":
+                j += 1
+            if j < len(body0) and body0[j] == "]":
+                j += 1
+            while j < len(body0) and body0[j] != "]":
+                if body0[j] == "\\":
+                    j += 1
+                j += 1
+            i = j + 1
+            continue
+        if ch == "(":
+            nm = re.match(
+                r"\(\?P?<([A-Za-z_]\w*)>", body0[i:]
+            )
+            if nm:
+                caps.append(nm.group(1))
+            elif not body0[i : i + 2] == "(?":
+                caps.append(None)
+        i += 1
+    ngroups = len(caps)
+    if not 1 <= ngroups <= 16:
+        raise ValueError(
+            "extract_all needs 1..16 capture groups"
+            f" (got {ngroups})"
+        )
+    pat0 = re.sub(r"\(\?P?<[A-Za-z_]\w*>", "(", pat)
+    if sel_arg is None:
+        sel = list(range(1, ngroups + 1))
+    else:
+        gm = re.match(
+            r"^dynamic\s*\(\s*\[(.*)\]\s*\)$"
+            r"|^array\s*\((.*)\)$",
+            sel_arg,
+            re.IGNORECASE | re.DOTALL,
+        )
+        if not gm:
+            raise ValueError(
+                "extract_all captureGroups must be a"
+                f" dynamic([...]) literal: {sel_arg!r}"
+            )
+        sel = []
+        for t in _split_top_level(gm.group(1) or gm.group(2) or ""):
+            t = t.strip()
+            if re.match(r"^\d+$", t):
+                idx = int(t)
+                if not 1 <= idx <= ngroups:
+                    raise ValueError(
+                        f"extract_all: group index {idx} out of"
+                        f" range 1..{ngroups}"
+                    )
+            else:
+                name = t.strip("'\"")
+                if name not in caps:
+                    raise ValueError(
+                        f"extract_all: no capture group named"
+                        f" {name!r} in {pat}"
+                    )
+                idx = caps.index(name) + 1
+            sel.append(idx)
+        if not sel:
+            raise ValueError("extract_all: empty captureGroups list")
+    if len(sel) == 1:
+        return f"regexp_extract_all({src}, {pat0}, {sel[0]})"
+    # multi-group (round-10 probe battery 10): ADX returns an
+    # array of per-match group ARRAYS — re-extract each group
+    # from each full-match span (the span IS the match, so
+    # anchoring is preserved; span-external lookarounds are the
+    # documented edge)
+    inner = ", ".join(
+        f"regexp_extract(_m, {pat0}, {g})" for g in sel
+    )
+    return (
+        f"transform(regexp_extract_all({src},"
+        f" {pat0}, 0), _m -> array({inner}))"
+    )
+
+
+def _parse_url_sql(a: list[str]) -> str:
+    # ADX parse_url returns a property bag; here a STRUCT whose
+    # fields mirror the ADX keys (all strings), so .Host/.Port/…
+    # access works natively. "Query Parameters" (round-11 probe
+    # battery 16) is a MAP<STRING,STRING> of url-decoded query
+    # pairs — struct['Query Parameters']['key'] subscripting works
+    # natively (the space makes dot access inexpressible, same as
+    # ADX where the bracket form is the only spelling).
+    if len(a) != 1:
+        raise ValueError(f"parse_url needs one argument: {a!r}")
+    u = a[0].strip()
+    return (
+        "named_struct("
+        f"'Scheme', parse_url({u}, 'PROTOCOL'),"
+        f" 'Host', parse_url({u}, 'HOST'),"
+        f" 'Port', regexp_extract(parse_url({u}, 'AUTHORITY'),"
+        f" ':([0-9]+)$', 1),"
+        f" 'Path', parse_url({u}, 'PATH'),"
+        f" 'Query', parse_url({u}, 'QUERY'),"
+        f" 'Query Parameters', transform_values(str_to_map("
+        f"coalesce(parse_url({u}, 'QUERY'), ''), '&', '='),"
+        " (_k, _v) -> url_decode(_v)),"
+        f" 'Fragment', parse_url({u}, 'REF'))"
+    )
+
+
+# dynamic path access on parse_json/todynamic results: dot chains,
+# bracket keys and bracket ARRAY indexes (round-7: brackets and
+# multi-level paths) — all compile to ONE get_json_object JSONPath
+def _json_path_core(arg: str, chain: str) -> str:
+    path = "$"
+    for acc in re.finditer(
+        r"\.(\w+)|\[\s*'((?:[^']|'')*)'\s*\]|\[\s*(\d+)\s*\]",
+        chain,
+    ):
+        if acc.group(1):
+            path += f".{acc.group(1)}"
+        elif acc.group(2) is not None:
+            key = acc.group(2)
+            if re.match(r"^\w+$", key):
+                path += f".{key}"
+            elif "'" in key or '"' in key or "[" in key or "]" in key:
+                # quotes/brackets inside a key can't be escaped in
+                # Spark's JSONPath dialect — loud subset error, not
+                # a silent NULL (round-8 advice)
+                raise ValueError(
+                    f"JSON bracket key {key!r} contains characters"
+                    " Spark's JSONPath cannot express"
+                )
+            else:
+                # keys with dots/spaces need the bracket form —
+                # $.a.b would address a NESTED path, silently
+                # returning NULL for the literal key 'a.b'
+                # (round-8 advice)
+                path += f"['{key}']"
+        else:
+            path += f"[{acc.group(3)}]"
+    # bracket-form segments carry single quotes — switch the SQL
+    # string literal to double quotes so the path survives intact
+    lit = f'"{path}"' if "'" in path else f"'{path}'"
+    return f"get_json_object({arg}, {lit})"
+
+
+# Balanced scan (round-10, probe battery 8): the parse_json
+# ARGUMENT may be ANY balanced expression — e.g. the CASE a
+# rewritten parse_user_agent emits — not just a column/literal
+# (the old operand regex silently left those as struct-field
+# extraction, an analysis error). Nested parse_json in the
+# argument rewrites on subsequent loop iterations.
+_pj_acc = re.compile(
+    r"(?:\.\w+|\[\s*(?:'(?:[^']|'')*'|\d+)\s*\])+"
+)
+
+
+def _todatetime_sql(a: list[str]) -> str:
+    # ADX todatetime parses the common .NET date spellings, not
+    # just ISO (battery 26: '1/2/2024', '20240102', RFC-1123 all
+    # returned null here while ADX parses them — a silent
+    # divergence in the null direction). First arm is the old
+    # try_cast (timestamps, numerics, ISO strings — unchanged
+    # semantics), then a US-style / compact / RFC-1123 ladder
+    # over the string form, bound ONCE via the transform rule.
+    # M/d order is ADX's en-US default; day-first locales are out
+    # of the subset (documented).
+    if len(a) != 1:
+        raise ValueError(f"todatetime needs one argument: {a!r}")
+    x = a[0].strip()
+    arms = ", ".join(
+        f"try_to_timestamp(_td, '{p}')"
+        for p in (
+            "M/d/yyyy h:mm:ss a",
+            "M/d/yyyy H:mm:ss",
+            "M/d/yyyy h:mm a",
+            "M/d/yyyy H:mm",
+            "M/d/yyyy",
+            "yyyyMMdd",
+        )
+    )
+    rfc = (
+        "try_to_timestamp(regexp_replace(_td,"
+        " '^[A-Za-z]{3}, ', ''), 'dd MMM yyyy HH:mm:ss zzz')"
+    )
+    return (
+        f"coalesce(try_cast({x} AS TIMESTAMP),"
+        f" element_at(transform(array(CAST({x} AS STRING)),"
+        f" _td -> coalesce({arms}, {rfc})), 1))"
+    )
+
+
+def _extract_sql(a: list[str]) -> str:
+    # typed 4-arg form (extract(re, g, s, typeof(long)) -> NULL on
+    # cast failure, the ADX contract) and the plain 3-arg form.
+    # Balanced arg splitting (round-10 probe battery 10: the old
+    # source-operand regex couldn't hold a CALL like strcat(…), so
+    # typeof leaked through as a column reference).
+    if len(a) == 4:
+        tm = re.match(
+            r"^typeof\s*\(\s*(\w+)\s*\)$",
+            a[3].strip(),
+            re.IGNORECASE,
+        )
+        if not tm:
+            raise ValueError(
+                f"extract 4th arg must be typeof(t): {a[3]!r}"
+            )
+        t = tm.group(1).lower()
+        if t not in _KQL_TYPES:
+            raise ValueError(f"extract typeof: unknown type {t!r}")
+        return (
+            f"try_cast(regexp_extract({a[2]}, {a[0]}, {a[1]})"
+            f" AS {_KQL_TYPES[t] or 'STRING'})"
+        )
+    if len(a) == 3:
+        return f"regexp_extract({a[2]}, {a[0]}, {a[1]})"
+    raise ValueError(
+        f"extract needs (regex, group, source[, typeof(t)]): {a!r}"
+    )
+
+
+# startofweek: ADX weeks start SUNDAY (Spark date_trunc('WEEK') is
+# ISO Monday); weekday() is 0=Mon..6=Sun, so Sunday-offset is
+# (weekday+1) % 7. endof*: last representable instant of the period
+# at microsecond resolution (ADX's 100 ns tick refined to Spark's
+# timestamp precision — documented).
+# Every startof*/endof* accepts ADX's optional period OFFSET
+# (round-10, probe battery 9: startofweek silently DROPPED it and
+# the others failed loudly on date_trunc arity). The no-offset
+# emissions keep their exact prior text (oracle-stable).
+def _sow_base(x: str) -> str:
+    return (
+        f"CAST(date_sub(CAST({x} AS DATE),"
+        f" (weekday({x}) + 1) % 7) AS TIMESTAMP)"
+    )
+
+
+def _per_off(a: list[str], days: int) -> str:
+    # day-granular period shift: INTERVAL <days> DAY * offset
+    return f" + INTERVAL {days} DAY * (CAST({a[1]} AS INT))"
+
+
+def _endof_months(unit: str, months: int):
+    def _f(a: list[str]) -> str:
+        base = f"date_trunc('{unit}', {a[0]})"
+        if len(a) == 1:
+            iv = (
+                "INTERVAL 1 DAY"
+                if unit == "DAY"
+                else f"INTERVAL {months} MONTH"
+            )
+            return f"({base} + {iv} - INTERVAL 1 MICROSECOND)"
+        n = f"CAST({a[1]} AS INT)"
+        if unit == "DAY":
+            return (
+                f"({base} + INTERVAL 1 DAY * (1 + {n})"
+                " - INTERVAL 1 MICROSECOND)"
+            )
+        return (
+            f"(CAST(add_months({base}, {months} * (1 + {n}))"
+            " AS TIMESTAMP) - INTERVAL 1 MICROSECOND)"
+        )
+
+    return _f
+
+
+# array batch 2: 0-based inclusive slice (non-negative indexes),
+# sort asc/desc, reverse, sum (left fold, matches series_sum)
+def _array_slice_sql(a: list[str]) -> str:
+    if len(a) != 3:
+        raise ValueError(f"array_slice needs (arr, start, end): {a!r}")
+    # ADX: 0-based INCLUSIVE ends; negative indices count from the
+    # END (length + index) — round-10 probe battery 9 (previously
+    # a loud subset error; Spark slice's own negative-start
+    # convention differs, so both ends normalize explicitly).
+    # An empty (end < start) window yields [] via greatest(…, 0).
+    arr = a[0]
+    s0 = f"CAST({a[1]} AS INT)"
+    e0 = f"CAST({a[2]} AS INT)"
+    # start < -size clamps to the array head (ADX's graceful
+    # empty/prefix result) — without the clamp slice() gets a
+    # nonpositive start, a Spark runtime error (round-10 advice);
+    # the end needs no clamp: a deeply-negative end only feeds the
+    # greatest(…, 0) length below
+    s_ = (
+        f"IF({s0} >= 0, {s0},"
+        f" greatest(size({arr}) + {s0}, 0))"
+    )
+    e_ = f"IF({e0} >= 0, {e0}, size({arr}) + {e0})"
+    return (
+        f"slice({arr}, ({s_}) + 1,"
+        f" greatest(({e_}) - ({s_}) + 1, 0))"
+    )
+
+
+def _startof_months(unit: str, months: int):
+    def _f(a: list[str]) -> str:
+        base = f"date_trunc('{unit}', {a[0]})"
+        if len(a) == 1:
+            return base
+        n = f"CAST({a[1]} AS INT)"
+        if unit == "DAY":
+            return f"({base} + INTERVAL 1 DAY * ({n}))"
+        return (
+            f"CAST(add_months({base}, {months} * ({n}))"
+            " AS TIMESTAMP)"
+        )
+
+    return _f
+
+
+def _codepoints_from_string_sql(a: list[str]) -> str:
+    """unicode_codepoints_from_string(s) / to_utf8(s)."""
+    return (
+        f"transform(sequence(1, char_length({a[0]})),"
+        f" _ucp -> CAST(ascii(substring({a[0]}, _ucp, 1))"
+        " AS BIGINT))"
+    )
+
+
+def _codepoints_to_string_sql(a: list[str]) -> str:
+    """unicode_codepoints_to_string(a) / make_string(a). Full Unicode
+    via UTF-32BE: each codepoint becomes 4 hex-padded bytes, decoded
+    in one pass (char() wraps mod 256 and would corrupt any codepoint
+    >= 256 — round-9 advice). Invalid codepoints (negative,
+    > U+10FFFF, or surrogates) yield the empty string, the ADX
+    contract for invalid input."""
+    return (
+        f"CASE WHEN exists({a[0]}, _c -> _c < 0 OR _c > 1114111"
+        " OR (_c >= 55296 AND _c <= 57343)) THEN ''"
+        f" ELSE decode(unhex(aggregate({a[0]}, '',"
+        " (_a, _c) -> concat(_a, lpad(hex(_c), 8, '0')))),"
+        " 'UTF-32') END"
+    )
+
+
+def _series_cmp(op: str):
+    """Element-wise comparison -> boolean series, against a numeric
+    literal (broadcast) or a second series."""
+    return lambda a: (
+        f"transform({a[0]}, _x -> CAST(_x AS DOUBLE)"
+        f" {op} CAST({a[1]} AS DOUBLE))"
+        if len(a) == 2 and re.match(r"^-?\d+(\.\d+)?$", a[1].strip())
+        else f"zip_with({a[0]}, {a[1]}, (_x, _y) ->"
+        f" CAST(_x AS DOUBLE) {op} CAST(_y AS DOUBLE))"
+    )
+
+
+def _null_test_sql(test: str):
+    """isnull(x) / isnotnull(x) over a bare operand (no call, no
+    literal) -> `(x IS [NOT] NULL)`; any other argument keeps Spark's
+    own isnull()/isnotnull()."""
+
+    def build(a: list[str]) -> str | None:
+        if len(a) == 1 and re.fullmatch(r"[^()'\"]+", a[0]):
+            return f"({a[0]} {test})"
+        return None
+
+    return build
+
+
+def _to_integer_sql(sql_type: str):
+    """tolong/toint. ADX to{long,int} accept hex string LITERALS
+    ('0x1A' -> 26) — resolved at translate time (round-10 probe
+    battery 8); runtime hex strings stay out of subset (an RLIKE arm
+    on every tolong would tax the hot path for a rare shape). ADX
+    to*() yields NULL on malformed input; the plain function-style
+    casts raised ANSI CAST_INVALID_INPUT on dirty strings (battery 25:
+    toint('12.5') crashed where ADX returns null)."""
+
+    def build(a: list[str]) -> str:
+        hm = len(a) == 1 and re.fullmatch(
+            r"'(-?)0[xX]([0-9a-fA-F]+)'", a[0]
+        )
+        if hm:
+            sign = "-" if hm.group(1) else ""
+            return f"CAST({sign}{int(hm.group(2), 16)} AS {sql_type})"
+        return f"try_cast({a[0]} AS {sql_type})"
+
+    return build
+
+
+def _cluster_endpoint_sql(a: list[str]) -> str | None:
+    """current_cluster_endpoint(): the session's master URL."""
+    if a:
+        return None
+    ctx = _ACTIVE_CTX.get()
+    master = (
+        ctx[0].conf.get("spark.master", "local")
+        if ctx is not None and ctx[0] is not None
+        else "local"
+    )
+    return f"'{master}'"
+
+
+def _codec_session() -> None:
+    """The string-codec tail (round-12 census): punycode (RFC 3492,
+    byte-exact via the stdlib codec), zlib/gzip base64 transcoding
+    (decompress exact on any standard stream; compress
+    roundtrip-exact, bytes compressor-specific — documented), and
+    ipv4_range_to_cidr_list (stdlib minimal CIDR cover, exact) are
+    Arrow-batched pandas UDFs (queries/py_codecs.py — no JVM builtin
+    exists), registered lazily once per session; a sessionless
+    translation stays loud."""
+    ctx = _ACTIVE_CTX.get()
+    if ctx is None or ctx[0] is None:
+        raise ValueError(
+            "punycode/zlib/gzip/ipv4_range_to_cidr_list are"
+            " Arrow-batched UDF scalars — a SparkSession is"
+            " required (kql(spark, ...) or"
+            " kql_to_sql(..., spark))"
+        )
+    ensure_registered(ctx[0])
+
+
+def _codec_sql(udf: str):
+    def build(a: list[str]) -> str:
+        _codec_session()
+        return f"{udf}({a[0]})"
+
+    return build
+
+
+def _cidr_list_sql(a: list[str]) -> str:
+    _codec_session()
+    if len(a) != 2:
+        raise ValueError(
+            f"ipv4_range_to_cidr_list needs (start, end): {a!r}"
+        )
+    return f"kql_py_cidr_list({a[0]}, {a[1]})"
+
+
+def _pack_all_sql(a: list[str]) -> str | None:
+    if not a:
+        return "to_json(struct(*), map('ignoreNullFields', 'false'))"
+    if a == ["true"]:
+        return "to_json(struct(*), map('ignoreNullFields', 'true'))"
+    return None
+
+
+def _ago_sql(a: list[str]) -> str:
+    """ago(1h): now minus the literal's seconds; ago(<expression>)
+    (round-7, `ago(365d * 2)`): now minus the interval it computes."""
+    lm = len(a) == 1 and re.fullmatch(_TS_LIT, a[0])
+    if lm:
+        return (
+            "(current_timestamp() - INTERVAL"
+            f" '{_ts_lit_seconds(lm.group(1), lm.group(2))}' SECOND)"
+        )
+    return f"(current_timestamp() - ({a[0]}))"
+
+
+def _urlquery_accessors(e: str) -> str:
+    """parse_urlquery(…) followed by an accessor chain -> the bag
+    wrapped in parse_json, for the JSON-path rewrite."""
+    # parse_urlquery(...)["Query Parameters"]["k"] accessor chains
+    # (round-11 probe battery 16): wrap the bag in parse_json so the
+    # balanced JSON-path scan below compiles the chain to ONE
+    # get_json_object; bare calls keep returning the JSON-string bag.
+    while True:
+        _uq_hit = None
+        spans = _LitSpans(e)
+        for mm in re.finditer(r"\bparse_urlquery\s*\(", e):
+            if spans.at(mm.start()):
+                continue
+            close = _balanced_end(e, mm.end() - 1)
+            if close is None:
+                continue
+            am = re.compile(
+                r"(?:\.\w+|\[\s*(?:'(?:[^']|'')*'|\d+)\s*\])+"
+            ).match(e, close + 1)
+            if am:
+                _uq_hit = (mm, close, am)
+                break
+        if _uq_hit is None:
+            break
+        mm, close, am = _uq_hit
+        e = (
+            e[: mm.start()]
+            + f"parse_json({_urlquery_bag(e[mm.end():close])})"
+            + e[close + 1 : am.end()]
+            + e[am.end():]
+        )
+    return e
+
+
+def _dynamic_object_accessors(e: str) -> str:
+    """dynamic({…}) followed by an accessor chain -> wrapped in
+    parse_json, for the JSON-path rewrite."""
+    # dynamic({…}).path accessor chains (round-11 probe battery 17):
+    # object literals become JSON STRING literals, so a trailing
+    # accessor must route through the JSON-path machinery — wrap in
+    # parse_json BEFORE the literal rewrite (the parse_urlquery rule);
+    # array-form dynamics keep their native array subscripting.
+    while True:
+        _dy_hit = None
+        spans = _LitSpans(e)
+        for mm in re.finditer(r"\bdynamic\s*\(\s*\{", e):
+            if spans.at(mm.start()):
+                continue
+            op_ = e.index("(", mm.start())
+            close = _balanced_end(e, op_)
+            if close is None:
+                continue
+            am = re.compile(
+                r"(?:\.\w+|\[\s*(?:'(?:[^']|'')*'|-?\d+)\s*\])+"
+            ).match(e, close + 1)
+            if am:
+                _dy_hit = (mm, close, am)
+                break
+        if _dy_hit is None:
+            break
+        mm, close, am = _dy_hit
+        e = (
+            e[: mm.start()]
+            + f"parse_json({e[mm.start():close + 1]})"
+            + e[close + 1 : am.end()]
+            + e[am.end():]
+        )
+    return e
+
+
+def _xml_accessors(e: str) -> str:
+    """parse_xml(x) accessor chains -> one xpath_string."""
+    # parse_xml(x).a.b / parse_xml(x).a['@attr'] / parse_xml(x).a.b[1]
+    # — the accessor-chain subset (battery 27): compiles to ONE
+    # JVM-side xpath_string (dots are element steps, ['@name'] an
+    # attribute step, a numeric index selects the n-th sibling,
+    # xpath 1-based). The full ADX bag shape (#text nodes, sibling
+    # arrays as dynamic) and bare parse_xml() without an accessor are
+    # out of the subset — loud. Malformed XML raises (Spark's xpath
+    # contract; ADX returns null — documented divergence, loud not
+    # silent).
+    while "parse_xml(" in e:
+        _px_spans = _LitSpans(e)
+        _px_hit = None
+        for mm in re.finditer(r"\bparse_xml\s*\(", e):
+            if _px_spans.at(mm.start()):
+                continue
+            close = _balanced_end(e, mm.end() - 1)
+            if close is None:
+                continue
+            am = _pj_acc.match(e, close + 1)
+            if am is None:
+                raise ValueError(
+                    "parse_xml supports accessor chains only"
+                    " (parse_xml(x).a.b, ['@attr'], [n] — compiled"
+                    " to xpath); a bare parse_xml() bag is out of"
+                    " the subset"
+                )
+            _px_hit = (mm, close, am)
+            break
+        if _px_hit is None:
+            break
+        mm, close, am = _px_hit
+        steps: list[str] = []
+        for acc in re.finditer(
+            r"\.(\w+)|\[\s*'((?:[^']|'')*)'\s*\]|\[\s*(\d+)\s*\]",
+            am.group(0),
+        ):
+            if acc.group(1):
+                steps.append(acc.group(1))
+            elif acc.group(2) is not None:
+                key = acc.group(2)
+                if not re.match(r"^@?[\w.-]+$", key):
+                    raise ValueError(
+                        f"parse_xml accessor {key!r} is not a valid"
+                        " element/attribute name"
+                    )
+                steps.append(key)
+            else:
+                if not steps:
+                    raise ValueError(
+                        "parse_xml accessor chains must start with"
+                        " an element step"
+                    )
+                steps[-1] += f"[{int(acc.group(3)) + 1}]"
+        xp = "/" + "/".join(steps)
+        e = (
+            e[: mm.start()]
+            + f"xpath_string({e[mm.end() : close]}, '{xp}')"
+            + e[am.end() :]
+        )
+    return e
+
+
+def _json_accessors(e: str) -> str:
+    """parse_json(x) accessor chains -> one get_json_object."""
+    while "parse_json(" in e:
+        _pj_spans = _LitSpans(e)
+        _pj_hit = None
+        for mm in re.finditer(r"\bparse_json\s*\(", e):
+            if _pj_spans.at(mm.start()):
+                continue
+            close = _balanced_end(e, mm.end() - 1)
+            if close is None:
+                continue
+            am = _pj_acc.match(e, close + 1)
+            if am:
+                _pj_hit = (mm, close, am)
+                break
+        if _pj_hit is None:
+            break
+        mm, close, am = _pj_hit
+        e = (
+            e[: mm.start()]
+            + _json_path_core(e[mm.end() : close], am.group(0))
+            + e[am.end() :]
+        )
+    return e
+
+
+# KQL scalar function -> SQL: a SQL function name (a rename) or a
+# builder over the translated arguments (see `_translate_calls` and
+# the module docstring). Keyed by the exact, case-sensitive KQL name.
+_CALLS: dict[str, str | Callable[[list[str]], str | None]] = {
+    "case": _case_sql,
+    "substring": _substring_sql,
+    "split": _split_sql,
+    "parse_csv": _parse_csv_sql,
+    "countof": _countof_sql,
+    "strcat": _strcat_sql,
+    # series scalar surface (pairs with make-series): reductions,
+    # constant gap-fill, element-wise arithmetic — all higher-order
+    # array functions, per-row and map-side.
+    "series_sum": lambda a: _series_reduce_sql(a, "sum"),
+    "series_avg": lambda a: _series_reduce_sql(a, "avg"),
+    "series_max": lambda a: f"CAST(array_max({a[0]}) AS DOUBLE)",
+    "series_min": lambda a: f"CAST(array_min({a[0]}) AS DOUBLE)",
+    "series_fill_const": lambda a: (
+        f"transform({a[0]}, _x -> coalesce(CAST(_x AS DOUBLE),"
+        f" CAST({a[1]} AS DOUBLE)))"
+    ),
+    "series_fill_forward": _fill_fwd_sql,
+    "series_fill_backward": _fill_bwd_sql,
+    "series_fill_linear": _fill_linear_sql,
+    "series_fir": _series_fir_sql,
+    "series_iir": _series_iir_sql,
+    "series_stats_dynamic": _series_stats_dynamic_sql,
+    "loggamma": _loggamma_sql,
+    "gamma": _gamma_sql,
+    "erfc": _erfc_sql,
+    "erf": _erf_sql,
+    "beta_cdf": _beta_cdf_sql,
+    "beta_pdf": _beta_pdf_sql,
+    "beta_inv": _beta_inv_sql,
+    "welch_test": _welch_test_sql,
+    "parse_user_agent": _parse_user_agent_sql,
+    "series_moving_avg": _moving_avg_sql,
+    "series_add": lambda a: _series_zip_sql(a, "+"),
+    "series_subtract": lambda a: _series_zip_sql(a, "-"),
+    "series_multiply": lambda a: _series_zip_sql(a, "*"),
+    "series_divide": lambda a: _series_zip_sql(a, "/"),
+    "series_abs": _series_unary("abs"),
+    "series_exp": _series_unary("exp"),
+    "series_log": _series_unary("ln"),
+    "series_sqrt": _series_unary("sqrt"),
+    "series_sign": _series_unary("sign"),
+    "series_floor": _series_unary("floor"),
+    "series_ceiling": _series_unary("ceil"),
+    "series_round": _series_unary("round"),
+    # L2 norm: one left fold (round-11 probe battery 16)
+    "series_magnitude": lambda a: (
+        f"sqrt(aggregate({a[0]}, CAST(0 AS DOUBLE), (_ac, _x) ->"
+        " _ac + CAST(_x AS DOUBLE) * CAST(_x AS DOUBLE)))"
+    ),
+    "series_seasonal": _series_seasonal_sql,
+    "series_pow": _series_pow_sql,
+    "series_dot_product": _series_dot_sql,
+    "series_cosine_similarity": _series_cos_sql,
+    "series_pearson_correlation": _series_pearson_sql,
+    # element-wise comparisons -> boolean series
+    "series_greater_equals": _series_cmp(">="),
+    "series_less_equals": _series_cmp("<="),
+    "series_not_equals": _series_cmp("<>"),
+    "series_greater": _series_cmp(">"),
+    "series_less": _series_cmp("<"),
+    "series_equals": _series_cmp("="),
+    "make_timespan": _make_timespan_sql,
+    # now() and now(offset) — now() plus a (negative) timespan
+    # (round-7)
+    "now": lambda a: (
+        "current_timestamp()"
+        if not a
+        else f"(current_timestamp() + ({a[0]}))"
+    ),
+    "replace_strings": _replace_strings_sql,
+    "replace_string": "replace",
+    "trim_start": lambda a: (
+        lambda rx, t: f"regexp_replace({t}, concat('^(', {rx}, ')+'), '')"
+    )(*_trim2(a, "trim_start")),
+    "trim_end": lambda a: (
+        lambda rx, t: f"regexp_replace({t}, concat('(', {rx}, ')+$'), '')"
+    )(*_trim2(a, "trim_end")),
+    "trim": lambda a: (
+        lambda rx, t: (
+            f"regexp_replace({t}, concat('^(', {rx}, ')+|(',"
+            f" {rx}, ')+$'), '')"
+        )
+    )(*_trim2(a, "trim")),
+    # ADX repeat(value, count) builds an ARRAY; strrep is the string
+    # repeat() (round-6: Spark repeat(1,3) silently produced '111'
+    # instead of [1,1,1])
+    "repeat": "array_repeat",
+    # strrep 3-arg carries a delimiter between repetitions (battery
+    # 21): join n copies; the 2-arg form is Spark's string repeat
+    "strrep": lambda a: (
+        f"repeat({a[0]}, {a[1]})"
+        if len(a) == 2
+        else (
+            f"array_join(array_repeat(CAST({a[0].strip()} AS"
+            f" STRING), CAST({a[1].strip()} AS INT)),"
+            f" {a[2].strip()})"
+        )
+    ),
+    "min_of": "least",
+    "max_of": "greatest",
+    "isnull": _null_test_sql("IS NULL"),
+    "isnotnull": _null_test_sql("IS NOT NULL"),
+    # tohex: ADX returns LOWERCASE hex without leading zeros
+    "tohex": lambda a: f"lower(hex({a[0]}))",
+    # base64_decode_toarray (round-8, was a loud gap): bytes as longs —
+    # hex the decoded binary, read it in 2-char pairs (conv is the
+    # only per-byte accessor that stays a builtin expression)
+    "base64_decode_toarray": lambda a: (
+        # empty-input guard (round-9 advice): sequence(1, 0) is the
+        # DESCENDING array [1, 0] in Spark, which yielded
+        # [NULL, NULL] for '' — ADX returns []
+        f"IF(length(unbase64({a[0]})) = 0,"
+        " CAST(array() AS ARRAY<BIGINT>),"
+        f" transform(sequence(1, length(unbase64({a[0]}))),"
+        f" _i -> CAST(conv(substr(hex(unbase64({a[0]})),"
+        " _i * 2 - 1, 2), 16, 10) AS BIGINT)))"
+    ),
+    "base64_encode_tostring": "base64",
+    "base64_decode_tostring": lambda a: f"string(unbase64({a[0]}))",
+    # ADX log() is natural log (Spark's 1-arg log already is); log10/
+    # log2/exp/sign/abs/sqrt/pow pass through by name
+    # bin_at / datetime arithmetic / part getters
+    "bin_at": _bin_at_sql,
+    "bin": _bin2_sql,
+    "datetime_diff": _datetime_diff_sql,
+    "datetime_add": _datetime_add_sql,
+    "getyear": "year",
+    "getmonth": "month",
+    "dayofmonth": "day",
+    "hourofday": "hour",
+    # ADX dayofweek returns a TIMESPAN of whole days since Sunday;
+    # the useful scalar is its day count: 0=Sunday..6=Saturday. The
+    # everyday ADX spelling compares it against a day literal
+    # (`dayofweek(ts) == 0d`) — fold that literal to its day count
+    # BEFORE the timespan-literal rewrite would turn it into an
+    # INTERVAL the numeric refinement cannot compare with (probe
+    # battery 14). Both operand orders.
+    # (the == Nd / ÷ timespan-literal FOLDS run at _expr's head —
+    # _fold_dayofweek — so they see the RAW KQL call before the bin
+    # builder expands a bin(...) argument past any finite nesting
+    # depth; battery 28)
+    "dayofweek": lambda a: f"(dayofweek({a[0]}) - 1)",
+    # arrays & misc
+    "pack_array": "array",
+    # array_length is LONG in ADX; Spark size() is INT32 — downstream
+    # arithmetic like `array_length(a) * 16843009` then ANSI-overflows
+    # where ADX computes (fuzz finding, round-11). Null on null input
+    # either way.
+    "array_length": lambda a: f"CAST(size({a[0]}) AS BIGINT)",
+    "array_concat": "concat",
+    "array_index_of": _array_index_of_sql,
+    "indexof": _indexof_sql,
+    "set_union": lambda a: _set_fold(a, "array_union"),
+    "set_intersect": lambda a: _set_fold(a, "array_intersect"),
+    "set_difference": lambda a: _set_fold(a, "array_except"),
+    "array_iff": _array_iff_sql,
+    "array_if": _array_iff_sql,  # documented alias
+    "array_rotate_left": lambda a: _array_rotate_sql(a, ""),
+    "array_rotate_right": lambda a: _array_rotate_sql(a, "-"),
+    "array_shift_left": lambda a: _array_shift_sql(a, ""),
+    "array_shift_right": lambda a: _array_shift_sql(a, "-"),
+    "zip": _zip_sql,
+    "hash_sha256": lambda a: f"sha2({a[0]}, 256)",
+    "hash_sha512": lambda a: f"sha2({a[0]}, 512)",
+    "hash_sha1": "sha1",
+    # hash_many: one combined hash over all arguments — the same
+    # deterministic-refinement note as hash_combine (ADX documents no
+    # algorithm for either; xxhash64 is this engine's hash())
+    "hash_many": "xxhash64",
+    "hash_md5": "md5",
+    "make_datetime": _make_datetime_sql,
+    "unixtime_seconds_todatetime": "timestamp_seconds",
+    "unixtime_milliseconds_todatetime": "timestamp_millis",
+    "unixtime_microseconds_todatetime": "timestamp_micros",
+    "unixtime_nanoseconds_todatetime": lambda a: f"timestamp_micros(CAST(({a[0]}) div 1000 AS BIGINT))",
+    "new_guid": lambda a: None if a else "uuid()",
+    "countof_regex": lambda a: f"size(regexp_extract_all({a[0]}, {a[1]}, 0))",
+    # 0-based first-match position, -1 when absent (regexp_instr
+    # is 1-based with 0-absent — one subtraction aligns both)
+    "indexof_regex": lambda a: (
+        f"(CAST(regexp_instr({a[0]}, {a[1]}) AS BIGINT) - 1)"
+    ),
+    "parse_ipv4_mask": _parse_ipv4_mask_sql,
+    "parse_ipv4": lambda a: _parse_ipv4_expr(a[0]),
+    "parse_ipv6_mask": _parse_ipv6_mask_sql,
+    "parse_ipv6": lambda a: _parse_ipv6_expr(a[0]),
+    "ipv6_compare": _ipv6_compare_sql,
+    "ipv6_is_match": _ipv6_is_match_sql,
+    "ipv6_is_in_range": _ipv6_in_range_sql,
+    "has_any_ipv4_prefix": lambda a: _has_any_ipv4_sql(a, True, "has_any_ipv4_prefix"),
+    "has_any_ipv4": lambda a: _has_any_ipv4_sql(a, False, "has_any_ipv4"),
+    "has_ipv4_prefix": lambda a: _has_ipv4_sql(a, True, "has_ipv4_prefix"),
+    "has_ipv4": lambda a: _has_ipv4_sql(a, False, "has_ipv4"),
+    "ipv6_is_in_any_range": _ipv6_in_any_range_sql,
+    "ipv4_is_in_any_range": _ipv4_in_any_range_sql,
+    "ipv4_is_in_range": _ipv4_in_range_sql,
+    "ipv4_is_match": _ipv4_match_sql,
+    "ipv4_compare": lambda a: (
+        f"CAST(sign(({_parse_ipv4_expr(a[0])})"
+        f" - ({_parse_ipv4_expr(a[1])})) AS BIGINT)"
+    ),
+    "parse_version": _parse_version_sql,
+    # ADX keeps the delimiter around null-as-empty args; concat_ws
+    # SKIPS nulls — coalesce each arg to '' to match ADX. Args
+    # render via the shared tostring rule (_render_string_sql) so
+    # real args drop the '.0' tail like tostring does.
+    "strcat_delim": lambda a: "concat_ws("
+    + a[0].strip()
+    + ", "
+    + ", ".join(
+        f"coalesce({_render_string_sql(x.strip())}, '')"
+        for x in a[1:]
+    )
+    + ")",
+    "isascii": lambda a: (
+        f"coalesce(NOT {a[0].strip()} RLIKE"
+        " '[^\\\\x00-\\\\x7F]', false)"
+    ),
+    # Spark strings are always valid UTF-8 — isutf8 is a null check
+    "isutf8": lambda a: f"({a[0].strip()} IS NOT NULL)",
+    # ADX decimal is 128-bit; DECIMAL(38,18) is the widest Spark twin
+    "todecimal": lambda a: f"try_cast({a[0]} AS DECIMAL(38, 18))",
+    # canonical lowercase 8-4-4-4-12 or NULL (ADX guid contract)
+    "toguid": lambda a: (
+        f"CASE WHEN {a[0].strip()} RLIKE"
+        " '^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}"
+        "-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$'"
+        f" THEN lower({a[0].strip()}) END"
+    ),
+    "format_bytes": _format_bytes_sql,
+    # --- scalar batch 8 (round-6): bit ops, exp2, 2-arg floor (= bin),
+    # datetime_part, timezone converters, gettype, hash_combine,
+    # bounded rand ---
+    "binary_and": lambda a: f"(({a[0]}) & ({a[1]}))",
+    "binary_or": lambda a: f"(({a[0]}) | ({a[1]}))",
+    "binary_xor": lambda a: f"(({a[0]}) ^ ({a[1]}))",
+    "binary_not": lambda a: f"(~({a[0]}))",
+    "binary_shift_left": "shiftleft",
+    "binary_shift_right": "shiftright",
+    # LONG in ADX (Spark bit_count is INT32)
+    "bitset_count_ones": lambda a: f"CAST(bit_count({a[0]}) AS BIGINT)",
+    "exp2": lambda a: f"power(CAST(2 AS DOUBLE), {a[0]})",
+    "floor": _floor2_sql,
+    "datetime_part": _datetime_part_sql,
+    "datetime_utc_to_local": lambda a: f"from_utc_timestamp({a[0]}, {a[1]})",
+    "datetime_local_to_utc": lambda a: f"to_utc_timestamp({a[0]}, {a[1]})",
+    "gettype": _gettype_sql,
+    # hash_combine: deterministic refinement — xxhash64 over the input
+    # hashes (ADX's combiner constants are unspecified)
+    "hash_combine": "xxhash64",
+    "rand": _rand_sql,
+    # --- end scalar batch 8 ---
+    # replace_regex(source, regex, rewrite) — same arg order as
+    # regexp_replace; replace_string already maps elsewhere
+    "replace_regex": "regexp_replace",
+    "extract_json": _extract_json_sql,
+    "extractjson": _extract_json_sql,
+    "array_split": _array_split_sql,
+    # --- end scalar batch 5 ---
+    "dcount_hll": "hll_sketch_estimate",
+    "hash_xxhash64": _hash_xxhash64_sql,
+    "hash": _hash_sql,
+    "percentile_tdigest": _percentile_tdigest_sql,
+    "geo_distance_2points": _geo_dist_sql,
+    "geo_point_in_circle": _geo_circle_sql,
+    "geo_point_to_geohash": _geo_geohash_sql,
+    "geo_geohash_to_central_point": _geo_geohash_central_sql,
+    "geo_point_to_s2cell": _geo_s2cell_sql,
+    "geo_s2cell_to_central_point": _geo_s2cell_central_sql,
+    "geo_point_to_h3cell": _geo_h3_loud,
+    "geo_h3cell_to_central_point": _geo_h3_loud,
+    "cursor_current": _cursor_loud,
+    "cursor_after": _cursor_loud,
+    "treepath": _treepath_loud,
+    **{_fn: _make_convert_sql(_fn) for _fn in (*_CONVERT, "convert_temperature")},
+    # --- round-7 gap-sweep batch: everyday scalars found missing by a
+    # 60-idiom probe of the translator (all were loud subset errors;
+    # now implemented as map-side JVM expressions) ---
+    "around": lambda a: (
+        f"({a[0]} BETWEEN ({a[1]}) - ({a[2]})"
+        f" AND ({a[1]}) + ({a[2]}))"
+    ),
+    "set_has_element": lambda a: f"array_contains({a[0]}, {a[1]})",
+    "jaccard_index": lambda a: (
+        f"(CAST(size(array_intersect({a[0]}, {a[1]})) AS DOUBLE)"
+        f" / nullif(CAST(size(array_union({a[0]}, {a[1]}))"
+        " AS DOUBLE), CAST(0 AS DOUBLE)))"
+    ),
+    # scalar range(start, stop [, step]) — the array generator (the
+    # leading `range x from …` TABLE operator is handled before stage
+    # translation and never reaches _expr). Inclusive stop, like ADX.
+    "range": lambda a: f"sequence({', '.join(a)})",
+    "format_ipv4_mask": _format_ipv4_mask_sql,
+    "format_ipv4": _format_ipv4_sql,
+    "ipv4_is_private": _ipv4_is_private_sql,
+    # suffix via try_element_at — a bare address has no second split
+    # element and [1] is an ANSI runtime error (battery 21); null on a
+    # non-ipv4 address part AND on an invalid prefix notation — ADX
+    # returns null for '1.2.3.4/99' and '1.2.3.4/abc', not 99 / 32
+    # (round-11 advice); 32 only when no '/' part exists at all
+    "ipv4_netmask_suffix": lambda a: (
+        f"CASE WHEN try_element_at(split({a[0]}, '/'), 1)"
+        f" RLIKE '^{_IPV4_RE}$' THEN"
+        f" CASE WHEN size(split({a[0]}, '/')) = 1 THEN 32"
+        f" WHEN try_cast(try_element_at(split({a[0]}, '/'), 2)"
+        " AS INT) BETWEEN 0 AND 32"
+        f" THEN try_cast(try_element_at(split({a[0]}, '/'), 2)"
+        " AS INT) END END"
+    ),
+    # to_utf8 is ADX's older spelling of the same codepoint-array
+    # conversion ("the inverse of make_string", per the public docs) —
+    # both aliases share the canonical builders (round-12 census)
+    "to_utf8": _codepoints_from_string_sql,
+    "make_string": _codepoints_to_string_sql,
+    # round-9 scalar additions: the codepoint/byte-array inverses and
+    # RE2 QuoteMeta — all map-side folds
+    "unicode_codepoints_from_string": _codepoints_from_string_sql,
+    "unicode_codepoints_to_string": _codepoints_to_string_sql,
+    # pmod, not %: Spark % preserves the dividend's sign and lpad
+    # truncates from the LEFT, so a negative element would silently
+    # encode the wrong byte (-2 -> 'FF...FE' -> 'FF'); pmod(-2, 256) =
+    # 254 = the two's-complement byte (round-9 advice).
+    "base64_encode_fromarray": lambda a: (
+        f"base64(unhex(aggregate({a[0]}, '',"
+        " (_a, _b) -> concat(_a,"
+        " lpad(hex(pmod(CAST(_b AS BIGINT), 256)), 2, '0')))))"
+    ),
+    "base64_encode_fromguid": lambda a: (
+        "base64(unhex("
+        + _guid_reorder(f"replace(lower({a[0]}), '-', '')")
+        + "))"
+    ),
+    "base64_decode_toguid": _b64_toguid_sql,
+    # principal/endpoint environment scalars: current_user() is the
+    # session's authenticated identity (value FORMAT is a documented
+    # refinement — ADX renders 'aaduser=...'); the "cluster endpoint"
+    # of a Spark session is its master URL, bound at translate time.
+    "current_principal": lambda a: None if a else "current_user()",
+    "current_cluster_endpoint": _cluster_endpoint_sql,
+    "estimate_data_size": _estimate_data_size_sql,
+    # string-codec tail (round-12 census): Arrow-batched pandas UDFs
+    # (queries/py_codecs.py), registered on first use
+    **{_k: _codec_sql(_udf) for _k, _udf in CODEC_FNS},
+    "ipv4_range_to_cidr_list": _cidr_list_sql,
+    # RE2 QuoteMeta: backslash-escape everything outside
+    # [A-Za-z0-9_]
+    "regex_quote": lambda a: (
+        f"regexp_replace({a[0]}, '([^A-Za-z0-9_])', '\\\\\\\\$1')"
+    ),
+    "parse_urlquery": lambda a: _urlquery_bag(a[0]),
+    "parse_path": _parse_path_sql,
+    "dynamic": _dynamic_sql,
+    "toupper": "upper",
+    "tolower": "lower",
+    "format_datetime": _format_datetime_sql,
+    "bag_keys": _bag_keys_sql,
+    # bag_has_key / bag_remove_keys (round-6): top-level keys only
+    # (ADX's JSONPath keys are out of the subset). Removal rides
+    # map<string,variant> (round-11), so values keep their dynamic
+    # types. Keys argument: any array<string> expression
+    # (pack_array(...) is the literal form).
+    "bag_has_key": lambda a: (
+        "coalesce(array_contains(json_object_keys(CAST("
+        f"{a[0].strip()} AS STRING)),"
+        f" {a[1].strip()}), false)"
+    ),
+    # bag_zip(keys, values) — bag from parallel arrays (round-11 probe
+    # battery 16): values pad with NULL / truncate to the key count
+    # (the ADX contract); keys cast to string, values carry the
+    # documented JSON-string widening the other bag constructors share
+    "bag_zip": lambda a: (
+        f"to_json(map_from_arrays(transform({a[0].strip()},"
+        " _k -> CAST(_k AS STRING)),"
+        f" transform(sequence(1, size({a[0].strip()})),"
+        f" _i -> CAST(try_element_at({a[1].strip()}, _i)"
+        " AS STRING))))"
+    ),
+    "parse_command_line": _parse_cmdline_sql,
+    # bag_remove_keys / bag_set_key ride map<string,variant> (battery
+    # 21): values keep their dynamic types through the round-trip
+    # (map<string,string> widened 2 to "2" before)
+    "bag_remove_keys": lambda a: (
+        "to_json(map_filter(from_json(coalesce(CAST("
+        f"{a[0].strip()} AS STRING), '{{}}'),"
+        " 'map<string,variant>'),"
+        f" (_k, _v) -> NOT array_contains(CAST({a[1].strip()}"
+        " AS ARRAY<STRING>), _k)))"
+    ),
+    "bag_set_key": _bag_set_key_sql,
+    # dynamic_to_json: canonical JSON with keys sorted at EVERY level
+    # (battery 21, was a loud gap) — Spark's Variant binary format
+    # stores object fields key-sorted, so one variant round-trip IS
+    # the ADX canonicalization. Non-JSON input yields null (the
+    # lenient to*() contract).
+    "dynamic_to_json": lambda a: (
+        f"to_json(try_parse_json(CAST({a[0].strip()}"
+        " AS STRING)))"
+    ),
+    "bag_pack_columns": _bag_pack_columns_sql,
+    "bag_pack": _pack_sql,
+    # pack_dictionary is the documented legacy alias of bag_pack/pack
+    # (probe battery 13)
+    "pack_dictionary": _pack_sql,
+    "pack": _pack_sql,
+    # pack_all(): every column of the pipe at this point. ADX keeps
+    # null-valued keys by default; pack_all(true) drops them (battery
+    # 21 — the bare form previously rode Spark's ignoreNullFields
+    # default and silently dropped nulls)
+    "pack_all": _pack_all_sql,
+    "bag_merge": _bag_merge_sql,
+    "todynamic": "parse_json",
+    "extract_all": _extract_all_sql,
+    "parse_url": _parse_url_sql,
+    # strlen is LONG in ADX (length() is INT32 — the
+    # array_length/string_size/row_number overflow class)
+    "strlen": lambda a: f"CAST(length({a[0]}) AS BIGINT)",
+    "strcat_array": "array_join",
+    "iff": "if",
+    "iif": "if",  # documented alias
+    # ADX to*() yields NULL on malformed input; the plain function-
+    # style casts raised ANSI CAST_INVALID_INPUT on dirty strings
+    # (battery 25: toint('12.5') crashed where ADX returns null —
+    # to* over user data is exactly where garbage shows up)
+    "tolong": _to_integer_sql("BIGINT"),
+    "toint": _to_integer_sql("INT"),
+    "todouble": lambda a: f"try_cast({a[0]} AS DOUBLE)",
+    "toreal": lambda a: f"try_cast({a[0]} AS DOUBLE)",
+    # typed VALUE constructors long(5)/real(1.5) (probe battery 14) —
+    # ADX restricts these to literals; the cast is a superset. The
+    # typed-null rule later never fires for these two (bigint(null) /
+    # double(null) are the same typed nulls). int() maps 1:1 already.
+    "long": "bigint",
+    "real": "double",
+    # ADX tostring NEVER returns null — a null input yields the EMPTY
+    # string (long-fuzz finding: tostring(ea_[0][1]) of a no-match
+    # extract came back NULL here, '' in ADX; isnull(tostring(x)) is
+    # always false there). Real inputs render via the SHARED
+    # _render_string_sql rule (typeof-gated '.0' trim; also used by
+    # strcat/strcat_delim so implicit and explicit conversions agree;
+    # scientific-notation residual documented there).
+    "tostring": lambda a: f"coalesce({_render_string_sql(a[0])}, '')",
+    # lenient conversions (ADX to*() yields null on garbage; the
+    # function-style casts above are for clean-typed args, these two
+    # commonly see dirty strings)
+    "tobool": lambda a: f"try_cast({a[0]} AS BOOLEAN)",
+    "todatetime": _todatetime_sql,
+    # timespan surface: totimespan FIRST so format_timespan embeds its
+    # already-translated output (rewrites run left-to-right, no
+    # re-entry); bare timespan literals are swept at the end of _expr.
+    "totimespan": _totimespan_sql,
+    "format_timespan": _format_timespan_sql,
+    # scalar batch 4 (round-4): ceiling, exp10, inf/nan tests, strcmp,
+    # string_size (BYTES — ADX contract), url_encode family, translate
+    # (ADX arg order (from, to, source) -> Spark (source, from, to))
+    "ceiling": "ceil",
+    "exp10": lambda a: f"power(CAST(10 AS DOUBLE), {a[0]})",
+    "isinf": lambda a: (
+        f"({a[0]} = double('Infinity')"
+        f" OR {a[0]} = double('-Infinity'))"
+    ),
+    "isfinite": lambda a: (
+        f"(NOT isnan({a[0]})"
+        f" AND abs({a[0]}) <> double('Infinity'))"
+    ),
+    "strcmp": lambda a: (
+        f"(CASE WHEN {a[0]} < {a[1]} THEN CAST(-1 AS BIGINT)"
+        f" WHEN {a[0]} > {a[1]} THEN 1"
+        f" WHEN {a[0]} = {a[1]} THEN 0 END)"
+    ),
+    # string_size is LONG in ADX (octet_length is INT32 — the same
+    # overflow exposure as array_length)
+    "string_size": lambda a: f"CAST(octet_length({a[0]}) AS BIGINT)",
+    # Spark url_encode is form-style (space -> +), the ADX
+    # *_component variant is percent-style (space -> %20)
+    "url_encode_component": lambda a: f"replace(url_encode({a[0]}), '+', '%20')",
+    "translate": lambda a: f"translate({a[2]}, {a[0]}, {a[1]})",
+    "extract": _extract_sql,
+    # CAST to STRING before the ''-compare: ADX isempty applies to ANY
+    # scalar (non-null non-strings are never empty); the bare compare
+    # threw CAST_INVALID_INPUT on numerics under ANSI (round-7 sweep).
+    # A balanced call, not a [^()]+ regex (round-11 probe battery
+    # 17): string-literal and nested-call arguments never matched the
+    # old pattern, leaking the KQL name to Spark.
+    "isnotempty": lambda a: (
+        f"({a[0]} IS NOT NULL"
+        f" AND CAST({a[0]} AS STRING) <> '')"
+    ),
+    "isempty": lambda a: (
+        f"({a[0]} IS NULL OR CAST({a[0]} AS STRING) = '')"
+    ),
+    # Datetime surface: ago()/now() anchor to the query clock;
+    # startof*() are date_trunc.
+    "ago": _ago_sql,
+    "startofweek": lambda a: (
+        _sow_base(a[0])
+        if len(a) == 1
+        else f"({_sow_base(a[0])}{_per_off(a, 7)})"
+    ),
+    # last microsecond of the Sunday-start week (startofweek + 7d
+    # - 1 tick; round-7)
+    "endofweek": lambda a: (
+        f"({_sow_base(a[0])}"
+        + (_per_off(a, 7) if len(a) == 2 else "")
+        + " + INTERVAL 7 DAY - INTERVAL 1 MICROSECOND)"
+    ),
+    "endofday": _endof_months("DAY", 0),
+    "endofmonth": _endof_months("MONTH", 1),
+    "endofyear": _endof_months("YEAR", 12),
+    "week_of_year": "weekofyear",
+    "monthofyear": "month",
+    "array_slice": _array_slice_sql,
+    "array_sort_asc": "array_sort",
+    "array_sort_desc": lambda a: f"reverse(array_sort({a[0]}))",
+    "array_reverse": "reverse",
+    "array_sum": lambda a: _series_reduce_sql(a, "sum"),
+    "startofday": _startof_months("DAY", 0),
+    "startofmonth": _startof_months("MONTH", 1),
+    "startofyear": _startof_months("YEAR", 12),
+    "startofquarter": _startof_months("QUARTER", 3),
+    "endofquarter": _endof_months("QUARTER", 3),
+    # has_any_index(source, values): 0-based index of the FIRST value
+    # term-matched in source (the same word-boundary regexp `has`
+    # compiles to), -1 when none match. Values may be any array
+    # expression (round-11 probe battery 16); one map-side transform +
+    # array_position.
+    "has_any_index": lambda a: (
+        f"(coalesce(array_position(transform("
+        f"CAST({a[1]} AS ARRAY<STRING>), _t ->"
+        f" coalesce({a[0]} RLIKE concat('(?i)\\\\b\\\\Q', _t,"
+        " '\\\\E\\\\b'), false)), true), 0) - 1)"
+    ),
+}
+
+
 def _expr(kql_expr: str) -> str:
     """Translate a KQL scalar/boolean expression to SQL."""
     # toscalar(T | ...) -> an uncorrelated scalar subquery (ADX: first
@@ -3683,12 +6669,11 @@ def _expr(kql_expr: str) -> str:
     kql_expr, _ts_subs = _extract_toscalar(kql_expr)
     kql_expr, _in_subs = _extract_in_subqueries(kql_expr)
     e = _strings_to_sql(kql_expr)
-    # BEFORE _bin_to_sql/scalar rewrites: the guard must see the user's
+    # BEFORE the bin/scalar rewrites: the guard must see the user's
     # KQL tokens (todouble/toreal, real literals), never the divisions
     # the translator's own emissions contain
     e = _real_div_guard(e)
     e = _fold_dayofweek(e)
-    e = _bin_to_sql(e)
     e = _concat_plus(e)
     # column+column string concat — RETRY path only (see _PLUS_CONCAT):
     # rewrite `a + b` to concat(a, b) when BOTH are string columns of
@@ -3905,2289 +6890,10 @@ def _expr(kql_expr: str) -> str:
                     _aidx8,
                     e,
                 )
-    e = _rewrite_fn(e, "case", _case_sql)
-    e = _rewrite_fn(e, "substring", _substring_sql)
-    e = _rewrite_fn(e, "split", _split_sql)
-
-    def _parse_csv_sql(a: list[str]) -> str:
-        # parse_csv(text) -> array of field strings (round-9 probe
-        # battery 6): split on commas OUTSIDE double quotes (java
-        # regex lookahead — an even number of quotes must follow),
-        # then unquote + unescape "" per field. Single-record subset
-        # (embedded newlines ride along inside quoted fields).
-        if len(a) != 1:
-            raise ValueError(f"parse_csv needs one argument: {a!r}")
-        x = a[0].strip()
-        split_re = ',(?=(?:[^"]*"[^"]*")*[^"]*$)'
-        return (
-            f"transform(split({x}, '{split_re}'), _f ->"
-            " CASE WHEN startswith(_f, '\"') AND endswith(_f, '\"')"
-            " AND length(_f) >= 2"
-            " THEN replace(substring(_f, 2, length(_f) - 2),"
-            " '\"\"', '\"')"
-            " ELSE _f END)"
-        )
-
-    e = _rewrite_fn(e, "parse_csv", _parse_csv_sql)
-    e = _rewrite_fn(e, "countof", _countof_sql)
-    e = _rewrite_fn(e, "strcat", _strcat_sql)
-    # series scalar surface (pairs with make-series): reductions,
-    # constant gap-fill, element-wise arithmetic — all higher-order
-    # array functions, per-row and map-side.
-    e = _rewrite_fn(e, "series_sum", lambda a: _series_reduce_sql(a, "sum"))
-    e = _rewrite_fn(e, "series_avg", lambda a: _series_reduce_sql(a, "avg"))
-    e = _rewrite_fn(
-        e, "series_max", lambda a: f"CAST(array_max({a[0]}) AS DOUBLE)"
-    )
-    e = _rewrite_fn(
-        e, "series_min", lambda a: f"CAST(array_min({a[0]}) AS DOUBLE)"
-    )
-    e = _rewrite_fn(
-        e,
-        "series_fill_const",
-        lambda a: (
-            f"transform({a[0]}, _x -> coalesce(CAST(_x AS DOUBLE),"
-            f" CAST({a[1]} AS DOUBLE)))"
-        ),
-    )
-    # series_fill_forward/backward/linear (round-6): per-element
-    # higher-order lookups — O(n²) per row in the series length, which
-    # make-series bounds by the bin count; all map-side, zero shuffle.
-    def _fill_fwd_sql(a: list[str]) -> str:
-        arr = a[0].strip()
-        # last non-null at or before i; ADX keeps LEADING nulls
-        return (
-            f"transform({arr}, (_e, _i) -> coalesce(_e,"
-            f" try_element_at(filter(slice({arr}, 1, _i + 1),"
-            f" _x -> _x IS NOT NULL), -1)))"
-        )
-
-    def _fill_bwd_sql(a: list[str]) -> str:
-        arr = a[0].strip()
-        # first non-null at or after i; ADX keeps TRAILING nulls
-        return (
-            f"transform({arr}, (_e, _i) -> coalesce(_e,"
-            f" try_element_at(filter(slice({arr}, _i + 1,"
-            f" size({arr}) - _i), _x -> _x IS NOT NULL), 1)))"
-        )
-
-    def _fill_linear_sql(a: list[str]) -> str:
-        arr = a[0].strip()
-        # interior nulls interpolate between the nearest non-null
-        # neighbors; edge nulls take the nearest non-null value (ADX
-        # contract). pidx/nidx are 0-based neighbor indexes.
-        pidx = (
-            f"try_element_at(filter(sequence(0, size({arr}) - 1),"
-            f" _j -> _j <= _i AND element_at({arr}, _j + 1)"
-            " IS NOT NULL), -1)"
-        )
-        nidx = (
-            f"try_element_at(filter(sequence(0, size({arr}) - 1),"
-            f" _j -> _j >= _i AND element_at({arr}, _j + 1)"
-            " IS NOT NULL), 1)"
-        )
-        return (
-            f"transform({arr}, (_e, _i) -> coalesce(_e,"
-            f" CASE WHEN ({pidx}) IS NULL THEN"
-            f" try_element_at({arr}, ({nidx}) + 1)"
-            f" WHEN ({nidx}) IS NULL THEN"
-            f" try_element_at({arr}, ({pidx}) + 1)"
-            f" ELSE try_element_at({arr}, ({pidx}) + 1)"
-            f" + (try_element_at({arr}, ({nidx}) + 1)"
-            f" - try_element_at({arr}, ({pidx}) + 1))"
-            f" * (CAST(_i - ({pidx}) AS DOUBLE)"
-            f" / CAST(({nidx}) - ({pidx}) AS DOUBLE)) END))"
-        )
-
-    e = _rewrite_fn(e, "series_fill_forward", _fill_fwd_sql)
-    e = _rewrite_fn(e, "series_fill_backward", _fill_bwd_sql)
-    e = _rewrite_fn(e, "series_fill_linear", _fill_linear_sql)
-    e = _rewrite_fn(e, "series_fir", _series_fir_sql)
-    e = _rewrite_fn(e, "series_iir", _series_iir_sql)
-    e = _rewrite_fn(
-        e, "series_stats_dynamic", _series_stats_dynamic_sql
-    )
-    e = _rewrite_fn(e, "loggamma", _loggamma_sql)
-    e = _rewrite_fn(e, "gamma", _gamma_sql)
-    e = _rewrite_fn(e, "erfc", _erfc_sql)
-    e = _rewrite_fn(e, "erf", _erf_sql)
-    e = _rewrite_fn(e, "beta_cdf", _beta_cdf_sql)
-    e = _rewrite_fn(e, "beta_pdf", _beta_pdf_sql)
-    e = _rewrite_fn(e, "beta_inv", _beta_inv_sql)
-    e = _rewrite_fn(e, "welch_test", _welch_test_sql)
-    e = _rewrite_fn(e, "parse_user_agent", _parse_user_agent_sql)
-    def _moving_avg_sql(a: list[str]) -> str:
-        if len(a) < 2 or not re.match(r"^\d+$", a[1].strip()):
-            raise ValueError(
-                "series_moving_avg needs (series, integer-literal"
-                f" window [, center]) — explicit-subset contract: {a!r}"
-            )
-        return _series_fir_sql(
-            [a[0], f"pack_array({', '.join(['1'] * int(a[1]))})", "true"]
-            + list(a[2:])
-        )
-
-    e = _rewrite_fn(e, "series_moving_avg", _moving_avg_sql)
-    e = _rewrite_fn(e, "series_add", lambda a: _series_zip_sql(a, "+"))
-    e = _rewrite_fn(e, "series_subtract", lambda a: _series_zip_sql(a, "-"))
-    e = _rewrite_fn(e, "series_multiply", lambda a: _series_zip_sql(a, "*"))
-    e = _rewrite_fn(e, "series_divide", lambda a: _series_zip_sql(a, "/"))
-
-    # element-wise unary series math (round-7 sweep): one transform,
-    # map-side; values computed as DOUBLE like the binary family
-    def _series_unary(fn_sql: str):
-        return lambda a: (
-            f"transform({a[0]}, _x -> {fn_sql}(CAST(_x AS DOUBLE)))"
-        )
-
-    e = _rewrite_fn(e, "series_abs", _series_unary("abs"))
-    e = _rewrite_fn(e, "series_exp", _series_unary("exp"))
-    e = _rewrite_fn(e, "series_log", _series_unary("ln"))
-    e = _rewrite_fn(e, "series_sqrt", _series_unary("sqrt"))
-    e = _rewrite_fn(e, "series_sign", _series_unary("sign"))
-    e = _rewrite_fn(e, "series_floor", _series_unary("floor"))
-    e = _rewrite_fn(e, "series_ceiling", _series_unary("ceiling"))
-    e = _rewrite_fn(e, "series_round", _series_unary("round"))
-    # L2 norm: one left fold (round-11 probe battery 16)
-    e = _rewrite_fn(
-        e,
-        "series_magnitude",
-        lambda a: (
-            f"sqrt(aggregate({a[0]}, CAST(0 AS DOUBLE), (_ac, _x) ->"
-            " _ac + CAST(_x AS DOUBLE) * CAST(_x AS DOUBLE)))"
-        ),
-    )
-
-    def _series_seasonal_sql(a: list[str]) -> str:
-        # series_seasonal(series, period) — seasonal component:
-        # element i maps to the MEAN of all elements sharing its phase
-        # (i mod period). Period must be a positive integer literal
-        # (no autodetection — the series_decompose explicit-subset
-        # contract). Phase means computed per element via one nested
-        # fold: O(n²/period) inside a map-side lambda, fine for the
-        # array-per-row series shape.
-        if (
-            len(a) != 2
-            or not re.match(r"^\d+$", a[1].strip())
-            or int(a[1]) < 1
-        ):
-            raise ValueError(
-                "series_seasonal needs (series, positive integer"
-                f" literal period) — explicit-subset contract: {a!r}"
-            )
-        p = int(a[1])
-        phase_mean = (
-            f"(aggregate({a[0]}, named_struct('s', CAST(0 AS DOUBLE),"
-            " 'n', CAST(0 AS DOUBLE), 'j', 0), (_st, _y) ->"
-            f" IF(pmod(_st.j, {p}) = pmod(_i, {p}),"
-            " named_struct('s', _st.s + CAST(_y AS DOUBLE),"
-            " 'n', _st.n + 1, 'j', _st.j + 1),"
-            " named_struct('s', _st.s, 'n', _st.n, 'j', _st.j + 1)),"
-            " _st -> _st.s / _st.n))"
-        )
-        return f"transform({a[0]}, (_x, _i) -> {phase_mean})"
-
-    e = _rewrite_fn(e, "series_seasonal", _series_seasonal_sql)
-
-    def _series_pow_sql(a: list[str]) -> str:
-        if len(a) != 2:
-            raise ValueError(f"series_pow needs (series, exp): {a!r}")
-        if re.match(r"^-?\d+(\.\d+)?$", a[1].strip()):
-            return (
-                f"transform({a[0]}, _x -> pow(CAST(_x AS DOUBLE),"
-                f" CAST({a[1]} AS DOUBLE)))"
-            )
-        return (
-            f"zip_with({a[0]}, {a[1]}, (_x, _y) ->"
-            " pow(CAST(_x AS DOUBLE), CAST(_y AS DOUBLE)))"
-        )
-
-    e = _rewrite_fn(e, "series_pow", _series_pow_sql)
-
-    # series_dot_product / series_cosine_similarity (round-8 verdict
-    # #8): map-side zip + left-fold in array order (deterministic,
-    # oracle-reproducible). dot_product reuses the zip rewrite, so a
-    # numeric-literal operand broadcasts like the arithmetic family;
-    # cosine requires two series (a scalar operand is meaningless).
-    def _series_fold_sum(prod: str) -> str:
-        return (
-            f"aggregate({prod}, CAST(0 AS DOUBLE),"
-            " (_acc, _v) -> _acc + _v)"
-        )
-
-    def _series_dot_sql(a: list[str]) -> str:
-        if len(a) != 2:
-            raise ValueError(
-                f"series_dot_product needs (series, series): {a!r}"
-            )
-        return _series_fold_sum(_series_zip_sql(a, "*"))
-
-    def _series_cos_sql(a: list[str]) -> str:
-        if len(a) != 2:
-            raise ValueError(
-                "series_cosine_similarity needs (series, series)"
-                f" — magnitude args are out of subset: {a!r}"
-            )
-        s1, s2 = a[0].strip(), a[1].strip()
-
-        def _dot(u: str, v: str) -> str:
-            return _series_fold_sum(_series_zip_sql([u, v], "*"))
-
-        return (
-            f"({_dot(s1, s2)} / (sqrt({_dot(s1, s1)})"
-            f" * sqrt({_dot(s2, s2)})))"
-        )
-
-    e = _rewrite_fn(e, "series_dot_product", _series_dot_sql)
-    e = _rewrite_fn(e, "series_cosine_similarity", _series_cos_sql)
-
-    def _series_pearson_sql(a: list[str]) -> str:
-        # series_pearson_correlation (round-10 probe battery 11):
-        # r = (n·Σxy − Σx·Σy) / sqrt((n·Σx² − Σx²)(n·Σy² − Σy²)) —
-        # map-side zip + left-folds in array order; NULL (not an
-        # error) on zero variance.
-        if len(a) != 2:
-            raise ValueError(
-                f"series_pearson_correlation needs (s1, s2): {a!r}"
-            )
-        x, y = a[0].strip(), a[1].strip()
-
-        def _sum(arr: str) -> str:
-            return (
-                f"aggregate({arr}, CAST(0 AS DOUBLE),"
-                " (_acc, _x) -> _acc + CAST(_x AS DOUBLE))"
-            )
-
-        n = f"CAST(size({x}) AS DOUBLE)"
-        sx, sy = _sum(x), _sum(y)
-        sxx = _sum(f"transform({x}, _x -> CAST(_x AS DOUBLE)"
-                   " * CAST(_x AS DOUBLE))")
-        syy = _sum(f"transform({y}, _x -> CAST(_x AS DOUBLE)"
-                   " * CAST(_x AS DOUBLE))")
-        sxy = _sum(
-            f"zip_with({x}, {y}, (_x, _y) -> CAST(_x AS DOUBLE)"
-            " * CAST(_y AS DOUBLE))"
-        )
-        return (
-            f"(({n} * {sxy} - {sx} * {sy})"
-            f" / nullif(sqrt(({n} * {sxx} - {sx} * {sx})"
-            f" * ({n} * {syy} - {sy} * {sy})), CAST(0 AS DOUBLE)))"
-        )
-
-    e = _rewrite_fn(
-        e, "series_pearson_correlation", _series_pearson_sql
-    )
-    # element-wise comparisons -> boolean series
-    for _nm, _cmp in (
-        ("series_greater_equals", ">="),
-        ("series_less_equals", "<="),
-        ("series_not_equals", "<>"),
-        ("series_greater", ">"),
-        ("series_less", "<"),
-        ("series_equals", "="),
-    ):
-        e = _rewrite_fn(
-            e,
-            _nm,
-            lambda a, _op=_cmp: (
-                f"transform({a[0]}, _x -> CAST(_x AS DOUBLE)"
-                f" {_op} CAST({a[1]} AS DOUBLE))"
-                if len(a) == 2
-                and re.match(r"^-?\d+(\.\d+)?$", a[1].strip())
-                else f"zip_with({a[0]}, {a[1]}, (_x, _y) ->"
-                f" CAST(_x AS DOUBLE) {_op} CAST(_y AS DOUBLE))"
-            ),
-        )
-
-    def _make_timespan_sql(a: list[str]) -> str:
-        # ADX forms: (hour, minute), (hour, minute, second),
-        # (day, hour, minute, second)
-        if len(a) == 2:
-            d, h, m_, s_ = "0", a[0], a[1], "0"
-        elif len(a) == 3:
-            d, h, m_, s_ = "0", a[0], a[1], a[2]
-        elif len(a) == 4:
-            d, h, m_, s_ = a
-        else:
-            raise ValueError(
-                f"make_timespan needs 2-4 arguments: {a!r}"
-            )
-        return (
-            f"make_dt_interval({d}, {h}, {m_},"
-            f" CAST({s_} AS DECIMAL(18, 6)))"
-        )
-
-    e = _rewrite_fn(e, "make_timespan", _make_timespan_sql)
-    # now(offset) — now() plus a (negative) timespan (round-7; the
-    # bare form is handled by the generic rename below)
-    e = _rewrite_fn(
-        e,
-        "now",
-        lambda a: (
-            "current_timestamp()"
-            if not a
-            else f"(current_timestamp() + ({a[0]}))"
-        ),
-    )
-    def _replace_strings_sql(a: list[str]) -> str:
-        # replace_strings(text, lookups, rewrites) — each lookup
-        # replaced by its positional rewrite, applied IN ORDER over
-        # the running result (the ADX contract; later lookups see
-        # earlier replacements). One left fold over the zipped pair
-        # arrays, map-side. (probe battery 13)
-        if len(a) != 3:
-            raise ValueError(
-                f"replace_strings needs (text, lookups, rewrites): {a!r}"
-            )
-        t, lk, rw = (x.strip() for x in a)
-        return (
-            f"aggregate(zip_with({lk}, {rw},"
-            " (_l, _r) -> named_struct('l', _l, 'r', _r)),"
-            f" CAST({t} AS STRING),"
-            " (_acc, _p) -> replace(_acc, _p.l, _p.r))"
-        )
-
-    e = _rewrite_fn(e, "replace_strings", _replace_strings_sql)
-    e = _sub_outside_strings(r"\breplace_string\(", "replace(", e)
-    # trim family: ADX trims REPEATED regex matches from the ends
-    def _trim2(a: list[str], name: str) -> tuple[str, str]:
-        if len(a) != 2:
-            raise ValueError(f"{name} needs (regex, text): {a!r}")
-        return a[0], a[1]
-
-    e = _rewrite_fn(
-        e,
-        "trim_start",
-        lambda a: (
-            lambda rx, t: f"regexp_replace({t}, concat('^(', {rx}, ')+'), '')"
-        )(*_trim2(a, "trim_start")),
-    )
-    e = _rewrite_fn(
-        e,
-        "trim_end",
-        lambda a: (
-            lambda rx, t: f"regexp_replace({t}, concat('(', {rx}, ')+$'), '')"
-        )(*_trim2(a, "trim_end")),
-    )
-    e = _rewrite_fn(
-        e,
-        "trim",
-        lambda a: (
-            lambda rx, t: (
-                f"regexp_replace({t}, concat('^(', {rx}, ')+|(',"
-                f" {rx}, ')+$'), '')"
-            )
-        )(*_trim2(a, "trim")),
-    )
-    # ADX repeat(value, count) builds an ARRAY — must rewrite BEFORE
-    # strrep maps to Spark's string repeat() (round-6: Spark repeat(1,3)
-    # silently produced '111' instead of [1,1,1])
-    e = _sub_outside_strings(r"\brepeat\(", "array_repeat(", e)
-    # strrep 3-arg carries a delimiter between repetitions (battery
-    # 21): join n copies; the 2-arg form is Spark's string repeat
-    e = _rewrite_fn(
-        e,
-        "strrep",
-        lambda a: (
-            f"repeat({a[0]}, {a[1]})"
-            if len(a) == 2
-            else (
-                f"array_join(array_repeat(CAST({a[0].strip()} AS"
-                f" STRING), CAST({a[1].strip()} AS INT)),"
-                f" {a[2].strip()})"
-            )
-        ),
-    )
-    e = _sub_outside_strings(r"\bmin_of\(", "least(", e)
-    e = _sub_outside_strings(r"\bmax_of\(", "greatest(", e)
-    e = _sub_outside_strings(r"\bisnull\(([^()]+)\)", r"(\1 IS NULL)", e)
-    e = _sub_outside_strings(r"\bisnotnull\(([^()]+)\)", r"(\1 IS NOT NULL)", e)
-    # tohex: ADX returns LOWERCASE hex without leading zeros
-    e = _rewrite_fn(e, "tohex", lambda a: f"lower(hex({a[0]}))")
-    # base64_decode_toarray (round-8, was a loud gap): bytes as longs —
-    # hex the decoded binary, read it in 2-char pairs (conv is the
-    # only per-byte accessor that stays a builtin expression)
-    e = _rewrite_fn(
-        e,
-        "base64_decode_toarray",
-        lambda a: (
-            # empty-input guard (round-9 advice): sequence(1, 0) is the
-            # DESCENDING array [1, 0] in Spark, which yielded
-            # [NULL, NULL] for '' — ADX returns []
-            f"IF(length(unbase64({a[0]})) = 0,"
-            " CAST(array() AS ARRAY<BIGINT>),"
-            f" transform(sequence(1, length(unbase64({a[0]}))),"
-            f" _i -> CAST(conv(substr(hex(unbase64({a[0]})),"
-            " _i * 2 - 1, 2), 16, 10) AS BIGINT)))"
-        ),
-    )
-    e = _sub_outside_strings(r"\bbase64_encode_tostring\(", "base64(", e)
-    e = _rewrite_fn(
-        e, "base64_decode_tostring", lambda a: f"string(unbase64({a[0]}))"
-    )
-    # ADX log() is natural log (Spark's 1-arg log already is); log10/
-    # log2/exp/sign/abs/sqrt/pow pass through by name
-    # bin_at / datetime arithmetic / part getters
-    e = _rewrite_fn(e, "bin_at", _bin_at_sql)
-
-    def _bin2_sql(a: list[str]) -> str:
-        # timespan-literal bins were consumed by _bin_to_sql above;
-        # what reaches here is the NUMERIC form — the same snap-down
-        # as 2-arg floor (ADX: floor() and bin() are synonyms).
-        if len(a) != 2:
-            raise ValueError(f"bin needs (value, roundTo): {a!r}")
-        v, s_ = a[0].strip(), a[1].strip()
-        return (
-            f"(floor(CAST({v} AS DOUBLE) / CAST({s_} AS DOUBLE))"
-            f" * CAST({s_} AS DOUBLE))"
-        )
-
-    e = _rewrite_fn(e, "bin", _bin2_sql)
-    e = _rewrite_fn(e, "datetime_diff", _datetime_diff_sql)
-    e = _rewrite_fn(e, "datetime_add", _datetime_add_sql)
-    e = _sub_outside_strings(r"\bgetyear\(", "year(", e)
-    e = _sub_outside_strings(r"\bgetmonth\(", "month(", e)
-    e = _sub_outside_strings(r"\bdayofmonth\(", "day(", e)
-    e = _sub_outside_strings(r"\bhourofday\(", "hour(", e)
-    # ADX dayofweek returns a TIMESPAN of whole days since Sunday;
-    # the useful scalar is its day count: 0=Sunday..6=Saturday. The
-    # everyday ADX spelling compares it against a day literal
-    # (`dayofweek(ts) == 0d`) — fold that literal to its day count
-    # BEFORE the timespan-literal rewrite would turn it into an
-    # INTERVAL the numeric refinement cannot compare with (probe
-    # battery 14). Both operand orders.
-    # (the == Nd / ÷ timespan-literal FOLDS moved to _expr's head —
-    # _fold_dayofweek — so they see the RAW KQL call before
-    # _bin_to_sql explodes a bin(...) argument past any finite
-    # nesting depth; battery 28)
-    e = _rewrite_fn(e, "dayofweek", lambda a: f"(dayofweek({a[0]}) - 1)")
-    # arrays & misc
-    e = _sub_outside_strings(r"\bpack_array\(", "array(", e)
-    # array_length is LONG in ADX; Spark size() is INT32 — downstream
-    # arithmetic like `array_length(a) * 16843009` then ANSI-overflows
-    # where ADX computes (fuzz finding, round-11). Null on null input
-    # either way.
-    e = _rewrite_fn(
-        e,
-        "array_length",
-        lambda a: f"CAST(size({a[0]}) AS BIGINT)",
-    )
-    e = _sub_outside_strings(r"\barray_concat\(", "concat(", e)
-    # Literal array subscripts (round-11, probe battery 12): ADX
-    # arr[-1] reads from the END, and ANY dynamic out-of-range index
-    # is null; Spark's native [] is 0-based but raises
-    # INVALID_ARRAY_INDEX under ANSI for negatives and out-of-range
-    # positives. try_element_at is 1-based, counts -1 = last, and
-    # yields NULL out of range — exactly the ADX contract for both
-    # signs. Stored-dynamic STRING/VARIANT column chains were already
-    # consumed by the accessor path above; what reaches this rewrite
-    # is true-array indexing (split(…)[0], packed arrays, zipped
-    # results).
     e = _rewrite_literal_subscripts(e)
-
-    def _array_index_of_sql(a: list[str]) -> str:
-        # ADX is 0-based with -1 for missing; array_position is 1-based
-        # with 0 (and NULL-safe via coalesce for a NULL haystack).
-        # 3-arg form searches from a 0-based start (negative counts
-        # from the end) — round-10 probe battery 9: the start arg was
-        # silently DROPPED before. length/occurrence implemented in
-        # round 11 (battery 16) below.
-        if len(a) == 2:
-            return f"(coalesce(array_position({a[0]}, {a[1]}), 0) - 1)"
-        if len(a) == 3:
-            arr, val = a[0], a[1]
-            s0 = f"CAST({a[2]} AS INT)"
-            # from-end starts clamp at the array head: start < -size
-            # would feed slice() a nonpositive start (Spark runtime
-            # error) where ADX gracefully searches the whole array
-            # (round-10 advice)
-            s_ = (
-                f"IF({s0} >= 0, {s0},"
-                f" greatest(size({arr}) + {s0}, 0))"
-            )
-            pos = (
-                f"coalesce(array_position(slice({arr}, ({s_}) + 1,"
-                f" size({arr})), {val}), 0)"
-            )
-            return f"IF(({pos}) = 0, -1, ({pos}) - 1 + ({s_}))"
-        if len(a) in (4, 5):
-            # length (4th) bounds the window to [start, start+length)
-            # (-1 = unbounded); occurrence (5th) picks the Nth match
-            # (round-11 probe battery 16, was a loud gap). One
-            # transform+filter pass collecting matching 0-based
-            # positions, then try_element_at(occurrence) — NULL out of
-            # range folds to ADX's -1.
-            arr, val = a[0], a[1]
-            s0 = f"CAST({a[2]} AS INT)"
-            s_ = (
-                f"IF({s0} >= 0, {s0},"
-                f" greatest(size({arr}) + {s0}, 0))"
-            )
-            ln = f"CAST({a[3]} AS INT)"
-            occ = f"CAST({a[4]} AS INT)" if len(a) == 5 else "1"
-            pos = (
-                f"filter(transform(sequence(1, size({arr})), _i ->"
-                f" IF(element_at({arr}, _i) = ({val})"
-                f" AND _i - 1 >= ({s_})"
-                f" AND (({ln}) < 0 OR _i - 1 < ({s_}) + ({ln})),"
-                " _i - 1, -1)), _p -> _p >= 0)"
-            )
-            return f"coalesce(try_element_at({pos}, {occ}), -1)"
-        raise ValueError(
-            "array_index_of supports (arr, value[, start[, length[,"
-            f" occurrence]]]): {a!r}"
-        )
-
-    e = _rewrite_fn(e, "array_index_of", _array_index_of_sql)
-    def _indexof_sql(a: list[str]) -> str:
-        # 0-based, -1 missing; 3-arg form searches from a 0-based start
-        # via locate() (review finding: start was silently dropped)
-        if len(a) == 2:
-            return f"(CAST(instr({a[0]}, {a[1]}) AS BIGINT) - 1)"
-        if len(a) == 3:
-            return (
-                f"(CAST(locate({a[1]}, {a[0]},"
-                f" CAST({a[2]} AS INT) + 1) AS BIGINT) - 1)"
-            )
-        if len(a) in (4, 5):
-            # 4/5-arg form (probe battery 14): length must be the
-            # literal -1 (search the remainder — a bounded window
-            # would need substring gymnastics, explicit subset) and
-            # occurrence a literal 1..9: the o-th match via a chained
-            # locate, each step guarded so a missing earlier
-            # occurrence stays 0 (-1 result) instead of restarting
-            # from the head
-            if a[3].strip() != "-1":
-                raise ValueError(
-                    "indexof length argument supports -1 (remainder)"
-                    f" only — explicit-subset contract: {a!r}"
-                )
-            occ = a[4].strip() if len(a) == 5 else "1"
-            if not re.match(r"^[1-9]$", occ):
-                raise ValueError(
-                    "indexof occurrence must be a literal 1..9:"
-                    f" {a!r}"
-                )
-            pos = (
-                f"locate({a[1]}, {a[0]}, CAST({a[2]} AS INT) + 1)"
-            )
-            for _ in range(int(occ) - 1):
-                pos = (
-                    f"IF(({pos}) = 0, 0,"
-                    f" locate({a[1]}, {a[0]}, ({pos}) + 1))"
-                )
-            return f"(CAST({pos} AS BIGINT) - 1)"
-        raise ValueError(
-            f"indexof supports (source, lookup [, start"
-            f"[, length, occurrence]]): {a!r}"
-        )
-
-    e = _rewrite_fn(e, "indexof", _indexof_sql)
-
-    # --- scalar batch 5 (round-6): set ops, array rotate/shift/iff/
-    # zip, crypto hashes, datetime constructors, regex count/index,
-    # ipv4 family, parse_version, strcat_delim, isascii/isutf8,
-    # todecimal/toguid, format_bytes ---
-    def _set_fold(a: list[str], fn: str) -> str:
-        if len(a) < 2:
-            raise ValueError(f"set op needs >= 2 arrays: {a!r}")
-        out = a[0].strip()
-        for nxt in a[1:]:
-            out = f"{fn}({out}, {nxt.strip()})"
-        return out
-
-    e = _rewrite_fn(e, "set_union", lambda a: _set_fold(a, "array_union"))
-    e = _rewrite_fn(
-        e, "set_intersect", lambda a: _set_fold(a, "array_intersect")
-    )
-    e = _rewrite_fn(
-        e, "set_difference", lambda a: _set_fold(a, "array_except")
-    )
-
-    def _array_iff_sql(a: list[str]) -> str:
-        # element-wise conditional; output length = condition length,
-        # shorter value arrays read as NULL (ADX contract). NULL
-        # condition cells yield NULL (neither branch), like ADX.
-        if len(a) != 3:
-            raise ValueError(f"array_iff needs (cond, x, y): {a!r}")
-        c, x, y = (s.strip() for s in a)
-        return (
-            f"transform({c}, (_c, _i) -> CASE WHEN _c THEN"
-            f" try_element_at({x}, _i + 1) WHEN NOT _c THEN"
-            f" try_element_at({y}, _i + 1) END)"
-        )
-
-    e = _rewrite_fn(e, "array_iff", _array_iff_sql)
-    e = _rewrite_fn(e, "array_if", _array_iff_sql)  # documented alias
-
-    def _array_rotate_sql(a: list[str], sign: str) -> str:
-        if len(a) != 2:
-            raise ValueError(f"array_rotate needs (arr, n): {a!r}")
-        arr, n = a[0].strip(), a[1].strip()
-        # pmod handles negative rotations (rotate_right = negative
-        # left-rotation); empty arrays pass through
-        k = f"pmod({sign}({n}), size({arr}))"
-        return (
-            f"IF(size({arr}) <= 1 OR {k} = 0, {arr},"
-            f" concat(slice({arr}, {k} + 1, size({arr}) - {k}),"
-            f" slice({arr}, 1, {k})))"
-        )
-
-    e = _rewrite_fn(
-        e, "array_rotate_left", lambda a: _array_rotate_sql(a, "")
-    )
-    e = _rewrite_fn(
-        e, "array_rotate_right", lambda a: _array_rotate_sql(a, "-")
-    )
-
-    def _array_shift_sql(a: list[str], sign: str) -> str:
-        # shift keeps the length; vacated cells take the fill value
-        # (default NULL). BETWEEN guard: Spark's negative element_at
-        # indexes count from the END, which would wrap the shift.
-        if len(a) not in (2, 3):
-            raise ValueError(f"array_shift needs (arr, n[, fill]): {a!r}")
-        arr, n = a[0].strip(), a[1].strip()
-        fill = a[2].strip() if len(a) == 3 else "NULL"
-        return (
-            f"transform({arr}, (_e, _i) -> IF(_i + 1 + {sign}({n})"
-            f" BETWEEN 1 AND size({arr}),"
-            f" try_element_at({arr}, _i + 1 + {sign}({n})), {fill}))"
-        )
-
-    e = _rewrite_fn(
-        e, "array_shift_left", lambda a: _array_shift_sql(a, "")
-    )
-    e = _rewrite_fn(
-        e, "array_shift_right", lambda a: _array_shift_sql(a, "-")
-    )
-
-    def _zip_sql(a: list[str]) -> str:
-        # ADX zip: array of N-element arrays. Same-typed arrays only
-        # (Spark arrays are homogeneous — ADX's mixed dynamics are out
-        # of the subset); N >= 2 inputs fold pairwise (round-7).
-        if len(a) < 2:
-            raise ValueError(f"zip needs at least two arrays: {a!r}")
-        out = (
-            f"zip_with({a[0].strip()}, {a[1].strip()},"
-            " (_l, _r) -> array(_l, _r))"
-        )
-        for nxt in a[2:]:
-            out = (
-                f"zip_with({out}, {nxt.strip()},"
-                " (_l, _r) -> array_append(_l, _r))"
-            )
-        return out
-
-    e = _rewrite_fn(e, "zip", _zip_sql)
-    e = _rewrite_fn(e, "hash_sha256", lambda a: f"sha2({a[0]}, 256)")
-    e = _rewrite_fn(e, "hash_sha512", lambda a: f"sha2({a[0]}, 512)")
-    e = _sub_outside_strings(r"\bhash_sha1\(", "sha1(", e)
-    # hash_many: one combined hash over all arguments — the same
-    # deterministic-refinement note as hash_combine (ADX documents no
-    # algorithm for either; xxhash64 is this engine's hash())
-    e = _sub_outside_strings(r"\bhash_many\(", "xxhash64(", e)
-    e = _sub_outside_strings(r"\bhash_md5\(", "md5(", e)
-
-    def _make_datetime_sql(a: list[str]) -> str:
-        if len(a) == 3:
-            return (
-                f"make_timestamp({a[0]}, {a[1]}, {a[2]}, 0, 0, 0)"
-            )
-        if len(a) == 6:
-            return "make_timestamp(" + ", ".join(s.strip() for s in a) + ")"
-        raise ValueError(
-            f"make_datetime needs (y,m,d) or (y,m,d,h,mi,s): {a!r}"
-        )
-
-    e = _rewrite_fn(e, "make_datetime", _make_datetime_sql)
-    e = _sub_outside_strings(
-        r"\bunixtime_seconds_todatetime\(", "timestamp_seconds(", e
-    )
-    e = _sub_outside_strings(
-        r"\bunixtime_milliseconds_todatetime\(", "timestamp_millis(", e
-    )
-    e = _sub_outside_strings(
-        r"\bunixtime_microseconds_todatetime\(", "timestamp_micros(", e
-    )
-    e = _rewrite_fn(
-        e,
-        "unixtime_nanoseconds_todatetime",
-        lambda a: f"timestamp_micros(CAST(({a[0]}) div 1000 AS BIGINT))",
-    )
-    e = _sub_outside_strings(r"\bnew_guid\(\)", "uuid()", e)
-    e = _rewrite_fn(
-        e,
-        "countof_regex",
-        lambda a: f"size(regexp_extract_all({a[0]}, {a[1]}, 0))",
-    )
-    e = _rewrite_fn(
-        e,
-        "indexof_regex",
-        # 0-based first-match position, -1 when absent (regexp_instr
-        # is 1-based with 0-absent — one subtraction aligns both)
-        lambda a: (
-            f"(CAST(regexp_instr({a[0]}, {a[1]}) AS BIGINT) - 1)"
-        ),
-    )
-
-    def _parse_ipv4_mask_sql(a: list[str]) -> str:
-        # parse_ipv4_mask(ip, prefix): the address as a long with the
-        # low (32 - prefix) bits zeroed — dynamic prefix allowed (one
-        # shiftleft, map-side). NULL outside [0, 32] like ADX.
-        if len(a) != 2:
-            raise ValueError(f"parse_ipv4_mask needs (ip, prefix): {a!r}")
-        shift = (
-            f"(CASE WHEN CAST({a[1]} AS INT) BETWEEN 0 AND 32 THEN"
-            f" shiftleft(CAST(1 AS BIGINT), 32 - CAST({a[1]} AS INT))"
-            " END)"
-        )
-        return (
-            f"((({_parse_ipv4_expr(a[0])}) div {shift}) * {shift})"
-        )
-
-    e = _rewrite_fn(e, "parse_ipv4_mask", _parse_ipv4_mask_sql)
-    e = _rewrite_fn(e, "parse_ipv4", lambda a: _parse_ipv4_expr(a[0]))
-
-    # --- ipv6 family (round-11 probe battery 16). The canonical form
-    # (_parse_ipv6_expr) is 8 zero-padded lowercase hextets, so
-    # lexicographic compare == numeric compare, and prefix masks work
-    # on the 32-nibble hex string: full nibbles by substr equality,
-    # the partial nibble by a conv()-shifted compare. Addresses may
-    # carry '/nn' suffixes (effective prefix = min of both sides and
-    # the optional argument, the ipv4_is_match contract). IPv4 inputs
-    # canonicalize to the ::ffff: transitional form, so mixed
-    # ipv4/ipv6 comparisons work like ADX. All map-side builtins. ---
-    def _v6addr(x: str) -> str:
-        # canonical 32-nibble hex (colons stripped), suffix removed
-        base = f"element_at(split({x}, '/'), 1)"
-        return f"replace({_parse_ipv6_expr(base)}, ':', '')"
-
-    def _v6sfx(x: str) -> str:
-        return (
-            f"coalesce(try_cast(try_element_at(split({x}, '/'), 2)"
-            " AS INT), 128)"
-        )
-
-    def _v6masked(c: str, pfx: str) -> str:
-        # the compare key under a prefix: full nibbles verbatim plus
-        # the masked partial nibble's hex digit (0-15 -> one char)
-        n = f"(({pfx}) div 4)"
-        rem = f"(({pfx}) % 4)"
-        part = (
-            f"lower(hex(CAST(FLOOR(conv(substr({c}, {n} + 1, 1), 16,"
-            f" 10) / pow(2, 4 - {rem})) AS INT)))"
-        )
-        return (
-            f"concat(substr({c}, 1, {n}),"
-            f" IF({rem} = 0, '', {part}))"
-        )
-
-    def _v6bind(x1: str, x2: str, pfx: str, body: str) -> str:
-        # bind both canonical addresses and the effective prefix ONCE
-        # via transform-over-one-element lambdas (each canonical form
-        # is a ~2 KB expression — without binding it would repeat 4x)
-        return (
-            f"element_at(transform(array({_v6addr(x1)}), _c1 ->"
-            f" element_at(transform(array({_v6addr(x2)}), _c2 ->"
-            f" element_at(transform(array(CAST(({pfx}) AS INT)),"
-            f" _pf -> {body}), 1)), 1)), 1)"
-        )
-
-    def _ipv6_compare_sql(a: list[str]) -> str:
-        if len(a) != 2:
-            raise ValueError(f"ipv6_compare needs (ip1, ip2): {a!r}")
-        x1, x2 = a[0].strip(), a[1].strip()
-        pfx = f"least({_v6sfx(x1)}, {_v6sfx(x2)})"
-        m1 = _v6masked("_c1", "_pf")
-        m2 = _v6masked("_c2", "_pf")
-        body = (
-            f"CASE WHEN {m1} < {m2} THEN CAST(-1 AS BIGINT)"
-            f" WHEN {m1} > {m2} THEN 1"
-            f" WHEN {m1} = {m2} THEN 0 END"
-        )
-        return f"({_v6bind(x1, x2, pfx, body)})"
-
-    def _ipv6_is_match_sql(a: list[str]) -> str:
-        if len(a) not in (2, 3):
-            raise ValueError(
-                f"ipv6_is_match needs (ip1, ip2[, prefix]): {a!r}"
-            )
-        x1, x2 = a[0].strip(), a[1].strip()
-        parts = [_v6sfx(x1), _v6sfx(x2)]
-        if len(a) == 3:
-            parts.append(f"CAST({a[2]} AS INT)")
-        pfx = f"least({', '.join(parts)})"
-        body = (
-            f"({_v6masked('_c1', '_pf')} = {_v6masked('_c2', '_pf')})"
-        )
-        return f"({_v6bind(x1, x2, pfx, body)})"
-
-    def _ipv6_in_range_sql(a: list[str]) -> str:
-        # the range side's suffix is the effective prefix (default
-        # 128); both sides may be any expression
-        if len(a) != 2:
-            raise ValueError(
-                f"ipv6_is_in_range needs (ip, range): {a!r}"
-            )
-        x, rng = a[0].strip(), a[1].strip()
-        body = (
-            f"({_v6masked('_c1', '_pf')} = {_v6masked('_c2', '_pf')})"
-        )
-        return f"({_v6bind(x, rng, _v6sfx(rng), body)})"
-
-    def _parse_ipv6_mask_sql(a: list[str]) -> str:
-        # parse_ipv6_mask(ip, prefix): the canonical form with the
-        # low (128 - prefix) bits zeroed — full nibbles + the masked
-        # partial nibble, right-padded with zeros, re-coloned
-        if len(a) != 2:
-            raise ValueError(
-                f"parse_ipv6_mask needs (ip, prefix): {a!r}"
-            )
-        h32 = (
-            f"rpad({_v6masked('_c1', '_pf')}, 32, '0')"
-        )
-        body = (
-            f"CASE WHEN _pf BETWEEN 0 AND 128 THEN"
-            f" array_join(transform(sequence(0, 7), _k ->"
-            f" substr({h32}, _k * 4 + 1, 4)), ':') END"
-        )
-        return (
-            f"(element_at(transform(array({_v6addr(a[0].strip())}),"
-            f" _c1 -> element_at(transform(array(CAST(({a[1]}) AS"
-            f" INT)), _pf -> {body}), 1)), 1))"
-        )
-
-    e = _rewrite_fn(e, "parse_ipv6_mask", _parse_ipv6_mask_sql)
-    e = _rewrite_fn(e, "parse_ipv6", lambda a: _parse_ipv6_expr(a[0]))
-    e = _rewrite_fn(e, "ipv6_compare", _ipv6_compare_sql)
-    e = _rewrite_fn(e, "ipv6_is_match", _ipv6_is_match_sql)
-    e = _rewrite_fn(e, "ipv6_is_in_range", _ipv6_in_range_sql)
-    def _has_ip_pattern(ip: str, prefix: bool) -> tuple[str, str]:
-        """SQL for the delimited-occurrence regex of one SPECIFIC
-        ipv4 (or ipv4 PREFIX) expression. A string literal folds into
-        the pattern at translate time; any other expression builds the
-        pattern at runtime (dots escaped via replace). The token must
-        be a complete valid dotted quad either way — battery 21 caught
-        the old form matching ANY ipv4 ('10.1.2.34' satisfied
-        has_ipv4(text, '10.1.2.3'), a silent value bug."""
-        ip = ip.strip()
-        lm = re.match(r"^'((?:[^']|'')*)'$", ip)
-        # prefix: a complete valid ipv4 whose text STARTS with the
-        # prefix (lookahead) — '10.1.2.34' satisfies prefix
-        # '10.1.2.3'. exact: the delimited ip and nothing more (a
-        # lookahead + generic ipv4 tail would let '10.1.2.34'
-        # satisfy '10.1.2.3').
-        open_g = "(?=" if prefix else "("
-        close_g = f"){_IPV4_RE}($|[^0-9.])" if prefix else ")($|[^0-9.])"
-        if lm:
-            quoted = lm.group(1).replace(".", "\\\\.")
-            pat = f"'(^|[^0-9.]){open_g}{quoted}{close_g}'"
-        else:
-            pat = (
-                f"concat('(^|[^0-9.]){open_g}',"
-                f" replace({ip}, '.', '\\\\.'), '{close_g}')"
-            )
-        valid = (
-            f"({ip}) RLIKE '^[0-9.]+$'"
-            if prefix
-            else f"({ip}) RLIKE '^{_IPV4_RE}$'"
-        )
-        return pat, valid
-
-    def _has_ipv4_sql(a: list[str], prefix: bool, name: str) -> str:
-        if len(a) != 2:
-            raise ValueError(f"{name} needs (source, ip): {a!r}")
-        pat, valid = _has_ip_pattern(a[1], prefix)
-        return (
-            f"coalesce(({a[0].strip()}) RLIKE {pat}"
-            f" AND {valid}, false)"
-        )
-
-    def _list_literal_items(arg: str) -> list[str] | None:
-        # a dynamic([...]) / pack_array(...) LITERAL list, unpacked to
-        # its top-level items at translate time; None when not a list
-        m = re.match(r"^\s*dynamic\s*\(\s*\[(.*)\]\s*\)\s*$", arg, re.S)
-        if m:
-            return _split_top_level(m.group(1))
-        m = re.match(r"^\s*pack_array\s*\((.*)\)\s*$", arg, re.S)
-        if m:
-            return _split_top_level(m.group(1))
-        return None
-
-    def _has_any_ipv4_sql(a: list[str], prefix: bool, name: str) -> str:
-        # list form: either varargs of strings or ONE dynamic([...])/
-        # pack_array(...) literal list (the documented shapes; a
-        # runtime array column is indistinguishable from a string
-        # column at translate time — explicit subset)
-        if len(a) < 2:
-            raise ValueError(f"{name} needs (source, ip, ...): {a!r}")
-        ips = a[1:]
-        if len(ips) == 1:
-            items = _list_literal_items(ips[0])
-            if items is not None:
-                ips = items
-        parts = [_has_ipv4_sql([a[0], ip], prefix, name) for ip in ips]
-        return "(" + " OR ".join(parts) + ")"
-
-    e = _rewrite_fn(
-        e,
-        "has_any_ipv4_prefix",
-        lambda a: _has_any_ipv4_sql(a, True, "has_any_ipv4_prefix"),
-    )
-    e = _rewrite_fn(
-        e,
-        "has_any_ipv4",
-        lambda a: _has_any_ipv4_sql(a, False, "has_any_ipv4"),
-    )
-    e = _rewrite_fn(
-        e,
-        "has_ipv4_prefix",
-        lambda a: _has_ipv4_sql(a, True, "has_ipv4_prefix"),
-    )
-    e = _rewrite_fn(
-        e, "has_ipv4", lambda a: _has_ipv4_sql(a, False, "has_ipv4")
-    )
-
-    def _ipv4_range_test(ip_sql: str, rng: str) -> str:
-        # one literal 'a.b.c.d[/nn]' range (no suffix = /32) against a
-        # pre-translated ip expression
-        rm = re.match(
-            r"^'(\d{1,3})\.(\d{1,3})\.(\d{1,3})\.(\d{1,3})(?:/(\d{1,2}))?'$",
-            rng.strip(),
-        )
-        if not rm:
-            raise ValueError(
-                "ipv4_is_in_range needs a literal 'a.b.c.d[/nn]' range"
-                f" (explicit subset): {rng!r}"
-            )
-        o = [int(rm.group(i)) for i in range(1, 5)]
-        bits = int(rm.group(5)) if rm.group(5) is not None else 32
-        if bits > 32 or any(x > 255 for x in o):
-            raise ValueError(f"bad ipv4 range: {rng!r}")
-        base = (o[0] << 24) + (o[1] << 16) + (o[2] << 8) + o[3]
-        shift = 2 ** (32 - bits)
-        return f"(({ip_sql}) div {shift} = {base // shift})"
-
-    def _ipv4_in_range_sql(a: list[str]) -> str:
-        # range(s) must be 'base[/prefix]' literals (resolved at
-        # translate time); the ip side is any expression
-        if len(a) != 2:
-            raise ValueError(f"ipv4_is_in_range needs (ip, range): {a!r}")
-        return _ipv4_range_test(_parse_ipv4_expr(a[0]), a[1])
-
-    def _ipv4_in_any_range_sql(a: list[str]) -> str:
-        # ipv4_is_in_any_range(ip, r1, r2, ...) — OR over literal
-        # ranges; a dynamic([...]) single-arg list unpacks to its
-        # literal elements at translate time (battery 21)
-        if len(a) < 2:
-            raise ValueError(
-                f"ipv4_is_in_any_range needs (ip, range, ...): {a!r}"
-            )
-        ranges = a[1:]
-        if len(ranges) == 1:
-            items = _list_literal_items(ranges[0])
-            if items is not None:
-                ranges = items
-        ip_sql = _parse_ipv4_expr(a[0])
-        parts = [_ipv4_range_test(ip_sql, r) for r in ranges]
-        return "(" + " OR ".join(parts) + ")"
-
-    def _ipv6_in_any_range_sql(a: list[str]) -> str:
-        # ipv6_is_in_any_range(ip, r1, ...) — OR over ranges; a
-        # single dynamic([...]) literal list unpacks at translate
-        # time (round-12 census; same shape as ipv4_is_in_any_range)
-        if len(a) < 2:
-            raise ValueError(
-                f"ipv6_is_in_any_range needs (ip, range, ...): {a!r}"
-            )
-        rs = a[1:]
-        if len(rs) == 1:
-            items = _list_literal_items(rs[0])
-            if items is not None:
-                rs = items
-        parts = [_ipv6_in_range_sql([a[0], r]) for r in rs]
-        return "(" + " OR ".join(parts) + ")"
-
-    e = _rewrite_fn(e, "ipv6_is_in_any_range", _ipv6_in_any_range_sql)
-    e = _rewrite_fn(e, "ipv4_is_in_any_range", _ipv4_in_any_range_sql)
-    e = _rewrite_fn(e, "ipv4_is_in_range", _ipv4_in_range_sql)
-
-    def _ipv4_match_sql(a: list[str]) -> str:
-        # ipv4_is_match(ip1, ip2[, prefix]) — round-9 probe battery 6.
-        # Either ip may carry '/nn' suffix notation; the effective
-        # prefix is the minimum of both suffixes and the optional
-        # prefix argument (the ADX contract). Fully dynamic (no
-        # literal requirement): address and suffix split per side,
-        # one integer shift compare, map-side.
-        if len(a) not in (2, 3):
-            raise ValueError(
-                f"ipv4_is_match needs (ip1, ip2[, prefix]): {a!r}"
-            )
-
-        def addr(x: str) -> str:
-            return _parse_ipv4_expr(f"element_at(split({x}, '/'), 1)")
-
-        def sfx(x: str) -> str:
-            return (
-                f"coalesce(try_cast(try_element_at(split({x}, '/'),"
-                " 2) AS INT), 32)"
-            )
-
-        x1, x2 = a[0].strip(), a[1].strip()
-        parts = [sfx(x1), sfx(x2)]
-        if len(a) == 3:
-            parts.append(f"CAST({a[2]} AS INT)")
-        eff = f"least({', '.join(parts)})"
-        shift = f"shiftleft(CAST(1 AS BIGINT), 32 - {eff})"
-        return (
-            f"(({addr(x1)}) div ({shift})"
-            f" = ({addr(x2)}) div ({shift}))"
-        )
-
-    e = _rewrite_fn(e, "ipv4_is_match", _ipv4_match_sql)
-    e = _rewrite_fn(
-        e,
-        "ipv4_compare",
-        lambda a: (
-            f"CAST(sign(({_parse_ipv4_expr(a[0])})"
-            f" - ({_parse_ipv4_expr(a[1])})) AS BIGINT)"
-        ),
-    )
-
-    def _parse_version_sql(a: list[str]) -> str:
-        # up to 4 dotted numeric components, each weighted 1e8 (the
-        # ADX comparable-decimal encoding); NULL on malformed input
-        s = a[0].strip()
-        return (
-            f"CASE WHEN {s} RLIKE '^[0-9]+(\\\\.[0-9]+){{0,3}}$' THEN"
-            f" aggregate(transform(sequence(1, 4), _i ->"
-            f" coalesce(try_cast(try_element_at(split({s}, '\\\\.'),"
-            " _i) AS DECIMAL(38, 0)), CAST(0 AS DECIMAL(38, 0)))),"
-            " CAST(0 AS DECIMAL(38, 0)),"
-            " (_a, _x) -> _a * 100000000 + _x) END"
-        )
-
-    e = _rewrite_fn(e, "parse_version", _parse_version_sql)
-    e = _rewrite_fn(
-        e,
-        "strcat_delim",
-        # ADX keeps the delimiter around null-as-empty args; concat_ws
-        # SKIPS nulls — coalesce each arg to '' to match ADX. Args
-        # render via the shared tostring rule (_render_string_sql) so
-        # real args drop the '.0' tail like tostring does.
-        lambda a: "concat_ws("
-        + a[0].strip()
-        + ", "
-        + ", ".join(
-            f"coalesce({_render_string_sql(x.strip())}, '')"
-            for x in a[1:]
-        )
-        + ")",
-    )
-    e = _rewrite_fn(
-        e,
-        "isascii",
-        lambda a: (
-            f"coalesce(NOT {a[0].strip()} RLIKE"
-            " '[^\\\\x00-\\\\x7F]', false)"
-        ),
-    )
-    # Spark strings are always valid UTF-8 — isutf8 is a null check
-    e = _rewrite_fn(
-        e, "isutf8", lambda a: f"({a[0].strip()} IS NOT NULL)"
-    )
-    # ADX decimal is 128-bit; DECIMAL(38,18) is the widest Spark twin
-    e = _rewrite_fn(
-        e, "todecimal", lambda a: f"try_cast({a[0]} AS DECIMAL(38, 18))"
-    )
-    e = _rewrite_fn(
-        e,
-        "toguid",
-        # canonical lowercase 8-4-4-4-12 or NULL (ADX guid contract)
-        lambda a: (
-            f"CASE WHEN {a[0].strip()} RLIKE"
-            " '^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}"
-            "-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$'"
-            f" THEN lower({a[0].strip()}) END"
-        ),
-    )
-
-    def _format_bytes_sql(a: list[str]) -> str:
-        # format_bytes(v[, precision[, units]]) with AUTO units
-        # (KB=1024) when the literal units argument is absent: nested
-        # CASE over magnitude; precision defaults to 0. A literal
-        # third argument pins the unit (round-11 probe battery 15).
-        if len(a) not in (1, 2, 3):
-            raise ValueError(
-                f"format_bytes supports (value[, precision[,"
-                f" units]]): {a!r}"
-            )
-        v = a[0].strip()
-        p = a[1].strip() if len(a) >= 2 else "0"
-        if not re.match(r"^\d+$", p):
-            raise ValueError(
-                f"format_bytes precision must be a literal int: {p!r}"
-            )
-
-        def _amt(expr: str) -> str:
-            # precision 0 renders integers (ADX '1 KB', not '1.0 KB')
-            if p == "0":
-                return f"CAST(CAST(round({expr}, 0) AS BIGINT) AS STRING)"
-            return f"CAST(round({expr}, {p}) AS STRING)"
-
-        powers = {
-            "Bytes": 0, "KB": 1, "MB": 2, "GB": 3, "TB": 4,
-            "PB": 5, "EB": 6,
-        }
-        if len(a) == 3:
-            um = re.match(r"^'(\w+)'$", a[2].strip())
-            if not um or um.group(1) not in powers:
-                raise ValueError(
-                    "format_bytes units must be a literal from"
-                    f" {sorted(powers)}: {a[2]!r}"
-                )
-            unit = um.group(1)
-            div = float(1024 ** powers[unit])
-            return (
-                f"concat({_amt(f'({v}) / {div!r}')}, ' {unit}')"
-            )
-        arms = []
-        for unit, power in (
-            ("EB", 6), ("PB", 5), ("TB", 4), ("GB", 3), ("MB", 2),
-            ("KB", 1),
-        ):
-            div = 1024 ** power
-            arms.append(
-                f"WHEN abs({v}) >= {div} THEN"
-                f" concat({_amt(f'({v}) / {div}')}, ' {unit}')"
-            )
-        return (
-            f"CASE {' '.join(arms)} ELSE"
-            f" concat({_amt(f'({v}) * CAST(1 AS DOUBLE)')},"
-            " ' Bytes') END"
-        )
-
-    e = _rewrite_fn(e, "format_bytes", _format_bytes_sql)
-
-    # --- scalar batch 8 (round-6): bit ops, exp2, 2-arg floor (= bin),
-    # datetime_part, timezone converters, gettype, hash_combine,
-    # bounded rand ---
-    e = _rewrite_fn(
-        e, "binary_and", lambda a: f"(({a[0]}) & ({a[1]}))"
-    )
-    e = _rewrite_fn(
-        e, "binary_or", lambda a: f"(({a[0]}) | ({a[1]}))"
-    )
-    e = _rewrite_fn(
-        e, "binary_xor", lambda a: f"(({a[0]}) ^ ({a[1]}))"
-    )
-    e = _rewrite_fn(e, "binary_not", lambda a: f"(~({a[0]}))")
-    e = _sub_outside_strings(r"\bbinary_shift_left\(", "shiftleft(", e)
-    e = _sub_outside_strings(r"\bbinary_shift_right\(", "shiftright(", e)
-    e = _rewrite_fn(
-        e,
-        "bitset_count_ones",
-        # LONG in ADX (Spark bit_count is INT32)
-        lambda a: f"CAST(bit_count({a[0]}) AS BIGINT)",
-    )
-    e = _rewrite_fn(
-        e, "exp2", lambda a: f"power(CAST(2 AS DOUBLE), {a[0]})"
-    )
-
-    def _floor2_sql(a: list[str]) -> str:
-        # ADX floor(value, roundTo) IS bin(): snap down to a multiple
-        # of roundTo. 1-arg floor passes through natively; a timespan
-        # roundTo means datetime bucketing (round-7: the same
-        # epoch-floor shape _bin_to_sql emits for bin(ts, 1d)).
-        if len(a) == 1:
-            return f"floor({a[0]})"
-        if len(a) != 2:
-            raise ValueError(f"floor needs (value[, roundTo]): {a!r}")
-        v, s_ = a[0].strip(), a[1].strip()
-        tm = re.match(r"^(\d+)([smhd])$", s_)
-        if tm:
-            sec = int(tm.group(1)) * _TIMESPAN_SECONDS[tm.group(2)]
-            return (
-                f"to_timestamp(floor(unix_timestamp({v}) / {sec})"
-                f" * {sec})"
-            )
-        return (
-            f"(floor(CAST({v} AS DOUBLE) / CAST({s_} AS DOUBLE))"
-            f" * CAST({s_} AS DOUBLE))"
-        )
-
-    e = _rewrite_fn(e, "floor", _floor2_sql)
-
-    _DT_PARTS = {
-        "year": "year({t})",
-        "quarter": "quarter({t})",
-        "month": "month({t})",
-        "week_of_year": "weekofyear({t})",
-        "day": "day({t})",
-        "dayofyear": "dayofyear({t})",
-        "hour": "hour({t})",
-        "minute": "minute({t})",
-        "second": "second({t})",
-        "millisecond": "CAST((unix_micros({t}) % 1000000)"
-        " div 1000 AS INT)",
-        "microsecond": "CAST(unix_micros({t}) % 1000000 AS INT)",
-    }
-
-    def _datetime_part_sql(a: list[str]) -> str:
-        if len(a) != 2:
-            raise ValueError(f"datetime_part needs (part, dt): {a!r}")
-        pm_ = re.match(r"^'((?:[^']|'')*)'$", a[0].strip())
-        part = (pm_.group(1) if pm_ else a[0]).strip().lower()
-        if part not in _DT_PARTS:
-            raise ValueError(
-                f"datetime_part: unsupported part {part!r}"
-                f" (subset: {sorted(_DT_PARTS)})"
-            )
-        return f"CAST({_DT_PARTS[part].format(t=a[1].strip())} AS INT)"
-
-    e = _rewrite_fn(e, "datetime_part", _datetime_part_sql)
-    e = _rewrite_fn(
-        e,
-        "datetime_utc_to_local",
-        lambda a: f"from_utc_timestamp({a[0]}, {a[1]})",
-    )
-    e = _rewrite_fn(
-        e,
-        "datetime_local_to_utc",
-        lambda a: f"to_utc_timestamp({a[0]}, {a[1]})",
-    )
-
-    def _gettype_sql(a: list[str]) -> str:
-        # Spark type names -> ADX names for the shared scalar types
-        x = a[0].strip()
-        return (
-            f"CASE typeof({x}) WHEN 'bigint' THEN 'long'"
-            " WHEN 'int' THEN 'int' WHEN 'smallint' THEN 'int'"
-            " WHEN 'double' THEN 'real' WHEN 'float' THEN 'real'"
-            " WHEN 'string' THEN 'string'"
-            " WHEN 'timestamp' THEN 'datetime'"
-            " WHEN 'boolean' THEN 'bool'"
-            f" ELSE typeof({x}) END"
-        )
-
-    e = _rewrite_fn(e, "gettype", _gettype_sql)
-    # hash_combine: deterministic refinement — xxhash64 over the input
-    # hashes (ADX's combiner constants are unspecified)
-    e = _sub_outside_strings(r"\bhash_combine\(", "xxhash64(", e)
-
-    def _rand_sql(a: list[str]) -> str:
-        if not a or not a[0].strip():
-            return "rand()"
-        return f"CAST(floor(rand() * ({a[0].strip()})) AS BIGINT)"
-
-    e = _rewrite_fn(e, "rand", _rand_sql)
-    # --- end scalar batch 8 ---
-    # replace_regex(source, regex, rewrite) — same arg order as
-    # regexp_replace; replace_string already maps elsewhere
-    e = _sub_outside_strings(r"\breplace_regex\(", "regexp_replace(", e)
-
-    def _extract_json_sql(a: list[str]) -> str:
-        # ADX extract_json(path, doc[, typeof(t)]) — note the
-        # path-first order (get_json_object is doc-first)
-        if len(a) == 2:
-            return f"get_json_object({a[1].strip()}, {a[0].strip()})"
-        if len(a) == 3:
-            tm = re.match(
-                r"^typeof\s*\(\s*(\w+)\s*\)$", a[2].strip(), re.IGNORECASE
-            )
-            if not tm or tm.group(1).lower() not in _KQL_TYPES:
-                raise ValueError(
-                    f"extract_json needs typeof(<kql type>): {a[2]!r}"
-                )
-            t = _KQL_TYPES[tm.group(1).lower()]
-            inner = f"get_json_object({a[1].strip()}, {a[0].strip()})"
-            return inner if t == "STRING" else f"try_cast({inner} AS {t})"
-        raise ValueError(
-            f"extract_json needs (path, doc[, typeof(t)]): {a!r}"
-        )
-
-    e = _rewrite_fn(e, "extract_json", _extract_json_sql)
-    e = _rewrite_fn(e, "extractjson", _extract_json_sql)
-
-    def _array_split_sql(a: list[str]) -> str:
-        # single 0-based split index -> [prefix, suffix] pair (ADX's
-        # index-ARRAY form is out of the subset)
-        if len(a) != 2:
-            raise ValueError(f"array_split needs (arr, index): {a!r}")
-        arr, ix = a[0].strip(), a[1].strip()
-        return (
-            f"array(slice({arr}, 1, {ix}),"
-            f" slice({arr}, ({ix}) + 1, size({arr}) - ({ix})))"
-        )
-
-    e = _rewrite_fn(e, "array_split", _array_split_sql)
-    # --- end scalar batch 5 ---
-    e = _sub_outside_strings(r"\bdcount_hll\(", "hll_sketch_estimate(", e)
-
-    def _hash_xxhash64_sql(a: list[str]) -> str:
-        # ADX hash_xxhash64(value [, mod]) — the optional second arg
-        # is a MODULO ("output value between 0 and mod-1"), exactly
-        # like hash() below, NOT a seed. The old emission fed it as a
-        # second xxhash64 INPUT, silently returning full-range values
-        # that matched neither ADX nor any seeded xxhash64 (round-13
-        # advice). pmod reduces into [0, mod), same as the hash() rule.
-        if len(a) == 1:
-            return f"xxhash64({a[0]})"
-        if len(a) == 2:
-            return f"pmod(xxhash64({a[0]}), {a[1]})"
-        raise ValueError(f"hash_xxhash64 needs (value [, mod]): {a!r}")
-
-    e = _rewrite_fn(e, "hash_xxhash64", _hash_xxhash64_sql)
-
-    def _hash_sql(a: list[str]) -> str:
-        # ADX hash() IS xxhash64 (documented algorithm), so the 1-arg
-        # form is exact parity. The 2-arg form returns the hash MODULO
-        # mod — a value in [0, mod) — so it must reduce, not feed mod
-        # as a second hash input (round-6 verdict: the blind rename
-        # silently returned full-range values). pmod keeps the result
-        # non-negative like ADX.
-        if len(a) == 1:
-            return f"xxhash64({a[0]})"
-        if len(a) == 2:
-            return f"pmod(xxhash64({a[0]}), {a[1]})"
-        raise ValueError(f"hash needs (value [, mod]): {a!r}")
-
-    e = _rewrite_fn(e, "hash", _hash_sql)
-
-    def _percentile_tdigest_sql(a: list[str]) -> str:
-        # percentile_tdigest(td, p [, typeof(t)]) over the exact
-        # sorted-array tdigest state (see the tdigest aggregate):
-        # nearest-rank — smallest element whose cumulative count
-        # reaches p% — the same convention percentilew uses. Index
-        # clamped into [1, n] (ANSI element_at throws out of range).
-        if len(a) not in (2, 3):
-            raise ValueError(
-                f"percentile_tdigest needs (td, p [, typeof(t)]): {a!r}"
-            )
-        td, p = a[0], a[1]
-        base = (
-            f"element_at({td}, least(size({td}), greatest(1,"
-            f" CAST(ceil(({p}) * size({td}) / 100.0) AS INT))))"
-        )
-        if len(a) == 3:
-            tm = re.match(
-                r"^typeof\s*\(\s*(\w+)\s*\)$", a[2].strip(), re.IGNORECASE
-            )
-            if not tm or tm.group(1).lower() not in _KQL_TYPES:
-                raise ValueError(
-                    f"percentile_tdigest typeof: unknown type {a[2]!r}"
-                )
-            return f"CAST({base} AS {_KQL_TYPES[tm.group(1).lower()]})"
-        return base
-
-    e = _rewrite_fn(e, "percentile_tdigest", _percentile_tdigest_sql)
-
-    def _geo_dist(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
-        # Haversine great-circle distance, mean Earth radius 6371000 m
-        # — documented refinement of ADX geo_distance_2points (ADX's
-        # geodesic model is unspecified beyond WGS-84; haversine is
-        # within 0.5% and deterministic). All map-side JVM trig.
-        return (
-            "(2 * CAST(6371000 AS DOUBLE) * asin(sqrt("
-            f"pow(sin((radians({lat2}) - radians({lat1})) / 2), 2)"
-            f" + cos(radians({lat1})) * cos(radians({lat2}))"
-            f" * pow(sin((radians({lon2}) - radians({lon1})) / 2),"
-            " 2))))"
-        )
-
-    def _geo_dist_sql(a: list[str]) -> str:
-        if len(a) != 4:
-            raise ValueError(
-                f"geo_distance_2points needs (lon1, lat1, lon2,"
-                f" lat2): {a!r}"
-            )
-        return _geo_dist(*a)
-
-    def _geo_circle_sql(a: list[str]) -> str:
-        if len(a) != 5:
-            raise ValueError(
-                "geo_point_in_circle needs (lon, lat, c_lon, c_lat,"
-                f" radius): {a!r}"
-            )
-        return f"({_geo_dist(a[0], a[1], a[2], a[3])} <= ({a[4]}))"
-
-    e = _rewrite_fn(e, "geo_distance_2points", _geo_dist_sql)
-    e = _rewrite_fn(e, "geo_point_in_circle", _geo_circle_sql)
-
-    def _geo_geohash_sql(a: list[str]) -> str:
-        # geo_point_to_geohash(lon, lat [, accuracy]) — standard
-        # geohash base-32 bit interleaving (lon first), as ONE
-        # aggregate() fold over the 5*accuracy bit indices: the
-        # accumulator halves the active lon/lat interval per bit and
-        # flushes a base-32 character every 5 bits. Accuracy is a
-        # translate-time literal 1..18 (ADX default 5); pure builtin
-        # arithmetic, map-side, no UDF.
-        if len(a) not in (2, 3):
-            raise ValueError(
-                f"geo_point_to_geohash needs (lon, lat [, accuracy]):"
-                f" {a!r}"
-            )
-        acc = a[2].strip() if len(a) == 3 else "5"
-        if not re.match(r"^\d+$", acc) or not 1 <= int(acc) <= 18:
-            raise ValueError(
-                "geo_point_to_geohash accuracy must be a literal int"
-                f" in 1..18: {acc!r}"
-            )
-        lon = f"(CAST({a[0]} AS DOUBLE))"
-        lat = f"(CAST({a[1]} AS DOUBLE))"
-        amid = "((_g.alo + _g.ahi) / 2)"
-        bmid = "((_g.blo + _g.bhi) / 2)"
-        bit = (
-            f"(CASE WHEN pmod(_i, 2) = 0 THEN"
-            f" IF({lon} >= {amid}, 1, 0)"
-            f" ELSE IF({lat} >= {bmid}, 1, 0) END)"
-        )
-        cur = f"(_g.c * 2 + {bit})"
-        b32 = "0123456789bcdefghjkmnpqrstuvwxyz"
-        return (
-            f"(CASE WHEN {lat} BETWEEN -90 AND 90"
-            f" AND {lon} BETWEEN -180 AND 180 THEN"
-            f" aggregate(sequence(0, {5 * int(acc) - 1}),"
-            " named_struct("
-            "'alo', CAST(-180 AS DOUBLE), 'ahi', CAST(180 AS DOUBLE),"
-            " 'blo', CAST(-90 AS DOUBLE), 'bhi', CAST(90 AS DOUBLE),"
-            " 's', CAST('' AS STRING), 'c', 0),"
-            " (_g, _i) -> named_struct("
-            f"'alo', IF(pmod(_i, 2) = 0 AND {lon} >= {amid},"
-            f" {amid}, _g.alo),"
-            f" 'ahi', IF(pmod(_i, 2) = 0 AND {lon} < {amid},"
-            f" {amid}, _g.ahi),"
-            f" 'blo', IF(pmod(_i, 2) = 1 AND {lat} >= {bmid},"
-            f" {bmid}, _g.blo),"
-            f" 'bhi', IF(pmod(_i, 2) = 1 AND {lat} < {bmid},"
-            f" {bmid}, _g.bhi),"
-            f" 's', IF(pmod(_i, 5) = 4,"
-            f" concat(_g.s, substr('{b32}', {cur} + 1, 1)), _g.s),"
-            f" 'c', IF(pmod(_i, 5) = 4, 0, {cur})),"
-            " _g -> _g.s) END)"
-        )
-
-    e = _rewrite_fn(e, "geo_point_to_geohash", _geo_geohash_sql)
-
-    def _geo_geohash_central_sql(a: list[str]) -> str:
-        # geo_geohash_to_central_point(geohash) — the decode inverse
-        # (battery 22, was a loud gap): chars -> 5-bit values ->
-        # de-interleaved interval halving (lon on even bits), midpoint
-        # as the GeoJSON dynamic {"type": "Point", "coordinates":
-        # [lon, lat]} ADX returns (dotted access rides the stored-
-        # dynamic JSON path). NULL on a non-base-32 input, the ADX
-        # invalid-input contract. One fold, map-side.
-        if len(a) != 1:
-            raise ValueError(
-                f"geo_geohash_to_central_point needs (geohash): {a!r}"
-            )
-        gh = f"(CAST({a[0].strip()} AS STRING))"
-        b32 = "0123456789bcdefghjkmnpqrstuvwxyz"
-        # per char: locate-1 is the 5-bit value; expand msb-first
-        bits = (
-            f"flatten(transform(split({gh}, ''),"
-            f" _gc -> transform(sequence(4, 0, -1),"
-            f" _gb -> CAST((locate(_gc, '{b32}') - 1) div"
-            " CAST(pow(2, _gb) AS INT) % 2 AS INT))))"
-        )
-        step = (
-            "named_struct('e', NOT _g.e,"
-            " 'alo', IF(_g.e AND _b = 1, (_g.alo + _g.ahi) / 2,"
-            " _g.alo),"
-            " 'ahi', IF(_g.e AND _b = 0, (_g.alo + _g.ahi) / 2,"
-            " _g.ahi),"
-            " 'blo', IF(NOT _g.e AND _b = 1, (_g.blo + _g.bhi) / 2,"
-            " _g.blo),"
-            " 'bhi', IF(NOT _g.e AND _b = 0, (_g.blo + _g.bhi) / 2,"
-            " _g.bhi))"
-        )
-        return (
-            f"(CASE WHEN {gh} RLIKE '^[{b32}]+$' THEN"
-            f" aggregate({bits},"
-            " named_struct('e', true,"
-            " 'alo', CAST(-180 AS DOUBLE), 'ahi', CAST(180 AS DOUBLE),"
-            " 'blo', CAST(-90 AS DOUBLE), 'bhi', CAST(90 AS DOUBLE)),"
-            f" (_g, _b) -> {step},"
-            " _g -> to_json(named_struct('type', 'Point',"
-            " 'coordinates', array((_g.alo + _g.ahi) / 2,"
-            " (_g.blo + _g.bhi) / 2)))) END)"
-        )
-
-    e = _rewrite_fn(
-        e, "geo_geohash_to_central_point", _geo_geohash_central_sql
-    )
-
-    # --- S2 cell functions (round-13; the census's implementable
-    # unresolved entries). Publicly-specified S2 scheme (s2geometry.io
-    # cell hierarchy): lat/lng -> unit XYZ -> cube face -> (u,v) ->
-    # quadratic ST -> 30-bit (i,j) -> Hilbert curve position -> 64-bit
-    # unsigned cell id (3 face bits, 60 position bits, lsb level
-    # marker); token = 16-hex with trailing zeros stripped. All
-    # JVM-side builtin arithmetic (one 30-step aggregate() fold, like
-    # the geohash fold above — foldable for literal args, map-side for
-    # columns, no UDF); unsigned-64 overflow avoided by carrying the
-    # id in DECIMAL(38,0) and hex-converting via conv(). The pure-
-    # Python twin (tests/s2_pyref.py) validates this emission over
-    # random points, Hilbert-adjacency, corner/face-center anchors,
-    # and encode(decode(t)) == t roundtrips. Reference parity: the
-    # reference delegates geo functions to ADX (src/main.go:88-116).
-    _S2_IJ2POS = "0,1,3,2, 0,3,1,2, 2,3,1,0, 2,1,3,0"
-    _S2_POS2IJ = "0,1,3,2, 0,2,3,1, 3,2,0,1, 3,1,0,2"
-    _S2_ORI = "1,0,0,3"
-    _S2_POW61 = "2305843009213693952"
-
-    def _geo_s2cell_sql(a: list[str]) -> str:
-        if len(a) not in (2, 3):
-            raise ValueError(
-                f"geo_point_to_s2cell needs (lon, lat [, level]): {a!r}"
-            )
-        lvl = a[2].strip() if len(a) == 3 else "11"
-        if not re.match(r"^\d+$", lvl) or not 0 <= int(lvl) <= 30:
-            raise ValueError(
-                "geo_point_to_s2cell level must be a literal int in"
-                f" 0..30: {lvl!r}"
-            )
-        lsb = 1 << (2 * (30 - int(lvl)))
-        lon = f"(CAST({a[0]} AS DOUBLE))"
-        lat = f"(CAST({a[1]} AS DOUBLE))"
-        # stage 1: unit XYZ + face (ties resolve z over y over x,
-        # matching S2's LargestAbsComponent)
-        xyz = (
-            "named_struct("
-            f"'x', cos(radians({lat})) * cos(radians({lon})),"
-            f" 'y', cos(radians({lat})) * sin(radians({lon})),"
-            f" 'z', sin(radians({lat})))"
-        )
-        face = (
-            "CASE WHEN abs(_s2p.x) > abs(_s2p.y) THEN"
-            " IF(abs(_s2p.x) > abs(_s2p.z),"
-            " IF(_s2p.x >= 0, 0, 3), IF(_s2p.z >= 0, 2, 5))"
-            " ELSE IF(abs(_s2p.y) > abs(_s2p.z),"
-            " IF(_s2p.y >= 0, 1, 4), IF(_s2p.z >= 0, 2, 5)) END"
-        )
-        # stage 2: face (u,v) via the canonical face_uv projections
-        uv = (
-            "named_struct('f', _s2f.f,"
-            " 'u', CASE _s2f.f"
-            " WHEN 0 THEN _s2f.y / _s2f.x WHEN 1 THEN -_s2f.x / _s2f.y"
-            " WHEN 2 THEN -_s2f.x / _s2f.z WHEN 3 THEN _s2f.z / _s2f.x"
-            " WHEN 4 THEN _s2f.z / _s2f.y ELSE -_s2f.y / _s2f.z END,"
-            " 'v', CASE _s2f.f"
-            " WHEN 0 THEN _s2f.z / _s2f.x WHEN 1 THEN _s2f.z / _s2f.y"
-            " WHEN 2 THEN -_s2f.y / _s2f.z WHEN 3 THEN _s2f.y / _s2f.x"
-            " WHEN 4 THEN -_s2f.x / _s2f.y ELSE -_s2f.x / _s2f.z END)"
-        )
-        # quadratic ST then 30-bit ij (clamped floor)
-        st = (
-            lambda c: f"IF(_s2u.{c} >= 0,"
-            f" 0.5 * sqrt(1 + 3 * _s2u.{c}),"
-            f" 1E0 - 0.5 * sqrt(1 - 3 * _s2u.{c}))"
-        )
-        ij = (
-            lambda c: "CAST(least(1073741823, greatest(0,"
-            f" floor(({st(c)}) * 1073741824))) AS BIGINT)"
-        )
-        # stage 3: Hilbert fold — 2 bits/step, orientation-tracked
-        fold = (
-            "aggregate(sequence(29, 0, -1),"
-            " named_struct('p', CAST(0 AS BIGINT), 'o',"
-            " CAST(_s2i.f % 2 AS INT)),"
-            " (_g, _k) -> element_at(transform(array("
-            f"element_at(array({_S2_IJ2POS}), _g.o * 4"
-            " + CAST((shiftright(_s2i.i, _k) % 2) * 2"
-            " + shiftright(_s2i.j, _k) % 2 AS INT) + 1)),"
-            " _q -> named_struct('p', _g.p * 4 + _q,"
-            f" 'o', CAST(_g.o ^ element_at(array({_S2_ORI}),"
-            " _q + 1) AS INT))), 1),"
-            " _g -> _g.p)"
-        )
-        idexpr = (
-            f"CAST(_s2i.f AS DECIMAL(38, 0)) * {_S2_POW61}"
-            f" + CAST({fold} AS DECIMAL(38, 0)) * 2 + 1"
-        )
-        lvladj = (
-            f"element_at(transform(array({idexpr}), _s2l ->"
-            f" _s2l - _s2l % {2 * lsb} + {lsb}), 1)"
-        )
-        return (
-            f"(CASE WHEN {lat} BETWEEN -90 AND 90"
-            f" AND {lon} BETWEEN -180 AND 180 THEN"
-            f" element_at(transform(array({xyz}), _s2p ->"
-            f" element_at(transform(array(named_struct('f', {face},"
-            " 'x', _s2p.x, 'y', _s2p.y, 'z', _s2p.z)), _s2f ->"
-            f" element_at(transform(array({uv}), _s2u ->"
-            " element_at(transform(array(named_struct("
-            f"'f', _s2u.f, 'i', {ij('u')}, 'j', {ij('v')})), _s2i ->"
-            f" regexp_replace(lpad(lower(conv(CAST({lvladj}"
-            " AS STRING), 10, 16)), 16, '0'), '0+$', '')"
-            "), 1)), 1)), 1)), 1) END)"
-        )
-
-    e = _rewrite_fn(e, "geo_point_to_s2cell", _geo_s2cell_sql)
-
-    def _geo_s2cell_central_sql(a: list[str]) -> str:
-        # geo_s2cell_to_central_point(token) — the decode inverse:
-        # token -> unsigned id (DECIMAL) -> face + 60 position bits
-        # (BIGINT — id div 2 < 2^63 always) -> inverse Hilbert fold
-        # -> center (si,ti) with the leaf/parent delta rule -> inverse
-        # quadratic ST -> face XYZ -> lat/lng, as the GeoJSON dynamic
-        # ADX returns. NULL on malformed tokens (bad hex, face > 5,
-        # odd trailing-zero count — the ADX invalid-input contract).
-        if len(a) != 1:
-            raise ValueError(
-                f"geo_s2cell_to_central_point needs (token): {a!r}"
-            )
-        tok = f"(CAST({a[0].strip()} AS STRING))"
-        idv = (
-            f"CAST(conv(rpad(lower({tok}), 16, '0'), 16, 10)"
-            " AS DECIMAL(38, 0))"
-        )
-        # _s2d: f face, b0 trailing bit, pf 60 position bits
-        dec = (
-            f"named_struct('f', CAST(_s2v div {_S2_POW61} AS INT),"
-            " 'b0', CAST(_s2v % 2 AS INT),"
-            " 'pf', CAST((_s2v div 2) % 1152921504606846976"
-            " AS BIGINT))"
-        )
-        walk = (
-            "aggregate(sequence(29, 0, -1),"
-            " named_struct('i', CAST(0 AS BIGINT),"
-            " 'j', CAST(0 AS BIGINT), 'o', CAST(_s2d.f % 2 AS INT)),"
-            " (_g, _k) -> element_at(transform(array("
-            "CAST(shiftright(_s2d.pf, 2 * _k) % 4 AS INT)), _q ->"
-            f" named_struct("
-            f"'i', _g.i + shiftleft(CAST(element_at(array({_S2_POS2IJ}),"
-            " _g.o * 4 + _q + 1) div 2 AS BIGINT), _k),"
-            f" 'j', _g.j + shiftleft(CAST(element_at(array({_S2_POS2IJ}),"
-            " _g.o * 4 + _q + 1) % 2 AS BIGINT), _k),"
-            f" 'o', CAST(_g.o ^ element_at(array({_S2_ORI}),"
-            " _q + 1) AS INT))), 1),"
-            " _g -> named_struct('i', _g.i, 'j', _g.j))"
-        )
-        # center si/ti delta: leaf -> 1; else 2 iff parity(i) differs
-        # from parity(id >> 2) (= pf >> 1)
-        delta = (
-            "IF(_s2d.b0 = 1, 1,"
-            " IF((_s2w.i + (_s2d.pf div 2)) % 2 = 1, 2, 0))"
-        )
-        stc = (
-            lambda w: f"(CAST(2 * _s2w.{w} + {delta} AS DOUBLE)"
-            " / 2147483648E0)"
-        )
-        uvc = (
-            lambda s: f"IF({s} >= 0.5, (4 * {s} * {s} - 1) / 3,"
-            f" (1 - 4 * (1 - {s}) * (1 - {s})) / 3)"
-        )
-        xyz = (
-            "named_struct("
-            "'x', CASE _s2d.f WHEN 0 THEN 1E0 WHEN 1 THEN -_s2c.u"
-            " WHEN 2 THEN -_s2c.u WHEN 3 THEN -1E0 WHEN 4 THEN _s2c.v"
-            " ELSE _s2c.v END,"
-            " 'y', CASE _s2d.f WHEN 0 THEN _s2c.u WHEN 1 THEN 1E0"
-            " WHEN 2 THEN -_s2c.v WHEN 3 THEN -_s2c.v"
-            " WHEN 4 THEN -1E0 ELSE _s2c.u END,"
-            " 'z', CASE _s2d.f WHEN 0 THEN _s2c.v WHEN 1 THEN _s2c.v"
-            " WHEN 2 THEN 1E0 WHEN 3 THEN -_s2c.u WHEN 4 THEN -_s2c.u"
-            " ELSE -1E0 END)"
-        )
-        # trailing-zero validity: leaf (b0=1) ok; else pf's trailing
-        # zeros must be ODD (total even) — lsb of pf is a power of 2,
-        # exactly representable, so log2 is exact
-        tzok = (
-            "(_s2d.b0 = 1 OR (_s2d.pf > 0 AND CAST(round(log2("
-            "CAST(_s2d.pf & -_s2d.pf AS DOUBLE))) AS INT) % 2 = 1))"
-        )
-        return (
-            f"(CASE WHEN {tok} RLIKE '^[0-9a-fA-F]{{1,16}}$'"
-            f" AND {idv} > 0 THEN"
-            f" element_at(transform(array({idv}), _s2v ->"
-            f" element_at(transform(array({dec}), _s2d ->"
-            f" CASE WHEN _s2d.f <= 5 AND {tzok} THEN"
-            f" element_at(transform(array({walk}), _s2w ->"
-            " element_at(transform(array(named_struct("
-            f"'u', {uvc(stc('i'))}, 'v', {uvc(stc('j'))})), _s2c ->"
-            f" element_at(transform(array({xyz}), _s2q ->"
-            " to_json(named_struct('type', 'Point', 'coordinates',"
-            " array(degrees(atan2(_s2q.y, _s2q.x)),"
-            " degrees(atan2(_s2q.z,"
-            " sqrt(_s2q.x * _s2q.x + _s2q.y * _s2q.y))))))"
-            "), 1)), 1)), 1) END), 1)), 1) END)"
-        )
-
-    e = _rewrite_fn(
-        e, "geo_s2cell_to_central_point", _geo_s2cell_central_sql
-    )
-
-    def _geo_h3_loud(a: list[str]) -> str:
-        # H3 cell math stays LOUD-by-design (not silently wrong): an
-        # exact geo_point_to_h3cell needs H3's published base-cell
-        # tables (122 base cells + per-face ijk orientation tables of
-        # precise constants) which are not reproducible from the
-        # algorithm description alone — emitting tokens from
-        # approximated tables would be a silent divergence from ADX.
-        # S2 cells (geo_point_to_s2cell above) are the supported
-        # fixed-grid alternative.
-        raise ValueError(
-            "geo H3 cell functions are out of subset: exact H3"
-            " indexing requires the published H3 base-cell tables;"
-            " use geo_point_to_s2cell / geo_s2cell_to_central_point"
-            " (exact, supported) instead"
-        )
-
-    e = _rewrite_fn(e, "geo_point_to_h3cell", _geo_h3_loud)
-    e = _rewrite_fn(e, "geo_h3cell_to_central_point", _geo_h3_loud)
-
-    # The two formerly-UNRESOLVED census entries (round-13 verdict
-    # item 2) become actionable loud errors like every other
-    # out-of-subset gap — never a Spark UNRESOLVED_ROUTINE leak:
-    def _cursor_loud(a: list[str]) -> str:
-        # ADX ingestion cursors version a table's extent stream;
-        # this engine's lake versions via snapshot manifests instead
-        # (snapshots.py) — there is no cursor stream for the value
-        # to be meaningful against.
-        raise ValueError(
-            "cursor_current()/cursor_after() are out of subset: ADX"
-            " ingestion cursors track extent versions this engine"
-            " does not have; use the lake snapshot API"
-            " (snapshots.history / read_snapshot time travel) for"
-            " incremental-read watermarks instead"
-        )
-
-    e = _rewrite_fn(e, "cursor_current", _cursor_loud)
-    e = _rewrite_fn(e, "cursor_after", _cursor_loud)
-
-    def _treepath_loud(a: list[str]) -> str:
-        # treepath()'s exact output contract (escaping of key names,
-        # array-index notation, ordering) is unverifiable from public
-        # docs alone — emitting a guessed shape would be a silent
-        # divergence; bag_keys()/parse_json accessors are the
-        # supported introspection path.
-        raise ValueError(
-            "treepath() is out of subset: its exact path-string"
-            " contract is not publicly specified; use bag_keys()"
-            " or explicit dynamic accessors instead"
-        )
-
-    e = _rewrite_fn(e, "treepath", _treepath_loud)
-
-    # convert_*(value, from, to) — the UnitsNet-named unit-conversion
-    # family (round-11 probe battery 15). Units must be translate-time
-    # string literals from the documented common subset (loud
-    # otherwise — explicit-subset contract); the ratio folds to ONE
-    # double literal so the emitted SQL is a bare multiply.
-    _CONVERT = {
-        "convert_angle": {  # base: radian
-            "Radian": 1.0, "Degree": math.pi / 180,
-            "Gradian": math.pi / 200, "Revolution": 2 * math.pi,
-            "Arcminute": math.pi / 10800,
-            "Arcsecond": math.pi / 648000,
-            "Milliradian": 1e-3, "Microradian": 1e-6,
-        },
-        "convert_length": {  # base: meter
-            "Meter": 1.0, "Kilometer": 1000.0, "Hectometer": 100.0,
-            "Decameter": 10.0, "Decimeter": 0.1, "Centimeter": 0.01,
-            "Millimeter": 1e-3, "Micrometer": 1e-6, "Nanometer": 1e-9,
-            "Mile": 1609.344, "Yard": 0.9144, "Foot": 0.3048,
-            "Inch": 0.0254, "NauticalMile": 1852.0,
-        },
-        "convert_mass": {  # base: kilogram
-            "Kilogram": 1.0, "Gram": 1e-3, "Milligram": 1e-6,
-            "Microgram": 1e-9, "Tonne": 1000.0,
-            "Pound": 0.45359237, "Ounce": 0.45359237 / 16,
-            "Stone": 6.35029318, "ShortTon": 907.18474,
-            "LongTon": 1016.0469088,
-        },
-        "convert_speed": {  # base: meter/second
-            "MeterPerSecond": 1.0, "KilometerPerHour": 1 / 3.6,
-            "MilePerHour": 0.44704, "Knot": 1852.0 / 3600,
-            "FootPerSecond": 0.3048, "CentimeterPerSecond": 0.01,
-        },
-        "convert_energy": {  # base: joule
-            "Joule": 1.0, "Kilojoule": 1e3, "Megajoule": 1e6,
-            "Gigajoule": 1e9, "Calorie": 4.184, "Kilocalorie": 4184.0,
-            "WattHour": 3600.0, "KilowattHour": 3.6e6,
-            "BritishThermalUnit": 1055.05585262,
-            "ElectronVolt": 1.602176634e-19,
-        },
-        "convert_force": {  # base: newton
-            "Newton": 1.0, "Kilonewton": 1e3, "Meganewton": 1e6,
-            "Dyn": 1e-5, "KilogramForce": 9.80665,
-            "PoundForce": 4.4482216152605, "TonneForce": 9806.65,
-        },
-        "convert_volume": {  # base: cubic meter
-            "CubicMeter": 1.0, "Liter": 1e-3, "Milliliter": 1e-6,
-            "Centiliter": 1e-5, "Deciliter": 1e-4, "Hectoliter": 0.1,
-            "CubicCentimeter": 1e-6, "CubicFoot": 0.028316846592,
-            "CubicInch": 1.6387064e-5, "CubicYard": 0.764554857984,
-            "UsGallon": 3.785411784e-3,
-            "ImperialGallon": 4.54609e-3, "UsPint": 4.73176473e-4,
-        },
-    }
-    # affine (scale, offset) to Kelvin: k = x * s + o
-    _CONVERT_TEMP = {
-        "Kelvin": (1.0, 0.0),
-        "DegreeCelsius": (1.0, 273.15),
-        "DegreeFahrenheit": (5 / 9, 459.67 * 5 / 9),
-        "Millikelvin": (1e-3, 0.0),
-    }
-
-    def _convert_unit(fn: str, table, u: str) -> str:
-        um = re.match(r"^'(\w+)'$", u.strip())
-        if not um or um.group(1) not in table:
-            raise ValueError(
-                f"{fn} units must be translate-time literals from"
-                f" {sorted(table)}: {u!r}"
-            )
-        return um.group(1)
-
-    def _make_convert_sql(fn: str):
-        def _sql(a: list[str]) -> str:
-            if len(a) != 3:
-                raise ValueError(f"{fn} needs (value, from, to): {a!r}")
-            if fn == "convert_temperature":
-                sf, of = _CONVERT_TEMP[
-                    _convert_unit(fn, _CONVERT_TEMP, a[1])
-                ]
-                st, ot = _CONVERT_TEMP[
-                    _convert_unit(fn, _CONVERT_TEMP, a[2])
-                ]
-                return (
-                    f"(CAST({a[0]} AS DOUBLE) * CAST({sf / st!r} AS"
-                    f" DOUBLE) + CAST({(of - ot) / st!r} AS DOUBLE))"
-                )
-            table = _CONVERT[fn]
-            ratio = (
-                table[_convert_unit(fn, table, a[1])]
-                / table[_convert_unit(fn, table, a[2])]
-            )
-            return (
-                f"(CAST({a[0]} AS DOUBLE)"
-                f" * CAST({ratio!r} AS DOUBLE))"
-            )
-
-        return _sql
-
-    for _cfn in [*_CONVERT, "convert_temperature"]:
-        e = _rewrite_fn(e, _cfn, _make_convert_sql(_cfn))
-
-    # --- round-7 gap-sweep batch: everyday scalars found missing by a
-    # 60-idiom probe of the translator (all were loud subset errors;
-    # now implemented as map-side JVM expressions) ---
-    e = _rewrite_fn(
-        e,
-        "around",
-        lambda a: (
-            f"({a[0]} BETWEEN ({a[1]}) - ({a[2]})"
-            f" AND ({a[1]}) + ({a[2]}))"
-        ),
-    )
-    e = _rewrite_fn(
-        e, "set_has_element", lambda a: f"array_contains({a[0]}, {a[1]})"
-    )
-    e = _rewrite_fn(
-        e,
-        "jaccard_index",
-        lambda a: (
-            f"(CAST(size(array_intersect({a[0]}, {a[1]})) AS DOUBLE)"
-            f" / nullif(CAST(size(array_union({a[0]}, {a[1]}))"
-            " AS DOUBLE), CAST(0 AS DOUBLE)))"
-        ),
-    )
-    # scalar range(start, stop [, step]) — the array generator (the
-    # leading `range x from …` TABLE operator is handled before stage
-    # translation and never reaches _expr). Inclusive stop, like ADX.
-    e = _rewrite_fn(
-        e, "range", lambda a: f"sequence({', '.join(a)})"
-    )
-
-    def _format_ipv4_sql(a: list[str]) -> str:
-        # numeric input (the engine-side representation parse_ipv4
-        # produces) OR a dotted-quad STRING (round-10 probe battery
-        # 11: ADX accepts both; the bare BIGINT cast threw on
-        # strings); optional prefix masks the low bits first.
-        if len(a) not in (1, 2):
-            raise ValueError(f"format_ipv4 needs (ip [, prefix]): {a!r}")
-        ip = (
-            f"coalesce(try_cast({a[0]} AS BIGINT),"
-            f" {_parse_ipv4_expr(f'CAST({a[0]} AS STRING)')})"
-        )
-        raw_ip = ip
-        if len(a) == 2:
-            ip = (
-                f"(({ip}) div CAST(pow(2, 32 - ({a[1]})) AS BIGINT))"
-                f" * CAST(pow(2, 32 - ({a[1]})) AS BIGINT)"
-            )
-        # out-of-range numeric input (negative / > 32 bits) yields the
-        # EMPTY string — the documented ADX invalid-input contract
-        # (fuzz finding: a negative input previously formatted as a
-        # garbage dotted string with negative octets); null stays null
-        return (
-            f"(CASE WHEN ({a[0]}) IS NULL THEN NULL"
-            f" WHEN ({raw_ip}) BETWEEN 0 AND 4294967295 THEN"
-            f" concat(CAST(({ip}) div 16777216 % 256 AS STRING), '.',"
-            f" CAST(({ip}) div 65536 % 256 AS STRING), '.',"
-            f" CAST(({ip}) div 256 % 256 AS STRING), '.',"
-            f" CAST(({ip}) % 256 AS STRING))"
-            f" ELSE '' END)"
-        )
-
-    def _format_ipv4_mask_sql(a: list[str]) -> str:
-        # format_ipv4_mask(ip, prefix) -> CIDR notation: the masked
-        # dotted quad plus '/prefix' (empty-on-invalid follows ADX;
-        # format_ipv4's NULL propagation covers the address side, the
-        # prefix range check covers the suffix).
-        if len(a) != 2:
-            raise ValueError(
-                f"format_ipv4_mask needs (ip, prefix): {a!r}"
-            )
-        return (
-            f"(CASE WHEN CAST({a[1]} AS INT) BETWEEN 0 AND 32 THEN"
-            f" concat({_format_ipv4_sql(a)}, '/',"
-            f" CAST(CAST({a[1]} AS INT) AS STRING)) ELSE '' END)"
-        )
-
-    e = _rewrite_fn(e, "format_ipv4_mask", _format_ipv4_mask_sql)
-    e = _rewrite_fn(e, "format_ipv4", _format_ipv4_sql)
-
-    def _ipv4_is_private_sql(a: list[str]) -> str:
-        # RFC1918: 10/8, 172.16/12, 192.168/16 (prefix tail ignored —
-        # ADX checks the address part)
-        if len(a) != 1:
-            raise ValueError(f"ipv4_is_private needs (ip): {a!r}")
-        ip = _parse_ipv4_expr(f"split({a[0]}, '/')[0]")
-        return (
-            f"(({ip}) BETWEEN 167772160 AND 184549375"
-            f" OR ({ip}) BETWEEN 2886729728 AND 2887778303"
-            f" OR ({ip}) BETWEEN 3232235520 AND 3232301055)"
-        )
-
-    e = _rewrite_fn(e, "ipv4_is_private", _ipv4_is_private_sql)
-    # suffix via try_element_at — a bare address has no second split
-    # element and [1] is an ANSI runtime error (battery 21); null on a
-    # non-ipv4 address part AND on an invalid prefix notation — ADX
-    # returns null for '1.2.3.4/99' and '1.2.3.4/abc', not 99 / 32
-    # (round-11 advice); 32 only when no '/' part exists at all
-    e = _rewrite_fn(
-        e,
-        "ipv4_netmask_suffix",
-        lambda a: (
-            f"CASE WHEN try_element_at(split({a[0]}, '/'), 1)"
-            f" RLIKE '^{_IPV4_RE}$' THEN"
-            f" CASE WHEN size(split({a[0]}, '/')) = 1 THEN 32"
-            f" WHEN try_cast(try_element_at(split({a[0]}, '/'), 2)"
-            " AS INT) BETWEEN 0 AND 32"
-            f" THEN try_cast(try_element_at(split({a[0]}, '/'), 2)"
-            " AS INT) END END"
-        ),
-    )
-    # to_utf8 is ADX's older spelling of the same codepoint-array
-    # conversion ("the inverse of make_string", per the public docs) —
-    # alias both before the canonical rewrite below (round-12 census)
-    e = _sub_outside_strings(
-        r"\bto_utf8\(", "unicode_codepoints_from_string(", e
-    )
-    e = _sub_outside_strings(
-        r"\bmake_string\(", "unicode_codepoints_to_string(", e
-    )
-    e = _rewrite_fn(
-        e,
-        "unicode_codepoints_from_string",
-        lambda a: (
-            f"transform(sequence(1, char_length({a[0]})),"
-            f" _ucp -> CAST(ascii(substring({a[0]}, _ucp, 1))"
-            " AS BIGINT))"
-        ),
-    )
-    # round-9 scalar additions: the codepoint/byte-array inverses and
-    # RE2 QuoteMeta — all map-side folds
-    # Full Unicode via UTF-32BE: each codepoint becomes 4 hex-padded
-    # bytes, decoded in one pass (char() wraps mod 256 and would corrupt
-    # any codepoint >= 256 — round-9 advice). Invalid codepoints
-    # (negative, > U+10FFFF, or surrogates) yield the empty string, the
-    # ADX contract for invalid input.
-    e = _rewrite_fn(
-        e,
-        "unicode_codepoints_to_string",
-        lambda a: (
-            f"CASE WHEN exists({a[0]}, _c -> _c < 0 OR _c > 1114111"
-            " OR (_c >= 55296 AND _c <= 57343)) THEN ''"
-            f" ELSE decode(unhex(aggregate({a[0]}, '',"
-            " (_a, _c) -> concat(_a, lpad(hex(_c), 8, '0')))),"
-            " 'UTF-32') END"
-        ),
-    )
-    # pmod, not %: Spark % preserves the dividend's sign and lpad
-    # truncates from the LEFT, so a negative element would silently
-    # encode the wrong byte (-2 -> 'FF...FE' -> 'FF'); pmod(-2, 256) =
-    # 254 = the two's-complement byte (round-9 advice).
-    e = _rewrite_fn(
-        e,
-        "base64_encode_fromarray",
-        lambda a: (
-            f"base64(unhex(aggregate({a[0]}, '',"
-            " (_a, _b) -> concat(_a,"
-            " lpad(hex(pmod(CAST(_b AS BIGINT), 256)), 2, '0')))))"
-        ),
-    )
-    # base64 <-> GUID (round-12 census): .NET GUID byte layout is
-    # MIXED-endian — the first three groups little-endian, the last
-    # two big-endian — so the hex pairs reorder around the dashes;
-    # encode = reorder + unhex + base64, decode is the exact inverse.
-    def _guid_reorder(h: str) -> str:
-        # h: SQL expr of 32 dash-free hex chars -> .NET byte order
-        return (
-            f"concat(substring({h}, 7, 2), substring({h}, 5, 2),"
-            f" substring({h}, 3, 2), substring({h}, 1, 2),"
-            f" substring({h}, 11, 2), substring({h}, 9, 2),"
-            f" substring({h}, 15, 2), substring({h}, 13, 2),"
-            f" substring({h}, 17, 16))"
-        )
-
-    e = _rewrite_fn(
-        e,
-        "base64_encode_fromguid",
-        lambda a: (
-            "base64(unhex("
-            + _guid_reorder(f"replace(lower({a[0]}), '-', '')")
-            + "))"
-        ),
-    )
-
-    def _b64_toguid_sql(a: list[str]) -> str:
-        # unbase64 -> hex -> un-reorder (the reorder is an
-        # involution on the first 8 bytes) -> dashed canonical form;
-        # non-16-byte input yields NULL (ADX's invalid contract).
-        # Inline (no subquery — must stay expression-shaped); Spark's
-        # common-subexpression elimination dedupes the repeated hex.
-        h = f"lower(hex(unbase64({a[0]})))"
-        r = _guid_reorder(h)
-        return (
-            f"CASE WHEN length({h}) = 32 THEN"
-            f" regexp_replace({r},"
-            " '^(.{8})(.{4})(.{4})(.{4})(.{12})$',"
-            " '$1-$2-$3-$4-$5') END"
-        )
-
-    e = _rewrite_fn(e, "base64_decode_toguid", _b64_toguid_sql)
-    # principal/endpoint environment scalars: current_user() is the
-    # session's authenticated identity (value FORMAT is a documented
-    # refinement — ADX renders 'aaduser=...'); the "cluster endpoint"
-    # of a Spark session is its master URL, bound at translate time.
-    e = _sub_outside_strings(
-        r"\bcurrent_principal\(\)", "current_user()", e
-    )
-    _cc_ctx = _ACTIVE_CTX.get()
-    _cc_master = (
-        _cc_ctx[0].conf.get("spark.master", "local")
-        if _cc_ctx is not None and _cc_ctx[0] is not None
-        else "local"
-    )
-    e = _sub_outside_strings(
-        r"\bcurrent_cluster_endpoint\(\)",
-        f"'{_cc_master}'",
-        e,
-    )
-
-    def _estimate_data_size_sql(a: list[str]) -> str:
-        # ADX estimate_data_size(col, ...): heuristic per-record byte
-        # estimate — fixed 8 for numeric/temporal/bool columns,
-        # octet_length for strings (documented refinement: ADX's own
-        # number is an internal heuristic). typeof() folds per plan.
-        parts = [
-            f"(CASE WHEN typeof({x.strip()}) IN ('string') THEN"
-            f" CAST(octet_length(coalesce({x.strip()}, ''))"
-            " AS BIGINT) ELSE 8 END)"
-            for x in a
-        ]
-        return "(" + " + ".join(parts) + ")"
-
-    e = _rewrite_fn(e, "estimate_data_size", _estimate_data_size_sql)
-    # string-codec tail (round-12 census): punycode (RFC 3492,
-    # byte-exact via the stdlib codec), zlib/gzip base64 transcoding
-    # (decompress exact on any standard stream; compress
-    # roundtrip-exact, bytes compressor-specific — documented), and
-    # ipv4_range_to_cidr_list (stdlib minimal CIDR cover, exact).
-    # These are Arrow-batched pandas UDFs (queries/py_codecs.py — no
-    # JVM builtin exists), registered lazily once per session; the
-    # pattern gate keeps codec-free queries paying nothing, and a
-    # sessionless translation stays loud.
-    if re.search(
-        r"\b(?:punycode_\w+|[gz]zip_\w+|zlib_\w+"
-        r"|ipv4_range_to_cidr_list)\s*\(",
-        e,
-    ):
-        _ctx_cd = _ACTIVE_CTX.get()
-        if _ctx_cd is None or _ctx_cd[0] is None:
-            raise ValueError(
-                "punycode/zlib/gzip/ipv4_range_to_cidr_list are"
-                " Arrow-batched UDF scalars — a SparkSession is"
-                " required (kql(spark, ...) or"
-                " kql_to_sql(..., spark))"
-            )
-        from .py_codecs import CODEC_FNS, ensure_registered
-
-        ensure_registered(_ctx_cd[0])
-        for _kname, _sname in CODEC_FNS:
-            e = _rewrite_fn(
-                e, _kname, lambda a, _n=_sname: f"{_n}({a[0]})"
-            )
-
-        def _cidr_list_sql(a: list[str]) -> str:
-            if len(a) != 2:
-                raise ValueError(
-                    f"ipv4_range_to_cidr_list needs (start, end): {a!r}"
-                )
-            return f"kql_py_cidr_list({a[0]}, {a[1]})"
-
-        e = _rewrite_fn(
-            e, "ipv4_range_to_cidr_list", _cidr_list_sql
-        )
-    e = _rewrite_fn(
-        e,
-        "regex_quote",
-        # RE2 QuoteMeta: backslash-escape everything outside
-        # [A-Za-z0-9_]
-        lambda a: (
-            f"regexp_replace({a[0]}, '([^A-Za-z0-9_])', '\\\\\\\\$1')"
-        ),
-    )
-    def _urlquery_bag(arg: str) -> str:
-        return (
-            "to_json(named_struct('Query Parameters',"
-            f" str_to_map(regexp_replace({arg}, '^[^?]*\\\\?', ''),"
-            " '&', '=')))"
-        )
-
-    # parse_urlquery(...)["Query Parameters"]["k"] accessor chains
-    # (round-11 probe battery 16): wrap the bag in parse_json so the
-    # balanced JSON-path scan below compiles the chain to ONE
-    # get_json_object; bare calls keep returning the JSON-string bag.
-    while True:
-        _uq_hit = None
-        spans = _LitSpans(e)
-        for mm in re.finditer(r"\bparse_urlquery\s*\(", e):
-            if spans.at(mm.start()):
-                continue
-            close = _balanced_end(e, mm.end() - 1)
-            if close is None:
-                continue
-            am = re.compile(
-                r"(?:\.\w+|\[\s*(?:'(?:[^']|'')*'|\d+)\s*\])+"
-            ).match(e, close + 1)
-            if am:
-                _uq_hit = (mm, close, am)
-                break
-        if _uq_hit is None:
-            break
-        mm, close, am = _uq_hit
-        e = (
-            e[: mm.start()]
-            + f"parse_json({_urlquery_bag(e[mm.end():close])})"
-            + e[close + 1 : am.end()]
-            + e[am.end():]
-        )
-    e = _rewrite_fn(
-        e, "parse_urlquery", lambda a: _urlquery_bag(a[0])
-    )
-
-    def _parse_path_sql(a: list[str]) -> str:
-        # the ADX bag fields computable from the path text alone;
-        # AlternateDataStreamName (NTFS streams) stays out of the
-        # subset. Separators: / or \.
-        if len(a) != 1:
-            raise ValueError(f"parse_path needs (path): {a!r}")
-        p = a[0]
-        sep = r"[/\\\\]"
-        dirpath = (
-            f"regexp_extract({p}, '^(.*){sep}[^/\\\\\\\\]*$', 1)"
-        )
-        return (
-            "to_json(named_struct("
-            f"'Scheme', regexp_extract({p}, '^(\\\\w+)://', 1),"
-            f" 'RootPath', regexp_extract({p}, '^(\\\\w+:){sep}', 1),"
-            f" 'DirectoryPath', {dirpath},"
-            f" 'DirectoryName', regexp_extract({dirpath},"
-            f" '([^/\\\\\\\\]+)$', 1),"
-            f" 'Filename', regexp_extract({p},"
-            f" '([^/\\\\\\\\]*)$', 1),"
-            f" 'Extension', regexp_extract({p},"
-            " '\\\\.([^./\\\\\\\\]+)$', 1)))"
-        )
-
-    e = _rewrite_fn(e, "parse_path", _parse_path_sql)
-
-    def _dynamic_sql(a: list[str]) -> str:
-        # dynamic(...) literals anywhere a scalar goes: JSON arrays
-        # become Spark array(...) literals (nested arrays recurse);
-        # JSON objects become compact JSON STRING literals — the same
-        # string-widened bag representation pack()/bag_merge use; bare
-        # scalars pass through. Validated at translate time.
-        # the arg splitter now tracks {} too (round-8), so objects —
-        # including objects INSIDE arrays — arrive whole; the rejoin
-        # stays as belt-and-braces (dynamic() takes exactly one literal)
-        v = ", ".join(a).strip()
-
-        def conv(t: str) -> str:
-            t = t.strip()
-            if t.startswith("[") and t.endswith("]"):
-                inner = _split_top_level(t[1:-1])
-                return f"array({', '.join(conv(x) for x in inner)})"
-            if t.startswith("{") and t.endswith("}"):
-                import json as _json
-
-                # object text carries SQL-quoted ('') strings by now;
-                # convert back to JSON quoting, parse, re-emit compact
-                jt = re.sub(
-                    r"'((?:[^']|'')*)'",
-                    lambda m: _json.dumps(m.group(1).replace("''", "'")),
-                    t,
-                )
-                try:
-                    obj = _json.loads(jt)
-                except ValueError as ex:
-                    raise ValueError(
-                        f"dynamic object literal is not valid JSON:"
-                        f" {t!r}"
-                    ) from ex
-                lit = _json.dumps(obj, separators=(",", ":"))
-                return "'" + lit.replace("'", "''") + "'"
-            if t.lower() == "null":
-                return "NULL"
-            return t
-
-        return conv(v)
-
-    # dynamic({…}).path accessor chains (round-11 probe battery 17):
-    # object literals become JSON STRING literals, so a trailing
-    # accessor must route through the JSON-path machinery — wrap in
-    # parse_json BEFORE the literal rewrite (the parse_urlquery rule);
-    # array-form dynamics keep their native array subscripting.
-    while True:
-        _dy_hit = None
-        spans = _LitSpans(e)
-        for mm in re.finditer(r"\bdynamic\s*\(\s*\{", e):
-            if spans.at(mm.start()):
-                continue
-            op_ = e.index("(", mm.start())
-            close = _balanced_end(e, op_)
-            if close is None:
-                continue
-            am = re.compile(
-                r"(?:\.\w+|\[\s*(?:'(?:[^']|'')*'|-?\d+)\s*\])+"
-            ).match(e, close + 1)
-            if am:
-                _dy_hit = (mm, close, am)
-                break
-        if _dy_hit is None:
-            break
-        mm, close, am = _dy_hit
-        e = (
-            e[: mm.start()]
-            + f"parse_json({e[mm.start():close + 1]})"
-            + e[close + 1 : am.end()]
-            + e[am.end():]
-        )
-    e = _rewrite_fn(e, "dynamic", _dynamic_sql)
+    e = _urlquery_accessors(e)
+    e = _dynamic_object_accessors(e)
+    e = _translate_calls(e, _CALLS)
     # `x in (dynamic([...]))` — the literal list arrives as ONE
     # array(...) expression inside IN; SQL IN needs the elements
     # unpacked (battery 23 — was a DATATYPE_MISMATCH). Literal
@@ -6197,845 +6903,8 @@ def _expr(kql_expr: str) -> str:
         lambda m: f"IN ({m.group(1)})",
         e,
     )
-    e = _sub_outside_strings(r"\btoupper\(", "upper(", e)
-    e = _sub_outside_strings(r"\btolower\(", "lower(", e)
-    def _format_datetime_sql(a: list[str]) -> str:
-        # ADX custom tokens mostly coincide with Java's; the two that
-        # differ map here when the format is a literal: f-runs
-        # (fraction digits) -> S-runs, tt (AM/PM) -> a. Non-literal
-        # formats pass through untouched (shared-token subset).
-        if len(a) != 2:
-            raise ValueError(
-                f"format_datetime needs (datetime, format): {a!r}"
-            )
-        fm = re.match(r"^'((?:[^']|'')*)'$", a[1].strip())
-        if not fm:
-            return f"date_format({a[0]}, {a[1]})"
-        f = fm.group(1)
-        f = re.sub(r"f+", lambda m: "S" * len(m.group(0)), f)
-        f = f.replace("tt", "a")
-        return f"date_format({a[0].strip()}, '{f}')"
-
-    e = _rewrite_fn(e, "format_datetime", _format_datetime_sql)
-    # Scalar-function surface: KQL name -> Spark SQL name. The to*()
-    # conversions use Spark's function-style casts (bigint()/double()/…)
-    # so no balanced-paren rewriting is needed; parse_json(c).k becomes
-    # a JSONPath extraction.
-    # scalar batch 3 (round-4): bag_keys / todynamic / extract_all /
-    # parse_url — the most-typed remaining ADX scalars. Dynamic values
-    # in this engine are JSON text (the lake's props shape), so
-    # todynamic is parse_json's synonym and bag_keys peels either
-    # wrapper before reading the keys of the JSON object itself.
-    def _bag_keys_sql(a: list[str]) -> str:
-        if len(a) != 1:
-            raise ValueError(f"bag_keys needs one argument: {a!r}")
-        arg = a[0].strip()
-        m = re.match(
-            r"^(?:parse_json|todynamic)\s*\((.+)\)$", arg, re.DOTALL
-        )
-        if m:
-            arg = m.group(1).strip()
-        # CAST AS STRING: a stored VARIANT bag (todynamic output)
-        # yields its JSON text; no-op on string bags (battery 21)
-        return f"json_object_keys(CAST({arg} AS STRING))"
-
-    e = _rewrite_fn(e, "bag_keys", _bag_keys_sql)
-    # bag_has_key / bag_remove_keys (round-6): top-level keys only
-    # (ADX's JSONPath keys are out of the subset). Removal rides
-    # map<string,variant> (round-11), so values keep their dynamic
-    # types. Keys argument: any array<string> expression
-    # (pack_array(...) is the literal form).
-    e = _rewrite_fn(
-        e,
-        "bag_has_key",
-        lambda a: (
-            "coalesce(array_contains(json_object_keys(CAST("
-            f"{a[0].strip()} AS STRING)),"
-            f" {a[1].strip()}), false)"
-        ),
-    )
-    # bag_zip(keys, values) — bag from parallel arrays (round-11 probe
-    # battery 16): values pad with NULL / truncate to the key count
-    # (the ADX contract); keys cast to string, values carry the
-    # documented JSON-string widening the other bag constructors share
-    e = _rewrite_fn(
-        e,
-        "bag_zip",
-        lambda a: (
-            f"to_json(map_from_arrays(transform({a[0].strip()},"
-            " _k -> CAST(_k AS STRING)),"
-            f" transform(sequence(1, size({a[0].strip()})),"
-            f" _i -> CAST(try_element_at({a[1].strip()}, _i)"
-            " AS STRING))))"
-        ),
-    )
-
-    def _parse_cmdline_sql(a: list[str]) -> str:
-        # parse_command_line(s, 'windows') — quote-aware tokenization:
-        # double-quoted spans (quotes stripped) or runs of non-space.
-        # The deeper MSVCRT rules (embedded \" escapes, quote
-        # doubling) are out of the subset — documented simplification.
-        if len(a) != 2 or a[1].strip().strip("'\"").lower() != "windows":
-            raise ValueError(
-                "parse_command_line supports (text, 'windows'):"
-                f" {a!r}"
-            )
-        toks = (
-            f"regexp_extract_all({a[0].strip()}, "
-            + "'\"[^\"]*\"|[^ \\\\t]+', 0)"
-        )
-        return (
-            f"transform({toks}, _t -> CASE WHEN _t LIKE "
-            + "'\"%\"' AND length(_t) >= 2"
-            " THEN substring(_t, 2, length(_t) - 2) ELSE _t END)"
-        )
-
-    e = _rewrite_fn(e, "parse_command_line", _parse_cmdline_sql)
-    # bag_remove_keys / bag_set_key ride map<string,variant> (battery
-    # 21): values keep their dynamic types through the round-trip
-    # (map<string,string> widened 2 to "2" before)
-    e = _rewrite_fn(
-        e,
-        "bag_remove_keys",
-        lambda a: (
-            "to_json(map_filter(from_json(coalesce(CAST("
-            f"{a[0].strip()} AS STRING), '{{}}'),"
-            " 'map<string,variant>'),"
-            f" (_k, _v) -> NOT array_contains(CAST({a[1].strip()}"
-            " AS ARRAY<STRING>), _k)))"
-        ),
-    )
-
-    def _bag_set_key_sql(a: list[str]) -> str:
-        # bag_set_key(bag, key, value): upsert one top-level key. The
-        # existing entry is filtered out first (Spark's map_concat
-        # raises on duplicate keys under the default dedup policy);
-        # the value casts to VARIANT so numbers/bools/arrays keep
-        # their JSON types.
-        if len(a) != 3:
-            raise ValueError(
-                f"bag_set_key needs (bag, key, value): {a!r}"
-            )
-        bag, key, val = (x.strip() for x in a)
-        return (
-            "to_json(map_concat(map_filter(from_json(coalesce("
-            f"CAST({bag} AS STRING), '{{}}'), 'map<string,variant>'),"
-            f" (_k, _v) -> _k != ({key})),"
-            f" map(CAST({key} AS STRING), try_cast(({val}) AS"
-            " VARIANT))))"
-        )
-
-    e = _rewrite_fn(e, "bag_set_key", _bag_set_key_sql)
-
-    # pack()/bag_pack(): dynamic property-bag CONSTRUCTION, the inverse
-    # of evaluate bag_unpack. Bags are JSON text in this engine. With
-    # literal keys, pack is to_json(named_struct(...)) — typed values,
-    # JVM-side. EXPRESSION keys (round-6) go through to_json(map(...)):
-    # values widen to JSON strings there (named_struct needs literal
-    # field names), the same documented widening bag_unpack/bag_merge
-    # carry. NULL values are omitted from the JSON (Spark's
-    # jsonGenerator default; ADX keeps them as null — documented).
-    def _pack_sql(a: list[str]) -> str:
-        if len(a) < 2 or len(a) % 2:
-            raise ValueError(
-                f"pack needs (key, value, ...) pairs: {a!r}"
-            )
-        keys = [k.strip() for k in a[::2]]
-        vals = [v.strip() for v in a[1::2]]
-        if all(re.match(r"^'(?:[^']|'')*'$", k) for k in keys):
-            parts = [f"{k}, {v}" for k, v in zip(keys, vals)]
-            return f"to_json(named_struct({', '.join(parts)}))"
-        parts = [
-            f"{k}, CAST({v} AS STRING)" for k, v in zip(keys, vals)
-        ]
-        return f"to_json(map({', '.join(parts)}))"
-
-    def _bag_pack_columns_sql(a: list[str]) -> str:
-        # bag_pack_columns(col1, col2, ...) — keys are the column
-        # NAMES (battery 23); typed values via named_struct
-        cs = [c.strip() for c in a]
-        if not cs or not all(re.match(r"^\w+$", c) for c in cs):
-            raise ValueError(
-                f"bag_pack_columns needs plain column names: {a!r}"
-            )
-        return (
-            "to_json(named_struct("
-            + ", ".join(f"'{c}', {c}" for c in cs)
-            + "))"
-        )
-
-    # dynamic_to_json: canonical JSON with keys sorted at EVERY level
-    # (battery 21, was a loud gap) — Spark's Variant binary format
-    # stores object fields key-sorted, so one variant round-trip IS
-    # the ADX canonicalization. Non-JSON input yields null (the
-    # lenient to*() contract).
-    e = _rewrite_fn(
-        e,
-        "dynamic_to_json",
-        lambda a: (
-            f"to_json(try_parse_json(CAST({a[0].strip()}"
-            " AS STRING)))"
-        ),
-    )
-    e = _rewrite_fn(e, "bag_pack_columns", _bag_pack_columns_sql)
-    e = _rewrite_fn(e, "bag_pack", _pack_sql)
-    # pack_dictionary is the documented legacy alias of bag_pack/pack
-    # (probe battery 13)
-    e = _rewrite_fn(e, "pack_dictionary", _pack_sql)
-    e = _rewrite_fn(e, "pack", _pack_sql)
-    # pack_all(): every column of the pipe at this point. ADX keeps
-    # null-valued keys by default; pack_all(true) drops them (battery
-    # 21 — the bare form previously rode Spark's ignoreNullFields
-    # default and silently dropped nulls)
-    e = _sub_outside_strings(
-        r"\bpack_all\(\s*true\s*\)",
-        "to_json(struct(*), map('ignoreNullFields', 'true'))",
-        e,
-    )
-    e = _sub_outside_strings(
-        r"\bpack_all\(\s*\)",
-        "to_json(struct(*), map('ignoreNullFields', 'false'))",
-        e,
-    )
-
-    # bag_merge(b1, b2, ...): first-bag-wins key merge. Refinement:
-    # bags are merged through map<string,string>, so scalar values
-    # come out as JSON strings — the same widening bag_unpack applies
-    # (ADX keeps the original dynamic types). First-wins is decided by
-    # key MEMBERSHIP, not value coalesce: an earlier bag holding an
-    # explicit JSON null for a key still wins (from_json keeps the
-    # null-valued key in map_keys, and to_json re-emits "k":null).
-    def _bag_merge_sql(a: list[str]) -> str:
-        if len(a) < 2:
-            raise ValueError(f"bag_merge needs >= 2 bags: {a!r}")
-        # string(b) first: a VARIANT operand (parse_json of a column)
-        # renders to its JSON text — from_json requires a STRING and
-        # rejected the variant outright (round-12 census found the
-        # non-literal form erroring); plain string bags pass through
-        maps = [
-            f"from_json(coalesce(string({b.strip()}), '{{}}'),"
-            " 'map<string,string>')"
-            for b in a
-        ]
-        ks = f"map_keys({maps[0]})"
-        for m_ in maps[1:]:
-            ks = f"array_union({ks}, map_keys({m_}))"
-        pick = f"element_at({maps[-1]}, _k)"
-        for m_ in reversed(maps[:-1]):
-            pick = (
-                f"IF(array_contains(map_keys({m_}), _k),"
-                f" element_at({m_}, _k), {pick})"
-            )
-        return (
-            f"to_json(map_from_arrays({ks},"
-            f" transform({ks}, _k -> {pick})))"
-        )
-
-    e = _rewrite_fn(e, "bag_merge", _bag_merge_sql)
-    e = _sub_outside_strings(r"\btodynamic\(", "parse_json(", e)
-
-    def _extract_all_sql(a: list[str]) -> str:
-        # ADX extract_all(regex[, captureGroups], source): the regex
-        # must carry 1..16 capture groups; one selected group returns
-        # its matches flat, several return arrays of per-match group
-        # arrays. The optional captureGroups dynamic([...]) list
-        # (round-11, probe battery 12) selects groups by 1-based
-        # index or by (?P<name>…) group name. Literal pattern only
-        # (inspected at translation time); group names are stripped
-        # from the executed pattern (Java regex rejects the (?P<…>
-        # spelling and underscored names) — numbering is unchanged.
-        if len(a) == 3:
-            sel_arg, src = a[1].strip(), a[2].strip()
-        elif len(a) == 2:
-            sel_arg, src = None, a[1].strip()
-        else:
-            raise ValueError(
-                f"extract_all needs (regex[, captureGroups], source): {a!r}"
-            )
-        pat = a[0].strip()
-        if not re.match(r"^'(?:[^']|'')*'$", pat):
-            raise ValueError(
-                "extract_all needs a literal regex —"
-                f" explicit-subset contract: {pat!r}"
-            )
-        # scan the pattern for capturing groups in order (named or
-        # plain; skips escapes, char classes, and (?:…)-style
-        # non-capturing constructs)
-        body0 = pat[1:-1]
-        caps: list[str | None] = []
-        i = 0
-        while i < len(body0):
-            ch = body0[i]
-            if ch == "\\":
-                i += 2
-                continue
-            if ch == "[":
-                j = i + 1
-                if j < len(body0) and body0[j] == "^":
-                    j += 1
-                if j < len(body0) and body0[j] == "]":
-                    j += 1
-                while j < len(body0) and body0[j] != "]":
-                    if body0[j] == "\\":
-                        j += 1
-                    j += 1
-                i = j + 1
-                continue
-            if ch == "(":
-                nm = re.match(
-                    r"\(\?P?<([A-Za-z_]\w*)>", body0[i:]
-                )
-                if nm:
-                    caps.append(nm.group(1))
-                elif not body0[i : i + 2] == "(?":
-                    caps.append(None)
-            i += 1
-        ngroups = len(caps)
-        if not 1 <= ngroups <= 16:
-            raise ValueError(
-                "extract_all needs 1..16 capture groups"
-                f" (got {ngroups})"
-            )
-        pat0 = re.sub(r"\(\?P?<[A-Za-z_]\w*>", "(", pat)
-        if sel_arg is None:
-            sel = list(range(1, ngroups + 1))
-        else:
-            gm = re.match(
-                r"^dynamic\s*\(\s*\[(.*)\]\s*\)$"
-                r"|^array\s*\((.*)\)$",
-                sel_arg,
-                re.IGNORECASE | re.DOTALL,
-            )
-            if not gm:
-                raise ValueError(
-                    "extract_all captureGroups must be a"
-                    f" dynamic([...]) literal: {sel_arg!r}"
-                )
-            sel = []
-            for t in _split_top_level(gm.group(1) or gm.group(2) or ""):
-                t = t.strip()
-                if re.match(r"^\d+$", t):
-                    idx = int(t)
-                    if not 1 <= idx <= ngroups:
-                        raise ValueError(
-                            f"extract_all: group index {idx} out of"
-                            f" range 1..{ngroups}"
-                        )
-                else:
-                    name = t.strip("'\"")
-                    if name not in caps:
-                        raise ValueError(
-                            f"extract_all: no capture group named"
-                            f" {name!r} in {pat}"
-                        )
-                    idx = caps.index(name) + 1
-                sel.append(idx)
-            if not sel:
-                raise ValueError("extract_all: empty captureGroups list")
-        if len(sel) == 1:
-            return f"regexp_extract_all({src}, {pat0}, {sel[0]})"
-        # multi-group (round-10 probe battery 10): ADX returns an
-        # array of per-match group ARRAYS — re-extract each group
-        # from each full-match span (the span IS the match, so
-        # anchoring is preserved; span-external lookarounds are the
-        # documented edge)
-        inner = ", ".join(
-            f"regexp_extract(_m, {pat0}, {g})" for g in sel
-        )
-        return (
-            f"transform(regexp_extract_all({src},"
-            f" {pat0}, 0), _m -> array({inner}))"
-        )
-
-    e = _rewrite_fn(e, "extract_all", _extract_all_sql)
-
-    def _parse_url_sql(a: list[str]) -> str:
-        # ADX parse_url returns a property bag; here a STRUCT whose
-        # fields mirror the ADX keys (all strings), so .Host/.Port/…
-        # access works natively. "Query Parameters" (round-11 probe
-        # battery 16) is a MAP<STRING,STRING> of url-decoded query
-        # pairs — struct['Query Parameters']['key'] subscripting works
-        # natively (the space makes dot access inexpressible, same as
-        # ADX where the bracket form is the only spelling).
-        if len(a) != 1:
-            raise ValueError(f"parse_url needs one argument: {a!r}")
-        u = a[0].strip()
-        return (
-            "named_struct("
-            f"'Scheme', parse_url({u}, 'PROTOCOL'),"
-            f" 'Host', parse_url({u}, 'HOST'),"
-            f" 'Port', regexp_extract(parse_url({u}, 'AUTHORITY'),"
-            f" ':([0-9]+)$', 1),"
-            f" 'Path', parse_url({u}, 'PATH'),"
-            f" 'Query', parse_url({u}, 'QUERY'),"
-            f" 'Query Parameters', transform_values(str_to_map("
-            f"coalesce(parse_url({u}, 'QUERY'), ''), '&', '='),"
-            " (_k, _v) -> url_decode(_v)),"
-            f" 'Fragment', parse_url({u}, 'REF'))"
-        )
-
-    e = _rewrite_fn(e, "parse_url", _parse_url_sql)
-    # dynamic path access on parse_json/todynamic results: dot chains,
-    # bracket keys and bracket ARRAY indexes (round-7: brackets and
-    # multi-level paths) — all compile to ONE get_json_object JSONPath
-    def _json_path_core(arg: str, chain: str) -> str:
-        path = "$"
-        for acc in re.finditer(
-            r"\.(\w+)|\[\s*'((?:[^']|'')*)'\s*\]|\[\s*(\d+)\s*\]",
-            chain,
-        ):
-            if acc.group(1):
-                path += f".{acc.group(1)}"
-            elif acc.group(2) is not None:
-                key = acc.group(2)
-                if re.match(r"^\w+$", key):
-                    path += f".{key}"
-                elif "'" in key or '"' in key or "[" in key or "]" in key:
-                    # quotes/brackets inside a key can't be escaped in
-                    # Spark's JSONPath dialect — loud subset error, not
-                    # a silent NULL (round-8 advice)
-                    raise ValueError(
-                        f"JSON bracket key {key!r} contains characters"
-                        " Spark's JSONPath cannot express"
-                    )
-                else:
-                    # keys with dots/spaces need the bracket form —
-                    # $.a.b would address a NESTED path, silently
-                    # returning NULL for the literal key 'a.b'
-                    # (round-8 advice)
-                    path += f"['{key}']"
-            else:
-                path += f"[{acc.group(3)}]"
-        # bracket-form segments carry single quotes — switch the SQL
-        # string literal to double quotes so the path survives intact
-        lit = f'"{path}"' if "'" in path else f"'{path}'"
-        return f"get_json_object({arg}, {lit})"
-
-    # Balanced scan (round-10, probe battery 8): the parse_json
-    # ARGUMENT may be ANY balanced expression — e.g. the CASE a
-    # rewritten parse_user_agent emits — not just a column/literal
-    # (the old operand regex silently left those as struct-field
-    # extraction, an analysis error). Nested parse_json in the
-    # argument rewrites on subsequent passes.
-    _pj_acc = re.compile(
-        r"(?:\.\w+|\[\s*(?:'(?:[^']|'')*'|\d+)\s*\])+"
-    )
-    # parse_xml(x).a.b / parse_xml(x).a['@attr'] / parse_xml(x).a.b[1]
-    # — the accessor-chain subset (battery 27): compiles to ONE
-    # JVM-side xpath_string (dots are element steps, ['@name'] an
-    # attribute step, a numeric index selects the n-th sibling,
-    # xpath 1-based). The full ADX bag shape (#text nodes, sibling
-    # arrays as dynamic) and bare parse_xml() without an accessor are
-    # out of the subset — loud. Malformed XML raises (Spark's xpath
-    # contract; ADX returns null — documented divergence, loud not
-    # silent).
-    while "parse_xml(" in e:
-        _px_spans = _LitSpans(e)
-        _px_hit = None
-        for mm in re.finditer(r"\bparse_xml\s*\(", e):
-            if _px_spans.at(mm.start()):
-                continue
-            close = _balanced_end(e, mm.end() - 1)
-            if close is None:
-                continue
-            am = _pj_acc.match(e, close + 1)
-            if am is None:
-                raise ValueError(
-                    "parse_xml supports accessor chains only"
-                    " (parse_xml(x).a.b, ['@attr'], [n] — compiled"
-                    " to xpath); a bare parse_xml() bag is out of"
-                    " the subset"
-                )
-            _px_hit = (mm, close, am)
-            break
-        if _px_hit is None:
-            break
-        mm, close, am = _px_hit
-        steps: list[str] = []
-        for acc in re.finditer(
-            r"\.(\w+)|\[\s*'((?:[^']|'')*)'\s*\]|\[\s*(\d+)\s*\]",
-            am.group(0),
-        ):
-            if acc.group(1):
-                steps.append(acc.group(1))
-            elif acc.group(2) is not None:
-                key = acc.group(2)
-                if not re.match(r"^@?[\w.-]+$", key):
-                    raise ValueError(
-                        f"parse_xml accessor {key!r} is not a valid"
-                        " element/attribute name"
-                    )
-                steps.append(key)
-            else:
-                if not steps:
-                    raise ValueError(
-                        "parse_xml accessor chains must start with"
-                        " an element step"
-                    )
-                steps[-1] += f"[{int(acc.group(3)) + 1}]"
-        xp = "/" + "/".join(steps)
-        e = (
-            e[: mm.start()]
-            + f"xpath_string({e[mm.end() : close]}, '{xp}')"
-            + e[am.end() :]
-        )
-    while "parse_json(" in e:
-        _pj_spans = _LitSpans(e)
-        _pj_hit = None
-        for mm in re.finditer(r"\bparse_json\s*\(", e):
-            if _pj_spans.at(mm.start()):
-                continue
-            close = _balanced_end(e, mm.end() - 1)
-            if close is None:
-                continue
-            am = _pj_acc.match(e, close + 1)
-            if am:
-                _pj_hit = (mm, close, am)
-                break
-        if _pj_hit is None:
-            break
-        mm, close, am = _pj_hit
-        e = (
-            e[: mm.start()]
-            + _json_path_core(e[mm.end() : close], am.group(0))
-            + e[am.end() :]
-        )
-    # strlen is LONG in ADX (length() is INT32 — the
-    # array_length/string_size/row_number overflow class)
-    e = _rewrite_fn(
-        e, "strlen", lambda a: f"CAST(length({a[0]}) AS BIGINT)"
-    )
-    e = _sub_outside_strings(r"\bstrcat_array\(", "array_join(", e)
-    e = _sub_outside_strings(r"\biff\(", "if(", e)
-    e = _sub_outside_strings(r"\biif\(", "if(", e)  # documented alias
-    # ADX to{long,int} accept hex string LITERALS ('0x1A' -> 26) —
-    # resolved at translate time (round-10 probe battery 8); runtime
-    # hex strings stay out of subset (an RLIKE arm on every tolong
-    # would tax the hot path for a rare shape).
-    e = _pred_sub(
-        r"\bto(long|int)\(\s*'(-?)0[xX]([0-9a-fA-F]+)'\s*\)",
-        lambda m: (
-            f"CAST({'-' if m.group(2) else ''}{int(m.group(3), 16)}"
-            f" AS {'BIGINT' if m.group(1).lower() == 'long' else 'INT'})"
-        ),
-        e,
-    )
-    # ADX to*() yields NULL on malformed input; the plain function-
-    # style casts raised ANSI CAST_INVALID_INPUT on dirty strings
-    # (battery 25: toint('12.5') crashed where ADX returns null —
-    # to* over user data is exactly where garbage shows up)
-    e = _rewrite_fn(
-        e, "tolong", lambda a: f"try_cast({a[0]} AS BIGINT)"
-    )
-    e = _rewrite_fn(e, "toint", lambda a: f"try_cast({a[0]} AS INT)")
-    e = _rewrite_fn(
-        e, "todouble", lambda a: f"try_cast({a[0]} AS DOUBLE)"
-    )
-    e = _rewrite_fn(
-        e, "toreal", lambda a: f"try_cast({a[0]} AS DOUBLE)"
-    )
-    # typed VALUE constructors long(5)/real(1.5) (probe battery 14) —
-    # ADX restricts these to literals; the cast is a superset. The
-    # typed-null rule later never fires for these two (bigint(null) /
-    # double(null) are the same typed nulls). int() maps 1:1 already.
-    e = _sub_outside_strings(r"\blong\(", "bigint(", e)
-    e = _sub_outside_strings(r"\breal\(", "double(", e)
-    # ADX tostring NEVER returns null — a null input yields the EMPTY
-    # string (long-fuzz finding: tostring(ea_[0][1]) of a no-match
-    # extract came back NULL here, '' in ADX; isnull(tostring(x)) is
-    # always false there). Real inputs render via the SHARED
-    # _render_string_sql rule (typeof-gated '.0' trim; also used by
-    # strcat/strcat_delim so implicit and explicit conversions agree;
-    # scientific-notation residual documented there).
-    e = _rewrite_fn(
-        e,
-        "tostring",
-        lambda a: f"coalesce({_render_string_sql(a[0])}, '')",
-    )
-    # lenient conversions (ADX to*() yields null on garbage; the
-    # function-style casts above are for clean-typed args, these two
-    # commonly see dirty strings)
-    e = _rewrite_fn(
-        e, "tobool", lambda a: f"try_cast({a[0]} AS BOOLEAN)"
-    )
-    def _todatetime_sql(a: list[str]) -> str:
-        # ADX todatetime parses the common .NET date spellings, not
-        # just ISO (battery 26: '1/2/2024', '20240102', RFC-1123 all
-        # returned null here while ADX parses them — a silent
-        # divergence in the null direction). First arm is the old
-        # try_cast (timestamps, numerics, ISO strings — unchanged
-        # semantics), then a US-style / compact / RFC-1123 ladder
-        # over the string form, bound ONCE via the transform rule.
-        # M/d order is ADX's en-US default; day-first locales are out
-        # of the subset (documented).
-        if len(a) != 1:
-            raise ValueError(f"todatetime needs one argument: {a!r}")
-        x = a[0].strip()
-        arms = ", ".join(
-            f"try_to_timestamp(_td, '{p}')"
-            for p in (
-                "M/d/yyyy h:mm:ss a",
-                "M/d/yyyy H:mm:ss",
-                "M/d/yyyy h:mm a",
-                "M/d/yyyy H:mm",
-                "M/d/yyyy",
-                "yyyyMMdd",
-            )
-        )
-        rfc = (
-            "try_to_timestamp(regexp_replace(_td,"
-            " '^[A-Za-z]{3}, ', ''), 'dd MMM yyyy HH:mm:ss zzz')"
-        )
-        return (
-            f"coalesce(try_cast({x} AS TIMESTAMP),"
-            f" element_at(transform(array(CAST({x} AS STRING)),"
-            f" _td -> coalesce({arms}, {rfc})), 1))"
-        )
-
-    e = _rewrite_fn(e, "todatetime", _todatetime_sql)
-    # timespan surface: totimespan FIRST so format_timespan embeds its
-    # already-translated output (rewrites run left-to-right, no
-    # re-entry); bare timespan literals are swept at the end of _expr.
-    e = _rewrite_fn(e, "totimespan", _totimespan_sql)
-    e = _rewrite_fn(e, "format_timespan", _format_timespan_sql)
-    # scalar batch 4 (round-4): ceiling, exp10, inf/nan tests, strcmp,
-    # string_size (BYTES — ADX contract), url_encode family, translate
-    # (ADX arg order (from, to, source) -> Spark (source, from, to))
-    e = _sub_outside_strings(r"\bceiling\(", "ceil(", e)
-    e = _rewrite_fn(
-        e, "exp10", lambda a: f"power(CAST(10 AS DOUBLE), {a[0]})"
-    )
-    e = _rewrite_fn(
-        e,
-        "isinf",
-        lambda a: (
-            f"({a[0]} = double('Infinity')"
-            f" OR {a[0]} = double('-Infinity'))"
-        ),
-    )
-    e = _rewrite_fn(
-        e,
-        "isfinite",
-        lambda a: (
-            f"(NOT isnan({a[0]})"
-            f" AND abs({a[0]}) <> double('Infinity'))"
-        ),
-    )
-    e = _rewrite_fn(
-        e,
-        "strcmp",
-        lambda a: (
-            f"(CASE WHEN {a[0]} < {a[1]} THEN CAST(-1 AS BIGINT)"
-            f" WHEN {a[0]} > {a[1]} THEN 1"
-            f" WHEN {a[0]} = {a[1]} THEN 0 END)"
-        ),
-    )
-    # string_size is LONG in ADX (octet_length is INT32 — the same
-    # overflow exposure as array_length)
-    e = _rewrite_fn(
-        e,
-        "string_size",
-        lambda a: f"CAST(octet_length({a[0]}) AS BIGINT)",
-    )
-    e = _rewrite_fn(
-        e,
-        "url_encode_component",
-        # Spark url_encode is form-style (space -> +), the ADX
-        # *_component variant is percent-style (space -> %20)
-        lambda a: f"replace(url_encode({a[0]}), '+', '%20')",
-    )
-    e = _rewrite_fn(
-        e,
-        "translate",
-        lambda a: f"translate({a[2]}, {a[0]}, {a[1]})",
-    )
-    def _extract_sql(a: list[str]) -> str:
-        # typed 4-arg form (extract(re, g, s, typeof(long)) -> NULL on
-        # cast failure, the ADX contract) and the plain 3-arg form.
-        # Balanced arg splitting (round-10 probe battery 10: the old
-        # source-operand regex couldn't hold a CALL like strcat(…), so
-        # typeof leaked through as a column reference).
-        if len(a) == 4:
-            tm = re.match(
-                r"^typeof\s*\(\s*(\w+)\s*\)$",
-                a[3].strip(),
-                re.IGNORECASE,
-            )
-            if not tm:
-                raise ValueError(
-                    f"extract 4th arg must be typeof(t): {a[3]!r}"
-                )
-            t = tm.group(1).lower()
-            if t not in _KQL_TYPES:
-                raise ValueError(f"extract typeof: unknown type {t!r}")
-            return (
-                f"try_cast(regexp_extract({a[2]}, {a[0]}, {a[1]})"
-                f" AS {_KQL_TYPES[t] or 'STRING'})"
-            )
-        if len(a) == 3:
-            return f"regexp_extract({a[2]}, {a[0]}, {a[1]})"
-        raise ValueError(
-            f"extract needs (regex, group, source[, typeof(t)]): {a!r}"
-        )
-
-    e = _rewrite_fn(e, "extract", _extract_sql)
-    # CAST to STRING before the ''-compare: ADX isempty applies to ANY
-    # scalar (non-null non-strings are never empty); the bare compare
-    # threw CAST_INVALID_INPUT on numerics under ANSI (round-7 sweep).
-    # Balanced _rewrite_fn, not a [^()]+ regex (round-11 probe battery
-    # 17): string-literal and nested-call arguments never matched the
-    # old pattern, leaking the KQL name to Spark.
-    e = _rewrite_fn(
-        e,
-        "isnotempty",
-        lambda a: (
-            f"({a[0]} IS NOT NULL"
-            f" AND CAST({a[0]} AS STRING) <> '')"
-        ),
-    )
-    e = _rewrite_fn(
-        e,
-        "isempty",
-        lambda a: (
-            f"({a[0]} IS NULL OR CAST({a[0]} AS STRING) = '')"
-        ),
-    )
-    # Datetime surface: ago()/now() anchor to the query clock;
-    # startof*() are date_trunc; datetime(...) literals become TIMESTAMP
-    # literals (ADX ISO shapes are a subset of Spark's).
-    e = _sub_outside_strings(
-        rf"\bago\({_TS_LIT}\)",
-        lambda m: (
-            "(current_timestamp() - INTERVAL"
-            f" '{_ts_lit_seconds(m.group(1), m.group(2))}' SECOND)"
-        ),
-        e,
-    )
-    e = _sub_outside_strings(r"\bnow\(\)", "current_timestamp()", e)
-    # startofweek: ADX weeks start SUNDAY (Spark date_trunc('WEEK') is
-    # ISO Monday); weekday() is 0=Mon..6=Sun, so Sunday-offset is
-    # (weekday+1) % 7. endof*: last representable instant of the period
-    # at microsecond resolution (ADX's 100 ns tick refined to Spark's
-    # timestamp precision — documented).
-    # Every startof*/endof* accepts ADX's optional period OFFSET
-    # (round-10, probe battery 9: startofweek silently DROPPED it and
-    # the others failed loudly on date_trunc arity). The no-offset
-    # emissions keep their exact prior text (oracle-stable).
-    def _sow_base(x: str) -> str:
-        return (
-            f"CAST(date_sub(CAST({x} AS DATE),"
-            f" (weekday({x}) + 1) % 7) AS TIMESTAMP)"
-        )
-
-    def _per_off(a: list[str], days: int) -> str:
-        # day-granular period shift: INTERVAL <days> DAY * offset
-        return f" + INTERVAL {days} DAY * (CAST({a[1]} AS INT))"
-
-    e = _rewrite_fn(
-        e,
-        "startofweek",
-        lambda a: (
-            _sow_base(a[0])
-            if len(a) == 1
-            else f"({_sow_base(a[0])}{_per_off(a, 7)})"
-        ),
-    )
-    e = _rewrite_fn(
-        e,
-        "endofweek",
-        # last microsecond of the Sunday-start week (startofweek + 7d
-        # - 1 tick; round-7)
-        lambda a: (
-            f"({_sow_base(a[0])}"
-            + (_per_off(a, 7) if len(a) == 2 else "")
-            + " + INTERVAL 7 DAY - INTERVAL 1 MICROSECOND)"
-        ),
-    )
-    def _endof_months(unit: str, months: int):
-        def _f(a: list[str]) -> str:
-            base = f"date_trunc('{unit}', {a[0]})"
-            if len(a) == 1:
-                iv = (
-                    "INTERVAL 1 DAY"
-                    if unit == "DAY"
-                    else f"INTERVAL {months} MONTH"
-                )
-                return f"({base} + {iv} - INTERVAL 1 MICROSECOND)"
-            n = f"CAST({a[1]} AS INT)"
-            if unit == "DAY":
-                return (
-                    f"({base} + INTERVAL 1 DAY * (1 + {n})"
-                    " - INTERVAL 1 MICROSECOND)"
-                )
-            return (
-                f"(CAST(add_months({base}, {months} * (1 + {n}))"
-                " AS TIMESTAMP) - INTERVAL 1 MICROSECOND)"
-            )
-
-        return _f
-
-    e = _rewrite_fn(e, "endofday", _endof_months("DAY", 0))
-    e = _rewrite_fn(e, "endofmonth", _endof_months("MONTH", 1))
-    e = _rewrite_fn(e, "endofyear", _endof_months("YEAR", 12))
-    e = _sub_outside_strings(r"\bweek_of_year\(", "weekofyear(", e)
-    e = _sub_outside_strings(r"\bmonthofyear\(", "month(", e)
-    # array batch 2: 0-based inclusive slice (non-negative indexes),
-    # sort asc/desc, reverse, sum (left fold, matches series_sum)
-    def _array_slice_sql(a: list[str]) -> str:
-        if len(a) != 3:
-            raise ValueError(f"array_slice needs (arr, start, end): {a!r}")
-        # ADX: 0-based INCLUSIVE ends; negative indices count from the
-        # END (length + index) — round-10 probe battery 9 (previously
-        # a loud subset error; Spark slice's own negative-start
-        # convention differs, so both ends normalize explicitly).
-        # An empty (end < start) window yields [] via greatest(…, 0).
-        arr = a[0]
-        s0 = f"CAST({a[1]} AS INT)"
-        e0 = f"CAST({a[2]} AS INT)"
-        # start < -size clamps to the array head (ADX's graceful
-        # empty/prefix result) — without the clamp slice() gets a
-        # nonpositive start, a Spark runtime error (round-10 advice);
-        # the end needs no clamp: a deeply-negative end only feeds the
-        # greatest(…, 0) length below
-        s_ = (
-            f"IF({s0} >= 0, {s0},"
-            f" greatest(size({arr}) + {s0}, 0))"
-        )
-        e_ = f"IF({e0} >= 0, {e0}, size({arr}) + {e0})"
-        return (
-            f"slice({arr}, ({s_}) + 1,"
-            f" greatest(({e_}) - ({s_}) + 1, 0))"
-        )
-
-    e = _rewrite_fn(e, "array_slice", _array_slice_sql)
-    e = _sub_outside_strings(r"\barray_sort_asc\(", "array_sort(", e)
-    e = _rewrite_fn(
-        e, "array_sort_desc", lambda a: f"reverse(array_sort({a[0]}))"
-    )
-    e = _sub_outside_strings(r"\barray_reverse\(", "reverse(", e)
-    e = _rewrite_fn(e, "array_sum", lambda a: _series_reduce_sql(a, "sum"))
-    def _startof_months(unit: str, months: int):
-        def _f(a: list[str]) -> str:
-            base = f"date_trunc('{unit}', {a[0]})"
-            if len(a) == 1:
-                return base
-            n = f"CAST({a[1]} AS INT)"
-            if unit == "DAY":
-                return f"({base} + INTERVAL 1 DAY * ({n}))"
-            return (
-                f"CAST(add_months({base}, {months} * ({n}))"
-                " AS TIMESTAMP)"
-            )
-
-        return _f
-
-    e = _rewrite_fn(e, "startofday", _startof_months("DAY", 0))
-    e = _rewrite_fn(e, "startofmonth", _startof_months("MONTH", 1))
-    e = _rewrite_fn(e, "startofyear", _startof_months("YEAR", 12))
-    e = _rewrite_fn(
-        e, "startofquarter", _startof_months("QUARTER", 3)
-    )
-    e = _rewrite_fn(e, "endofquarter", _endof_months("QUARTER", 3))
+    e = _xml_accessors(e)
+    e = _json_accessors(e)
     # typed null literals — long(null), real(null), datetime(null), … —
     # the ADX way to write a NULL of a specific type (round-7; must run
     # BEFORE the datetime() literal rewrite or datetime(null) would
@@ -7221,21 +7090,6 @@ def _expr(kql_expr: str) -> str:
     # term is regex-quoted (\Q…\E) so `has "c++"` can't inject a pattern,
     # and (?i) matches ADX's case-insensitivity; has_cs is the
     # case-sensitive variant.
-    # has_any_index(source, values): 0-based index of the FIRST value
-    # term-matched in source (the same word-boundary regexp `has`
-    # compiles to), -1 when none match. Values may be any array
-    # expression (round-11 probe battery 16); one map-side transform +
-    # array_position.
-    e = _rewrite_fn(
-        e,
-        "has_any_index",
-        lambda a: (
-            f"(coalesce(array_position(transform("
-            f"CAST({a[1]} AS ARRAY<STRING>), _t ->"
-            f" coalesce({a[0]} RLIKE concat('(?i)\\\\b\\\\Q', _t,"
-            " '\\\\E\\\\b'), false)), true), 0) - 1)"
-        ),
-    )
 
     # has_any / has_all: term-match over a literal list (OR / AND of
     # the same word-boundary regexps `has` compiles to)
@@ -7400,8 +7254,8 @@ def _expr(kql_expr: str) -> str:
                 # (unix_timestamp) fails analysis on intervals — on
                 # this same retry, re-emit it as the epoch-anchored
                 # interval floor (ADX bin(timespan, timespan) ->
-                # timespan). Matches exactly the text _bin_to_sql
-                # produced.
+                # timespan). Matches exactly the text the bin builder
+                # (_bin2_sql) produces.
                 def _td_bin(m: re.Match) -> str:
                     secs = _iv_total_seconds(m.group(1))
                     return (
@@ -7433,19 +7287,15 @@ def _expr(kql_expr: str) -> str:
                 while prev_e9 != e:
                     prev_e9 = e
                     e = _pred_sub(_td_pat, _td_rep, e)
+    # Every remaining timespan literal becomes an INTERVAL wherever it
     # goes — comparisons against datetime differences, let values,
-    # datetime +/- arithmetic. LAST: ago()/bin()/bin_at() consumed
-    # theirs above, so only genuinely scalar uses remain.
+    # datetime +/- arithmetic, ago(<expression>). LAST: the ago()/bin()/
+    # bin_at() builders consumed their literal arguments above, so
+    # only genuinely scalar uses remain.
     e = _sub_outside_strings(
         rf"(?<![\w.']){_TS_LIT}(?![\w.])",
         lambda m: _ts_interval(m.group(1), m.group(2)),
         e,
-    )
-    # ago(<expression>) fallback (round-7): the literal form was
-    # consumed above; anything left is an interval EXPRESSION
-    # (`ago(365d * 2)`) — now() minus it
-    e = _rewrite_fn(
-        e, "ago", lambda a: f"(current_timestamp() - ({a[0]}))"
     )
     # KQL real literals are DOUBLES; Spark parses a bare 2.5 as
     # DECIMAL(2,1), which creeps into results (iff(c, 1, 2.5) came
@@ -7810,18 +7660,19 @@ def _composite_agg(item: str, auto_idx: int) -> str:
     no extra pass)."""
     am = re.match(r"(?:(\w+)\s*=\s*)?(.+)$", item.strip(), re.DOTALL)
     holes: list[tuple[str, str]] = []
-    out = am.group(2)
-    for fn in _AGG_FNS:
 
-        def _inner(args: list[str], _fn=fn) -> str:
+    def _inner(fn: str):
+        def build(args: list[str]) -> str:
             sql, _ = _agg_sql(
-                _fn, ", ".join(args), f"{auto_idx}_{len(holes)}"
+                fn, ", ".join(args), f"{auto_idx}_{len(holes)}"
             )
             ph = f"__KQLAGG{len(holes)}__"
             holes.append((ph, sql))
             return ph
 
-        out = _rewrite_fn(out, fn, _inner)
+        return build
+
+    out = _translate_calls(am.group(2), {fn: _inner(fn) for fn in _AGG_FNS})
     if not holes:
         raise ValueError(f"unsupported KQL aggregate: {item!r}")
     out = _expr(out)
@@ -8511,10 +8362,12 @@ def _apply_lets(
         # scalar-function lets are textual MACROS: f(a, b) -> the body
         # with each parameter replaced by its (parenthesized) argument;
         # trailing omitted arguments fill from parameter defaults
+        calls = {}
         for fname, (params, dflts, fbody) in fnscalar.items():
 
             def _call(
-                args: list[str], _p=params, _d=dflts, _b=fbody
+                args: list[str], _p=params, _d=dflts, _b=fbody,
+                fname=fname,
             ) -> str:
                 if len(args) < len(_p):
                     missing = _d[len(args):]
@@ -8544,8 +8397,8 @@ def _apply_lets(
                     out = out.replace(f"\x00FNARG{i}\x00", f"({av.strip()})")
                 return f"({out})"
 
-            txt = _rewrite_fn(txt, fname, _call)
-        return txt
+            calls[fname] = _call
+        return _translate_calls(txt, calls)
 
     while (m := re.match(r"\s*let\s+(\w+)\s*=", text)) and (
         stmt := _next_statement(text)
@@ -8882,9 +8735,6 @@ def _window_rewrite(expr_sql: str, order_keys: list[str]) -> str:
             )
         return f"(CAST(ROW_NUMBER(){over} AS BIGINT) + ({args[0]}) - 1)"
 
-    e = _rewrite_fn(e, "row_number", _row_number_start)
-    e = _rewrite_fn(e, "prev", lambda args: f"LAG({', '.join(args)}){over}")
-    e = _rewrite_fn(e, "next", lambda args: f"LEAD({', '.join(args)}){over}")
     def _row_cumsum(args: list[str]) -> str:
         if len(args) > 1:
             raise ValueError(
@@ -8894,8 +8744,15 @@ def _window_rewrite(expr_sql: str, order_keys: list[str]) -> str:
             )
         return f"SUM({args[0]}){over_rows}"
 
-    e = _rewrite_fn(e, "row_cumsum", _row_cumsum)
-    return e
+    return _translate_calls(
+        e,
+        {
+            "row_number": _row_number_start,
+            "prev": lambda args: f"LAG({', '.join(args)}){over}",
+            "next": lambda args: f"LEAD({', '.join(args)}){over}",
+            "row_cumsum": _row_cumsum,
+        },
+    )
 
 
 # operators whose stage text carries NO parenthesized subpipe: the
@@ -9140,8 +8997,8 @@ def kql_to_sql(
                     "bin_auto() needs a leading"
                     " `set query_bin_auto_size=<size>;` statement"
                 )
-            kql = _rewrite_fn(
-                kql, "bin_auto", lambda a: f"bin({a[0]}, {size})"
+            kql = _translate_calls(
+                kql, {"bin_auto": lambda a: f"bin({a[0]}, {size})"}
             )
         # `//` line comments strip to end-of-line OUTSIDE string
         # literals (round-11 probe battery 18 — every pasted dashboard
@@ -9921,7 +9778,7 @@ def _kql_stages_to_sql(
                 nm = a[0].strip().strip("'\"")
                 return nm if nm in names else a[1].strip()
 
-            stage = _rewrite_fn(stage, "column_ifexists", _cie)
+            stage = _translate_calls(stage, {"column_ifexists": _cie})
         words = stage.split(None, 1)
         op = words[0].lower()
         body = words[1] if len(words) > 1 else ""

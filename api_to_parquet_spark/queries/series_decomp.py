@@ -335,9 +335,17 @@ def register_decompose_udfs(spark) -> None:
     `useArrow=True` keeps the boundary Arrow-batched (the plan shows
     ArrowEvalPython, never BatchEvalPython) while each row still
     arrives as plain Python objects — list elements keep None distinct
-    from NaN, which the pandas_udf path would conflate."""
+    from NaN, which the pandas_udf path would conflate.
+
+    The kernels are pickled by value: this module imports only the
+    standard library, so Spark's Python workers run them without
+    importing the package, which a driver may have found only through
+    its own sys.path."""
     if spark in _REGISTERED:
         return
+    import sys
+
+    from pyspark import cloudpickle
     from pyspark.sql.functions import udf
     from pyspark.sql.types import (
         ArrayType,
@@ -372,6 +380,7 @@ def register_decompose_udfs(spark) -> None:
     def _sd(y, period):
         return decompose(y, period)
 
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
     spark.udf.register(
         SDA_UDF_NAME, udf(_sda, sda_type, useArrow=True)
     )

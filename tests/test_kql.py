@@ -4261,3 +4261,118 @@ def test_kql_keeps_one_literal_definition():
             assert not {r"'a\'b'", r'"c\"d"'} <= set(found), (
                 f"{name} is a second literal regex"
             )
+
+
+def test_spaced_calls_run_like_unspaced(spark):
+    """A space before `(` changes nothing. Renamed functions (toupper,
+    iff, hash_md5) used to reach Spark untranslated when spaced
+    (UNRESOLVED_ROUTINE), while builders such as strcat translated."""
+    import hashlib
+
+    spark.createDataFrame([("ab", 2)], ["s", "x"]).createOrReplaceTempView(
+        "spaced_calls"
+    )
+    row = kql(
+        spark,
+        "spaced_calls | extend u = toupper (s), i = iff (x > 1, 'a', 'b'),"
+        " h = hash_md5 (s), c = strcat (s, 'a') | project u, i, h, c",
+    ).collect()[0]
+    assert row.asDict() == {
+        "u": "AB", "i": "a", "h": hashlib.md5(b"ab").hexdigest(), "c": "aba",
+    }
+
+
+def test_every_call_translates_the_same_with_a_space_before_its_parenthesis():
+    from api_to_parquet_spark.queries.kql import _CALLS
+
+    def sql_or_error(text: str) -> str:
+        try:
+            return kql_to_sql(text)
+        except Exception as ex:  # noqa: BLE001 — compared, not handled
+            return f"!{type(ex).__name__}: {ex}"
+
+    for name in _CALLS:
+        for args in ("s", "s, 1", ""):
+            want = sql_or_error(f"T | extend u = {name}({args})")
+            got = sql_or_error(f"T | extend u = {name} ({args})")
+            assert got == want, (name, args)
+    renames = [n for n, entry in _CALLS.items() if isinstance(entry, str)]
+    assert len(renames) >= 35
+    for name in renames:
+        sql = kql_to_sql(f"T | extend u = {name} (s)")
+        assert f"{_CALLS[name]}(s)" in sql, (name, sql)
+
+
+def test_translate_calls_one_innermost_first_pass():
+    from api_to_parquet_spark.queries.kql import _expr, _translate_calls
+
+    table = {
+        "f": lambda a: f"g({', '.join(a)})",
+        "g": lambda a: "rescanned",
+        "h": "sql_h",
+        "keep": lambda a: None,
+    }
+    # a builder's SQL is never scanned again, not even for a table name
+    assert _translate_calls("f(1)", table) == "g(1)"
+    # innermost first: the builder receives translated arguments
+    assert _translate_calls("f(h( x ), 2)", table) == "g(sql_h( x ), 2)"
+    assert _translate_calls("h (x)", table) == "sql_h(x)"
+    assert _translate_calls("keep ( h(x) )", table) == "keep( sql_h(x) )"
+    # literals are text; other names and unclosed calls stay as written
+    assert _translate_calls("f('h(x)') + other(h(y))", table) == (
+        "g('h(x)') + other(sql_h(y))"
+    )
+    assert _translate_calls("h(x) + (f(1)", table) == "sql_h(x) + (g(1)"
+    assert _translate_calls("h(x))", table) == "sql_h(x))"
+    # names are whole words and case-sensitive
+    assert _translate_calls("xh(1) + H(1) + a.h(1)", table) == (
+        "xh(1) + H(1) + a.sql_h(1)"
+    )
+
+    # nested same-name calls both translate
+    packed = _expr('pack("a", pack("b", 1))')
+    assert "pack(" not in packed and packed.count("named_struct(") == 2
+    # a call inside a string literal stays text
+    assert _expr("tolower('case(a,b,c)')") == "lower('case(a,b,c)')"
+    # bin's SQL floor is not read again by the KQL floor builder,
+    # which takes (value, roundTo) only
+    assert _expr("bin(x, 10)").count("floor(") == 1
+    with pytest.raises(ValueError, match="floor needs"):
+        _expr("floor(x)")
+    # KQL function names are case-sensitive
+    assert _expr("TOUPPER(s)") == "TOUPPER(s)"
+    assert _expr("toupper(s)") == "upper(s)"
+
+
+def test_kql_keeps_one_call_table():
+    """Guard: every KQL function call translates through `_CALLS` and
+    `_translate_calls`. No per-name rewrite pass (`_rewrite_fn`, a
+    `\\bname\\(` rename), and no table builder nested in `_expr`; the
+    per-request schema-probe callbacks there take a regex match."""
+    import ast
+    import inspect
+    import re
+
+    from api_to_parquet_spark.queries import kql as kql_mod
+
+    src = inspect.getsource(kql_mod)
+    assert "_rewrite_fn" not in src
+    assert not re.search(
+        r"_sub_outside_strings\(\s*r[\"']\\b\w+\\\([\"'],\s*[\"']\w+\(", src
+    ), "a one-name rename pass"
+    expr = next(
+        n for n in ast.parse(src).body
+        if isinstance(n, ast.FunctionDef) and n.name == "_expr"
+    )
+    for node in ast.walk(expr):
+        if isinstance(node, (ast.FunctionDef, ast.Lambda)) and node is not expr:
+            for arg in node.args.args:
+                ann = arg.annotation and ast.unparse(arg.annotation)
+                assert ann != "list[str]" and arg.arg != "a", (
+                    f"builder defined inside _expr at line {node.lineno}"
+                )
+        if (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "id", None) == "_translate_calls"
+        ):
+            assert ast.unparse(node.args[1]) == "_CALLS"

@@ -167,3 +167,42 @@ def test_arrow_path_plan_shape(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
     assert plan.count("ArrowEvalPython") == 1
+
+
+def test_series_udf_runs_when_workers_cannot_import_the_package(tmp_path):
+    """The kernel UDFs ship by value. A driver that found the package
+    only through sys.path, with no PYTHONPATH for Spark's Python
+    workers and its working directory outside the repository, still
+    runs series_decompose_anomalies (the workers would otherwise fail
+    with ModuleNotFoundError: No module named 'api_to_parquet_spark')."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from api_to_parquet_spark import get_spark
+from api_to_parquet_spark.queries.kql import kql
+spark = get_spark("worker_path", master="local[1]", shuffle_partitions=1)
+spark.createDataFrame(
+    [(i * 3600, float(v)) for i, v in enumerate([1, 5, 2, 6, 1, 0, 3, 2, 6, 1, 7, 2])],
+    ["t", "v"],
+).selectExpr("timestamp_seconds(t) AS ts", "v").createOrReplaceTempView("wp")
+rows = kql(
+    spark,
+    "wp | make-series v = avg(v) on ts from datetime(1970-01-01)"
+    " to datetime(1970-01-01 12:00) step 1h"
+    " | extend (a, s, b) = series_decompose_anomalies(v)",
+).collect()
+print("ROWS", len(rows))
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    run = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert "ROWS 1" in run.stdout
