@@ -3351,12 +3351,9 @@ def _parse_user_agent_sql(args: list[str]) -> str:
         )
     ua = args[0].strip()
     qarg = args[1].strip()
-    dm = re.match(r"^array\s*\((.*)\)$", qarg, re.DOTALL)
-    if dm:
-        kinds = [
-            t.strip().strip("'\"").lower()
-            for t in _split_top_level(dm.group(1))
-        ]
+    items = _list_literal_items(qarg)
+    if items is not None:
+        kinds = [t.strip().strip("'\"").lower() for t in items]
     else:
         kinds = [qarg.strip("'\"").lower()]
     if not kinds:
@@ -6571,9 +6568,9 @@ _CALLS: dict[str, str | Callable[[list[str]], str | None]] = {
     # commonly see dirty strings)
     "tobool": lambda a: f"try_cast({a[0]} AS BOOLEAN)",
     "todatetime": _todatetime_sql,
-    # timespan surface: totimespan FIRST so format_timespan embeds its
-    # already-translated output (rewrites run left-to-right, no
-    # re-entry); bare timespan literals are swept at the end of _expr.
+    # timespan surface: format_timespan(totimespan(…)) receives the
+    # inner call's SQL; bare timespan literals are swept at the end
+    # of _expr.
     "totimespan": _totimespan_sql,
     "format_timespan": _format_timespan_sql,
     # scalar batch 4 (round-4): ceiling, exp10, inf/nan tests, strcmp,

@@ -4264,9 +4264,8 @@ def test_kql_keeps_one_literal_definition():
 
 
 def test_spaced_calls_run_like_unspaced(spark):
-    """A space before `(` changes nothing. Renamed functions (toupper,
-    iff, hash_md5) used to reach Spark untranslated when spaced
-    (UNRESOLVED_ROUTINE), while builders such as strcat translated."""
+    """A space before `(` changes nothing, for renamed functions
+    (toupper, iff, hash_md5) as for builders (strcat)."""
     import hashlib
 
     spark.createDataFrame([("ab", 2)], ["s", "x"]).createOrReplaceTempView(
